@@ -7,7 +7,6 @@ import graft.memory.MemoryStore
 import graft.model._
 import graft.provider.StubProvider
 import graft.task.TaskStore
-import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end demo of the agent data plane: a scripted
   * two-query session through the full §3.1 lifecycle (context assembly
@@ -20,12 +19,7 @@ import org.apache.spark.sql.SparkSession
 object AgentDemo {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

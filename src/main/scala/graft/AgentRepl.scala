@@ -84,12 +84,7 @@ object AgentRepl {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val stub = new StubProvider(canned = Seq(

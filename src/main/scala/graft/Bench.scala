@@ -48,14 +48,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional subset for local iteration ([[EngineSession.only]]),
+    // validated before any session work: full-surface runs remain the
+    // default for round artifacts.
+    val only = EngineSession.only()
     // Default to DRIVER PARITY: the driver harness runs local[32] on a
     // 32-cpu host, and both plan fingerprints and times are
     // shuffle-partition-dependent (r8 verdict: every committed number
     // was measured at cpus=8 while the driver ran 32 — gx_modularity
     // 2.67s@8 vs 6.46s@32, different fps on 4 queries). Never compare
     // fps or times across cpu configs.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = EngineSession.cpus()
     // Config A/B hook (guide §1: measure before adopting any config):
     // SPARK_GRAFT_CONF="key=value;key=value" overlays the builder, so a
     // candidate setting can be benched against the same code without a
@@ -68,18 +71,9 @@ object Bench {
           val i = kv.indexOf('=')
           (kv.take(i).trim, kv.drop(i + 1).trim)
         }
-    // Shared engine config (incl. the r12 64k AQE coalesce floor) —
-    // one builder for Bench/Profile/Verify/FpScan ([[EngineSession]],
-    // r12 verdict #10), plus Bench's fingerprint-stability extras:
-    // plan treeStrings truncate long node strings (file-scan metadata
-    // at 100 chars, >25 fields elided); ExprIds have varying digit
-    // widths across suite compositions, so a FIXED-LENGTH cut lands on
-    // different characters and two identical plans print differently —
-    // normalize by not truncating at all, then strip the ids.
-    val builder0 = EngineSession.builder(cpus)
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .config("spark.sql.debug.maxToStringFields", "10000")
-    val spark = extraConf.foldLeft(builder0) {
+    // Shared engine config plus the fingerprint-stability settings
+    // ([[EngineSession.fingerprintBuilder]]), then the A/B overlay.
+    val spark = extraConf.foldLeft(EngineSession.fingerprintBuilder(cpus)) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -107,53 +101,6 @@ object Bench {
     // SPARK_GRAFT_BENCH_RUNS for local regression hunts.
     val nRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(v => v.trim.toIntOption).getOrElse(1).max(1)
-    // Optional subset for local iteration (same contract as Verify's):
-    // full-surface runs remain the default for round artifacts.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Canonicalized-physical-plan fingerprint: 12 hex chars of md5 over
-    // the canonicalized executed plan (expression ids normalized).
-    // Round-over-round this mechanically separates "the plan changed"
-    // from "the host was slow" — identical fingerprint + different time
-    // = noise, different fingerprint = a real plan change to audit.
-    // Both fps (and the composition-STABLE optimized one — the full
-    // normalization rationale) live in [[PlanFp]], shared with FpScan.
-    def fingerprint(df: org.apache.spark.sql.DataFrame): String =
-      PlanFp.fingerprint(df)
-    def canonOptText(df: org.apache.spark.sql.DataFrame): String =
-      PlanFp.canonOptText(df)
-    def fingerprintOpt(df: org.apache.spark.sql.DataFrame): String =
-      PlanFp.fingerprintOpt(df)
-    // Per-query isolation beyond the SQL cache: localCheckpoint()ed
-    // RDDs are persisted OUTSIDE the catalog cache, so clearCache()
-    // never releases them — across a 300-query suite their blocks pin
-    // BlockManager memory and inflate later rows (r6: dd_minhash_lsh
-    // 12.1 s in the full-suite artifact vs 1.8 s isolated — a harness
-    // artifact, not a regression). Enumerate and unpersist every
-    // persisted RDD, then nudge GC so ContextCleaner reaps broadcast
-    // and shuffle state from the finished query too.
-    def isolate(full: Boolean = true): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(rdd => try rdd.unpersist(blocking = true)
-          catch { case _: Throwable => () })
-      // Two GC passes with a short drain pause: the first enqueues the
-      // finished query's RDD/broadcast/shuffle weak refs, the
-      // ContextCleaner thread processes them asynchronously, and the
-      // second pass collects what the cleanup itself released. ~100 ms
-      // per query buys later queries a driver heap that doesn't carry
-      // 300 queries of broadcast/shuffle state. The ratio pass uses the
-      // light variant (one GC, no drain pause): sf0.01 queries leave a
-      // tenth of the state, and the pass exists only as a superlinearity
-      // tripwire — 400 × 150 ms of extra isolation is driver budget
-      // spent on nothing.
-      System.gc()
-      if (full) {
-        Thread.sleep(50)
-        System.gc()
-        Thread.sleep(50)
-      }
-    }
     // Per-query JVM/session telemetry (SPARK_GRAFT_INSTR=<path>): one
     // JSON line per query appended after its measured runs + isolation,
     // hunting the r8 in-suite inflation (driver full-surface run blew
@@ -208,22 +155,6 @@ object Bench {
       } catch { case _: Throwable => () }
     }
     def r3i(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    // debug aid: dump the canonical text per query for fingerprint triage
-    val fpDump = sys.env.get("SPARK_GRAFT_FP_DUMP")
-    def dumpCanon(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-      fpDump.foreach { dir =>
-        try {
-          val canon = df.queryExecution.executedPlan.canonicalized.treeString
-            .replaceAll("plan_id=\\d+", "plan_id=*")
-          // dump the SAME normalized text fingerprintOpt hashes, so a
-          // flapping fp can be diffed directly
-          val canonOpt = try canonOptText(df) catch { case _: Throwable => "err" }
-          val pdir = java.nio.file.Paths.get(dir)
-          java.nio.file.Files.createDirectories(pdir)
-          java.nio.file.Files.writeString(pdir.resolve(s"$name.txt"), canon)
-          java.nio.file.Files.writeString(pdir.resolve(s"$name.opt.txt"), canonOpt)
-        } catch { case _: Throwable => () }
-      }
     // Adaptive re-measure (r9 verdict #1): two driver runs in a row
     // carried a fictitious multi-row tail (r8 gx_ktruss 20.6s, r9
     // gx_lpa 25.0s + a false superlinear flag — all <=3.9s isolated at
@@ -307,9 +238,7 @@ object Bench {
       println(s"[bench] note: committed reference at $committedRefPath unreadable — committed-floor re-measure disabled")
       Map.empty
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = EngineSession.selected(only).map { case (name, fn) =>
       // Per-query cache isolation: without it, persisted frames from
       // every earlier query stay resident for the whole suite — at 200+
       // queries that's an across-the-board +35-45% GC drag on LATER
@@ -319,7 +248,7 @@ object Bench {
       // clear runs BEFORE the warm run, so within a query the warm
       // methodology is unchanged: warm run fills this query's caches,
       // measured runs reuse them.
-      isolate()
+      EngineSession.isolate(spark)
       // the fingerprint's DataFrame doubles as the unmeasured warm run.
       // The warm wall must bracket CONSTRUCTION too, not just the noop
       // write: eager localCheckpoint()s run their jobs inside fn(), so
@@ -336,9 +265,10 @@ object Bench {
       val t0c = System.nanoTime()
       val df0 = try Some(fn(spark, sfDir)) catch { case _: Throwable => None }
       val constructWall = (System.nanoTime() - t0c) / 1e9
-      val fp = df0.map(fingerprint).getOrElse("err")
-      val fpo = df0.map(fingerprintOpt).getOrElse("err")
-      df0.foreach(dumpCanon(name, _))
+      // Canonicalized-plan fingerprints ([[PlanFp]]): identical fp +
+      // different time = noise, different fp = a plan change to audit.
+      val fp = df0.map(PlanFp.fingerprint).getOrElse("err")
+      val fpo = df0.map(PlanFp.fingerprintOpt).getOrElse("err")
       val t0w = System.nanoTime()
       df0.foreach(df => try df.write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () })
@@ -363,7 +293,7 @@ object Bench {
     }
     def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    isolate()
+    EngineSession.isolate(spark)
     // Superlinearity gate: re-time every query at a 10×-smaller scale
     // (one warm + one measured run — same methodology, cheaper) and
     // flag t(big)/t(small) ratios far above the 10× data ratio. This
@@ -390,12 +320,12 @@ object Bench {
     val bigTimes = results.map { case (k, v, _, _) => k -> v }.toMap
     val ratios: Map[String, Double] =
       if (ratioDir.isEmpty || !java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ratioDir))) Map.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) =>
-          only.forall(_.contains(name)) &&
-            bigTimes.getOrElse(name, 0.0) >= ratioBigMin }
+      else EngineSession.selected(only)
+        .filter { case (name, _) => bigTimes.getOrElse(name, 0.0) >= ratioBigMin }
         .map { case (name, fn) =>
-          isolate(full = false)
+          // light isolation: sf0.01 queries leave a tenth of the state,
+          // and the pass is only a superlinearity tripwire
+          EngineSession.isolate(spark, full = false)
           try {
             val w0 = System.nanoTime()
             fn(spark, ratioDir).write.format("noop").mode("overwrite").save()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Whole-stage-codegen health sweep: run every query with
   * `spark.sql.codegen.fallback=false` so a generated class that janino
@@ -17,21 +16,13 @@ import org.apache.spark.sql.SparkSession
 object CodegenTriage {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val only = EngineSession.only()
+    val spark = EngineSession.builder(EngineSession.cpus("4"))
       // the point of the sweep: no silent interpreted fallback
       .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     logs.quietWindowWarnings()
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     def isCodegen(e: Throwable): Boolean = {
       var t = e; var n = 0
       while (t != null && n < 20) {
@@ -44,39 +35,37 @@ object CodegenTriage {
       false
     }
     var bad = 0
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        spark.catalog.clearCache()
-        try {
-          // sweep BOTH executed shapes: the noop write (all columns
-          // materialized — the bench shape) and count() (aggressive
-          // column pruning — the spec shape); the r9 fallback only
-          // reproduced under the pruned count() plan
-          val df = fn(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-          df.count()
-          println(s"OK $name")
-        } catch {
-          case e: Throwable if isCodegen(e) =>
-            bad += 1
-            // isCodegen can match on a nested cause while the top-level
-            // getMessage is null — guard like the OTHER_FAIL branch
-            println(s"CODEGEN_FAIL $name :: " +
-              Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-          case e: Throwable =>
-            println(s"OTHER_FAIL $name :: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(200)}")
-            if (sys.env.contains("SPARK_GRAFT_TRIAGE_TRACE")) {
-              var t: Throwable = e; var n = 0
-              while (t != null && n < 10) {
-                println(s"  CAUSE ${t.getClass.getName}: " +
-                  Option(t.getMessage).getOrElse("").replace('\n', ' ').take(400))
-                t.getStackTrace.take(12).foreach(f => println(s"    at $f"))
-                t = t.getCause; n += 1
-              }
+    EngineSession.selected(only).foreach { case (name, fn) =>
+      spark.catalog.clearCache()
+      try {
+        // sweep BOTH executed shapes: the noop write (all columns
+        // materialized — the bench shape) and count() (aggressive
+        // column pruning — the spec shape); the r9 fallback only
+        // reproduced under the pruned count() plan
+        val df = fn(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        df.count()
+        println(s"OK $name")
+      } catch {
+        case e: Throwable if isCodegen(e) =>
+          bad += 1
+          // isCodegen can match on a nested cause while the top-level
+          // getMessage is null — guard like the OTHER_FAIL branch
+          println(s"CODEGEN_FAIL $name :: " +
+            Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+        case e: Throwable =>
+          println(s"OTHER_FAIL $name :: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(200)}")
+          if (sys.env.contains("SPARK_GRAFT_TRIAGE_TRACE")) {
+            var t: Throwable = e; var n = 0
+            while (t != null && n < 10) {
+              println(s"  CAUSE ${t.getClass.getName}: " +
+                Option(t.getMessage).getOrElse("").replace('\n', ' ').take(400))
+              t.getStackTrace.take(12).foreach(f => println(s"    at $f"))
+              t = t.getCause; n += 1
             }
-        }
+          }
       }
+    }
     println(s"CODEGEN_TRIAGE_DONE failures=$bad")
     spark.stop()
   }

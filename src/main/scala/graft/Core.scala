@@ -145,21 +145,23 @@ object logs {
     catch { case _: Throwable => () }
 }
 
-/** The engine's recommended session configuration, shared by every
-  * local entry point — Bench, Profile, Verify, FpScan (r12 verdict
-  * #10: the measured config must be the shipped config, in ONE place).
-  * Entry points layer their own non-engine extras (fingerprint
-  * truncation settings, SPARK_GRAFT_CONF A/B overlays) on top.
+/** The engine's recommended session configuration and the harness
+  * plumbing every local entry point shares — Bench, Profile, Verify,
+  * FpScan, CodegenTriage, Explain and the agent demos build their
+  * session here (r12 verdict #10: the measured config must be the
+  * shipped config, in ONE place) and layer only their own extras on
+  * top (fingerprint truncation settings, SPARK_GRAFT_CONF A/B
+  * overlays, CodegenTriage's `codegen.fallback=false`).
   *
-  * The AQE coalesce floor (adopted r12, measured: the 8 hottest dd_/mm_
-  * rows 24.2 → 19.5 s at sf0.1/cpus=32): AQE's
-  * `coalescePartitions.minPartitionSize` is BYTE-based (default 1m)
-  * but this engine's hot stages are CPU-dense over byte-small rows
+  * The AQE coalesce floor (adopted r12; interleaved A/B at
+  * sf0.1/cpus=32: the 8 hottest dd_/mm_ rows 24.2 → 21.2 s):
+  * AQE's `coalescePartitions.minPartitionSize` is BYTE-based (default
+  * 1m) but this engine's hot stages are CPU-dense over byte-small rows
   * (shingle-set intersections, per-pair verification) — at the default
   * whole verification stages collapsed onto ONE task. 64k keeps
   * CPU-dense small stages parallel while still merging true slivers;
   * workload-dependent (cpu-per-byte stays as data grows), not
-  * scale-dependent, and env-overridable for A/B runs. */
+  * scale-dependent. */
 object EngineSession {
   def builder(cpus: String): org.apache.spark.sql.SparkSession.Builder =
     org.apache.spark.sql.SparkSession.builder()
@@ -171,6 +173,70 @@ object EngineSession {
       // normalized to TimestampType in sources.Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64kb"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
+
+  /** [[builder]] plus the settings that keep plan text fingerprintable
+    * (Bench, FpScan): treeStrings truncate long node strings (file-scan
+    * metadata at 100 chars, >25 fields elided), and ExprIds have
+    * varying digit widths across suite compositions, so a FIXED-LENGTH
+    * cut lands on different characters and two identical plans print
+    * differently — so never truncate, and let [[PlanFp]] strip the ids. */
+  def fingerprintBuilder(cpus: String): org.apache.spark.sql.SparkSession.Builder =
+    builder(cpus)
+      .config("spark.sql.maxMetadataStringLength", "100000")
+      .config("spark.sql.debug.maxToStringFields", "10000")
+
+  /** `SPARK_GRAFT_CPUS`, else `default` (the host's cpu count unless a
+    * main pins its own). Never compare fingerprints or times across
+    * cpu configs: both are shuffle-partition-dependent. */
+  def cpus(default: String =
+      Runtime.getRuntime.availableProcessors.toString): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+
+  /** The `SPARK_GRAFT_ONLY` subset (comma-separated query names), sorted
+    * and de-duplicated; None when unset (the full surface). A name not
+    * in [[SparkEntry.queries]] — or a value naming no query at all — is
+    * an error, never a silent zero-query run. */
+  def only(raw: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Option[Seq[String]] =
+    raw.map { v =>
+      val names = v.split(',').map(_.trim).filter(_.nonEmpty).distinct.sorted.toSeq
+      require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but names no query")
+      val known = SparkEntry.queries.keySet
+      val unknown = names.filterNot(known)
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
+      names
+    }
+
+  /** The queries a harness main runs, in sorted name order: the
+    * [[only]] subset, or every query. */
+  def selected(only: Option[Seq[String]])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = SparkEntry.queries
+    only.getOrElse(all.keys.toSeq.sorted).map(n => n -> all(n))
+  }
+
+  /** Per-query isolation between harness queries. clearCache() alone is
+    * not enough: localCheckpoint()ed RDDs are persisted OUTSIDE the
+    * catalog cache, and across a 300-query suite their blocks pin
+    * BlockManager memory and inflate later rows (r6: dd_minhash_lsh
+    * 12.1 s in-suite vs 1.8 s isolated). Unpersist every persisted RDD,
+    * then GC so ContextCleaner reaps the finished query's broadcast and
+    * shuffle state. `full` adds a second pass with short drain pauses:
+    * the first GC enqueues the weak refs, the cleaner thread processes
+    * them asynchronously, and the second collects what the cleanup
+    * released (~100 ms per query). The light variant suits sweeps whose
+    * timings don't matter or whose queries leave little state. */
+  def isolate(spark: SparkSession, full: Boolean = true): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(rdd => try rdd.unpersist(blocking = true)
+        catch { case _: Throwable => () })
+    System.gc()
+    if (full) {
+      Thread.sleep(50)
+      System.gc()
+      Thread.sleep(50)
+    }
+  }
 }

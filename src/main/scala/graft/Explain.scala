@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit artifact generator: dumps `explain("formatted")` for the
   * headline queries to docs/EXPLAINS.md so plan shape (pushdown, pruned
   * schemas, broadcast vs shuffle joins, TakeOrderedAndProject, codegen
@@ -78,55 +76,38 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("docs/EXPLAINS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Subset + per-query-file mode for before/after plan artifacts
+    // (plans/r<N>/<query>_{before,after}.txt): SPARK_GRAFT_ONLY selects
+    // queries (any name in SparkEntry.queries, not just the headline
+    // list; an unknown name is an error); SPARK_GRAFT_EXPLAIN_DIR +
+    // _SUFFIX write one file per query instead of the aggregate markdown.
+    val names = EngineSession.only().getOrElse(headline)
+    val perQueryDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
+    val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
+    val spark = EngineSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb ++= "# Physical plans (generated by `graft.Explain`)\n\n"
     sb ++= s"Scale dir: `$sfDir`. Things to check per plan: `PushedFilters` on the\n"
     sb ++= "scan, pruned `ReadSchema`, `BroadcastHashJoin` on dimension joins,\n"
     sb ++= "`TakeOrderedAndProject` for top-k, and wide whole-stage-codegen spans.\n"
-    // Subset + per-query-file mode for before/after plan artifacts
-    // (plans/r<N>/<query>_{before,after}.txt): SPARK_GRAFT_EXPLAIN_ONLY
-    // selects queries (any name in SparkEntry.queries, not just the
-    // headline list); SPARK_GRAFT_EXPLAIN_DIR + _SUFFIX write one file
-    // per query instead of the aggregate markdown.
-    val only = sys.env.get("SPARK_GRAFT_EXPLAIN_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val perQueryDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
-    val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
-    val names = only.getOrElse(headline)
-    // r12 ADVICE: a typoed name must not silently produce no file while
-    // the success line still counts it
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    unknown.foreach(n => println(s"[explain] WARNING: unknown query '$n' — skipped"))
-    val written = names.count(SparkEntry.queries.contains)
     names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        perQueryDir match {
-          case Some(dir) =>
-            val p = Paths.get(dir)
-            Files.createDirectories(p)
-            Files.writeString(p.resolve(s"$name$suffix.txt"), plan)
-          case None => sb ++= s"\n## $name\n\n```\n$plan```\n"
-        }
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      perQueryDir match {
+        case Some(dir) =>
+          val p = Paths.get(dir)
+          Files.createDirectories(p)
+          Files.writeString(p.resolve(s"$name$suffix.txt"), plan)
+        case None => sb ++= s"\n## $name\n\n```\n$plan```\n"
       }
     }
     if (perQueryDir.isEmpty) {
       Files.createDirectories(Paths.get(outFile).getParent)
       Files.writeString(Paths.get(outFile), sb.toString)
     }
-    println(s"wrote ${perQueryDir.getOrElse(outFile)} ($written plans" +
-      (if (unknown.nonEmpty) s", ${unknown.size} unknown names skipped" else "") + ")")
+    println(s"wrote ${perQueryDir.getOrElse(outFile)} (${names.length} plans)")
     spark.stop()
   }
 }

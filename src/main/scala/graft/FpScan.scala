@@ -1,15 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Fingerprint-only sweep (r11 verdict #2 — the flap hunter): construct
-  * every `SparkEntry.queries` entry under the same per-query isolation
-  * Bench uses, compute the composition-stable optimized fp, and write
-  * one `name fp` line per query (plus, with SPARK_GRAFT_FP_DUMP, the
-  * full canonical text per query for diffing). No warm runs, no
-  * measured runs, no noop writes — a full-surface fp regen in minutes
-  * instead of a full bench, which is what "three consecutive
-  * identical-code regens with stable fps" needs to be a routine check.
+  * every `SparkEntry.queries` entry under the shared per-query
+  * isolation ([[EngineSession.isolate]]), compute the
+  * composition-stable optimized fp, and write one `name fp` line per
+  * query (plus, with SPARK_GRAFT_FP_DUMP=<dir>, the normalized
+  * optimized-plan text it hashes, one `<name>.opt.txt` per query, for
+  * diffing). No warm runs, no measured runs, no noop writes — a
+  * full-surface fp regen in minutes instead of a full bench, which is
+  * what "three consecutive identical-code regens with stable fps" needs
+  * to be a routine check.
   * Eager localCheckpoints still execute during construction (that is
   * the adjudicated condition — fps are taken post-construction,
   * pre-warm, exactly like Bench).
@@ -23,40 +23,29 @@ object FpScan {
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("/tmp/fpscan.txt")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // shared engine config ([[EngineSession]]) + the same treeString
-    // truncation settings as Bench — a different cut point prints
-    // different text for an identical plan
-    val spark = EngineSession.builder(cpus)
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .config("spark.sql.debug.maxToStringFields", "10000")
-      .getOrCreate()
+    val only = EngineSession.only()
+    // the same treeString settings as Bench — a different cut point
+    // prints different text for an identical plan
+    val spark = EngineSession.fingerprintBuilder(EngineSession.cpus()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     logs.quietWindowWarnings()
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val fpDump = sys.env.get("SPARK_GRAFT_FP_DUMP")
-    val lines = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(rdd => try rdd.unpersist(blocking = true)
-            catch { case _: Throwable => () })
-        System.gc()
-        val df0 = try Some(fn(spark, sfDir)) catch { case _: Throwable => None }
-        val fpo = df0.map(PlanFp.fingerprintOpt).getOrElse("err")
-        for (dir <- fpDump; df <- df0) {
-          try {
-            val pdir = java.nio.file.Paths.get(dir)
-            java.nio.file.Files.createDirectories(pdir)
-            java.nio.file.Files.writeString(pdir.resolve(s"$name.opt.txt"),
-              try PlanFp.canonOptText(df) catch { case _: Throwable => "err" })
-          } catch { case _: Throwable => () }
-        }
-        s"$name $fpo"
+    val lines = EngineSession.selected(only).map { case (name, fn) =>
+      EngineSession.isolate(spark, full = false)
+      val df0 = try Some(fn(spark, sfDir)) catch { case _: Throwable => None }
+      val fpo = df0.map(PlanFp.fingerprintOpt).getOrElse("err")
+      // the SAME normalized text fingerprintOpt hashes, so a flapping
+      // fp can be diffed directly
+      for (dir <- fpDump; df <- df0) {
+        try {
+          val pdir = java.nio.file.Paths.get(dir)
+          java.nio.file.Files.createDirectories(pdir)
+          java.nio.file.Files.writeString(pdir.resolve(s"$name.opt.txt"),
+            try PlanFp.canonOptText(df) catch { case _: Throwable => "err" })
+        } catch { case _: Throwable => () }
       }
+      s"$name $fpo"
+    }
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (lines.mkString("\n") + "\n").getBytes("UTF-8"))
     println(s"[fpscan] ${lines.length} queries -> $outFile")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage timeline profiler — the measuring stick for the
   * weak-row (≥4.5 s at driver parallelism) tuning work: fixed-iteration
@@ -23,11 +22,9 @@ object Profile {
     require(args.nonEmpty, "usage: graft.Profile <queryName> [sfDir]")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     // shared engine config (incl. the coalesce floor) so profiles map
     // 1:1 to bench stages — [[EngineSession]], r12 verdict #10
-    val spark = EngineSession.builder(cpus).getOrCreate()
+    val spark = EngineSession.builder(EngineSession.cpus()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     logs.quietWindowWarnings()
     val fn = SparkEntry.queries.getOrElse(name,
@@ -37,10 +34,7 @@ object Profile {
     // warm run (planning + codegen + parquet footer cache), then the
     // same isolation Bench applies before its measured run
     runOnce()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(r => try r.unpersist(blocking = true) catch { case _: Throwable => () })
-    System.gc(); Thread.sleep(50); System.gc(); Thread.sleep(50)
+    EngineSession.isolate(spark)
 
     // SPARK_GRAFT_PROFILE_DETAILS=1 appends each stage's callsite stack
     // head — the lazily-executed AQE stages all print the same

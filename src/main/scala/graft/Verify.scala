@@ -1,29 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Optional subset for local iteration; the correctness gate leaves
+    // it unset and runs the full suite.
+    val only = EngineSession.only()
     // shared engine config — the measured config is the shipped config
     // ([[EngineSession]], r12 verdict #10); the floor is runtime-only
     // (AQE scheduling), so optimized plan fingerprints are unaffected
-    val spark = EngineSession.builder(cpus).getOrCreate()
+    val spark = EngineSession.builder(EngineSession.cpus("4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     logs.quietWindowWarnings()
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated subset for local iteration (driver never
-    // sets it, so the gate always runs the full suite).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    def wanted(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
+    EngineSession.selected(only).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -44,7 +36,8 @@ object Verify {
     } + "\""
     // null-guard: an oracle string that is null (object-init ordering
     // bugs) must surface as a missing oracle, not NPE the whole dump
-    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1) && kv._2 != null)
+    val json = SparkEntry.oracleSql
+      .filter(kv => only.forall(_.contains(kv._1)) && kv._2 != null)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -17,8 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * (bit-identical results), ~10× less per-row overhead, no codegen
   * barrier around it. Length-mismatched inputs return NULL — the same
   * result the declarative form produces via zip_with's null-padding —
-  * so the [[graft.plans.RewriteCosine]] rewrite is bit-exact on every
-  * input, not just on its intended equal-dimension domain.
+  * so the two forms agree on every input, not just on the intended
+  * equal-dimension domain (pinned by CosineSimilaritySpec and
+  * OperatorsSpec).
   *
   * Preference order per the engine design: compose built-ins where they
   * stay codegen'd; drop to a custom Expression exactly where (as here)
@@ -101,8 +101,8 @@ object GraftFunctions {
   private val containmentInfo = new ExpressionInfo(
     classOf[ContainmentSimilarity].getName, "containment_sim")
 
-  /** Idempotent in-session registration (for sessions built without
-    * extensions — tests, the driver harness). */
+  /** Idempotent in-session registration: the one path that makes the
+    * native expressions callable from SQL and `call_function`. */
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("cosine_sim"), cosineInfo,
@@ -113,33 +113,5 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("containment_sim"), containmentInfo,
       (args: Seq[Expression]) => ContainmentSimilarity(args(0), args(1)))
-  }
-}
-
-/** `SparkSessionExtensions` entry point: build sessions with
-  * `.withExtensions(new GraftExtensions)` (or set
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) and the
-  * engine's native expressions are available in SQL and `call_function`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("jaccard_sim"),
-      new ExpressionInfo(classOf[JaccardSimilarity].getName, "jaccard_sim"),
-      (args: Seq[Expression]) => JaccardSimilarity(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("containment_sim"),
-      new ExpressionInfo(classOf[ContainmentSimilarity].getName, "containment_sim"),
-      (args: Seq[Expression]) => ContainmentSimilarity(args(0), args(1))))
-    // declarative HOF cosine → fused codegen loop (bit-exact rewrite)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteCosine)
-    // composed size(array_intersect)/union-size Jaccard → fused pass
-    ext.injectOptimizerRule(_ => graft.plans.RewriteJaccard)
-    // filter(row_number <= k over window) → two-phase physical top-k
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Uncertainty is |logit|, not |p − 0.5|: the sigmoid is monotone, so
   * the ranking is identical and the exp never has to cross engines.
-  * The per-key top-k is the row_number window shape that
-  * [[graft.plans.TopKStrategy]] plans as bounded per-partition heaps —
-  * map-side pruned to ≤ k·sources rows before the shuffle, so the
-  * selection never materializes a per-source global sort at 100 TB.
+  * The per-key top-k is the row_number window shape that Spark plans
+  * as `WindowGroupLimit` (Partial before the shuffle, Final after) —
+  * each partition ships ≤ k rows per source, so the selection never
+  * shuffles a whole source to one sort.
   * Score chain is the SAME projection the model/eval queries consume
   * ([[Pipeline.modelScoredWithLabel]] / [[Pipeline.qmScoreSql]]), so
   * the reviewed batch can't drift from the model it audits.

@@ -19,10 +19,12 @@ import org.apache.spark.sql.functions._
   * ways; the margin is one subtraction, snap9'd.
   *
   * Scale: two rank windows per source + one equi-join on (source,
-  * rank). The `row_number ≤ k` filters plan through the repo's
-  * [[graft.plans.TopKStrategy]] partial top-k, so neither window
-  * materializes a full per-source sort at 100 TB; the join carries
-  * 2k rows per source.
+  * rank); the join carries 2k rows per source. The worst-k side plans
+  * as Spark's `WindowGroupLimit` (Partial before the shuffle, Final
+  * after), so it ships ≤ k rows per source per partition. The best-k
+  * side does not: its `count(*) OVER (PARTITION BY source)` (the
+  * 2·rank ≤ n guard that keeps the halves disjoint) needs every row,
+  * so that side shuffles and sorts the full per-source partition.
   */
 object Preference {
 

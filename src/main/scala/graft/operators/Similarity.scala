@@ -127,7 +127,7 @@ object Similarity {
     val trainParts =
       if (statBytes < (1L << 50))
         (statBytes / (800L << 10) + 1).min(BigInt(cores)).max(BigInt(4)).toInt
-      else math.max(4, math.min(cores, (emb.count() / 2000L).toInt))
+      else trainPartsForCount(emb.count(), cores)
     val cached = emb.repartition(trainParts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1502,4 +1502,11 @@ object Similarity {
         coalesce(col("n_cands"), lit(0L)).as("n_cands"))
       .orderBy(col("qid"))
   }
+
+  /** The trainer's count-based partition count (unknown-stats corpora):
+    * one task per ~2k rows, floor 4, capped at `cores`. The min is taken
+    * in Long space before narrowing — `(count / 2000).toInt` wraps
+    * negative above ~4.3T rows and would pin the floor. */
+  private[graft] def trainPartsForCount(count: Long, cores: Int): Int =
+    (count / 2000L).min(cores.toLong).max(4L).toInt
 }

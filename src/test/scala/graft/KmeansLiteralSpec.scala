@@ -35,4 +35,15 @@ class KmeansLiteralSpec extends SparkSpec {
     val b = operators.Similarity.kmeansCentroidsLocal(emb, 8, 2, 64)
     assert(a == b)
   }
+
+  test("count-based trainer partitions stay capped past Int range") {
+    // unknown-stats corpora size the trainer from count(): ~2k rows per
+    // task, floor 4, capped at the cores. (count / 2000).toInt used to
+    // wrap negative here and pin the floor.
+    val huge = 2000L * Int.MaxValue + 2000L * 1000L
+    assert(operators.Similarity.trainPartsForCount(huge, 32) == 32)
+    assert(operators.Similarity.trainPartsForCount(2000L * (1L << 31), 32) == 32)
+    assert(operators.Similarity.trainPartsForCount(20000L, 32) == 10)
+    assert(operators.Similarity.trainPartsForCount(100L, 32) == 4)
+  }
 }

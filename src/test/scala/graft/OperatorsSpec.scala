@@ -152,9 +152,8 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("similarity: the HOF cosine fold and native cosine_sim agree, incl. mismatched lengths") {
-    // This session has NO optimizer rule injected, so Similarity.cosine
-    // genuinely evaluates the zip_with/aggregate fold — the comparison
-    // the rewrite's bit-exactness claim rests on.
+    // Similarity.cosine genuinely evaluates the zip_with/aggregate fold
+    // (nothing rewrites it), so this compares the two formulations.
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     val df = Seq(

@@ -24,12 +24,9 @@ class WarehouseShapesSpec extends SparkSpec {
 
   test("q54 ranks per part, never globally") {
     val plan = executedPlan("q54_min_cost_supplier")
-    // the rank is keyed by p_partkey: either the stock Window operator
-    // or, when the session has the TopKPerKey strategy installed (the
-    // shared test session does once any spec installs it), the fused
-    // TopKPartial/TopKFinal pair — both keyed, never single-partition
-    assert(plan.contains("Window") || plan.contains("TopKPartial"),
-      s"q54 lost its per-part rank:\n$plan")
+    // the rank is keyed by p_partkey: the stock Window operator, never
+    // single-partition
+    assert(plan.contains("Window"), s"q54 lost its per-part rank:\n$plan")
     assert(!plan.contains("SinglePartition"), s"global window crept in:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"), s"q54 lost its top-k head:\n$plan")
   }
