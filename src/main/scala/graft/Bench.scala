@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** The superlinearity verdict as a pure function so a spec can feed
     * it a planted quadratic: flag when t(big)/t(small) far exceeds the
@@ -46,6 +46,104 @@ object Bench {
       fpo != "err" && fp == fpo && measured >= 1.0 && measured > 3.0 * t
     }
 
+  /** One query's full-scale result: its steady-state seconds, or the
+    * first line of the error that stopped it (an errored query gets no
+    * time and no share of `total`), both plan fps ("err" when
+    * construction failed) and whether the single re-measure fired. */
+  private[graft] final case class Measured(
+      name: String, outcome: Either[String, Double],
+      fp: String, fpo: String, remeasured: Boolean)
+
+  private[graft] def total(ms: Seq[Measured]): Double =
+    ms.flatMap(_.outcome.toOption).sum
+
+  /** Every Bench execution: a noop-sink write, not count() — count()
+    * lets Catalyst prune every projected column, so expression-heavy
+    * queries would measure a bare row count instead of their real work. */
+  private def run(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private def firstLine(e: Throwable): String =
+    Option(e.getMessage).flatMap(_.linesIterator.find(_.trim.nonEmpty))
+      .getOrElse(e.getClass.getName)
+
+  /** The measured run both scales share. The warm run (`warmWall`,
+    * construction included) already paid Catalyst planning + Janino
+    * compile, so one freshly constructed run is the steady-state time.
+    * Adaptive re-measure (r9 verdict #1): with ONE measured run, a
+    * single host preemption burst fabricates a 10x row (r8 gx_ktruss
+    * 20.6 s, r9 gx_lpa 25.0 s — both ≤3.9 s isolated at the identical
+    * fp), so when [[needsRemeasure]] at `floor` or `alsoFire` says so,
+    * run once more and report the min. Returns (seconds, re-measured);
+    * throws whatever the query throws. */
+  private def steady(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, dir: String,
+      warmWall: Double, floor: Double,
+      alsoFire: Double => Boolean = _ => false): (Double, Boolean) = {
+    val measured = timed(run(fn(spark, dir)))._2
+    if (needsRemeasure(measured, warmWall, floor) || alsoFire(measured))
+      (math.min(measured, timed(run(fn(spark, dir)))._2), true)
+    else (measured, false)
+  }
+
+  /** The per-query measurement: isolate → construct → both
+    * fingerprints → warm write → [[steady]] (floor 1 s, plus the
+    * [[committedFloorFires]] trigger against `committed`). Any
+    * Throwable along the way becomes the recorded error, never a time.
+    *
+    * Isolation runs BEFORE the warm run: without it, persisted frames
+    * from every earlier query stay resident for the whole suite (+35-45%
+    * GC drag on later queries, round 5) and the fp turns
+    * cache-composition-sensitive. The warm wall brackets construction
+    * too, since eager localCheckpoint()s run their jobs inside fn() and
+    * timing only the write would spuriously re-measure
+    * checkpoint-heavy queries. The fps are taken between construction
+    * and the warm write: once the warm run materializes a cached frame
+    * its InMemoryRelation embeds the AQE-finalized physical subtree
+    * (QueryStage wrappers, runtime build side), which flapped the
+    * composition-stable optimized fp on ~11 queries when taken
+    * post-warm. */
+  private[graft] def measure(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => DataFrame, dir: String,
+      committed: Option[(Double, String)]): Measured = {
+    EngineSession.isolate(spark)
+    try {
+      val (df, constructWall) = timed(fn(spark, dir))
+      val fp = PlanFp.fingerprint(df)
+      val fpo = PlanFp.fingerprintOpt(df)
+      try {
+        val warmWall = constructWall + timed(run(df))._2
+        val (t, again) = steady(spark, fn, dir, warmWall, floor = 1.0,
+          committedFloorFires(_, fpo, committed))
+        Measured(name, Right(t), fp, fpo, again)
+      } catch { case e: Throwable => Measured(name, Left(firstLine(e)), fp, fpo, false) }
+    } catch { case e: Throwable => Measured(name, Left(firstLine(e)), "err", "err", false) }
+  }
+
+  /** t(big)/t(small) for the superlinearity gate: light isolation (a
+    * small-scale query leaves a tenth of the state), a warm run, then
+    * [[steady]] with its own 0.2 s floor — an inflated small-side
+    * denominator DEFLATES the ratio and masks a real superlinearity. A
+    * query that fails at the small scale is exactly the failure this
+    * gate hunts: it yields the -1.0 sentinel (`ratio_errors`), never a
+    * silently dropped row. */
+  private[graft] def ratio(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, smallDir: String,
+      big: Double): Double = {
+    EngineSession.isolate(spark, full = false)
+    try {
+      val warm = timed(run(fn(spark, smallDir)))._2
+      val small = steady(spark, fn, smallDir, warm, floor = 0.2)._1
+      if (small > 0) big / small else 0.0
+    } catch { case _: Throwable => -1.0 }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional subset for local iteration ([[EngineSession.only]]),
@@ -82,91 +180,6 @@ object Bench {
     // doesn't absorb one-time session init (~3 s of classloading).
     spark.range(1000).selectExpr("sum(id)").collect()
     SparkEntry.queries.get("ta_fingerprint").foreach(fn => fn(spark, sfDir).count())
-    // sorted order: deterministic across rounds, comparable per-query.
-    // noop sink, not count(): count() lets Catalyst prune every
-    // projected column, so expression-heavy queries would measure a
-    // bare row count instead of their real work. Each query runs once
-    // unmeasured (Catalyst planning + Janino codegen compile are
-    // per-plan one-time costs) and the second, steady-state run is
-    // reported — standard warm-measurement methodology.
-    def runOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    // Measured runs after the unmeasured warm run. Default is ONE: the
-    // r7 per-query isolation (clearCache + unpersist-all + double GC)
-    // makes single warm runs trustworthy, and at ~400 queries the old
-    // warm+median-of-3 default (4 executions/query) plus the sf0.01
-    // ratio pass busted the driver's wall-clock budget — BENCH_r07 died
-    // at rc=124 with no artifact at all. Median-of-N stays opt-in via
-    // SPARK_GRAFT_BENCH_RUNS for local regression hunts.
-    val nRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
-      .flatMap(v => v.trim.toIntOption).getOrElse(1).max(1)
-    // Per-query JVM/session telemetry (SPARK_GRAFT_INSTR=<path>): one
-    // JSON line per query appended after its measured runs + isolation,
-    // hunting the r8 in-suite inflation (driver full-surface run blew
-    // checkpoint-heavy rows up to 6.6x over their isolated truth at the
-    // SAME cpus and SAME fp — gx_ktruss 20.6s in-suite vs 3.1s
-    // isolated). Candidate accumulators this distinguishes: code-cache
-    // exhaustion (JIT disabled -> interpreted codegen), metaspace /
-    // classloader leak from per-query Janino classes, BlockManager
-    // residue the isolate() pass misses, shuffle-file disk growth,
-    // thread leaks, and cumulative GC drag.
-    val instrPath = sys.env.get("SPARK_GRAFT_INSTR")
-    val instrStart = System.nanoTime()
-    def instrument(name: String, sec: Double): Unit = instrPath.foreach { p =>
-      try {
-        import scala.jdk.CollectionConverters._
-        import java.lang.management.{ManagementFactory => mf}
-        def poolMb(sub: String) = mf.getMemoryPoolMXBeans.asScala
-          .filter(_.getName.toLowerCase.contains(sub))
-          .map(_.getUsage.getUsed).sum / (1 << 20)
-        val heapMb = {
-          val rt = Runtime.getRuntime
-          (rt.totalMemory - rt.freeMemory) / (1 << 20)
-        }
-        val gcMs = mf.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-        val classes = mf.getClassLoadingMXBean.getLoadedClassCount
-        val nRdd = spark.sparkContext.getPersistentRDDs.size
-        val threads = Thread.activeCount()
-        // on-disk residue across the suite: blockmgr-* under every
-        // spark local dir (shuffle files + localCheckpoint disk blocks)
-        val diskMb = try {
-          val tmp = new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-          Option(tmp.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.getName.startsWith("blockmgr-") && f.isDirectory)
-            .map { d =>
-              var bytes = 0L
-              val stack = scala.collection.mutable.Stack[java.io.File](d)
-              while (stack.nonEmpty) {
-                val f = stack.pop()
-                if (f.isDirectory) Option(f.listFiles()).foreach(stack.pushAll(_))
-                else bytes += f.length()
-              }
-              bytes
-            }.sum / (1 << 20)
-        } catch { case _: Throwable => -1L }
-        val wallS = (System.nanoTime() - instrStart) / 1e9
-        val line = s"""{"q":"$name","sec":${r3i(sec)},"wall_s":${r3i(wallS)},""" +
-          s""""heap_mb":$heapMb,"codecache_mb":${poolMb("codeheap") + poolMb("code cache")},""" +
-          s""""metaspace_mb":${poolMb("metaspace")},"classes":$classes,""" +
-          s""""gc_ms":$gcMs,"persistent_rdds":$nRdd,"threads":$threads,"blockmgr_mb":$diskMb}""" + "\n"
-        java.nio.file.Files.write(java.nio.file.Paths.get(p), line.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-      } catch { case _: Throwable => () }
-    }
-    def r3i(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    // Adaptive re-measure (r9 verdict #1): two driver runs in a row
-    // carried a fictitious multi-row tail (r8 gx_ktruss 20.6s, r9
-    // gx_lpa 25.0s + a false superlinear flag — all <=3.9s isolated at
-    // the identical plan fingerprint). With ONE measured run per query,
-    // a single host preemption burst fabricates a 10x row. The warm run
-    // is already executed and its wall is free to time, so: when the
-    // measured time exceeds 3x the warm wall (and is >= 1s — below
-    // that the ratio is noise), run once more and report the min,
-    // recording the event in the artifact's "remeasured" list. Bounded
-    // cost (only outlier rows re-run) and honest — steady-state is what
-    // the warm-measurement methodology already claims to report.
-    val remeasured = scala.collection.mutable.ArrayBuffer.empty[String]
     // Committed-artifact floor (r10 verdict #2): the warm-wall trigger
     // is blind to SUSTAINED host load — warm and measured inflate
     // together and nothing fires (driver r10: sim_margin_bitext 4.16s
@@ -238,67 +251,20 @@ object Bench {
       println(s"[bench] note: committed reference at $committedRefPath unreadable — committed-floor re-measure disabled")
       Map.empty
     }
+    // sorted order: deterministic across rounds, comparable per-query.
     val results = EngineSession.selected(only).map { case (name, fn) =>
-      // Per-query cache isolation: without it, persisted frames from
-      // every earlier query stay resident for the whole suite — at 200+
-      // queries that's an across-the-board +35-45% GC drag on LATER
-      // queries (measured round 5), and it makes the plan fingerprint
-      // cache-composition-sensitive (a new query that persists a shared
-      // frame flips sibling queries' fps without any code change). The
-      // clear runs BEFORE the warm run, so within a query the warm
-      // methodology is unchanged: warm run fills this query's caches,
-      // measured runs reuse them.
-      EngineSession.isolate(spark)
-      // the fingerprint's DataFrame doubles as the unmeasured warm run.
-      // The warm wall must bracket CONSTRUCTION too, not just the noop
-      // write: eager localCheckpoint()s run their jobs inside fn(), so
-      // timing only the write undercounts checkpoint-heavy queries and
-      // their honest measured runs would spuriously re-measure. The
-      // wall is summed from two segments so the fingerprints can be
-      // taken BETWEEN them, i.e. BEFORE the warm write executes:
-      // builder-internal persist()s share CacheManager state, and once
-      // the warm run materializes a cached frame its InMemoryRelation
-      // embeds the AQE-FINALIZED physical subtree (QueryStage wrappers,
-      // runtime Build side) — runtime-dependent text that flapped the
-      // "composition-stable" optimized fp on ~11 queries between two
-      // identical-code runs when the fps were taken post-warm.
-      val t0c = System.nanoTime()
-      val df0 = try Some(fn(spark, sfDir)) catch { case _: Throwable => None }
-      val constructWall = (System.nanoTime() - t0c) / 1e9
-      // Canonicalized-plan fingerprints ([[PlanFp]]): identical fp +
-      // different time = noise, different fp = a plan change to audit.
-      val fp = df0.map(PlanFp.fingerprint).getOrElse("err")
-      val fpo = df0.map(PlanFp.fingerprintOpt).getOrElse("err")
-      val t0w = System.nanoTime()
-      df0.foreach(df => try df.write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () })
-      val warmWall = constructWall + (System.nanoTime() - t0w) / 1e9
-      val times = Seq.fill(nRuns) {
-        val t0 = System.nanoTime()
-        runOnce(fn)
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      val measured = times(times.length / 2)
-      val committedFloor =
-        committedFloorFires(measured, fpo, committedRef.get(name))
-      val finalT = if (needsRemeasure(measured, warmWall, floor = 1.0)
-          || committedFloor) {
-        remeasured += name
-        val t0 = System.nanoTime()
-        runOnce(fn)
-        math.min(measured, (System.nanoTime() - t0) / 1e9)
-      } else measured
-      instrument(name, finalT)
-      (name, finalT, fp, fpo)
+      measure(spark, name, fn, sfDir, committedRef.get(name))
     }
+    val times = results.collect { case Measured(k, Right(t), _, _, _) => k -> t }
+    val errors = results.collect { case Measured(k, Left(e), _, _, _) => k -> e }
+    val remeasured = results.filter(_.remeasured).map(_.name)
     def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val totalSec = total(results)
     EngineSession.isolate(spark)
     // Superlinearity gate: re-time every query at a 10×-smaller scale
-    // (one warm + one measured run — same methodology, cheaper) and
-    // flag t(big)/t(small) ratios far above the 10× data ratio. This
-    // is the mechanical tripwire for accidentally-quadratic plans:
-    // ts_linear_interp's r4 quadratic frames (ratio ~100) and any
+    // ([[ratio]]) and flag t(big)/t(small) ratios far above the 10× data
+    // ratio. This is the mechanical tripwire for accidentally-quadratic
+    // plans: ts_linear_interp's r4 quadratic frames (ratio ~100) and any
     // day-grid nested-loop join regression would both surface here
     // without a human reading plan dumps. Ratios only flag when the
     // big-scale time is ≥ 1 s — below that, fixed per-job overhead
@@ -307,66 +273,40 @@ object Bench {
     // the standard sf0.1 artifact run.
     val ratioDir = sys.env.getOrElse("SPARK_GRAFT_RATIO_DIR",
       if (sfDir.contains("sf0.1")) sfDir.replace("sf0.1", "sf0.01") else "")
-    // A query that errors or hangs at the small scale is EXACTLY the
-    // failure mode this gate hunts — record it as the -1.0 sentinel
-    // (visible in the artifact) instead of silently dropping it from
-    // the ratio map.
     // Only queries that could possibly flag get a small-scale run: the
     // gate requires big-time >= 1.0 s, so anything under 0.5 s (margin
     // for round-over-round growth) can never flag — skipping it saves
     // ~30% of the ratio pass's driver wall-clock at a 400-query
     // surface (the r7 driver bench died on exactly this budget).
     val ratioBigMin = 0.5
-    val bigTimes = results.map { case (k, v, _, _) => k -> v }.toMap
+    val bigTimes = times.toMap
     val ratios: Map[String, Double] =
       if (ratioDir.isEmpty || !java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ratioDir))) Map.empty
-      else EngineSession.selected(only)
-        .filter { case (name, _) => bigTimes.getOrElse(name, 0.0) >= ratioBigMin }
-        .map { case (name, fn) =>
-          // light isolation: sf0.01 queries leave a tenth of the state,
-          // and the pass is only a superlinearity tripwire
-          EngineSession.isolate(spark, full = false)
-          try {
-            val w0 = System.nanoTime()
-            fn(spark, ratioDir).write.format("noop").mode("overwrite").save()
-            val warmSmall = (System.nanoTime() - w0) / 1e9
-            val t0 = System.nanoTime()
-            fn(spark, ratioDir).write.format("noop").mode("overwrite").save()
-            val small0 = (System.nanoTime() - t0) / 1e9
-            // same load-burst defense as the big scale: an inflated
-            // small-side denominator DEFLATES the ratio and masks a
-            // real superlinearity, so re-measure it too
-            val small = if (needsRemeasure(small0, warmSmall, floor = 0.2)) {
-              val t1 = System.nanoTime()
-              fn(spark, ratioDir).write.format("noop").mode("overwrite").save()
-              math.min(small0, (System.nanoTime() - t1) / 1e9)
-            } else small0
-            name -> results.find(_._1 == name)
-              .map { case (_, big, _, _) => if (small > 0) big / small else 0.0 }
-              .getOrElse(-1.0)
-          } catch { case _: Throwable => name -> -1.0 }
-        }.toMap
+      else EngineSession.selected(only).collect {
+        case (name, fn) if bigTimes.getOrElse(name, 0.0) >= ratioBigMin =>
+          name -> ratio(spark, fn, ratioDir, bigTimes(name))
+      }.toMap
     val superlinear = flagSuperlinear(ratios, bigTimes)
     val ratioErrors = ratios.collect { case (k, v) if v < 0 => k }.toSeq.sorted
     // One aggregate fingerprint for the (size-capped) stdout line; the
     // per-query map lives in docs/bench_full.json.
     val plansFp = {
-      val all = results.map { case (k, _, fp, _) => s"$k=$fp" }.mkString(";")
+      val all = results.map(m => s"${m.name}=${m.fp}").mkString(";")
       java.security.MessageDigest.getInstance("MD5")
         .digest(all.getBytes("UTF-8")).take(6).map(b => f"${b & 0xff}%02x").mkString
     }
+    def names(ns: Seq[String]): String = ns.map(n => s"\"$n\"").mkString("[", ",", "]")
     // Full per-query medians → a file (the driver keeps only the last
     // ~2000 chars of stdout, so a 100+-entry JSON line gets truncated
     // and never parses — BENCH_r01/r02 both recorded parsed:null).
     val fullJson = {
-      val qs = results.map { case (k, v, _, _) => s"\"$k\":" + v }.mkString(",")
-      val fps = results.map { case (k, _, fp, _) => s"\"$k\":\"$fp\"" }.mkString(",")
-      val fpos = results.map { case (k, _, _, fpo) => s"\"$k\":\"$fpo\"" }.mkString(",")
+      val qs = times.map { case (k, v) => s"\"$k\":" + v }.mkString(",")
+      val fps = results.map(m => s"\"${m.name}\":\"${m.fp}\"").mkString(",")
+      val fpos = results.map(m => s"\"${m.name}\":\"${m.fpo}\"").mkString(",")
+      val errs = errors.map { case (k, e) =>
+        s"\"$k\":\"${graft.functions.AgentText.escapeJson(e)}\"" }.mkString(",")
       val rs = ratios.toSeq.sortBy(_._1)
         .map { case (k, v) => s"\"$k\":" + r3(v) }.mkString(",")
-      val sl = superlinear.map(n => s"\"$n\"").mkString(",")
-      val re = ratioErrors.map(n => s"\"$n\"").mkString(",")
-      val rm = remeasured.sorted.map(n => s"\"$n\"").mkString(",")
       // Attribution fields (r10 verdict #3): the committed record was
       // clobbered four rounds running by *something* passing an explicit
       // SPARK_GRAFT_BENCH_OUT. Echo the override value and the write
@@ -374,10 +314,11 @@ object Bench {
       val benchOutAttr = sys.env.get("SPARK_GRAFT_BENCH_OUT")
         .map(v => v.replace("\\", "\\\\").replace("\"", "\\\"")).getOrElse("")
       val writtenAt = java.time.Instant.now().toString
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.length},"cpus":$cpus,""" +
+      s"""{"metric":"total","value":$totalSec,"unit":"sec","n_queries":${times.length},"cpus":$cpus,""" +
         s""""queries":{$qs},"plans":{$fps},"plans_opt":{$fpos},"plans_fp":"$plansFp",""" +
-        s""""ratios":{$rs},"ratio_dir":"$ratioDir","superlinear":[$sl],"ratio_errors":[$re],""" +
-        s""""remeasured":[$rm],"bench_out":"$benchOutAttr","written_at":"$writtenAt","sf":"$sfDir"}"""
+        s""""ratios":{$rs},"ratio_dir":"$ratioDir","superlinear":${names(superlinear)},"ratio_errors":${names(ratioErrors)},""" +
+        s""""remeasured":${names(remeasured)},"errors":{$errs},"n_errors":${errors.length},""" +
+        s""""bench_out":"$benchOutAttr","written_at":"$writtenAt","sf":"$sfDir"}"""
     }
     // SPARK_GRAFT_BENCH_OUT overrides the artifact path. WITHOUT the
     // explicit override the artifact goes to an untracked timestamped
@@ -386,7 +327,8 @@ object Bench {
     // r8 AND r9, ending both rounds with the repo's primary perf
     // record dirty. The committed record is now only ever written
     // deliberately (SPARK_GRAFT_BENCH_OUT=docs/bench_full.json), and a
-    // driver-initiated run leaves git status clean.
+    // driver-initiated run leaves git status clean. A failed write
+    // fails the run: the stdout line must never name a missing file.
     val outOverride = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     val defaultPath = {
       val ts = new java.text.SimpleDateFormat("yyyyMMdd-HHmmss")
@@ -394,10 +336,10 @@ object Bench {
       s"docs/bench_runs/bench_full_cpus${cpus}_$ts.json"
     }
     val fullPath = java.nio.file.Paths.get(outOverride.getOrElse(defaultPath))
-    if (only.isEmpty || outOverride.isDefined) try {
+    if (only.isEmpty || outOverride.isDefined) {
       Option(fullPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(fullPath, fullJson.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    }
     // Stdout gets ONE compact line: total + a fixed headline subset at
     // 3 decimals, sized to survive the tail buffer. Headliners cover
     // each operator family's most expensive representative.
@@ -416,7 +358,7 @@ object Bench {
       // r7: price last round's weak rows mechanically every round.
       "er_edit1_pairs", "er_blocking_quality", "er_entity_clusters",
       "er_fellegi_sunter", "sim_dbscan")
-    val resMap = results.map { case (k, v, _, _) => k -> v }.toMap
+    val resMap = times.toMap
     val qs = headline.flatMap(k => resMap.get(k).map(v => s"\"$k\":" + r3(v)))
       .mkString("{", ",", "}")
     // Per-query fps for the regression-watch set go in the stdout line
@@ -439,15 +381,13 @@ object Bench {
     // the stdout watch map carries the composition-stable OPTIMIZED fp
     // (executed fps proved composition-unstable in r6 — three values
     // for one unchanged query); executed fps stay in bench_full.json.
-    val fpMap = results.map { case (k, _, _, fpo) => k -> fpo }.toMap
+    val fpMap = results.map(m => m.name -> m.fpo).toMap
     val wfps = watch.flatMap(k => fpMap.get(k).map(fp => s"\"$k\":\"$fp\""))
       .mkString("{", ",", "}")
-    val sl = superlinear.map(n => s"\"$n\"").mkString("[", ",", "]")
     // stdout is tail-truncated at ~2000 chars by the driver, so the
-    // remeasured list is capped at 10 names here (full list in the
-    // file artifact) with the true count alongside.
-    val rmOut = remeasured.sorted.take(10).map(n => s"\"$n\"").mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.length},"cpus":$cpus,"queries":$qs,"plans_fp":"$plansFp","plans_watch":$wfps,"superlinear":$sl,"remeasured":$rmOut,"n_remeasured":${remeasured.length},"full":"${fullPath.toString}","sf":"$sfDir"}""")
+    // remeasured and errors lists are capped at 10 names here (full
+    // record in the file artifact) with the true counts alongside.
+    println(s"""{"metric":"total","value":${r3(totalSec)},"unit":"sec","n_queries":${times.length},"cpus":$cpus,"queries":$qs,"plans_fp":"$plansFp","plans_watch":$wfps,"superlinear":${names(superlinear)},"remeasured":${names(remeasured.take(10))},"n_remeasured":${remeasured.length},"errors":${names(errors.map(_._1).take(10))},"n_errors":${errors.length},"full":"${fullPath.toString}","sf":"$sfDir"}""")
     spark.stop()
   }
 }

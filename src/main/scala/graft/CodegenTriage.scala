@@ -10,8 +10,9 @@ package graft
   * 14k-line generated unit failed whole-stage compile mid-suite).
   *
   * Usage: runMain graft.CodegenTriage [sfDir]
-  * Prints one line per query: OK / CODEGEN_FAIL / OTHER_FAIL, with a
-  * summary count at the end. CODEGEN_FAIL lines are the work list.
+  * Prints one line per query: OK / CODEGEN_FAIL / OTHER_FAIL (the
+  * latter followed by its cause chain), with a summary count at the
+  * end. CODEGEN_FAIL lines are the work list.
   */
 object CodegenTriage {
   def main(args: Array[String]): Unit = {
@@ -55,14 +56,12 @@ object CodegenTriage {
             Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
         case e: Throwable =>
           println(s"OTHER_FAIL $name :: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(200)}")
-          if (sys.env.contains("SPARK_GRAFT_TRIAGE_TRACE")) {
-            var t: Throwable = e; var n = 0
-            while (t != null && n < 10) {
-              println(s"  CAUSE ${t.getClass.getName}: " +
-                Option(t.getMessage).getOrElse("").replace('\n', ' ').take(400))
-              t.getStackTrace.take(12).foreach(f => println(s"    at $f"))
-              t = t.getCause; n += 1
-            }
+          var t: Throwable = e; var n = 0
+          while (t != null && n < 10) {
+            println(s"  CAUSE ${t.getClass.getName}: " +
+              Option(t.getMessage).getOrElse("").replace('\n', ' ').take(400))
+            t.getStackTrace.take(12).foreach(f => println(s"    at $f"))
+            t = t.getCause; n += 1
           }
       }
     }

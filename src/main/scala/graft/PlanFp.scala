@@ -90,7 +90,10 @@ object PlanFp {
     * grouping-set spec literal or to Expand row order won't move this
     * fp — the executed-plan fp still sees it. */
   private[graft] def normalizeDistinctGids(text: String): String = {
-    val gidFiltered = text.replaceAll(
+    // the literals are gids only under RewriteDistinctAggregates'
+    // Expand; without one, FILTER (WHERE (<int> = col)) is a user's own
+    // aggregate filter and must stay in the fp
+    val gidFiltered = if (!text.contains("Expand [")) text else text.replaceAll(
       "FILTER \\(WHERE \\(\\d+ = none#\\*\\)\\)",
       "FILTER (WHERE (gid = none#*))")
     val marker = "Expand [["

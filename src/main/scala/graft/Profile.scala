@@ -10,10 +10,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * from wall-clock alone (the UI is disabled in bench runs).
   *
   * Usage: runMain graft.Profile <queryName> [sfDir]
-  * Env: SPARK_GRAFT_CPUS (defaults to host), SPARK_GRAFT_PROFILE_RUNS.
+  * Env: SPARK_GRAFT_CPUS (defaults to host).
   *
   * Prints one line per stage (submit-relative ms, duration, task
-  * count, name) plus a job-count / task-count / wall summary, after a
+  * count, name, then the stage's `graft` callsite frames) plus a
+  * job-count / task-count / wall summary for one measured run, after a
   * warm run and the same isolation Bench uses — numbers here are
   * directly comparable to clean-isolated bench times.
   */
@@ -36,13 +37,11 @@ object Profile {
     runOnce()
     EngineSession.isolate(spark)
 
-    // SPARK_GRAFT_PROFILE_DETAILS=1 appends each stage's callsite stack
-    // head — the lazily-executed AQE stages all print the same
-    // CompletableFuture name, so the details are the only way to map a
-    // hot stage back to source.
-    val wantDetails = sys.env.get("SPARK_GRAFT_PROFILE_DETAILS").contains("1")
+    // each stage's callsite stack head: the lazily-executed AQE stages
+    // all print the same CompletableFuture name, so the details are the
+    // only way to map a hot stage back to source
     case class St(id: Int, tasks: Int, sub: Long, done: Long, name: String,
-      details: String = "")
+      details: String)
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[St]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
@@ -52,10 +51,8 @@ object Profile {
         stages.add(St(si.stageId, si.numTasks,
           si.submissionTime.getOrElse(-1L), si.completionTime.getOrElse(-1L),
           si.name.takeWhile(_ != '\n'),
-          if (wantDetails)
-            si.details.linesIterator.filter(_.contains("graft"))
-              .take(3).mkString(" | ")
-          else ""))
+          si.details.linesIterator.filter(_.contains("graft"))
+            .take(3).mkString(" | ")))
       }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobStart.put(e.jobId, e.time)
@@ -66,9 +63,7 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val nRuns = sys.env.get("SPARK_GRAFT_PROFILE_RUNS")
-      .flatMap(_.toIntOption).getOrElse(1).max(1)
-    (1 to nRuns).foreach(_ => runOnce())
+    runOnce()
     val wall = (System.nanoTime() - t0) / 1e9
     Thread.sleep(500) // listener bus drain
     spark.sparkContext.removeSparkListener(listener)
@@ -83,7 +78,7 @@ object Profile {
     ss.foreach { s =>
       val dur = s.done - s.sub
       println(f"   +${s.sub - base}%6d ms  ${dur}%6d ms  ${s.tasks}%4d tasks  stage ${s.id}%4d  ${s.name.take(80)}")
-      if (wantDetails && s.details.nonEmpty) println(s"        ${s.details.take(200)}")
+      if (s.details.nonEmpty) println(s"        ${s.details.take(200)}")
     }
     val jd = jobs.asScala.toSeq.sortBy(_._1)
     println(s"   job durations ms: ${jd.map(_._2).mkString(", ")}")

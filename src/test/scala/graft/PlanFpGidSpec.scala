@@ -40,6 +40,13 @@ class PlanFpGidSpec extends AnyFunSuite {
     assert(n.contains("Aggregate ["))
   }
 
+  test("a literal aggregate FILTER with no Expand is the user's, not a gid") {
+    val userFilter = "Aggregate [sum(none#*) FILTER (WHERE (3 = none#*)) AS #*L]\n+- Relation"
+    assert(PlanFp.normalizeDistinctGids(userFilter) == userFilter)
+    assert(PlanFp.normalizeDistinctGids(userFilter) !=
+      PlanFp.normalizeDistinctGids(userFilter.replace("(3 = ", "(4 = ")))
+  }
+
   test("text without Expand or FILTER gids passes through unchanged") {
     val plain = "Project [a#*, b#*]\n+- Filter (2 = none#*)\n   +- Relation"
     assert(PlanFp.normalizeDistinctGids(plain) == plain)

@@ -1,6 +1,8 @@
 #!/usr/bin/env python3
 """Compare two Bench JSON lines (e.g. BENCH_r1.json vs BENCH_r2.json):
-per-query delta sorted by regression size, plus totals.
+per-query delta sorted by regression size, plus totals. Exits 1 when
+NEW recorded failed queries (`n_errors` > 0; an artifact without the
+field counts as 0), after printing them.
 
 Usage: python3 tools/bench_compare.py OLD.json NEW.json [threshold_pct]
 """
@@ -27,7 +29,10 @@ def load(path):
         name, val = m.group(1), float(m.group(2))
         if name == "value":
             obj["value"] = val
-        elif name not in ("n", "rc", "cpus", "sf", "metric", "unit"):
+        elif name == "n_errors":
+            obj["n_errors"] = int(val)
+        elif name not in ("n", "rc", "cpus", "sf", "metric", "unit",
+                          "n_queries", "n_remeasured"):
             obj["queries"][name] = val
     return obj
 
@@ -57,6 +62,16 @@ def main():
         nc = sum(v for k, v in nq.items() if k in oq)
         print(f"comparable-query totals: {oc:.1f}s -> {nc:.1f}s "
               f"({(nc - oc) / oc * 100:+.0f}%) over {len(set(oq) & set(nq))} queries")
+    n_errors = new.get("n_errors", 0)
+    if n_errors > 0:
+        # the file artifact maps name -> first error line; the stdout
+        # line lists at most 10 names
+        errors = new.get("errors", {})
+        print(f"NEW has {n_errors} failed queries:")
+        for name in errors:
+            msg = errors[name] if isinstance(errors, dict) else ""
+            print(f"  ERROR {name}: {msg}".rstrip())
+        sys.exit(1)
 
 
 if __name__ == "__main__":
