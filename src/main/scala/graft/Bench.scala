@@ -48,11 +48,13 @@ object Bench {
 
   /** One query's full-scale result: its steady-state seconds, or the
     * first line of the error that stopped it (an errored query gets no
-    * time and no share of `total`), both plan fps ("err" when
-    * construction failed) and whether the single re-measure fired. */
+    * time and no share of `total`), the optimized-plan fp ("err" when
+    * construction failed), whether the single re-measure fired, and —
+    * for a timed query — the first build's wall and the
+    * [[LayerCollector]] tag of the run whose time is reported. */
   private[graft] final case class Measured(
-      name: String, outcome: Either[String, Double],
-      fp: String, fpo: String, remeasured: Boolean)
+      name: String, outcome: Either[String, Double], fpo: String,
+      remeasured: Boolean, constructS: Double = 0.0, runTag: String = "")
 
   private[graft] def total(ms: Seq[Measured]): Double =
     ms.flatMap(_.outcome.toOption).sum
@@ -62,6 +64,8 @@ object Bench {
     * queries would measure a bare row count instead of their real work. */
   private def run(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  private[graft] def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
   private def timed[A](body: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -73,29 +77,28 @@ object Bench {
     Option(e.getMessage).flatMap(_.linesIterator.find(_.trim.nonEmpty))
       .getOrElse(e.getClass.getName)
 
-  /** The measured run both scales share. The warm run (`warmWall`,
+  /** The measured runs both scales share. The warm run (`warmWall`,
     * construction included) already paid Catalyst planning + Janino
-    * compile, so one freshly constructed run is the steady-state time.
-    * Adaptive re-measure (r9 verdict #1): with ONE measured run, a
-    * single host preemption burst fabricates a 10x row (r8 gx_ktruss
-    * 20.6 s, r9 gx_lpa 25.0 s — both ≤3.9 s isolated at the identical
-    * fp), so when [[needsRemeasure]] at `floor` or `alsoFire` says so,
-    * run once more and report the min. Returns (seconds, re-measured);
-    * throws whatever the query throws. */
-  private def steady(spark: SparkSession,
-      fn: (SparkSession, String) => DataFrame, dir: String,
-      warmWall: Double, floor: Double,
-      alsoFire: Double => Boolean = _ => false): (Double, Boolean) = {
-    val measured = timed(run(fn(spark, dir)))._2
-    if (needsRemeasure(measured, warmWall, floor) || alsoFire(measured))
-      (math.min(measured, timed(run(fn(spark, dir)))._2), true)
-    else (measured, false)
+    * compile, so one freshly constructed run (`once(0)`) is the
+    * steady-state time. Adaptive re-measure (r9 verdict #1): with ONE
+    * measured run, a single host preemption burst fabricates a 10x row
+    * (r8 gx_ktruss 20.6 s, r9 gx_lpa 25.0 s — both ≤3.9 s isolated at
+    * the identical fp), so when [[needsRemeasure]] at `floor` or
+    * `alsoFire` says so, run `once(1)` too; the reported time is the
+    * min. Returns every run's seconds; throws whatever the query
+    * throws. */
+  private def steady(once: Int => Double, warmWall: Double, floor: Double,
+      alsoFire: Double => Boolean = _ => false): Seq[Double] = {
+    val first = once(0)
+    if (needsRemeasure(first, warmWall, floor) || alsoFire(first)) Seq(first, once(1))
+    else Seq(first)
   }
 
-  /** The per-query measurement: isolate → construct → both
-    * fingerprints → warm write → [[steady]] (floor 1 s, plus the
-    * [[committedFloorFires]] trigger against `committed`). Any
-    * Throwable along the way becomes the recorded error, never a time.
+  /** The per-query measurement: isolate → construct → optimized-plan
+    * fingerprint → warm write → [[steady]] (floor 1 s, plus the
+    * [[committedFloorFires]] trigger against `committed`), each measured
+    * run — construction and write — tagged for `layers`. Any Throwable
+    * along the way becomes the recorded error, never a time.
     *
     * Isolation runs BEFORE the warm run: without it, persisted frames
     * from every earlier query stay resident for the whole suite (+35-45%
@@ -103,7 +106,7 @@ object Bench {
     * cache-composition-sensitive. The warm wall brackets construction
     * too, since eager localCheckpoint()s run their jobs inside fn() and
     * timing only the write would spuriously re-measure
-    * checkpoint-heavy queries. The fps are taken between construction
+    * checkpoint-heavy queries. The fp is taken between construction
     * and the warm write: once the warm run materializes a cached frame
     * its InMemoryRelation embeds the AQE-finalized physical subtree
     * (QueryStage wrappers, runtime build side), which flapped the
@@ -111,19 +114,27 @@ object Bench {
     * post-warm. */
   private[graft] def measure(spark: SparkSession, name: String,
       fn: (SparkSession, String) => DataFrame, dir: String,
-      committed: Option[(Double, String)]): Measured = {
+      committed: Option[(Double, String)], layers: LayerCollector): Measured = {
     EngineSession.isolate(spark)
     try {
       val (df, constructWall) = timed(fn(spark, dir))
-      val fp = PlanFp.fingerprint(df)
       val fpo = PlanFp.fingerprintOpt(df)
       try {
         val warmWall = constructWall + timed(run(df))._2
-        val (t, again) = steady(spark, fn, dir, warmWall, floor = 1.0,
-          committedFloorFires(_, fpo, committed))
-        Measured(name, Right(t), fp, fpo, again)
-      } catch { case e: Throwable => Measured(name, Left(firstLine(e)), fp, fpo, false) }
-    } catch { case e: Throwable => Measured(name, Left(firstLine(e)), "err", "err", false) }
+        val runs = steady(i => layers.tagged(s"$name#$i")(timed(run(fn(spark, dir)))._2),
+          warmWall, floor = 1.0, committedFloorFires(_, fpo, committed))
+        Measured(name, Right(runs.min), fpo, runs.length > 1,
+          constructWall, s"$name#${runs.indexOf(runs.min)}")
+      } catch { case e: Throwable => Measured(name, Left(firstLine(e)), fpo, false) }
+    } catch { case e: Throwable => Measured(name, Left(firstLine(e)), "err", false) }
+  }
+
+  /** The `layers` record of every timed query (an errored one has
+    * none: `errors` records it), read after one [[LayerCollector.drain]]. */
+  private[graft] def layerRecords(ms: Seq[Measured],
+      layers: LayerCollector): Seq[(String, Layer)] = {
+    layers.drain()
+    ms.collect { case m if m.outcome.isRight => m.name -> layers.record(m.runTag, m.constructS) }
   }
 
   /** t(big)/t(small) for the superlinearity gate: light isolation (a
@@ -139,7 +150,7 @@ object Bench {
     EngineSession.isolate(spark, full = false)
     try {
       val warm = timed(run(fn(spark, smallDir)))._2
-      val small = steady(spark, fn, smallDir, warm, floor = 0.2)._1
+      val small = steady(_ => timed(run(fn(spark, smallDir)))._2, warm, floor = 0.2).min
       if (small > 0) big / small else 0.0
     } catch { case _: Throwable => -1.0 }
   }
@@ -213,35 +224,24 @@ object Bench {
         Map.empty
       }
       else {
-        import graft.functions.AgentText.{JObj, JNum, JStr}
+        import graft.functions.AgentText.{JObj, JNum, JStr, JVal}
         graft.functions.AgentText.parseJson5ish(
             new String(java.nio.file.Files.readAllBytes(p), "UTF-8")) match {
           case Some(JObj(root)) =>
-            val sameCpus = root.get("cpus") match {
-              case Some(JNum(c)) => c.toInt.toString == cpus
-              case Some(JStr(c)) => c == cpus
+            // same cpus and same scale only: an sf1 run must not
+            // re-measure against sf0.1 committed times (fps differ too —
+            // scan paths are in the canonical text — but don't rely on
+            // that alone)
+            val sameRun = root.get("cpus").exists {
+              case JNum(c) => c.toInt.toString == cpus
+              case JStr(c) => c == cpus
               case _ => false
-            }
-            // same-scale only: an sf1 run must not re-measure against
-            // sf0.1 committed times (fps differ too — scan paths are in
-            // the canonical text — but don't rely on that alone)
-            val sameSf = root.get("sf") match {
-              case Some(JStr(s)) => s == sfDir
-              case _ => false
-            }
-            if (!sameCpus || !sameSf) Map.empty
-            else {
-              val times = root.get("queries") match {
-                case Some(JObj(qs)) => qs.collect { case (k, JNum(v)) => k -> v }
-                case _ => Map.empty[String, Double]
-              }
-              val fps = root.get("plans_opt") match {
-                case Some(JObj(qs)) => qs.collect { case (k, JStr(v)) => k -> v }
-                case _ => Map.empty[String, String]
-              }
-              times.flatMap { case (k, t) =>
-                fps.get(k).map(fp => k -> (t, fp)) }.toMap
-            }
+            } && root.get("sf").contains(JStr(sfDir))
+            def entries(k: String) = root.get(k).collect { case JObj(qs) => qs }.getOrElse(Map.empty[String, JVal])
+            val fps = entries("plans_opt").collect { case (k, JStr(v)) => k -> v }
+            if (!sameRun) Map.empty
+            else entries("queries").collect {
+              case (k, JNum(t)) if fps.contains(k) => (k, (t, fps(k))) }.toMap
           case _ =>
             println(s"[bench] note: committed reference at $committedRefPath did not parse — committed-floor re-measure disabled")
             Map.empty
@@ -252,13 +252,15 @@ object Bench {
       Map.empty
     }
     // sorted order: deterministic across rounds, comparable per-query.
+    val collector = new LayerCollector(spark)
     val results = EngineSession.selected(only).map { case (name, fn) =>
-      measure(spark, name, fn, sfDir, committedRef.get(name))
+      measure(spark, name, fn, sfDir, committedRef.get(name), collector)
     }
-    val times = results.collect { case Measured(k, Right(t), _, _, _) => k -> t }
-    val errors = results.collect { case Measured(k, Left(e), _, _, _) => k -> e }
+    val times = results.collect { case Measured(k, Right(t), _, _, _, _) => k -> t }
+    val errors = results.collect { case Measured(k, Left(e), _, _, _, _) => k -> e }
+    val layers = layerRecords(results, collector)
+    val fallbacks = layers.collect { case (k, l) if l.codegenFallback => k }
     val remeasured = results.filter(_.remeasured).map(_.name)
-    def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val totalSec = total(results)
     EngineSession.isolate(spark)
     // Superlinearity gate: re-time every query at a 10×-smaller scale
@@ -288,21 +290,17 @@ object Bench {
       }.toMap
     val superlinear = flagSuperlinear(ratios, bigTimes)
     val ratioErrors = ratios.collect { case (k, v) if v < 0 => k }.toSeq.sorted
-    // One aggregate fingerprint for the (size-capped) stdout line; the
-    // per-query map lives in docs/bench_full.json.
-    val plansFp = {
-      val all = results.map(m => s"${m.name}=${m.fp}").mkString(";")
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(all.getBytes("UTF-8")).take(6).map(b => f"${b & 0xff}%02x").mkString
-    }
+    // One aggregate of the optimized-plan fps for the (size-capped)
+    // stdout line; the per-query map lives in docs/bench_full.json.
+    val plansFp = PlanFp.md5_12(results.map(m => s"${m.name}=${m.fpo}").mkString(";"))
     def names(ns: Seq[String]): String = ns.map(n => s"\"$n\"").mkString("[", ",", "]")
     // Full per-query medians → a file (the driver keeps only the last
     // ~2000 chars of stdout, so a 100+-entry JSON line gets truncated
     // and never parses — BENCH_r01/r02 both recorded parsed:null).
     val fullJson = {
       val qs = times.map { case (k, v) => s"\"$k\":" + v }.mkString(",")
-      val fps = results.map(m => s"\"${m.name}\":\"${m.fp}\"").mkString(",")
       val fpos = results.map(m => s"\"${m.name}\":\"${m.fpo}\"").mkString(",")
+      val ls = layers.map { case (k, l) => s"\"$k\":${l.json}" }.mkString(",")
       val errs = errors.map { case (k, e) =>
         s"\"$k\":\"${graft.functions.AgentText.escapeJson(e)}\"" }.mkString(",")
       val rs = ratios.toSeq.sortBy(_._1)
@@ -315,7 +313,8 @@ object Bench {
         .map(v => v.replace("\\", "\\\\").replace("\"", "\\\"")).getOrElse("")
       val writtenAt = java.time.Instant.now().toString
       s"""{"metric":"total","value":$totalSec,"unit":"sec","n_queries":${times.length},"cpus":$cpus,""" +
-        s""""queries":{$qs},"plans":{$fps},"plans_opt":{$fpos},"plans_fp":"$plansFp",""" +
+        s""""queries":{$qs},"plans_opt":{$fpos},"plans_fp":"$plansFp","layers":{$ls},""" +
+        s""""codegen_fallback":${names(fallbacks)},""" +
         s""""ratios":{$rs},"ratio_dir":"$ratioDir","superlinear":${names(superlinear)},"ratio_errors":${names(ratioErrors)},""" +
         s""""remeasured":${names(remeasured)},"errors":{$errs},"n_errors":${errors.length},""" +
         s""""bench_out":"$benchOutAttr","written_at":"$writtenAt","sf":"$sfDir"}"""
@@ -380,14 +379,14 @@ object Bench {
       "er_edit1_pairs", "er_blocking_quality", "sim_dbscan")
     // the stdout watch map carries the composition-stable OPTIMIZED fp
     // (executed fps proved composition-unstable in r6 — three values
-    // for one unchanged query); executed fps stay in bench_full.json.
+    // for one unchanged query).
     val fpMap = results.map(m => m.name -> m.fpo).toMap
     val wfps = watch.flatMap(k => fpMap.get(k).map(fp => s"\"$k\":\"$fp\""))
       .mkString("{", ",", "}")
     // stdout is tail-truncated at ~2000 chars by the driver, so the
     // remeasured and errors lists are capped at 10 names here (full
     // record in the file artifact) with the true counts alongside.
-    println(s"""{"metric":"total","value":${r3(totalSec)},"unit":"sec","n_queries":${times.length},"cpus":$cpus,"queries":$qs,"plans_fp":"$plansFp","plans_watch":$wfps,"superlinear":${names(superlinear)},"remeasured":${names(remeasured.take(10))},"n_remeasured":${remeasured.length},"errors":${names(errors.map(_._1).take(10))},"n_errors":${errors.length},"full":"${fullPath.toString}","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(totalSec)},"unit":"sec","n_queries":${times.length},"cpus":$cpus,"queries":$qs,"plans_fp":"$plansFp","plans_watch":$wfps,"jobs":${layers.map(_._2.jobs).sum},"tasks":${layers.map(_._2.tasks).sum},"n_codegen_fallback":${fallbacks.length},"superlinear":${names(superlinear)},"remeasured":${names(remeasured.take(10))},"n_remeasured":${remeasured.length},"errors":${names(errors.map(_._1).take(10))},"n_errors":${errors.length},"full":"${fullPath.toString}","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -146,12 +146,11 @@ object logs {
 }
 
 /** The engine's recommended session configuration and the harness
-  * plumbing every local entry point shares — Bench, Profile, Verify,
-  * FpScan, CodegenTriage, Explain and the agent demos build their
-  * session here (r12 verdict #10: the measured config must be the
-  * shipped config, in ONE place) and layer only their own extras on
-  * top (fingerprint truncation settings, SPARK_GRAFT_CONF A/B
-  * overlays, CodegenTriage's `codegen.fallback=false`).
+  * plumbing every local entry point shares — Bench, Verify, FpScan,
+  * Explain and the agent demos build their session here (r12 verdict
+  * #10: the measured config must be the shipped config, in ONE place)
+  * and layer only their own extras on top (fingerprint truncation
+  * settings, Bench's SPARK_GRAFT_CONF A/B overlay).
   *
   * The AQE coalesce floor (adopted r12; interleaved A/B at
   * sf0.1/cpus=32: the 8 hottest dd_/mm_ rows 24.2 → 21.2 s):

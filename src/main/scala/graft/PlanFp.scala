@@ -3,38 +3,19 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Plan-fingerprint canonicalization, shared by [[Bench]] (per-round
-  * artifacts), [[FpScan]] (the flap hunter) and specs. Two fps per
-  * query:
-  *
-  *  - [[fingerprint]] — canonicalized EXECUTED plan: pins AQE/physical
-  *    shape, composition-sensitive by design.
-  *  - [[fingerprintOpt]] — canonicalized OPTIMIZED logical plan,
-  *    normalized until it is a pure function of code + input schema:
-  *    this is the fp that adjudicates "plan changed vs host noise"
-  *    between runs, so every JVM-session-assigned id class it still
-  *    leaks is a bug (r10/r11: lambda identities, commutative-operand
-  *    hash ordering, InMemoryRelation runtime subtrees, GT/LT
-  *    canonicalization direction, globalRank's literal offset maps —
-  *    all found by diffing flapped texts and normalized here).
+  * artifacts), [[FpScan]] (the flap hunter) and specs.
+  * [[fingerprintOpt]] canonicalizes the OPTIMIZED logical plan,
+  * normalized until it is a pure function of code + input schema: it
+  * adjudicates "plan changed vs host noise" between runs, so every
+  * JVM-session-assigned id class it still leaks is a bug (r10/r11:
+  * lambda identities, commutative-operand hash ordering,
+  * InMemoryRelation runtime subtrees, GT/LT canonicalization
+  * direction, globalRank's literal offset maps — all found by diffing
+  * flapped texts and normalized here). The physical plan has no fp:
+  * its canonical text kept session counters and hash-ordered operands,
+  * so two runs of one commit disagreed on ~70 of 431 queries.
   */
 object PlanFp {
-
-  /** Canonicalized executed-plan fp (12 hex chars). */
-  def fingerprint(df: DataFrame): String =
-    try {
-      // plan_id is a session-global counter (varies run to run on an
-      // identical plan) — strip it, like any other volatile id token
-      val canon = df.queryExecution.executedPlan.canonicalized.treeString
-        .replaceAll("plan_id=\\d+", "plan_id=*")
-        .replaceAll("cachedrdd_\\d+", "cachedrdd_*")
-        // Scala lambda/UDF identities print as Class$$Lambda$N/0x…@hash
-        // — all three tokens are JVM-session-assigned, so every
-        // UDF-bearing query's fp flapped between sbt sessions (30
-        // spurious "changes" in the r7→r8 comparison)
-        .replaceAll("\\$\\$Lambda\\$?\\d*/0x[0-9a-f]+", "\\$\\$Lambda")
-        .replaceAll("@[0-9a-f]{6,}", "@*")
-      md5_12(canon)
-    } catch { case _: Throwable => "err" }
 
   /** Sort each multicommutativeop's top-level operand list textually
     * (recursing first, so nested chains sort before their parents) —
@@ -88,7 +69,8 @@ object PlanFp {
     * elements blanked. Narrow documented blind spot (same
     * class as the map(*) elision): a deliberate change ONLY to a
     * grouping-set spec literal or to Expand row order won't move this
-    * fp — the executed-plan fp still sees it. */
+    * fp — diff the `SPARK_GRAFT_FP_DUMP` texts ([[FpScan]]) or the
+    * `Explain` plan dumps to see one. */
   private[graft] def normalizeDistinctGids(text: String): String = {
     // the literals are gids only under RewriteDistinctAggregates'
     // Expand; without one, FILTER (WHERE (<int> = col)) is a user's own
@@ -164,8 +146,8 @@ object PlanFp {
     // schema — the surrounding LOGICAL structure is what this fp
     // adjudicates; the cached subtree's own shape is execution
     // detail. (Narrow blind spot, documented: a change INSIDE a
-    // persisted subtree alone won't move this fp — the executed-
-    // plan fp still sees it.)
+    // persisted subtree alone won't move this fp — only a plan dump
+    // shows it.)
     val stableOpt = df.queryExecution.optimizedPlan.transform {
       case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation(imr.output)
@@ -222,7 +204,7 @@ object PlanFp {
     try md5_12(canonOptText(df))
     catch { case _: Throwable => "err" }
 
-  private def md5_12(text: String): String =
+  private[graft] def md5_12(text: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(text.getBytes("UTF-8"))
       .take(6).map(b => f"${b & 0xff}%02x").mkString

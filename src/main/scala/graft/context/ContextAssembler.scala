@@ -68,13 +68,14 @@ final case class ContextAssembler(
       s"- ${t.name}: ${t.description}\n  Input schema: ${t.inputSchema}")).mkString("\n")
   }
 
-  /** Conversation history slice (client.py:177-183, P8). */
+  /** Conversation history slice (client.py:177-183, P8), oldest turn
+    * first: `seq` restarts at 0 every turn, so order by `(ts, seq)`. */
   def historyContext(messages: Dataset[Message], sessionId: String, fromSeq: Long): String = {
     val spark = messages.sparkSession
     import spark.implicits._
     val rows = messages
       .filter($"sessionId" === sessionId && $"seq" >= fromSeq)
-      .orderBy($"seq")
+      .orderBy($"ts", $"seq")
       .select(concat($"role", lit(": "), $"content")).as[String].collect()
     if (rows.isEmpty) "" else ("\n## Conversation:" +: rows.toSeq).mkString("\n")
   }

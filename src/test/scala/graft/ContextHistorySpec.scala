@@ -1,0 +1,27 @@
+package graft
+
+import java.sql.Timestamp
+
+import graft.context.ContextAssembler
+import graft.memory.MemoryStore
+import graft.model.{Message, Tool}
+import graft.task.TaskStore
+
+/** The ReAct loop restarts `seq` at 0 every turn, so the prompt's
+  * conversation history must order by turn time first: sorted by `seq`
+  * alone, every turn's user message came first. */
+class ContextHistorySpec extends SparkSpec {
+
+  test("history lists two turns' messages in turn order") {
+    val s = spark
+    import s.implicits._
+    val messages = Seq(
+      Message("s1", 0L, "user", "q2", new Timestamp(200L)),
+      Message("s1", 1L, "assistant", "a1", new Timestamp(100L)),
+      Message("s1", 0L, "user", "q1", new Timestamp(100L))).toDS()
+    val assembler = ContextAssembler(
+      MemoryStore.empty(spark), TaskStore.empty(spark), spark.emptyDataset[Tool])
+    assert(assembler.historyContext(messages, "s1", 0L).linesIterator.toSeq ===
+      Seq("", "## Conversation:", "user: q1", "assistant: a1", "user: q2"))
+  }
+}

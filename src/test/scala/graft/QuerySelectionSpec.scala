@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The one `SPARK_GRAFT_ONLY` selector every harness main shares
   * ([[EngineSession.only]] / [[EngineSession.selected]]): a typo must
   * fail loudly and name the culprit — before, Bench printed `total 0`
-  * and FpScan/CodegenTriage wrote empty output — and a valid subset
+  * and FpScan wrote empty output — and a valid subset
   * must come back as exactly that subset, in the sorted order every
   * harness iterates in.
   */
