@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import graft.context.ContextAssembler
 import graft.functions.AgentText
 import graft.functions.AgentText.{JBool, JNum, JObj, JStr}
-import graft.memory.MemoryStore
+import graft.memory.{MemoryAnalysis, MemoryStore}
 import graft.model._
 import graft.provider.Provider
 import graft.task.TaskStore
@@ -66,9 +66,13 @@ final class ReactLoop(
     // next iteration sees it (client.py:287-321).
     toolExecutor: (String, String) => String = (n, _) => s"[no executor for $n]") {
 
+  /** `memory`/`tasks` are the stores after the turn; `writes` is the
+    * same change as driver-side rows, for callers that keep their own
+    * state (see `graft.serve.ChatService`). */
   final case class Outcome(
       memory: MemoryStore, tasks: TaskStore,
-      newMessages: Seq[Message], iterations: Int)
+      newMessages: Seq[Message], iterations: Int,
+      writes: ReactLoop.Writes)
 
   def processQuery(
       sessionId: String, query: String,
@@ -78,6 +82,10 @@ final class ReactLoop(
     var memory = memory0
     var tasks = tasks0
     val newMessages = Seq.newBuilder[Message]
+    val addedRecords = Seq.newBuilder[MemoryRecord]
+    val puts = Seq.newBuilder[KvEntry]
+    var log = Option.empty[TaskLog]
+    var extracted = Seq.empty[ExtractedFileRow]
     var seq = 0L
     newMessages += Message(sessionId, seq, "user", query, now)
     var lastResponseText = ""
@@ -108,12 +116,16 @@ final class ReactLoop(
         (name, AgentText.parseJson5ish(args)) match {
           case ("add_memory_record", Some(JObj(f))) =>
             f.get("memory").collect { case JStr(m) =>
-              memory = memory.addRecord(MemoryRecord(sessionId, now, m))
+              val rec = MemoryRecord(sessionId, now, m)
+              addedRecords += rec
+              memory = memory.addRecord(rec)
             }
           case ("add_memory_data", Some(JObj(f))) =>
             (f.get("key"), f.get("value")) match {
               case (Some(JStr(k)), Some(JStr(v))) =>
-                memory = memory.putData(KvEntry(sessionId, k, v))
+                val entry = KvEntry(sessionId, k, v)
+                puts += entry
+                memory = memory.putData(entry)
               case _ => ()
             }
           case _ => ()
@@ -133,11 +145,13 @@ final class ReactLoop(
     // per-turn task update (task.py:491-627): append a capped log
     // record and extract files from the final response text
     taskId.foreach { tid =>
-      tasks = tasks.appendLog(TaskLog(
+      val entry = TaskLog(
         tid, now, query, AgentText.summarize(lastResponseText),
         newMessages.result().map(m => s"${m.role}: ${AgentText.truncate(m.content, 80)}"),
-        Map("iterations" -> iter.toString), null))
-      val extracted = graft.task.TaskStore.extractFiles(tid, now, lastResponseText, provider)
+        Map("iterations" -> iter.toString), null)
+      log = Some(entry)
+      tasks = tasks.appendLog(entry)
+      extracted = TaskStore.extractFiles(tid, now, lastResponseText, provider)
       if (extracted.nonEmpty) {
         val sp = tasks.files.sparkSession
         import sp.implicits._
@@ -145,7 +159,21 @@ final class ReactLoop(
       }
     }
     // post-turn memory update (ST2) exactly once per query
-    memory = memory.update(sessionId, provider, now)
-    Outcome(memory, tasks, newMessages.result(), iter)
+    val analysis = memory.analyze(sessionId, provider)
+    analysis.foreach(a => memory = memory.applyUpdate(sessionId, a, now))
+    Outcome(memory, tasks, newMessages.result(), iter,
+      ReactLoop.Writes(addedRecords.result(), puts.result(), log, extracted, analysis))
   }
+}
+
+object ReactLoop {
+  /** One turn's store changes as the driver-side values the loop passed
+    * to the store operations: added records, KV puts in order, the task
+    * log record, extracted files and the post-turn memory analysis. */
+  final case class Writes(
+      records: Seq[MemoryRecord],
+      puts: Seq[KvEntry],
+      log: Option[TaskLog],
+      files: Seq[ExtractedFileRow],
+      analysis: Option[MemoryAnalysis])
 }

@@ -37,8 +37,13 @@ final case class MemoryAnalysis(
   * state (≤3 / ≤maxTopics / grows slowly) — the per-batch merge runs on
   * collected state exactly because the reference semantics are a
   * sequential fold (each inserted topic can evict a victim chosen by
-  * the state including the previous insert); streaming keys this fold
-  * per session via flatMapGroupsWithState (graft.streaming).
+  * the state including the previous insert). The rules are pure
+  * functions on the companion ([[MemoryStore.retainSummaries]],
+  * [[MemoryStore.mergeTopics]], [[MemoryStore.factRows]]), shared by
+  * streaming (keyed per session via flatMapGroupsWithState,
+  * graft.streaming) and serving (`graft.serve.ChatService` folds each
+  * turn into driver-held rows); [[applyUpdate]] runs the topic and
+  * fact rules itself and retains summaries with a ranking window.
   */
 final case class MemoryStore(
     records: Dataset[MemoryRecord],
@@ -110,21 +115,25 @@ final case class MemoryStore(
       .as[KvEntry].union(Seq(entry).toDS()))
   }
 
-  /** The full update step (ST2; memory.py:263-357): batch the latest
-    * records, ask the provider for an analysis, parse its fenced JSON,
-    * and merge. Deterministic given a stub provider. */
-  def update(sessionId: String, provider: Provider, now: Timestamp): MemoryStore = {
+  /** The full update step (ST2; memory.py:263-357): [[analyze]] then
+    * [[applyUpdate]]. Deterministic given a stub provider. */
+  def update(sessionId: String, provider: Provider, now: Timestamp): MemoryStore =
+    analyze(sessionId, provider).fold(this)(applyUpdate(sessionId, _, now))
+
+  /** The read half of the update step: batch the session's latest
+    * records, ask the provider for an analysis and parse its fenced
+    * JSON. None when the session has no records (nothing to analyze). */
+  def analyze(sessionId: String, provider: Provider): Option[MemoryAnalysis] = {
     val sp = spark; import sp.implicits._
     val batch = tailRecords(config.updateBatchSize)
       .filter($"sessionId" === sessionId)
       .orderBy($"ts").collect()
-    if (batch.isEmpty) return this
+    if (batch.isEmpty) return None
     val recordsText = batch.map(r => s"[${r.ts}] ${r.content}").mkString("\n")
     val currentTopics = topics.filter($"sessionId" === sessionId)
       .select("name").as[String].collect().toSeq
     val prompt = MemoryStore.updatePrompt(recordsText, currentTopics)
-    val response = provider.generateResponse(prompt)
-    applyUpdate(sessionId, MemoryStore.parseAnalysis(response), now)
+    Some(MemoryStore.parseAnalysis(provider.generateResponse(prompt)))
   }
 
   /** Merge an analysis into state with the reference's exact ordering:
@@ -153,9 +162,7 @@ final case class MemoryStore(
       sessionId, analysis.topics, now, config.maxTopics)
     val newTopics = others.union(merged.toDS())
     // --- key facts → KV
-    val factRows = analysis.keyFacts.zipWithIndex.map { case (fact, i) =>
-      KvEntry(sessionId, s"fact_${now.getTime}_$i", fact)
-    }
+    val factRows = MemoryStore.factRows(sessionId, analysis.keyFacts, now)
     val newKv = if (factRows.isEmpty) kv else kv.union(factRows.toDS())
     copy(summaries = withSummary, topics = newTopics, kv = newKv)
   }
@@ -195,6 +202,12 @@ object MemoryStore {
     }
     state.values.toSeq
   }
+
+  /** Key facts as KV rows keyed `fact_<ts millis>_<i>`, in analysis order. */
+  def factRows(sessionId: String, keyFacts: Seq[String], now: Timestamp): Seq[KvEntry] =
+    keyFacts.zipWithIndex.map { case (fact, i) =>
+      KvEntry(sessionId, s"fact_${now.getTime}_$i", fact)
+    }
 
   /** Summary retention as a pure fold (memory.py:305-312): append then
     * keep the newest `cap`. */

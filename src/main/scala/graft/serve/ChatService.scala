@@ -6,10 +6,10 @@ import graft.agent.ReactLoop
 import graft.functions.AgentText
 import graft.functions.AgentText.{JNum, JObj, JStr}
 import graft.io.CommitLog
-import graft.memory.MemoryStore
-import graft.model.{Message, Tool}
+import graft.memory.{MemoryAnalysis, MemoryConfig, MemoryStore}
+import graft.model._
 import graft.provider.Provider
-import graft.task.TaskStore
+import graft.task.{TaskConfig, TaskStore}
 import org.apache.spark.sql.Dataset
 
 /** The write-side chat turn (reference app.py:396-444 end-to-end):
@@ -24,10 +24,25 @@ import org.apache.spark.sql.Dataset
   * replay/offset semantics the websocket never had — and returns the
   * response JSON to the caller.
   *
+  * State: the committed stores are driver-held rows, one `Seq` per
+  * table (records, summaries, topics, kv, tasks, logs, files,
+  * messages), the analog of the reference's in-process lists
+  * (memory.py:263-357). [[state]] publishes them as one local relation
+  * per table, so a turn's plans never carry an earlier turn's unions
+  * and their size does not grow with the session's history. A turn
+  * commits by folding [[ReactLoop.Writes]] into the rows with the same
+  * pure rules the streaming path uses ([[MemoryStore.retainSummaries]],
+  * [[MemoryStore.mergeTopics]], [[MemoryStore.factRows]],
+  * [[TaskStore.appendLogRows]]) under `state0`'s configs. `state0` is
+  * collected once, at construction.
+  *
   * Turns are serialized (`synchronized`): chat state transitions are
   * single-writer per service, the same per-process session contract as
   * the reference; reads (the GET views) observe the latest committed
-  * state via [[state]].
+  * state via [[state]]. A turn pushes before it publishes: the new
+  * rows become [[state]] only after the commit-log append succeeds, so
+  * a turn whose push failed is not committed and a client retry does
+  * not apply it twice.
   */
 final class ChatService(
     provider: Provider,
@@ -37,30 +52,45 @@ final class ChatService(
     nPartitions: Int = 4,
     toolExecutor: (String, String) => String = (n, _) => s"[no executor for $n]") {
 
-  @volatile private var current: ChatService.State = state0
+  private val spark = state0.messages.sparkSession
+  private val memoryConfig = state0.memory.config
+  private val taskConfig = state0.tasks.config
+
+  private var rows = ChatService.Rows.of(state0)
+  @volatile private var current: ChatService.State = publish(rows)
 
   /** Latest committed store state (for wiring GET views). */
   def state: ChatService.State = current
 
   /** External state edit (e.g. a REPL's `/task new`), serialized with
-    * turn processing. */
+    * turn processing; collects the edited state into rows. */
   def updateState(f: ChatService.State => ChatService.State): Unit =
-    synchronized { current = f(current) }
+    synchronized {
+      rows = ChatService.Rows.of(f(current))
+      current = publish(rows)
+    }
+
+  private def publish(r: ChatService.Rows): ChatService.State = {
+    import spark.implicits._
+    ChatService.State(
+      MemoryStore(r.records.toDS(), r.summaries.toDS(), r.topics.toDS(), r.kv.toDS(),
+        memoryConfig),
+      TaskStore(r.tasks.toDS(), r.logs.toDS(), r.files.toDS(), taskConfig),
+      r.messages.toDS())
+  }
 
   private val loop = new ReactLoop(provider, toolExecutor = toolExecutor)
 
-  /** One chat turn: run the ReAct loop against the live stores, commit
-    * the new state, push the assistant response onto the commit log.
-    * Returns (responseText, iterations). */
+  /** One chat turn: run the ReAct loop against the live stores, push
+    * the assistant response onto the commit log, then commit the new
+    * state. Returns (responseText, iterations). */
   def processTurn(sessionId: String, query: String, taskId: Option[Long],
       now: Timestamp): (String, Int) = synchronized {
     val st = current
     val out = loop.processQuery(sessionId, query, st.memory, st.tasks,
       tools, st.messages, taskId, now)
-    val sp = st.messages.sparkSession
-    import sp.implicits._
-    current = ChatService.State(out.memory, out.tasks,
-      st.messages.union(out.newMessages.toDS()))
+    val next = rows.commit(sessionId, now, out.writes, out.newMessages,
+      memoryConfig, taskConfig)
     val responseText = out.newMessages.reverse
       .collectFirst { case m if m.role == "assistant" => m.content }
       .getOrElse("")
@@ -69,6 +99,8 @@ final class ChatService(
     CommitLog.append(pushLogDir,
       math.floorMod(sessionId.hashCode, nPartitions),
       Seq((now.getTime * 1000L, sessionId, responseText)))
+    rows = next
+    current = publish(next)
     (responseText, out.iterations)
   }
 
@@ -100,4 +132,49 @@ object ChatService {
   /** The mutable-by-replacement session state a chat turn advances. */
   final case class State(
       memory: MemoryStore, tasks: TaskStore, messages: Dataset[Message])
+
+  /** The committed state as driver-held rows, one `Seq` per table. */
+  private final case class Rows(
+      records: Seq[MemoryRecord], summaries: Seq[Summary], topics: Seq[Topic],
+      kv: Seq[KvEntry], tasks: Seq[TaskRow], logs: Seq[TaskLog],
+      files: Seq[ExtractedFileRow], messages: Seq[Message]) {
+
+    /** Fold one turn's writes in, in [[ReactLoop]]'s order: records and
+      * last-writer-wins KV puts, the task log and files, the messages,
+      * then the memory analysis. */
+    def commit(sessionId: String, now: Timestamp, w: ReactLoop.Writes,
+        newMessages: Seq[Message], memory: MemoryConfig, task: TaskConfig): Rows = {
+      val turn = copy(
+        records = records ++ w.records,
+        kv = w.puts.foldLeft(kv)((acc, e) =>
+          acc.filterNot(r => r.sessionId == e.sessionId && r.key == e.key) :+ e),
+        logs = w.log.fold(logs)(TaskStore.appendLogRows(logs, _, task)),
+        files = files ++ w.files,
+        messages = messages ++ newMessages)
+      w.analysis.fold(turn)(turn.analysed(sessionId, _, now, memory))
+    }
+
+    /** [[MemoryStore.applyUpdate]] on rows. */
+    private def analysed(sessionId: String, a: MemoryAnalysis, now: Timestamp,
+        config: MemoryConfig): Rows = {
+      val (ownSummaries, otherSummaries) = summaries.partition(_.sessionId == sessionId)
+      val (ownTopics, otherTopics) = topics.partition(_.sessionId == sessionId)
+      copy(
+        summaries = a.summary.fold(summaries)(s => otherSummaries ++
+          MemoryStore.retainSummaries(ownSummaries, Summary(sessionId, now, s),
+            config.savedSummaryNum)),
+        topics = otherTopics ++
+          MemoryStore.mergeTopics(ownTopics, sessionId, a.topics, now, config.maxTopics),
+        kv = kv ++ MemoryStore.factRows(sessionId, a.keyFacts, now))
+    }
+  }
+
+  private object Rows {
+    /** Collect every table of `st` to the driver. */
+    def of(st: State): Rows = Rows(
+      st.memory.records.collect().toSeq, st.memory.summaries.collect().toSeq,
+      st.memory.topics.collect().toSeq, st.memory.kv.collect().toSeq,
+      st.tasks.tasks.collect().toSeq, st.tasks.logs.collect().toSeq,
+      st.tasks.files.collect().toSeq, st.messages.collect().toSeq)
+  }
 }

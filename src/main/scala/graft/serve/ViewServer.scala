@@ -115,18 +115,28 @@ final class ViewServer(
     * whose `id` is the offsets-after-it; heartbeat comments while
     * idle so a dead peer is detected. The poll is O(new records) —
     * offset bookkeeping is per-partition metadata, exactly the
-    * consumer-group contract of a queue. */
+    * consumer-group contract of a queue. An `n` that is not a
+    * non-negative integer, or a `Last-Event-ID` whose partition key is
+    * not an integer, gets a 400 with a JSON error. */
   private def serveSse(ex: HttpExchange, tail: SseTail): Unit = {
     val params = queryParams(ex)
-    val keyFilter = params.get("key")
-    val maxEvents = params.get("n").map(_.toInt).getOrElse(Int.MaxValue)
-    val start: Map[Int, Long] =
-      Option(ex.getRequestHeaders.getFirst("Last-Event-ID"))
-        .map(CommitLog.offsetsFromJson)
-        .getOrElse {
-          if (params.get("replay").contains("all")) Map.empty
-          else CommitLog.latestOffsets(tail.topicDir)
-        }
+    val maxEvents = params.get("n").fold(Option(Int.MaxValue))(_.toIntOption.filter(_ >= 0))
+    val resume = Option(ex.getRequestHeaders.getFirst("Last-Event-ID"))
+      .map(id => scala.util.Try(CommitLog.offsetsFromJson(id)).toOption)
+    // malformed input is answered before the stream opens
+    if (maxEvents.isEmpty)
+      respond(ex, 400, """{"error": "n must be a non-negative integer"}""")
+    else if (resume.exists(_.isEmpty))
+      respond(ex, 400, """{"error": "Last-Event-ID partition keys must be integers"}""")
+    else
+      stream(ex, tail, params.get("key"), maxEvents.get, resume.flatten.getOrElse {
+        if (params.get("replay").contains("all")) Map.empty
+        else CommitLog.latestOffsets(tail.topicDir)
+      })
+  }
+
+  private def stream(ex: HttpExchange, tail: SseTail, keyFilter: Option[String],
+      maxEvents: Int, start: Map[Int, Long]): Unit = {
     val h = ex.getResponseHeaders
     h.set("Content-Type", "text/event-stream")
     h.set("Cache-Control", "no-cache")

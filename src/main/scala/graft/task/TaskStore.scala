@@ -33,9 +33,7 @@ final case class TaskStore(
     * (task.py:505-509, T3). */
   def appendLog(log: TaskLog): TaskStore = {
     val sp = spark; import sp.implicits._
-    val capped = log.copy(responseSummary =
-      AgentText.summarize(log.responseSummary, config.summaryCap))
-    val appended = logs.union(Seq(capped).toDS())
+    val appended = logs.union(Seq(TaskStore.capLog(log, config)).toDS())
     val w = Window.partitionBy($"taskId").orderBy(desc("ts"))
     val trimmed = appended.withColumn("rn", row_number().over(w))
       .filter($"rn" <= config.maxLogs).drop("rn").as[TaskLog]
@@ -101,6 +99,18 @@ object TaskStore {
     val sp = spark; import sp.implicits._
     TaskStore(spark.emptyDataset[TaskRow], spark.emptyDataset[TaskLog],
       spark.emptyDataset[ExtractedFileRow], config)
+  }
+
+  /** A log record with its response summary capped (task.py:505-509, T3). */
+  private def capLog(log: TaskLog, config: TaskConfig): TaskLog =
+    log.copy(responseSummary = AgentText.summarize(log.responseSummary, config.summaryCap))
+
+  /** [[TaskStore.appendLog]] as a pure fold over collected rows: append
+    * the capped record, then keep that task's newest `maxLogs`. */
+  def appendLogRows(current: Seq[TaskLog], log: TaskLog, config: TaskConfig): Seq[TaskLog] = {
+    val added = capLog(log, config)
+    val (same, others) = current.partition(_.taskId == added.taskId)
+    others ++ (same :+ added).sortBy(-_.ts.getTime).take(config.maxLogs)
   }
 
   /** One LLM-identified extractable span (task.py:221-229). */

@@ -2,11 +2,13 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.file.Files
 import java.sql.Timestamp
 
+import graft.io.CommitLog
 import graft.model.{TaskRow, Tool}
 import graft.registry.Registry
-import graft.serve.ViewServer
+import graft.serve.{SseTail, ViewServer}
 import graft.task.TaskStore
 
 /** The REST view shim: the reference's read-side API routes
@@ -63,5 +65,39 @@ class ViewServerSpec extends SparkSpec {
       val (status, body) = get(s"http://127.0.0.1:$port/api/boom")
       assert(status == 500 && body.contains("error"))
     } finally server.close()
+  }
+
+  /** A server with one SSE tail over a one-record topic. */
+  private def withTail(f: Int => Unit): Unit = {
+    val dir = Files.createTempDirectory("graft_sse_bad").toString
+    CommitLog.append(dir, 0, Seq((1L, "s", "v")))
+    val server = new ViewServer(routes = Map.empty, sseRoutes = Map("/tail" -> SseTail(dir)))
+    try f(server.start()) finally server.close()
+  }
+
+  private def sse(url: String, lastEventId: String): (Int, String) = {
+    val resp = HttpClient.newHttpClient().send(
+      HttpRequest.newBuilder(URI.create(url)).header("Last-Event-ID", lastEventId).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    (resp.statusCode(), resp.body())
+  }
+
+  test("SSE: a non-integer n is a 400 with a JSON error") {
+    withTail { port =>
+      val (status, body) = get(s"http://127.0.0.1:$port/tail?replay=all&n=two")
+      assert(status == 400)
+      assert(body.startsWith("""{"error": """) && body.contains("n must be"))
+    }
+  }
+
+  test("SSE: a Last-Event-ID with a non-integer partition key is a 400 with a JSON error") {
+    withTail { port =>
+      val (status, body) = sse(s"http://127.0.0.1:$port/tail?n=1", """{"p0": 1}""")
+      assert(status == 400)
+      assert(body.startsWith("""{"error": """) && body.contains("Last-Event-ID"))
+      // a well-formed id still resumes
+      val (okStatus, okBody) = sse(s"http://127.0.0.1:$port/tail?n=1", """{"0": 0}""")
+      assert(okStatus == 200 && okBody.contains(""""value": "v""""))
+    }
   }
 }
