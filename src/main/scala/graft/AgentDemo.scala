@@ -1,18 +1,21 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.agent.ReactLoop
 import graft.memory.MemoryStore
 import graft.model._
 import graft.provider.StubProvider
+import graft.serve.ChatService
 import graft.task.TaskStore
 
 /** Runnable end-to-end demo of the agent data plane: a scripted
   * two-query session through the full §3.1 lifecycle (context assembly
   * → provider → parse → memory ops → task log + file extraction →
-  * post-turn memory update), printed as the reference's API views
-  * (app.py:140-175, 329-347). Deterministic — the provider is a stub.
+  * post-turn memory update), committed by [[graft.serve.ChatService]]
+  * (which also pushes each response to a temporary commit-log topic)
+  * and printed as the reference's API views (app.py:140-175, 329-347).
+  * Deterministic — the provider is a stub.
   *
   * Usage: sbt "runMain graft.AgentDemo"
   */
@@ -48,30 +51,30 @@ object AgentDemo {
             "content_type": "plan", "title": "Dedup Plan", "description": "pipeline plan"}]}
 ```"""))
 
-    val loop = new ReactLoop(stub)
-    var memory = MemoryStore.empty(spark)
-    var tasks = TaskStore.empty(spark)
-      .upsertTask(TaskRow(1L, "plan", "", "create a dedup pipeline. for web text", "", "", ts(1)))
-    val tools = spark.emptyDataset[Tool]
-    val messages = spark.emptyDataset[Message]
+    val svc = new ChatService(stub,
+      ChatService.State(MemoryStore.empty(spark),
+        TaskStore.empty(spark).upsertTask(
+          TaskRow(1L, "plan", "", "create a dedup pipeline. for web text", "", "", ts(1))),
+        spark.emptyDataset[Message]),
+      spark.emptyDataset[Tool],
+      Files.createTempDirectory("graft_demo_push").toString)
 
     Seq("what dedup methods exist?", "write up a plan").zipWithIndex.foreach {
       case (q, i) =>
         println(s"\n=== query: $q")
-        val out = loop.processQuery("demo", q, memory, tasks, tools, messages,
-          Some(1L), ts(10 + i))
-        memory = out.memory
-        tasks = out.tasks
-        out.newMessages.foreach(m => println(s"  [${m.role}] ${m.content.take(100)}"))
+        svc.processTurn("demo", q, Some(1L), ts(10 + i))
+        svc.state.messages.where($"ts" === ts(10 + i)).orderBy("seq").as[Message]
+          .collect().foreach(m => println(s"  [${m.role}] ${m.content.take(100)}"))
     }
 
+    val st = svc.state
     println("\n=== /api/tasks view")
-    tasks.tasksView.show(truncate = false)
-    println("=== task 1 file summary: " + tasks.fileSummary(1L))
+    st.tasks.tasksView.show(truncate = false)
+    println("=== task 1 file summary: " + st.tasks.fileSummary(1L))
     println("\n=== /api/memory view")
-    println("records: " + memory.records.count())
-    memory.latestSummary.show(truncate = false)
-    memory.topics.select("name", "description", "frequency").show(truncate = false)
+    println("records: " + st.memory.records.count())
+    st.memory.latestSummary.show(truncate = false)
+    st.memory.topics.select("name", "description", "frequency").show(truncate = false)
     spark.stop()
   }
 

@@ -53,8 +53,11 @@ object AgentResponse {
 
 /** The ReAct micro-batch loop (ST1; reference client.py:216-333): per
   * query, up to maxIters iterations of assemble → provider → parse →
-  * act → append, then a memory-update step and a task-log append. With
-  * a [[graft.provider.StubProvider]] the whole lifecycle is a pure,
+  * act → append, then the task-log record, file extraction and the
+  * post-turn memory analysis. The loop commits nothing: it returns the
+  * turn's writes ([[ReactLoop.Writes]]) and [[graft.serve.ChatService]]
+  * commits them once. With a
+  * [[graft.provider.StubProvider]] the whole lifecycle is a pure,
   * testable function of the store state.
   */
 final class ReactLoop(
@@ -66,26 +69,20 @@ final class ReactLoop(
     // next iteration sees it (client.py:287-321).
     toolExecutor: (String, String) => String = (n, _) => s"[no executor for $n]") {
 
-  /** `memory`/`tasks` are the stores after the turn; `writes` is the
-    * same change as driver-side rows, for callers that keep their own
-    * state (see `graft.serve.ChatService`). */
+  /** One turn's result: the messages it added, the iterations it ran
+    * and its store changes, which the caller commits. */
   final case class Outcome(
-      memory: MemoryStore, tasks: TaskStore,
-      newMessages: Seq[Message], iterations: Int,
-      writes: ReactLoop.Writes)
+      newMessages: Seq[Message], iterations: Int, writes: ReactLoop.Writes)
 
   def processQuery(
       sessionId: String, query: String,
-      memory0: MemoryStore, tasks0: TaskStore,
+      memory0: MemoryStore, tasks: TaskStore,
       tools: Dataset[Tool], messages0: Dataset[Message],
       taskId: Option[Long], now: Timestamp): Outcome = {
     var memory = memory0
-    var tasks = tasks0
     val newMessages = Seq.newBuilder[Message]
     val addedRecords = Seq.newBuilder[MemoryRecord]
     val puts = Seq.newBuilder[KvEntry]
-    var log = Option.empty[TaskLog]
-    var extracted = Seq.empty[ExtractedFileRow]
     var seq = 0L
     newMessages += Message(sessionId, seq, "user", query, now)
     var lastResponseText = ""
@@ -111,8 +108,8 @@ final class ReactLoop(
       }
       var actedOnTool = false
       response.memOp.foreach { case (name, args) =>
-        // mem ops mutate memory state; here the add-record/add-data ops
-        // (memory.py:249-261) are applied directly.
+        // the add-record/add-data ops (memory.py:249-261) go into the
+        // writes and onto a turn-local view that later iterations assemble from
         (name, AgentText.parseJson5ish(args)) match {
           case ("add_memory_record", Some(JObj(f))) =>
             f.get("memory").collect { case JStr(m) =>
@@ -142,34 +139,25 @@ final class ReactLoop(
       iter += 1
       done = response.finished && !actedOnTool
     }
-    // per-turn task update (task.py:491-627): append a capped log
-    // record and extract files from the final response text
-    taskId.foreach { tid =>
-      val entry = TaskLog(
-        tid, now, query, AgentText.summarize(lastResponseText),
-        newMessages.result().map(m => s"${m.role}: ${AgentText.truncate(m.content, 80)}"),
-        Map("iterations" -> iter.toString), null)
-      log = Some(entry)
-      tasks = tasks.appendLog(entry)
-      extracted = TaskStore.extractFiles(tid, now, lastResponseText, provider)
-      if (extracted.nonEmpty) {
-        val sp = tasks.files.sparkSession
-        import sp.implicits._
-        tasks = tasks.copy(files = tasks.files.union(extracted.toDS()))
-      }
-    }
-    // post-turn memory update (ST2) exactly once per query
+    // per-turn task update (task.py:491-627): a log record and files
+    // extracted from the final response text
+    val log = taskId.map(tid => TaskLog(
+      tid, now, query, AgentText.summarize(lastResponseText),
+      newMessages.result().map(m => s"${m.role}: ${AgentText.truncate(m.content, 80)}"),
+      Map("iterations" -> iter.toString), null))
+    val files = taskId.fold(Seq.empty[ExtractedFileRow])(
+      TaskStore.extractFiles(_, now, lastResponseText, provider))
+    // post-turn memory analysis (ST2) exactly once per query
     val analysis = memory.analyze(sessionId, provider)
-    analysis.foreach(a => memory = memory.applyUpdate(sessionId, a, now))
-    Outcome(memory, tasks, newMessages.result(), iter,
-      ReactLoop.Writes(addedRecords.result(), puts.result(), log, extracted, analysis))
+    Outcome(newMessages.result(), iter,
+      ReactLoop.Writes(addedRecords.result(), puts.result(), log, files, analysis))
   }
 }
 
 object ReactLoop {
-  /** One turn's store changes as the driver-side values the loop passed
-    * to the store operations: added records, KV puts in order, the task
-    * log record, extracted files and the post-turn memory analysis. */
+  /** One turn's store changes as driver-side values: added records, KV
+    * puts in order, the task log record (the commit caps it), extracted
+    * files and the post-turn memory analysis. */
   final case class Writes(
       records: Seq[MemoryRecord],
       puts: Seq[KvEntry],

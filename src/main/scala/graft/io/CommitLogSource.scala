@@ -1,7 +1,7 @@
 package graft.io
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardOpenOption}
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -48,9 +48,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    segment;
   *  - the streaming sink writes segments from EXECUTORS (one temp file
   *    per epoch × writer), and the driver commit is a metadata-only
-  *    rename; replayed epochs are detected by destination existence, so
-  *    a re-run batch is a no-op — the standard idempotent-file-sink
-  *    contract that makes end-to-end delivery exactly-once;
+  *    hard link that never replaces a segment; a replayed epoch finds
+  *    its destination taken, so a re-run batch is a no-op — the
+  *    standard idempotent-file-sink contract that makes end-to-end
+  *    delivery exactly-once;
   *  - admission control (`maxRecordsPerTrigger`) bounds each
   *    micro-batch for backfills, exactly like the Kafka source's
   *    `maxOffsetsPerTrigger`.
@@ -124,23 +125,46 @@ object CommitLog {
     finally in.close()
   }
 
-  /** Driver/test helper: append records to one partition as a fresh
-    * segment. Production writes go through the streaming sink below. */
+  /** Append records to one partition as a new segment. This is the
+    * push path of [[graft.serve.ChatService]] (one segment per chat
+    * turn) as well as a test helper; the streaming sink below writes its
+    * own per-epoch segments. The segment takes the next free `seg-a…`
+    * id through [[publish]], so concurrent appenders to one partition
+    * each get their own segment. */
   def append(dir: String, pid: Int, rows: Seq[(Long, String, String)]): Unit = {
     val d = partitionDir(dir, pid)
-    Files.createDirectories(d)
-    val segId = segments(dir, pid).size
-    val seg = d.resolve(f"seg-a$segId%09d.log")
     val text = rows.map { case (ts, k, v) => encodeLine(ts, k, v) }
       .mkString("", "\n", if (rows.isEmpty) "" else "\n")
-    Files.write(seg, text.getBytes(UTF_8),
-      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    publish(writeTemp(d, text.getBytes(UTF_8)),
+      Iterator.from(segments(dir, pid).size).map(i => d.resolve(f"seg-a$i%09d.log")))
   }
+
+  /** Write `bytes` to a new `.tmp-*` file in directory `d` (created if
+    * missing); [[segments]] never lists it. */
+  private def writeTemp(d: Path, bytes: Array[Byte]): Path = {
+    Files.createDirectories(d)
+    Files.write(Files.createTempFile(d, ".tmp-", ".log"), bytes)
+  }
+
+  /** Publish the finished file `tmp` as the first of `names` that is not
+    * taken yet, then delete `tmp`; every segment write goes through
+    * here. The name is taken with a hard link, which fails on an
+    * existing file: a reader sees a segment whole or not at all, and a
+    * published segment is never replaced. (A rename would not do: on
+    * Linux `ATOMIC_MOVE` is `rename(2)`, which silently replaces its
+    * target.) `tmp` must be on the names' filesystem. If every name is
+    * taken, nothing is published. */
+  private[io] def publish(tmp: Path, names: Iterator[Path]): Unit =
+    try names.exists { dst =>
+      try { Files.createLink(dst, tmp); true }
+      catch { case _: FileAlreadyExistsException => false }
+    }
+    finally Files.deleteIfExists(tmp)
 
   /** Idempotent epoch write for `foreachBatch` sinks: hash-partition
     * the rows by key across `nPartitions` log partitions and write ONE
     * segment per (epoch, log partition) FROM THE EXECUTORS — temp file
-    * then atomic move, exactly like the streaming sink's commit. The
+    * then [[publish]], exactly like the streaming sink's commit. The
     * segment name embeds the epoch id, which Structured Streaming
     * keeps stable across batch replays, so a restarted query re-running
     * a committed epoch finds the destination already present and skips
@@ -165,18 +189,9 @@ object CommitLog {
         }.mkString("", "\n", "\n")
         if (text != "\n") {
           val dst = partitionDir(dir, pid).resolve(f"seg-e$epochId%012d.log")
-          if (!Files.exists(dst)) {
-            Files.createDirectories(dst.getParent)
-            val tmp = Files.createTempFile(dst.getParent, ".tmp-", ".log")
-            Files.write(tmp, text.getBytes(UTF_8),
-              StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
-            try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-            catch {
-              // a concurrent attempt (task retry) committed first — keep its file
-              case _: java.nio.file.FileAlreadyExistsException =>
-                Files.deleteIfExists(tmp)
-            }
-          }
+          // a replay or a concurrent attempt (task retry) that committed
+          // first keeps its file
+          publish(writeTemp(dst.getParent, text.getBytes(UTF_8)), Iterator.single(dst))
         }
         ()
       }
@@ -442,11 +457,11 @@ final class CommitLogStreamingWrite(dir: String, numPartitions: Int, input: Stru
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new CommitLogWriterFactory(dir, numPartitions, input)
 
-  /** Metadata-only commit: move each epoch temp file into its
-    * partition directory. A destination that already exists means this
-    * epoch was committed before (query restart re-ran the batch) — the
-    * move is skipped, making replay idempotent and delivery
-    * exactly-once. */
+  /** Metadata-only commit: publish each epoch temp file into its
+    * partition directory ([[CommitLog.publish]]). A destination that
+    * already exists means this epoch was committed before (query
+    * restart re-ran the batch) — it is kept and the temp dropped, making
+    * replay idempotent and delivery exactly-once. */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case CommitLogCommit(files) => files.foreach { case (pid, tmpPath) =>
@@ -454,8 +469,7 @@ final class CommitLogStreamingWrite(dir: String, numPartitions: Int, input: Stru
         val dst = CommitLog.partitionDir(dir, pid)
           .resolve(tmp.getFileName.toString.stripPrefix("tmp-"))
         Files.createDirectories(dst.getParent)
-        if (Files.exists(dst)) Files.deleteIfExists(tmp)
-        else Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+        CommitLog.publish(tmp, Iterator.single(dst))
       }
       case _ => ()
     }

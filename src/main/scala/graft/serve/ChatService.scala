@@ -139,9 +139,9 @@ object ChatService {
       kv: Seq[KvEntry], tasks: Seq[TaskRow], logs: Seq[TaskLog],
       files: Seq[ExtractedFileRow], messages: Seq[Message]) {
 
-    /** Fold one turn's writes in, in [[ReactLoop]]'s order: records and
-      * last-writer-wins KV puts, the task log and files, the messages,
-      * then the memory analysis. */
+    /** Fold one turn's writes in, in the order the batch store
+      * operators would apply them: records and last-writer-wins KV puts,
+      * the task log and files, the messages, then the memory analysis. */
     def commit(sessionId: String, now: Timestamp, w: ReactLoop.Writes,
         newMessages: Seq[Message], memory: MemoryConfig, task: TaskConfig): Rows = {
       val turn = copy(

@@ -113,9 +113,12 @@ final class ViewServer(
     * client is resuming, else at the topic tail (or 0 with
     * `replay=all`); poll the log, push each new record as an event
     * whose `id` is the offsets-after-it; heartbeat comments while
-    * idle so a dead peer is detected. The poll is O(new records) —
-    * offset bookkeeping is per-partition metadata, exactly the
-    * consumer-group contract of a queue. An `n` that is not a
+    * idle so a dead peer is detected. The cursor is per-partition
+    * metadata (the consumer-group contract of a queue), but each poll
+    * (every `pollMs`, 50 ms by default) costs O(topic bytes), not
+    * O(new records): `CommitLog.latestOffsets` counts every line of
+    * every segment and `CommitLog.readRange` streams from segment 0 up
+    * to the cursor (ROADMAP direction 4b). An `n` that is not a
     * non-negative integer, or a `Last-Event-ID` whose partition key is
     * not an integer, gets a 400 with a JSON error. */
   private def serveSse(ex: HttpExchange, tail: SseTail): Unit = {

@@ -156,10 +156,10 @@ class AgentStoresSpec extends SparkSpec {
     assert(out.iterations == 1)
     val roles = out.newMessages.map(m => m.role -> m.content)
     assert(roles.contains("assistant" -> "hello!"))
-    assert(out.memory.records.collect().map(_.content).toSeq == Seq("user said hi"))
+    assert(out.writes.records.map(_.content) == Seq("user said hi"))
     // post-turn update ran: summary + topic from the analysis stub
-    assert(out.memory.summaries.collect().map(_.text).toSeq == Seq("learned"))
-    assert(out.memory.topics.collect().map(_.name).toSeq == Seq("greeting"))
+    assert(out.writes.analysis ==
+      Some(MemoryAnalysis(Some("learned"), Seq("greeting" -> "user greets"), Nil)))
   }
 
   test("react loop: tool dispatch feeds the result back and the turn logs to the task") {
@@ -196,10 +196,9 @@ class AgentStoresSpec extends SparkSpec {
     assert(out.iterations == 2)
     assert(out.newMessages.exists(m => m.role == "tool" && m.content.contains("search result")))
     // the task got a log record and an extracted file from the response
-    val logs = out.tasks.logs.collect()
-    assert(logs.length == 1 && logs.head.taskId == 7L &&
-      logs.head.metadata("iterations") == "2")
-    val files = out.tasks.files.collect()
+    val log = out.writes.log
+    assert(log.exists(l => l.taskId == 7L && l.metadata("iterations") == "2"))
+    val files = out.writes.files
     assert(files.length == 1 && files.head.filename == "Result.txt")
     assert(files.head.content.startsWith("START") && files.head.content.endsWith("END"))
   }

@@ -26,7 +26,7 @@ class ChatCommitSpec extends SparkSpec {
     assert(g.size == w.size && g.diff(w).isEmpty, s"\n got: $g\nwant: $w")
   }
 
-  test("the row commit equals chaining ReactLoop's Dataset stores, table by table") {
+  test("the row commit equals the batch store operators on ReactLoop's writes") {
     import spark.implicits._
     val fileBody = "START " + ("line of the extracted plan " * 6) + "END"
     // s1: record, put, file + record, re-put of the same key; s2: a
@@ -73,8 +73,12 @@ class ChatCommitSpec extends SparkSpec {
       svc.processTurn(session, query, Some(taskId), now)
       val out = loop.processQuery(session, query, memory, tasks, tools, messages,
         Some(taskId), now)
-      memory = out.memory
-      tasks = out.tasks
+      val w = out.writes
+      memory = w.records.foldLeft(memory)(_.addRecord(_))
+      memory = w.puts.foldLeft(memory)(_.putData(_))
+      w.log.foreach(l => tasks = tasks.appendLog(l))
+      if (w.files.nonEmpty) tasks = tasks.copy(files = tasks.files.union(w.files.toDS()))
+      w.analysis.foreach(a => memory = memory.applyUpdate(session, a, now))
       messages = messages.union(out.newMessages.toDS())
       if (i == 2) {
         val plan = svc.state.memory.records.queryExecution.analyzed

@@ -133,6 +133,37 @@ class CommitLogSpec extends SparkSpec {
     assert(Files.list(Paths.get(dir, "_tmp")).count() == 0, "temp files left behind")
   }
 
+  test("concurrent appenders to one partition publish every segment once and leave no temp file") {
+    val dir = tmpDir("graft_cl_concurrent")
+    val p0 = CommitLog.partitionDir(dir, 0)
+    Files.createDirectories(p0)
+    // a temp file left behind by a crashed writer is never read
+    Files.write(p0.resolve(".tmp-x.log"),
+      (CommitLog.encodeLine(0L, "stray", "stray") + "\n").getBytes("UTF-8"))
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = Seq("a", "b").map { t =>
+      new Thread(() =>
+        try {
+          start.await()
+          (0 until 50).foreach(i => CommitLog.append(dir, 0, Seq((i.toLong, t, s"$t$i"))))
+        } catch { case e: Throwable => errors.add(e) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(60000))
+    assert(errors.isEmpty, s"an appender threw: ${errors.peek()}")
+
+    val rows = spark.read.format("commit-log").load(dir)
+      .select("offset", "value").collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(rows.map(_._2).sorted.toSeq ==
+      (0 until 50).flatMap(i => Seq(s"a$i", s"b$i")).sorted)
+    assert(rows.map(_._1).sorted.toSeq == (0L until 100L))
+    import scala.jdk.CollectionConverters._
+    val temps = Files.list(p0).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith(".tmp-")).toSeq
+    assert(temps == Seq(".tmp-x.log"), s"temp files left behind: $temps")
+  }
+
   test("partition predicates prune directories; projections prune columns") {
     import spark.implicits._
     val dir = tmpDir("graft_cl_prune")
