@@ -69,16 +69,11 @@ final class ReactLoop(
     // next iteration sees it (client.py:287-321).
     toolExecutor: (String, String) => String = (n, _) => s"[no executor for $n]") {
 
-  /** One turn's result: the messages it added, the iterations it ran
-    * and its store changes, which the caller commits. */
-  final case class Outcome(
-      newMessages: Seq[Message], iterations: Int, writes: ReactLoop.Writes)
-
   def processQuery(
       sessionId: String, query: String,
       memory0: MemoryStore, tasks: TaskStore,
       tools: Dataset[Tool], messages0: Dataset[Message],
-      taskId: Option[Long], now: Timestamp): Outcome = {
+      taskId: Option[Long], now: Timestamp): ReactLoop.Outcome = {
     var memory = memory0
     val newMessages = Seq.newBuilder[Message]
     val addedRecords = Seq.newBuilder[MemoryRecord]
@@ -92,9 +87,8 @@ final class ReactLoop(
       val assembler = ContextAssembler(memory, tasks, tools)
       // the reference re-assembles from the GROWING message list each
       // iteration (client.py:218,221) — tool results must be visible
-      val sp = messages0.sparkSession
-      import sp.implicits._
-      val liveMessages = messages0.union(newMessages.result().toDS())
+      val liveMessages = messages0.union(messages0.sparkSession
+        .createDataset(newMessages.result())(messages0.encoder))
       val prompt = assembler.assemble(sessionId, query, taskId, liveMessages, 0L)
       val response = AgentResponse.parse(provider.generateResponse(prompt))
       if (response.think.nonEmpty) {
@@ -149,12 +143,16 @@ final class ReactLoop(
       TaskStore.extractFiles(_, now, lastResponseText, provider))
     // post-turn memory analysis (ST2) exactly once per query
     val analysis = memory.analyze(sessionId, provider)
-    Outcome(newMessages.result(), iter,
+    ReactLoop.Outcome(newMessages.result(), iter,
       ReactLoop.Writes(addedRecords.result(), puts.result(), log, files, analysis))
   }
 }
 
 object ReactLoop {
+  /** One turn's result: the messages it added, the iterations it ran
+    * and its store changes, which the caller commits. */
+  final case class Outcome(newMessages: Seq[Message], iterations: Int, writes: Writes)
+
   /** One turn's store changes as driver-side values: added records, KV
     * puts in order, the task log record (the commit caps it), extracted
     * files and the post-turn memory analysis. */

@@ -6,7 +6,7 @@ import graft.functions.AgentText
 import graft.functions.TextFunctions
 import graft.model._
 import graft.provider.Provider
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -54,13 +54,11 @@ final case class MemoryStore(
 
   private def spark: SparkSession = records.sparkSession
 
-  /** P1 — the latest N records per session (memory.py:123-126). */
-  def tailRecords(n: Int): Dataset[MemoryRecord] = {
-    val sp = spark; import sp.implicits._
-    val w = Window.partitionBy($"sessionId").orderBy(desc("ts"))
-    records.withColumn("rn", row_number().over(w))
-      .filter($"rn" <= n).drop("rn").as[MemoryRecord]
-  }
+  /** P1 — a session's latest `n` records (memory.py:123-126), in no
+    * particular order (callers order them by `ts`); a top-k
+    * ([[MemoryStore.topK]]), with no shuffle of the whole log. */
+  def recentRecords(sessionId: String, n: Int): Dataset[MemoryRecord] =
+    MemoryStore.topK(records.filter(col("sessionId") === sessionId), n, desc("ts"))
 
   /** A5 — latest summary per session = value at max ts (memory.py:119-121). */
   def latestSummary: DataFrame = {
@@ -69,30 +67,27 @@ final case class MemoryStore(
       .agg(max_by($"text", $"ts").as("text"), max($"ts").as("ts"))
   }
 
-  /** F3 — top-k topics by keyword relevance to the query (memory.py:128-135):
-    * scores the reference's "'name': description" presentation string. */
-  def relevantTopics(sessionId: String, query: String): DataFrame = {
-    val sp = spark; import sp.implicits._
-    val keywords = TextFunctions.getKeywords(TextFunctions.cleanString(query))
-    val presented = topics.filter($"sessionId" === sessionId)
-      .select($"name", concat(lit("'"), $"name", lit("': "), $"description").as("rec"))
-      .select($"name", TextFunctions.cleanText($"rec").as("cleaned"))
-    presented
-      .withColumn("score", TextFunctions.keywordScore($"cleaned", keywords).cast("long"))
-      .orderBy(desc("score"), asc("name"))
-      .limit(config.relevantTopicsNum)
-  }
+  /** F3 — the session's top-k topics by keyword relevance to the query
+    * (memory.py:128-135), scoring the reference's "'name': description"
+    * presentation string. Columns `name`, `cleaned`, `score`, in no
+    * particular order (callers order by score desc, then name). */
+  def relevantTopics(sessionId: String, query: String): DataFrame =
+    relevant(topics, "name", "description", sessionId, query, config.relevantTopicsNum)
 
-  /** F3 — top-k KV pairs by keyword relevance (memory.py:137-142). */
-  def relevantKv(sessionId: String, query: String): DataFrame = {
-    val sp = spark; import sp.implicits._
+  /** F3 — the session's top-k KV pairs by keyword relevance
+    * (memory.py:137-142): columns `key`, `cleaned`, `score`, likewise
+    * unordered. */
+  def relevantKv(sessionId: String, query: String): DataFrame =
+    relevant(kv, "key", "value", sessionId, query, config.relevantKvNum)
+
+  private def relevant(rows: Dataset[_], key: String, value: String,
+      sessionId: String, query: String, k: Int): DataFrame = {
     val keywords = TextFunctions.getKeywords(TextFunctions.cleanString(query))
-    kv.filter($"sessionId" === sessionId)
-      .select($"key", concat(lit("'"), $"key", lit("': "), $"value").as("rec"))
-      .select($"key", TextFunctions.cleanText($"rec").as("cleaned"))
-      .withColumn("score", TextFunctions.keywordScore($"cleaned", keywords).cast("long"))
-      .orderBy(desc("score"), asc("key"))
-      .limit(config.relevantKvNum)
+    val cleaned = TextFunctions.cleanText(concat(lit("'"), col(key), lit("': "), col(value)))
+    val scored = rows.filter(col("sessionId") === sessionId)
+      .select(col(key), cleaned.as("cleaned"))
+      .withColumn("score", TextFunctions.keywordScore(col("cleaned"), keywords).cast("long"))
+    MemoryStore.topK(scored, k, desc("score"), asc(key))
   }
 
   /** P4 — point lookup (memory.py:257-261). */
@@ -103,17 +98,13 @@ final case class MemoryStore(
   }
 
   /** Append one record (memory.py:249-251). */
-  def addRecord(rec: MemoryRecord): MemoryStore = {
-    val sp = spark; import sp.implicits._
-    copy(records = records.union(Seq(rec).toDS()))
-  }
+  def addRecord(rec: MemoryRecord): MemoryStore =
+    copy(records = records.union(spark.createDataset(Seq(rec))(records.encoder)))
 
   /** Put one KV fact (memory.py:253-255): last-writer-wins upsert. */
-  def putData(entry: KvEntry): MemoryStore = {
-    val sp = spark; import sp.implicits._
-    copy(kv = kv.filter(!($"sessionId" === entry.sessionId && $"key" === entry.key))
-      .as[KvEntry].union(Seq(entry).toDS()))
-  }
+  def putData(entry: KvEntry): MemoryStore =
+    copy(kv = kv.filter(!(col("sessionId") === entry.sessionId && col("key") === entry.key))
+      .union(spark.createDataset(Seq(entry))(kv.encoder)))
 
   /** The full update step (ST2; memory.py:263-357): [[analyze]] then
     * [[applyUpdate]]. Deterministic given a stub provider. */
@@ -124,15 +115,18 @@ final case class MemoryStore(
     * records, ask the provider for an analysis and parse its fenced
     * JSON. None when the session has no records (nothing to analyze). */
   def analyze(sessionId: String, provider: Provider): Option[MemoryAnalysis] = {
-    val sp = spark; import sp.implicits._
-    val batch = tailRecords(config.updateBatchSize)
-      .filter($"sessionId" === sessionId)
-      .orderBy($"ts").collect()
+    // one read: the tail batch (tag 0) and the session's topic names
+    // (tag 1, in store order) as one union
+    val rows = recentRecords(sessionId, config.updateBatchSize)
+      .select(lit(0).as("tag"), col("ts"), col("content").as("text"))
+      .union(topics.filter(col("sessionId") === sessionId)
+        .select(lit(1), lit(null).cast("timestamp"), col("name")))
+      .collect().toSeq
+    val (batch, names) = rows.partition(_.getInt(0) == 0)
     if (batch.isEmpty) return None
-    val recordsText = batch.map(r => s"[${r.ts}] ${r.content}").mkString("\n")
-    val currentTopics = topics.filter($"sessionId" === sessionId)
-      .select("name").as[String].collect().toSeq
-    val prompt = MemoryStore.updatePrompt(recordsText, currentTopics)
+    val recordsText = batch.map(r => r.getTimestamp(1) -> r.getString(2)).sortBy(_._1)
+      .map { case (ts, content) => s"[$ts] $content" }.mkString("\n")
+    val prompt = MemoryStore.updatePrompt(recordsText, names.map(_.getString(2)))
     Some(MemoryStore.parseAnalysis(provider.generateResponse(prompt)))
   }
 
@@ -169,6 +163,18 @@ final case class MemoryStore(
 }
 
 object MemoryStore {
+
+  /** The first `n` rows of `rows` in `order`, returned in no particular
+    * order: a top-k (TakeOrderedAndProject — a top-k per partition, then
+    * one merge, in one job) when `rows` may hold more than `n` rows, and
+    * `rows` itself when they cannot. Spark drops a limit its optimized
+    * input cannot exceed (a filter over driver-held rows folds into the
+    * matching rows) but keeps the sort under it, and a global sort is a
+    * range shuffle (two more jobs under AQE), so that sort is left out
+    * here as well. */
+  private def topK[T](rows: Dataset[T], n: Int, order: Column*): Dataset[T] =
+    if (rows.queryExecution.optimizedPlan.maxRows.exists(_ <= n)) rows
+    else rows.orderBy(order: _*).limit(n)
 
   def empty(spark: SparkSession, config: MemoryConfig = MemoryConfig()): MemoryStore = {
     val sp = spark; import sp.implicits._

@@ -10,7 +10,7 @@ import graft.memory.{MemoryAnalysis, MemoryConfig, MemoryStore}
 import graft.model._
 import graft.provider.Provider
 import graft.task.{TaskConfig, TaskStore}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** The write-side chat turn (reference app.py:396-444 end-to-end):
   * `POST /chat {"session_id": ..., "query": ..., "task_id"?: n,
@@ -33,8 +33,14 @@ import org.apache.spark.sql.Dataset
   * commits by folding [[ReactLoop.Writes]] into the rows with the same
   * pure rules the streaming path uses ([[MemoryStore.retainSummaries]],
   * [[MemoryStore.mergeTopics]], [[MemoryStore.factRows]],
-  * [[TaskStore.appendLogRows]]) under `state0`'s configs. `state0` is
+  * [[TaskStore.appendLogRows]]) under `state0`'s configs. Only the
+  * tables whose rows the turn changed are rebuilt, each with the
+  * encoder its table was collected with (no per-turn encoder
+  * derivation); the others keep their published Dataset. `state0` is
   * collected once, at construction.
+  *
+  * [[handle]] answers a malformed POST body (not a JSON object, or no
+  * `query`) with [[BadRequest]], which the server maps to a 400.
   *
   * Turns are serialized (`synchronized`): chat state transitions are
   * single-writer per service, the same per-process session contract as
@@ -52,7 +58,6 @@ final class ChatService(
     nPartitions: Int = 4,
     toolExecutor: (String, String) => String = (n, _) => s"[no executor for $n]") {
 
-  private val spark = state0.messages.sparkSession
   private val memoryConfig = state0.memory.config
   private val taskConfig = state0.tasks.config
 
@@ -70,14 +75,8 @@ final class ChatService(
       current = publish(rows)
     }
 
-  private def publish(r: ChatService.Rows): ChatService.State = {
-    import spark.implicits._
-    ChatService.State(
-      MemoryStore(r.records.toDS(), r.summaries.toDS(), r.topics.toDS(), r.kv.toDS(),
-        memoryConfig),
-      TaskStore(r.tasks.toDS(), r.logs.toDS(), r.files.toDS(), taskConfig),
-      r.messages.toDS())
-  }
+  private def publish(r: ChatService.Rows): ChatService.State =
+    r.state(memoryConfig, taskConfig)
 
   private val loop = new ReactLoop(provider, toolExecutor = toolExecutor)
 
@@ -104,18 +103,18 @@ final class ChatService(
     (responseText, out.iterations)
   }
 
-  /** One POST body → one turn → response JSON. Malformed bodies throw
-    * (the server maps that to a 500). */
+  /** One POST body → one turn → response JSON. A body that is not a
+    * JSON object, or has no string `query`, throws [[BadRequest]] (the
+    * server answers 400); any other failure is the server's (500). */
   def handle(body: String): String = {
     val fields = AgentText.parseJson5ish(body) match {
       case Some(JObj(f)) => f
-      case _ => throw new IllegalArgumentException("body is not a JSON object")
+      case _ => throw new BadRequest("body is not a JSON object")
     }
     def str(k: String): Option[String] =
       fields.get(k).collect { case JStr(s) => s }
     val sessionId = str("session_id").getOrElse("default")
-    val query = str("query").getOrElse(
-      throw new IllegalArgumentException("missing 'query'"))
+    val query = str("query").getOrElse(throw new BadRequest("missing 'query'"))
     val taskId = fields.get("task_id").collect { case JNum(d) => d.toLong }
     val now = fields.get("ts") match {
       case Some(JNum(d)) => new Timestamp(d.toLong * 1000L)
@@ -133,22 +132,47 @@ object ChatService {
   final case class State(
       memory: MemoryStore, tasks: TaskStore, messages: Dataset[Message])
 
-  /** The committed state as driver-held rows, one `Seq` per table. */
+  /** One table: its driver-held rows and the local relation published
+    * for them, built on first use with the encoder the table was
+    * collected with. A commit that leaves a table's rows alone keeps
+    * the table, and so its Dataset. */
+  private final class Table[T](val rows: Seq[T], enc: Encoder[T], spark: SparkSession) {
+    lazy val ds: Dataset[T] = spark.createDataset(rows)(enc)
+
+    /** This table with `f` applied to its rows; itself when `f` returns
+      * the same `Seq`. */
+    def map(f: Seq[T] => Seq[T]): Table[T] = {
+      val next = f(rows)
+      if (next eq rows) this else new Table(next, enc, spark)
+    }
+
+    def ++(added: Seq[T]): Table[T] = if (added.isEmpty) this else map(_ ++ added)
+  }
+
+  private object Table {
+    /** Collect `ds` to the driver. */
+    def of[T](ds: Dataset[T]): Table[T] =
+      new Table(ds.collect().toSeq, ds.encoder, ds.sparkSession)
+  }
+
+  /** The committed state as driver-held rows, one [[Table]] per table. */
   private final case class Rows(
-      records: Seq[MemoryRecord], summaries: Seq[Summary], topics: Seq[Topic],
-      kv: Seq[KvEntry], tasks: Seq[TaskRow], logs: Seq[TaskLog],
-      files: Seq[ExtractedFileRow], messages: Seq[Message]) {
+      records: Table[MemoryRecord], summaries: Table[Summary], topics: Table[Topic],
+      kv: Table[KvEntry], tasks: Table[TaskRow], logs: Table[TaskLog],
+      files: Table[ExtractedFileRow], messages: Table[Message]) {
 
     /** Fold one turn's writes in, in the order the batch store
       * operators would apply them: records and last-writer-wins KV puts,
-      * the task log and files, the messages, then the memory analysis. */
+      * the task log and files, the messages, then the memory analysis.
+      * A table the turn does not write keeps its rows: `tasks` always,
+      * `files` when nothing was extracted. */
     def commit(sessionId: String, now: Timestamp, w: ReactLoop.Writes,
         newMessages: Seq[Message], memory: MemoryConfig, task: TaskConfig): Rows = {
       val turn = copy(
         records = records ++ w.records,
-        kv = w.puts.foldLeft(kv)((acc, e) =>
-          acc.filterNot(r => r.sessionId == e.sessionId && r.key == e.key) :+ e),
-        logs = w.log.fold(logs)(TaskStore.appendLogRows(logs, _, task)),
+        kv = kv.map(w.puts.foldLeft(_)((acc, e) =>
+          acc.filterNot(r => r.sessionId == e.sessionId && r.key == e.key) :+ e)),
+        logs = w.log.fold(logs)(l => logs.map(TaskStore.appendLogRows(_, l, task))),
         files = files ++ w.files,
         messages = messages ++ newMessages)
       w.analysis.fold(turn)(turn.analysed(sessionId, _, now, memory))
@@ -156,25 +180,31 @@ object ChatService {
 
     /** [[MemoryStore.applyUpdate]] on rows. */
     private def analysed(sessionId: String, a: MemoryAnalysis, now: Timestamp,
-        config: MemoryConfig): Rows = {
-      val (ownSummaries, otherSummaries) = summaries.partition(_.sessionId == sessionId)
-      val (ownTopics, otherTopics) = topics.partition(_.sessionId == sessionId)
-      copy(
-        summaries = a.summary.fold(summaries)(s => otherSummaries ++
-          MemoryStore.retainSummaries(ownSummaries, Summary(sessionId, now, s),
-            config.savedSummaryNum)),
-        topics = otherTopics ++
-          MemoryStore.mergeTopics(ownTopics, sessionId, a.topics, now, config.maxTopics),
-        kv = kv ++ MemoryStore.factRows(sessionId, a.keyFacts, now))
-    }
+        config: MemoryConfig): Rows = copy(
+      summaries = a.summary.fold(summaries)(s => summaries.map { rows =>
+        val (own, others) = rows.partition(_.sessionId == sessionId)
+        others ++ MemoryStore.retainSummaries(own, Summary(sessionId, now, s),
+          config.savedSummaryNum)
+      }),
+      topics = topics.map { rows =>
+        val (own, others) = rows.partition(_.sessionId == sessionId)
+        others ++ MemoryStore.mergeTopics(own, sessionId, a.topics, now, config.maxTopics)
+      },
+      kv = kv ++ MemoryStore.factRows(sessionId, a.keyFacts, now))
+
+    /** The rows as one local relation per table. */
+    def state(memory: MemoryConfig, task: TaskConfig): State = State(
+      MemoryStore(records.ds, summaries.ds, topics.ds, kv.ds, memory),
+      TaskStore(tasks.ds, logs.ds, files.ds, task),
+      messages.ds)
   }
 
   private object Rows {
     /** Collect every table of `st` to the driver. */
     def of(st: State): Rows = Rows(
-      st.memory.records.collect().toSeq, st.memory.summaries.collect().toSeq,
-      st.memory.topics.collect().toSeq, st.memory.kv.collect().toSeq,
-      st.tasks.tasks.collect().toSeq, st.tasks.logs.collect().toSeq,
-      st.tasks.files.collect().toSeq, st.messages.collect().toSeq)
+      Table.of(st.memory.records), Table.of(st.memory.summaries),
+      Table.of(st.memory.topics), Table.of(st.memory.kv),
+      Table.of(st.tasks.tasks), Table.of(st.tasks.logs),
+      Table.of(st.tasks.files), Table.of(st.messages))
   }
 }

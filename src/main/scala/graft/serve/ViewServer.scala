@@ -23,6 +23,10 @@ import org.apache.spark.sql.DataFrame
 final case class SseTail(
     topicDir: String, pollMs: Long = 50L, heartbeatMs: Long = 1000L)
 
+/** Thrown by a route handler when the request itself is malformed; the
+  * server answers it with a 400 instead of a 500. */
+final class BadRequest(message: String) extends RuntimeException(message)
+
 /** Minimal REST shim over the engine's view DataFrames — the serving
   * seam for the reference's API routes (app.py:126-481: `/api/tasks`,
   * `/api/memory`, `/api/tools`, ...), now including the write side: a
@@ -65,12 +69,15 @@ final class ViewServer(
     ex.close()
   }
 
+  /** A handler's result as (status, body): 400 for a [[BadRequest]],
+    * 500 for any other throw, each with a JSON error. */
   private def guarded(f: => String): (Int, String) =
     try (200, f)
     catch {
       case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        (500, s"""{"error": "${graft.functions.AgentText.escapeJson(msg)}"}""")
+        val status = e match { case _: BadRequest => 400; case _ => 500 }
+        (status, s"""{"error": "${graft.functions.AgentText.escapeJson(msg)}"}""")
     }
 
   routes.foreach { case (path, view) =>

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import graft.functions.AgentText
 import graft.model._
 import graft.provider.Provider
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,10 +15,10 @@ final case class TaskConfig(maxLogs: Int = 50, summaryCap: Int = 200)
 /** Task state as three Datasets (D6–D8) + the reference's operators
   * (SURVEY.md §2: A2/A3/A6/A9, T3/T4, F6/F9/F10, J3).
   *
-  * Scale stance: `logs`/`files` are the growing relations — views over
-  * them are partition-parallel groupBys joined back to the (small)
-  * task dimension with the dimension broadcast; per-task retention is
-  * one ranking window over (taskId, ts).
+  * Scale stance: `logs`/`files` are the growing relations — the task
+  * view is one partition-parallel aggregation over them and the (small)
+  * task dimension together; per-task retention is one ranking window
+  * over (taskId, ts).
   */
 final case class TaskStore(
     tasks: Dataset[TaskRow],
@@ -68,21 +68,31 @@ final case class TaskStore(
   }
 
   /** A3/A6 — the `/api/tasks` view (app.py:140-175): per-task log and
-    * file counts plus last-updated (latest log ts, else created_at). */
+    * file counts plus last-updated (latest log ts, else created_at).
+    * One aggregation over a tagged union of the three tables (kind 0 a
+    * task row, 1 a log, 2 a file); a task id with no task row drops
+    * out. */
   def tasksView: DataFrame = {
-    val sp = spark; import sp.implicits._
-    val logCounts = logs.groupBy($"taskId".as("lt"))
-      .agg(count(lit(1)).as("logs_count"), max($"ts").as("last_log_ts"))
-    val fileCounts = files.groupBy($"taskId".as("ft"))
-      .agg(count(lit(1)).as("files_count"))
-    tasks
-      .join(logCounts, $"taskId" === $"lt", "left").drop("lt")
-      .join(fileCounts, $"taskId" === $"ft", "left").drop("ft")
-      .select($"taskId", $"taskType", $"title", $"target", $"progress",
-        coalesce($"logs_count", lit(0L)).as("logs_count"),
-        coalesce($"files_count", lit(0L)).as("files_count"),
-        coalesce($"last_log_ts", $"createdAt").as("last_updated"))
-      .orderBy($"taskId")
+    val none = lit(null).cast("string")
+    val noTs = lit(null).cast("timestamp")
+    def tagged(kind: Int, rows: Dataset[_], fields: Column*) =
+      rows.select(col("taskId") +: lit(kind).as("kind") +: fields: _*)
+    val task = (c: String) => first(col(c), ignoreNulls = true).as(c)
+    tagged(0, tasks, col("taskType"), col("title"), col("target"), col("progress"),
+        col("createdAt"), noTs.as("ts"))
+      .union(tagged(1, logs, none, none, none, none, noTs, col("ts")))
+      .union(tagged(2, files, none, none, none, none, noTs, noTs))
+      .groupBy(col("taskId"))
+      .agg(count(when(col("kind") === 0, 1)).as("task_rows"),
+        task("taskType"), task("title"), task("target"), task("progress"),
+        count(when(col("kind") === 1, 1)).as("logs_count"),
+        count(when(col("kind") === 2, 1)).as("files_count"),
+        coalesce(max(col("ts")), first(col("createdAt"), ignoreNulls = true))
+          .as("last_updated"))
+      .filter(col("task_rows") > 0)
+      .drop("task_rows")
+      // one row per task: sorted in one partition, not range-shuffled
+      .coalesce(1).sortWithinPartitions(col("taskId"))
   }
 
   /** J3 — file lookup across a task's logs (app.py:450-481). */

@@ -59,7 +59,9 @@ class ChatServiceSpec extends SparkSpec {
     val svc = new ChatService(stub, state0, spark.emptyDataset[Tool], pushDir)
     val server = new ViewServer(
       routes = Map("/api/tasks" -> (() => svc.state.tasks.tasksView)),
-      postRoutes = Map("/chat" -> svc.handle))
+      postRoutes = Map(
+        "/chat" -> svc.handle,
+        "/boom" -> (_ => throw new IllegalStateException("handler failed"))))
     val port = server.start()
     try {
       // turn 1: memory op + task log
@@ -87,9 +89,20 @@ class ChatServiceSpec extends SparkSpec {
       assert(pushed(0) == ((0L, "s1", "MinHash-LSH for Jaccard, SimHash for Hamming.")))
       assert(pushed(1)._1 == 1L && pushed(1)._3.startsWith("Shingle"))
 
-      // malformed body → 500 with an error payload
-      val (s4, err) = post(s"http://127.0.0.1:$port/chat", """{"nope": 1}""")
-      assert(s4 == 500 && err.contains("error"))
+      // malformed bodies → 400 with a JSON error, and nothing committed
+      val committed = svc.state.messages.count()
+      Seq("not json", "[1, 2]", "\"text\"", """{"session_id": "s"}""", """{"query": 3}""")
+        .foreach { body =>
+          val (status, err) = post(s"http://127.0.0.1:$port/chat", body)
+          assert(status == 400, body)
+          assert(err.startsWith("""{"error": """), err)
+        }
+      assert(post(s"http://127.0.0.1:$port/chat", """{"nope": 1}""") ==
+        ((400, """{"error": "missing 'query'"}""")))
+      assert(svc.state.messages.count() == committed)
+      // any other handler failure stays a 500
+      assert(post(s"http://127.0.0.1:$port/boom", "{}") ==
+        ((500, """{"error": "handler failed"}""")))
     } finally server.close()
   }
 
