@@ -73,10 +73,6 @@ object Bench {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def firstLine(e: Throwable): String =
-    Option(e.getMessage).flatMap(_.linesIterator.find(_.trim.nonEmpty))
-      .getOrElse(e.getClass.getName)
-
   /** The measured runs both scales share. The warm run (`warmWall`,
     * construction included) already paid Catalyst planning + Janino
     * compile, so one freshly constructed run (`once(0)`) is the
@@ -97,8 +93,10 @@ object Bench {
   /** The per-query measurement: isolate → construct → optimized-plan
     * fingerprint → warm write → [[steady]] (floor 1 s, plus the
     * [[committedFloorFires]] trigger against `committed`), each measured
-    * run — construction and write — tagged for `layers`. Any Throwable
-    * along the way becomes the recorded error, never a time.
+    * run — construction and write — tagged for `layers`, all inside
+    * [[EngineSession.attempt]]: any Throwable along the way becomes the
+    * recorded error, never a time, and keeps the fp when the query was
+    * built.
     *
     * Isolation runs BEFORE the warm run: without it, persisted frames
     * from every earlier query stay resident for the whole suite (+35-45%
@@ -116,17 +114,17 @@ object Bench {
       fn: (SparkSession, String) => DataFrame, dir: String,
       committed: Option[(Double, String)], layers: LayerCollector): Measured = {
     EngineSession.isolate(spark)
-    try {
-      val (df, constructWall) = timed(fn(spark, dir))
-      val fpo = PlanFp.fingerprintOpt(df)
-      try {
-        val warmWall = constructWall + timed(run(df))._2
-        val runs = steady(i => layers.tagged(s"$name#$i")(timed(run(fn(spark, dir)))._2),
-          warmWall, floor = 1.0, committedFloorFires(_, fpo, committed))
-        Measured(name, Right(runs.min), fpo, runs.length > 1,
-          constructWall, s"$name#${runs.indexOf(runs.min)}")
-      } catch { case e: Throwable => Measured(name, Left(firstLine(e)), fpo, false) }
-    } catch { case e: Throwable => Measured(name, Left(firstLine(e)), "err", false) }
+    var fpo = "err"
+    val t0 = System.nanoTime()
+    EngineSession.attempt(spark, fn, dir) { df =>
+      val constructWall = (System.nanoTime() - t0) / 1e9
+      fpo = PlanFp.fingerprintOpt(df)
+      val warmWall = constructWall + timed(run(df))._2
+      val runs = steady(i => layers.tagged(s"$name#$i")(timed(run(fn(spark, dir)))._2),
+        warmWall, floor = 1.0, committedFloorFires(_, fpo, committed))
+      Measured(name, Right(runs.min), fpo, runs.length > 1,
+        constructWall, s"$name#${runs.indexOf(runs.min)}")
+    }.left.map(e => Measured(name, Left(e), fpo, false)).merge
   }
 
   /** The `layers` record of every timed query (an errored one has
@@ -148,11 +146,13 @@ object Bench {
       fn: (SparkSession, String) => DataFrame, smallDir: String,
       big: Double): Double = {
     EngineSession.isolate(spark, full = false)
-    try {
-      val warm = timed(run(fn(spark, smallDir)))._2
+    val t0 = System.nanoTime()
+    EngineSession.attempt(spark, fn, smallDir) { df =>
+      run(df)
+      val warm = (System.nanoTime() - t0) / 1e9
       val small = steady(_ => timed(run(fn(spark, smallDir)))._2, warm, floor = 0.2).min
       if (small > 0) big / small else 0.0
-    } catch { case _: Throwable => -1.0 }
+    }.getOrElse(-1.0)
   }
 
   def main(args: Array[String]): Unit = {
@@ -182,11 +182,10 @@ object Bench {
         }
     // Shared engine config plus the fingerprint-stability settings
     // ([[EngineSession.fingerprintBuilder]]), then the A/B overlay.
-    val spark = extraConf.foldLeft(EngineSession.fingerprintBuilder(cpus)) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    logs.quietWindowWarnings()
+    val spark = EngineSession.start(
+      extraConf.foldLeft(EngineSession.fingerprintBuilder(cpus)) {
+        case (b, (k, v)) => b.config(k, v)
+      })
     // Warm up JIT/codegen/parquet readers so the first measured query
     // doesn't absorb one-time session init (~3 s of classloading).
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -310,7 +309,7 @@ object Bench {
       // SPARK_GRAFT_BENCH_OUT. Echo the override value and the write
       // timestamp INTO the artifact so the next clobber names itself.
       val benchOutAttr = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-        .map(v => v.replace("\\", "\\\\").replace("\"", "\\\"")).getOrElse("")
+        .map(graft.functions.AgentText.escapeJson).getOrElse("")
       val writtenAt = java.time.Instant.now().toString
       s"""{"metric":"total","value":$totalSec,"unit":"sec","n_queries":${times.length},"cpus":$cpus,""" +
         s""""queries":{$qs},"plans_opt":{$fpos},"plans_fp":"$plansFp","layers":{$ls},""" +

@@ -146,11 +146,12 @@ object logs {
 }
 
 /** The engine's recommended session configuration and the harness
-  * plumbing every local entry point shares — Bench, Verify, FpScan,
+  * plumbing every local entry point shares — Bench, Verify,
   * Explain and the agent demos build their session here (r12 verdict
   * #10: the measured config must be the shipped config, in ONE place)
   * and layer only their own extras on top (fingerprint truncation
-  * settings, Bench's SPARK_GRAFT_CONF A/B overlay).
+  * settings, Bench's SPARK_GRAFT_CONF A/B overlay). The harness mains
+  * also share [[start]] and the per-query step [[attempt]].
   *
   * The AQE coalesce floor (adopted r12; interleaved A/B at
   * sf0.1/cpus=32: the 8 hottest dd_/mm_ rows 24.2 → 21.2 s):
@@ -175,7 +176,7 @@ object EngineSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
 
   /** [[builder]] plus the settings that keep plan text fingerprintable
-    * (Bench, FpScan): treeStrings truncate long node strings (file-scan
+    * (Bench, Explain): treeStrings truncate long node strings (file-scan
     * metadata at 100 chars, >25 fields elided), and ExprIds have
     * varying digit widths across suite compositions, so a FIXED-LENGTH
     * cut lands on different characters and two identical plans print
@@ -184,6 +185,30 @@ object EngineSession {
     builder(cpus)
       .config("spark.sql.maxMetadataStringLength", "100000")
       .config("spark.sql.debug.maxToStringFields", "10000")
+
+  /** A harness main's session: `b` built at log level WARN, with
+    * [[logs.quietWindowWarnings]]. */
+  def start(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    logs.quietWindowWarnings()
+    spark
+  }
+
+  /** The per-query step every harness main shares: build the query
+    * with `fn`, run `act` on the frame, and turn any throw — while
+    * building or in `act` — into `Left` of its [[firstLine]]. The step
+    * does not isolate: each caller runs [[isolate]] as its
+    * measurements need. */
+  def attempt[A](spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      dir: String)(act: DataFrame => A): Either[String, A] =
+    try Right(act(fn(spark, dir)))
+    catch { case e: Throwable => Left(firstLine(e)) }
+
+  /** The first non-blank line of `e`'s message, else its class name. */
+  private def firstLine(e: Throwable): String =
+    Option(e.getMessage).flatMap(_.linesIterator.find(_.trim.nonEmpty))
+      .getOrElse(e.getClass.getName)
 
   /** `SPARK_GRAFT_CPUS`, else `default` (the host's cpu count unless a
     * main pins its own). Never compare fingerprints or times across

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Plan-fingerprint canonicalization, shared by [[Bench]] (per-round
-  * artifacts), [[FpScan]] (the flap hunter) and specs.
+  * artifacts), [[Explain]] (the plan dumps) and specs.
   * [[fingerprintOpt]] canonicalizes the OPTIMIZED logical plan,
   * normalized until it is a pure function of code + input schema: it
   * adjudicates "plan changed vs host noise" between runs, so every
@@ -69,8 +69,8 @@ object PlanFp {
     * elements blanked. Narrow documented blind spot (same
     * class as the map(*) elision): a deliberate change ONLY to a
     * grouping-set spec literal or to Expand row order won't move this
-    * fp — diff the `SPARK_GRAFT_FP_DUMP` texts ([[FpScan]]) or the
-    * `Explain` plan dumps to see one. */
+    * fp — diff the [[Explain]] dumps (`.opt.txt` and `.txt`) to see
+    * one. */
   private[graft] def normalizeDistinctGids(text: String): String = {
     // the literals are gids only under RewriteDistinctAggregates'
     // Expand; without one, FILTER (WHERE (<int> = col)) is a user's own
@@ -133,7 +133,7 @@ object PlanFp {
   }
 
   /** The normalized text [[fingerprintOpt]] hashes — exposed so a
-    * flapping fp can be diffed directly ([[FpScan]], fp-dump mode). */
+    * flapping fp can be diffed directly ([[Explain]]'s `.opt.txt`). */
   def canonOptText(df: DataFrame): String = {
     // Builder-internal persist() embeds an InMemoryRelation whose
     // cached PHYSICAL subtree carries live (un-canonicalized)

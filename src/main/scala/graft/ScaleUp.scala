@@ -54,17 +54,16 @@ object ScaleUp {
     val outDir = args.lift(1).getOrElse("data/sf1")
     val factor = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
+    // its own builder, not EngineSession's: the sf1 fingerprints were
+    // generated under exactly these settings
+    val cpus = EngineSession.cpus()
+    val spark = EngineSession.start(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.ui.enabled", "false"))
 
     def src(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.functions.AgentText.escapeJson
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,34 +12,22 @@ object Verify {
     // shared engine config — the measured config is the shipped config
     // ([[EngineSession]], r12 verdict #10); the floor is runtime-only
     // (AQE scheduling), so optimized plan fingerprints are unaffected
-    val spark = EngineSession.builder(EngineSession.cpus("4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    logs.quietWindowWarnings()
+    val spark = EngineSession.start(EngineSession.builder(EngineSession.cpus("4")))
     new java.io.File(outDir).mkdirs()
     EngineSession.selected(only).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      EngineSession.attempt(spark, fn, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        .left.foreach(e => System.err.println(s"[verify] $name failed: $e"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // null-guard: an oracle string that is null (object-init ordering
-    // bugs) must surface as a missing oracle, not NPE the whole dump
+    // bugs) must surface as a missing oracle, not NPE the whole dump.
+    // Every control char is escaped: a tab or CR in an oracle's SQL
+    // would otherwise make the oracle compare's json.load fail and
+    // silently zero the correctness result.
     val json = SparkEntry.oracleSql
       .filter(kv => only.forall(_.contains(kv._1)) && kv._2 != null)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s""""${escapeJson(k)}": "${escapeJson(v)}"""" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

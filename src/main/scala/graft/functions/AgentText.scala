@@ -221,9 +221,23 @@ object AgentText {
     case JNull => "null"
   }
 
-  def escapeJson(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
+  /** The body of a JSON string literal for `s` (RFC 8259 §7): quote and
+    * backslash escaped, newline, CR and tab in short form, and every
+    * other control character below 0x20 as a four-hex-digit unicode
+    * escape (lower-case hex). */
+  def escapeJson(s: String): String = {
+    val sb = new StringBuilder(s.length + 8)
+    s.foreach {
+      case '"'  => sb ++= "\\\""
+      case '\\' => sb ++= "\\\\"
+      case '\n' => sb ++= "\\n"
+      case '\r' => sb ++= "\\r"
+      case '\t' => sb ++= "\\t"
+      case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
+      case c => sb += c
+    }
+    sb.toString
+  }
 
   // ------------------------------------------------------------------ F6
   /** `_extract_content_between_markers` (task.py:263-285, quirk Q11):

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import graft.agent.ReactLoop
 import graft.functions.AgentText
-import graft.functions.AgentText.{JNum, JObj, JStr}
+import graft.functions.AgentText.{JNum, JObj, JStr, JVal}
 import graft.io.CommitLog
 import graft.memory.{MemoryAnalysis, MemoryConfig, MemoryStore}
 import graft.model._
@@ -39,8 +39,9 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   * derivation); the others keep their published Dataset. `state0` is
   * collected once, at construction.
   *
-  * [[handle]] answers a malformed POST body (not a JSON object, or no
-  * `query`) with [[BadRequest]], which the server maps to a 400.
+  * [[handle]] answers a malformed POST body (not a JSON object, no
+  * `query`, or a field of the wrong type) with [[BadRequest]], which
+  * the server maps to a 400.
   *
   * Turns are serialized (`synchronized`): chat state transitions are
   * single-writer per service, the same per-process session contract as
@@ -104,22 +105,28 @@ final class ChatService(
   }
 
   /** One POST body → one turn → response JSON. A body that is not a
-    * JSON object, or has no string `query`, throws [[BadRequest]] (the
-    * server answers 400); any other failure is the server's (500). */
+    * JSON object, has no `query`, or has a field of the wrong type (a
+    * non-string `session_id` or `query`, a non-integral `task_id`, a
+    * non-numeric `ts`) throws [[BadRequest]] (the server answers 400);
+    * any other failure is the server's (500). */
   def handle(body: String): String = {
     val fields = AgentText.parseJson5ish(body) match {
       case Some(JObj(f)) => f
       case _ => throw new BadRequest("body is not a JSON object")
     }
-    def str(k: String): Option[String] =
-      fields.get(k).collect { case JStr(s) => s }
-    val sessionId = str("session_id").getOrElse("default")
-    val query = str("query").getOrElse(throw new BadRequest("missing 'query'"))
-    val taskId = fields.get("task_id").collect { case JNum(d) => d.toLong }
-    val now = fields.get("ts") match {
-      case Some(JNum(d)) => new Timestamp(d.toLong * 1000L)
-      case _ => new Timestamp(System.currentTimeMillis())
-    }
+    // a field that is present must have its type: a silent default
+    // would commit the turn somewhere the caller did not ask for
+    def field[A](k: String, want: String)(pf: PartialFunction[JVal, A]): Option[A] =
+      fields.get(k).map(pf.applyOrElse(_,
+        (_: JVal) => throw new BadRequest(s"'$k' must be $want")))
+    val sessionId = field("session_id", "a string") { case JStr(s) => s }
+      .getOrElse("default")
+    val query = field("query", "a string") { case JStr(s) => s }
+      .getOrElse(throw new BadRequest("missing 'query'"))
+    val taskId = field("task_id", "an integer") {
+      case JNum(d) if d == math.floor(d) && !d.isInfinite => d.toLong }
+    val now = field("ts", "a number") { case JNum(d) => new Timestamp(d.toLong * 1000L) }
+      .getOrElse(new Timestamp(System.currentTimeMillis()))
     val (responseText, iterations) = processTurn(sessionId, query, taskId, now)
     s"""{"session_id": "${AgentText.escapeJson(sessionId)}", """ +
       s""""response": "${AgentText.escapeJson(responseText)}", """ +

@@ -137,4 +137,16 @@ class AgentTextSpec extends AnyFunSuite {
     val long = "y" * 250
     assert(AgentText.summarize(long) == "y" * 200 + "...")
   }
+
+  // ---------------------------------------------------------------- JSON out
+  test("escapeJson escapes every control character, so the output parses back") {
+    (0 until 0x20).map(_.toChar).foreach { c =>
+      val s = "a" + c + "b\"\\"
+      val esc = escapeJson(s)
+      assert(!esc.exists(_ < ' '), f"raw control char 0x${c.toInt}%02x left in $esc")
+      assert(parseJson5ish("\"" + esc + "\"") == Some(JStr(s)), f"0x${c.toInt}%02x")
+    }
+    assert(escapeJson("\u001b[31m") == "\\u001b[31m")
+    assert(escapeJson("a\tb\n") == "a\\tb\\n")
+  }
 }

@@ -48,7 +48,10 @@ class ChatServiceSpec extends SparkSpec {
       "## Query:\nsummarize the plan" ->
         """```json
 {"text": "Shingle, sign, band, verify, cluster.", "finished": true}
-```"""))
+```""",
+      // a reply carrying an ANSI escape (a raw 0x1b once parsed)
+      "## Query:\ncolor me" ->
+        "```json\n{\"text\": \"red \\u001b[31malert\", \"finished\": true}\n```"))
 
     val state0 = ChatService.State(
       MemoryStore.empty(spark),
@@ -89,13 +92,31 @@ class ChatServiceSpec extends SparkSpec {
       assert(pushed(0) == ((0L, "s1", "MinHash-LSH for Jaccard, SimHash for Hamming.")))
       assert(pushed(1)._1 == 1L && pushed(1)._3.startsWith("Shingle"))
 
-      // malformed bodies → 400 with a JSON error, and nothing committed
+      // a control character in the reply is escaped: the body is
+      // strict JSON (no raw char below 0x20) and parses back to it
+      val (s4, r4) = post(s"http://127.0.0.1:$port/chat",
+        """{"session_id": "s2", "query": "color me", "ts": 300}""")
+      assert(s4 == 200 && !r4.exists(_ < ' '), r4)
+      assert(graft.functions.AgentText.parseJson5ish(r4).collect {
+        case graft.functions.AgentText.JObj(f) => f("response") } ==
+        Some(graft.functions.AgentText.JStr("red \u001b[31malert")))
+
+      // malformed bodies → 400 with a JSON error, and nothing committed;
+      // a present field of the wrong type is named, never defaulted
       val committed = svc.state.messages.count()
       Seq("not json", "[1, 2]", "\"text\"", """{"session_id": "s"}""", """{"query": 3}""")
         .foreach { body =>
           val (status, err) = post(s"http://127.0.0.1:$port/chat", body)
           assert(status == 400, body)
           assert(err.startsWith("""{"error": """), err)
+        }
+      Seq("session_id" -> """{"session_id": 5, "query": "q"}""",
+        "task_id" -> """{"query": "q", "task_id": "3"}""",
+        "task_id" -> """{"query": "q", "task_id": 2.5}""",
+        "ts" -> """{"query": "q", "ts": "soon"}""")
+        .foreach { case (field, body) =>
+          val (status, err) = post(s"http://127.0.0.1:$port/chat", body)
+          assert(status == 400 && err.startsWith(s"""{"error": "'$field' must be"""), err)
         }
       assert(post(s"http://127.0.0.1:$port/chat", """{"nope": 1}""") ==
         ((400, """{"error": "missing 'query'"}""")))
