@@ -37,21 +37,27 @@ object PlanFp {
           j += 1
         }
         val inner = text.substring(at + marker.length, j - 1)
-        val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-        var d = 0; var start = 0; var k = 0
-        while (k < inner.length) {
-          val c = inner.charAt(k)
-          if (c == '(') d += 1 else if (c == ')') d -= 1
-          else if (c == ',' && d == 0) { parts += inner.substring(start, k); start = k + 1 }
-          k += 1
-        }
-        parts += inner.substring(start)
-        sb.append(parts.map(p => sortCommutative(p.trim)).sorted.mkString(", "))
+        sb.append(splitTopLevel(inner, "(", ")").map(p => sortCommutative(p.trim))
+          .sorted.mkString(", "))
           .append(')')
         i = j
       }
     }
     sb.toString
+  }
+
+  /** `s` cut at each comma outside every bracket pair: a char of
+    * `open` nests one level deeper, a char of `close` one level back. */
+  private def splitTopLevel(s: String, open: String, close: String): Seq[String] = {
+    val parts = Seq.newBuilder[String]
+    var depth = 0; var start = 0
+    for (k <- 0 until s.length) {
+      val c = s.charAt(k)
+      if (open.indexOf(c) >= 0) depth += 1
+      else if (close.indexOf(c) >= 0) depth -= 1
+      else if (c == ',' && depth == 0) { parts += s.substring(start, k); start = k + 1 }
+    }
+    (parts += s.substring(start)).result()
   }
 
   /** RewriteDistinctAggregates assigns each distinct-aggregate group
@@ -96,27 +102,9 @@ object PlanFp {
         }
         val inner = gidFiltered.substring(at + "Expand [".length, j - 1)
         // split top-level rows "[…], […]"
-        val rows = scala.collection.mutable.ArrayBuffer.empty[String]
-        var d = 0; var start = 0; var k = 0
-        while (k < inner.length) {
-          val c = inner.charAt(k)
-          if (c == '[') d += 1 else if (c == ']') d -= 1
-          else if (c == ',' && d == 0) { rows += inner.substring(start, k); start = k + 1 }
-          k += 1
-        }
-        rows += inner.substring(start)
-        val normRows = rows.map { r =>
+        val normRows = splitTopLevel(inner, "[", "]").map { r =>
           val body = r.trim.stripPrefix("[").stripSuffix("]")
-          val elems = scala.collection.mutable.ArrayBuffer.empty[String]
-          var dd = 0; var s0 = 0; var kk = 0
-          while (kk < body.length) {
-            val c = body.charAt(kk)
-            if (c == '(' || c == '[') dd += 1
-            else if (c == ')' || c == ']') dd -= 1
-            else if (c == ',' && dd == 0) { elems += body.substring(s0, kk); s0 = kk + 1 }
-            kk += 1
-          }
-          elems += body.substring(s0)
+          val elems = splitTopLevel(body, "([", ")]")
           // sort WITHIN the row too: each distinct group also owns a
           // projection SLOT assigned in gid order, so the swapped
           // sessions put the same expression in different columns

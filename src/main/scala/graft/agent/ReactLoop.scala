@@ -143,20 +143,22 @@ final class ReactLoop(
       TaskStore.extractFiles(_, now, lastResponseText, provider))
     // post-turn memory analysis (ST2) exactly once per query
     val analysis = memory.analyze(sessionId, provider)
-    ReactLoop.Outcome(newMessages.result(), iter,
-      ReactLoop.Writes(addedRecords.result(), puts.result(), log, files, analysis))
+    ReactLoop.Outcome(iter, ReactLoop.Writes(newMessages.result(),
+      addedRecords.result(), puts.result(), log, files, analysis))
   }
 }
 
 object ReactLoop {
-  /** One turn's result: the messages it added, the iterations it ran
-    * and its store changes, which the caller commits. */
-  final case class Outcome(newMessages: Seq[Message], iterations: Int, writes: Writes)
+  /** One turn's result: the iterations it ran and its writes, which the
+    * caller commits. */
+  final case class Outcome(iterations: Int, writes: Writes)
 
-  /** One turn's store changes as driver-side values: added records, KV
-    * puts in order, the task log record (the commit caps it), extracted
-    * files and the post-turn memory analysis. */
+  /** One turn's writes as one driver-side delta: the messages it added
+    * (the user's query, then each iteration's replies and tool results),
+    * added records, KV puts in order, the task log record (the commit
+    * caps it), extracted files and the post-turn memory analysis. */
   final case class Writes(
+      messages: Seq[Message],
       records: Seq[MemoryRecord],
       puts: Seq[KvEntry],
       log: Option[TaskLog],

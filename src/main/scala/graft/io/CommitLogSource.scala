@@ -1,7 +1,7 @@
 package graft.io
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -46,8 +46,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - micro-batch planning assigns one InputPartition per log partition
   *    and range — readers stream lines, they never materialize a
   *    segment;
-  *  - the streaming sink writes segments from EXECUTORS (one temp file
-  *    per epoch × writer), and the driver commit is a metadata-only
+  *  - the streaming sink writes segments from EXECUTORS (one unique
+  *    temp file per epoch × writer × log partition, staged in the
+  *    partition directory), and the driver commit is a metadata-only
   *    hard link that never replaces a segment; a replayed epoch finds
   *    its destination taken, so a re-run batch is a no-op — the
   *    standard idempotent-file-sink contract that makes end-to-end
@@ -91,6 +92,12 @@ object CommitLog {
   }
 
   def partitionDir(dir: String, pid: Int): Path = Paths.get(dir, s"p$pid")
+
+  /** The log partition of `key` among `n`: the hash-by-key contract
+    * that keeps one key's records totally ordered. A null key goes to
+    * partition 0. */
+  def partitionOf(key: String, n: Int): Int =
+    math.floorMod(if (key == null) 0 else key.hashCode, n)
 
   /** Segment files of one partition in offset order. */
   def segments(dir: String, pid: Int): Seq[Path] = {
@@ -140,8 +147,9 @@ object CommitLog {
   }
 
   /** Write `bytes` to a new `.tmp-*` file in directory `d` (created if
-    * missing); [[segments]] never lists it. */
-  private def writeTemp(d: Path, bytes: Array[Byte]): Path = {
+    * missing); [[segments]] never lists it, and no other writer opens
+    * it. */
+  private[io] def writeTemp(d: Path, bytes: Array[Byte]): Path = {
     Files.createDirectories(d)
     Files.write(Files.createTempFile(d, ".tmp-", ".log"), bytes)
   }
@@ -457,19 +465,15 @@ final class CommitLogStreamingWrite(dir: String, numPartitions: Int, input: Stru
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new CommitLogWriterFactory(dir, numPartitions, input)
 
-  /** Metadata-only commit: publish each epoch temp file into its
-    * partition directory ([[CommitLog.publish]]). A destination that
+  /** Metadata-only commit: publish each staged temp file as its
+    * destination segment ([[CommitLog.publish]]). A destination that
     * already exists means this epoch was committed before (query
     * restart re-ran the batch) — it is kept and the temp dropped, making
     * replay idempotent and delivery exactly-once. */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case CommitLogCommit(files) => files.foreach { case (pid, tmpPath) =>
-        val tmp = Paths.get(tmpPath)
-        val dst = CommitLog.partitionDir(dir, pid)
-          .resolve(tmp.getFileName.toString.stripPrefix("tmp-"))
-        Files.createDirectories(dst.getParent)
-        CommitLog.publish(tmp, Iterator.single(dst))
+      case CommitLogCommit(files) => files.foreach { case (dst, tmp) =>
+        CommitLog.publish(Paths.get(tmp), Iterator.single(Paths.get(dst)))
       }
       case _ => ()
     }
@@ -482,7 +486,8 @@ final class CommitLogStreamingWrite(dir: String, numPartitions: Int, input: Stru
     }
 }
 
-final case class CommitLogCommit(files: Seq[(Int, String)]) extends WriterCommitMessage
+/** One writer's staged segments as (destination, temp file) paths. */
+final case class CommitLogCommit(files: Seq[(String, String)]) extends WriterCommitMessage
 
 final class CommitLogWriterFactory(dir: String, numPartitions: Int, input: StructType)
     extends StreamingDataWriterFactory {
@@ -490,11 +495,13 @@ final class CommitLogWriterFactory(dir: String, numPartitions: Int, input: Struc
     new CommitLogDataWriter(dir, numPartitions, input, partitionId, epochId)
 }
 
-/** Executor-side writer: buffers lines per log partition, flushes one
-  * temp segment per (epoch, writer, log-partition). Segment names embed
-  * `(epochId, writerPartitionId)` — both stable across batch replays —
-  * so a re-run produces byte-identical destinations and the driver
-  * commit can detect them. */
+/** Executor-side writer: buffers lines per log partition, stages one
+  * temp segment per (epoch, writer, log-partition) through
+  * [[CommitLog.writeTemp]] — a fresh file every attempt, so a retry
+  * never reopens a temp an earlier attempt may already have linked as a
+  * segment. Destination names embed `(epochId, writerPartitionId)` —
+  * both stable across batch replays — so a re-run targets the same
+  * destinations and the driver commit can detect them. */
 final class CommitLogDataWriter(
     dir: String, numPartitions: Int, input: StructType,
     writerPartitionId: Int, epochId: Long)
@@ -514,24 +521,17 @@ final class CommitLogDataWriter(
     val ts = if (tsIdx >= 0 && !row.isNullAt(tsIdx)) row.getLong(tsIdx) else 0L
     val pid =
       if (partIdx >= 0 && !row.isNullAt(partIdx)) row.getInt(partIdx)
-      else math.floorMod(if (key == null) 0 else key.hashCode, numPartitions)
+      else CommitLog.partitionOf(key, numPartitions)
     buffers.getOrElseUpdate(pid, new StringBuilder)
       .append(CommitLog.encodeLine(ts, key, value)).append('\n')
   }
 
-  override def commit(): WriterCommitMessage = {
-    val tmpDir = Paths.get(dir, "_tmp")
-    Files.createDirectories(tmpDir)
-    val files = buffers.toSeq.sortBy(_._1).map { case (pid, buf) =>
-      val name = f"tmp-seg-e$epochId%012d-w$writerPartitionId%05d-p$pid%d.log"
-      val tmp = tmpDir.resolve(name)
-      Files.write(tmp, buf.toString.getBytes(UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
-      (pid, tmp.toString)
-    }
-    CommitLogCommit(files)
-  }
+  override def commit(): WriterCommitMessage =
+    CommitLogCommit(buffers.toSeq.sortBy(_._1).map { case (pid, buf) =>
+      val d = CommitLog.partitionDir(dir, pid)
+      val dst = d.resolve(f"seg-e$epochId%012d-w$writerPartitionId%05d-p$pid%d.log")
+      (dst.toString, CommitLog.writeTemp(d, buf.toString.getBytes(UTF_8)).toString)
+    })
 
   override def abort(): Unit = ()
   override def close(): Unit = ()

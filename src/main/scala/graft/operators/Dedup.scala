@@ -1088,36 +1088,6 @@ object Dedup {
       })
   )
 
-  /** SimHash near-dup pairs via pigeonhole banding: the 32-bit
-    * signature splits into 5 disjoint bands, and any pair within
-    * Hamming distance 4 differs in at most 4 bands — so it MUST agree
-    * exactly on at least one (exact recall, no tuning). The band
-    * equi-join generates candidates; a popcount verifies. This is the
-    * scale path when signature entropy keeps band groups small
-    * (real-world corpora, or 64-bit sigs with wider bands); on
-    * low-entropy corpora where groups approach n it degrades past the
-    * direct n²/2 join — measure before choosing. */
-  def simhashPairs(sigs: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming <= 4, "5 bands guarantee recall only for hamming <= 4")
-    val bandBits = Seq((0, 7), (7, 7), (14, 6), (20, 6), (26, 6))
-    val bands = sigs.select(col("doc_id"), col("simhash"),
-        explode(array(bandBits.zipWithIndex.map { case ((off, len), bn) =>
-          struct(lit(bn).as("band_no"),
-            shiftright(col("simhash"), off).bitwiseAND((1L << len) - 1).as("bv"))
-        }: _*)).as("band"))
-      .select(col("doc_id"), col("simhash"),
-        col("band.band_no").as("band_no"), col("band.bv").as("bv"))
-    bands.as("x").join(bands.as("y"),
-        col("x.band_no") === col("y.band_no") && col("x.bv") === col("y.bv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
-        col("x.simhash").as("si"), col("y.simhash").as("sj"))
-      .distinct()
-      .select(col("i"), col("j"),
-        bit_count(col("si").bitwiseXOR(col("sj"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
-
   /** 64-bit SimHash per document over distinct tokens, held as two
     * non-negative 32-bit halves (sig_lo = md5 bits 0-31 votes, sig_hi =
     * md5 bits 32-63 votes). Two longs instead of one keep every value

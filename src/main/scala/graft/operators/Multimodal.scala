@@ -11,10 +11,14 @@ import org.apache.spark.sql.types._
 /** Multimodal column plumbing: media as opaque `BINARY` payloads with
   * typed metadata, decoded/feature-extracted per partition.
   *
-  * The container has no image/audio codecs, so the decoder is a
-  * deterministic fake behind the [[MediaDecoder]] seam — the Spark-side
-  * plumbing (binary schema, batched per-partition decode, feature
-  * struct) is real and tested. In PySpark production the decode stage
+  * The decoder sits behind the [[MediaDecoder]] seam. Real pure-JVM
+  * codecs implement it for WAV ([[WavMedia.WavDecoder]]), BMP
+  * ([[BmpMedia.BmpDecoder]]), PNG ([[PngMedia.PngDecoder]]) and
+  * baseline JPEG ([[JpegMedia.JpegDecoder]]); the `mm_*` rows here use
+  * [[FakeDecoder]], a deterministic stand-in keyed off the payload
+  * bytes. The Spark-side plumbing (binary schema, batched
+  * per-partition decode, feature struct) is the same for both and
+  * tested. In PySpark production the decode stage
   * slots into `mapInPandas` with arrow batches; here it is
   * `mapPartitions` over an injected decoder.
   *

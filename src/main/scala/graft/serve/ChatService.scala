@@ -6,7 +6,7 @@ import graft.agent.ReactLoop
 import graft.functions.AgentText
 import graft.functions.AgentText.{JNum, JObj, JStr, JVal}
 import graft.io.CommitLog
-import graft.memory.{MemoryAnalysis, MemoryConfig, MemoryStore}
+import graft.memory.{MemoryConfig, MemoryStore}
 import graft.model._
 import graft.provider.Provider
 import graft.task.{TaskConfig, TaskStore}
@@ -24,20 +24,25 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   * replay/offset semantics the websocket never had — and returns the
   * response JSON to the caller.
   *
-  * State: the committed stores are driver-held rows, one `Seq` per
-  * table (records, summaries, topics, kv, tasks, logs, files,
-  * messages), the analog of the reference's in-process lists
-  * (memory.py:263-357). [[state]] publishes them as one local relation
-  * per table, so a turn's plans never carry an earlier turn's unions
-  * and their size does not grow with the session's history. A turn
-  * commits by folding [[ReactLoop.Writes]] into the rows with the same
-  * pure rules the streaming path uses ([[MemoryStore.retainSummaries]],
+  * State: one immutable snapshot, the private `ChatService.Rows`,
+  * held in the service's one mutable field. It carries the committed
+  * stores as driver-held rows, one `Seq` per table (records,
+  * summaries, topics, kv, tasks, logs, files, messages), the analog of
+  * the reference's in-process lists (memory.py:263-357), together with
+  * the [[MemoryConfig]] and [[TaskConfig]] of the state it was
+  * collected from, and the [[State]] built from them when the snapshot
+  * is made: one local relation per table, so a turn's plans never
+  * carry an earlier turn's unions and their size does not grow with
+  * the session's history. A turn commits by folding its one delta,
+  * [[ReactLoop.Writes]], into the rows with the same pure rules the
+  * streaming path uses ([[MemoryStore.retainSummaries]],
   * [[MemoryStore.mergeTopics]], [[MemoryStore.factRows]],
-  * [[TaskStore.appendLogRows]]) under `state0`'s configs. Only the
+  * [[TaskStore.appendLogRows]]) under the snapshot's configs. Only the
   * tables whose rows the turn changed are rebuilt, each with the
   * encoder its table was collected with (no per-turn encoder
   * derivation); the others keep their published Dataset. `state0` is
-  * collected once, at construction.
+  * collected once, at construction, and [[updateState]] collects the
+  * edited state, configs included.
   *
   * [[handle]] answers a malformed POST body (not a JSON object, no
   * `query`, or a field of the wrong type) with [[BadRequest]], which
@@ -46,61 +51,49 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   * Turns are serialized (`synchronized`): chat state transitions are
   * single-writer per service, the same per-process session contract as
   * the reference; reads (the GET views) observe the latest committed
-  * state via [[state]]. A turn pushes before it publishes: the new
-  * rows become [[state]] only after the commit-log append succeeds, so
-  * a turn whose push failed is not committed and a client retry does
-  * not apply it twice.
+  * snapshot via [[state]]. A turn pushes before it publishes: the new
+  * snapshot becomes [[state]] only after the commit-log append
+  * succeeds, so a turn whose push failed is not committed and a client
+  * retry does not apply it twice. The push goes to the session's
+  * partition of `pushLogDir`, one of [[ChatService.PushPartitions]].
   */
 final class ChatService(
     provider: Provider,
     state0: ChatService.State,
     tools: Dataset[Tool],
-    pushLogDir: String,
-    nPartitions: Int = 4,
-    toolExecutor: (String, String) => String = (n, _) => s"[no executor for $n]") {
+    pushLogDir: String) {
 
-  private val memoryConfig = state0.memory.config
-  private val taskConfig = state0.tasks.config
+  @volatile private var snapshot = ChatService.Rows.of(state0)
 
-  private var rows = ChatService.Rows.of(state0)
-  @volatile private var current: ChatService.State = publish(rows)
+  private val loop = new ReactLoop(provider)
 
   /** Latest committed store state (for wiring GET views). */
-  def state: ChatService.State = current
+  def state: ChatService.State = snapshot.state
 
   /** External state edit (e.g. a REPL's `/task new`), serialized with
-    * turn processing; collects the edited state into rows. */
+    * turn processing; collects the edited state into a new snapshot. */
   def updateState(f: ChatService.State => ChatService.State): Unit =
-    synchronized {
-      rows = ChatService.Rows.of(f(current))
-      current = publish(rows)
-    }
-
-  private def publish(r: ChatService.Rows): ChatService.State =
-    r.state(memoryConfig, taskConfig)
-
-  private val loop = new ReactLoop(provider, toolExecutor = toolExecutor)
+    synchronized { snapshot = ChatService.Rows.of(f(snapshot.state)) }
 
   /** One chat turn: run the ReAct loop against the live stores, push
     * the assistant response onto the commit log, then commit the new
-    * state. Returns (responseText, iterations). */
+    * snapshot. Returns (responseText, iterations). */
   def processTurn(sessionId: String, query: String, taskId: Option[Long],
       now: Timestamp): (String, Int) = synchronized {
-    val st = current
+    val snap = snapshot
+    val st = snap.state
     val out = loop.processQuery(sessionId, query, st.memory, st.tasks,
       tools, st.messages, taskId, now)
-    val next = rows.commit(sessionId, now, out.writes, out.newMessages,
-      memoryConfig, taskConfig)
-    val responseText = out.newMessages.reverse
+    val next = snap.commit(sessionId, now, out.writes)
+    val responseText = out.writes.messages.reverse
       .collectFirst { case m if m.role == "assistant" => m.content }
       .getOrElse("")
     // push channel: append to the session's log partition; consumers
     // tail it via spark.readStream.format("commit-log")
     CommitLog.append(pushLogDir,
-      math.floorMod(sessionId.hashCode, nPartitions),
+      CommitLog.partitionOf(sessionId, ChatService.PushPartitions),
       Seq((now.getTime * 1000L, sessionId, responseText)))
-    rows = next
-    current = publish(next)
+    snapshot = next
     (responseText, out.iterations)
   }
 
@@ -135,6 +128,9 @@ final class ChatService(
 }
 
 object ChatService {
+  /** The number of commit-log partitions a service pushes to. */
+  val PushPartitions = 4
+
   /** The mutable-by-replacement session state a chat turn advances. */
   final case class State(
       memory: MemoryStore, tasks: TaskStore, messages: Dataset[Message])
@@ -162,56 +158,58 @@ object ChatService {
       new Table(ds.collect().toSeq, ds.encoder, ds.sparkSession)
   }
 
-  /** The committed state as driver-held rows, one [[Table]] per table. */
+  /** The committed snapshot: driver-held rows, one [[Table]] per
+    * table, the configs of the state they were collected from, and the
+    * [[State]] published for them, built when the snapshot is made. */
   private final case class Rows(
       records: Table[MemoryRecord], summaries: Table[Summary], topics: Table[Topic],
       kv: Table[KvEntry], tasks: Table[TaskRow], logs: Table[TaskLog],
-      files: Table[ExtractedFileRow], messages: Table[Message]) {
-
-    /** Fold one turn's writes in, in the order the batch store
-      * operators would apply them: records and last-writer-wins KV puts,
-      * the task log and files, the messages, then the memory analysis.
-      * A table the turn does not write keeps its rows: `tasks` always,
-      * `files` when nothing was extracted. */
-    def commit(sessionId: String, now: Timestamp, w: ReactLoop.Writes,
-        newMessages: Seq[Message], memory: MemoryConfig, task: TaskConfig): Rows = {
-      val turn = copy(
-        records = records ++ w.records,
-        kv = kv.map(w.puts.foldLeft(_)((acc, e) =>
-          acc.filterNot(r => r.sessionId == e.sessionId && r.key == e.key) :+ e)),
-        logs = w.log.fold(logs)(l => logs.map(TaskStore.appendLogRows(_, l, task))),
-        files = files ++ w.files,
-        messages = messages ++ newMessages)
-      w.analysis.fold(turn)(turn.analysed(sessionId, _, now, memory))
-    }
-
-    /** [[MemoryStore.applyUpdate]] on rows. */
-    private def analysed(sessionId: String, a: MemoryAnalysis, now: Timestamp,
-        config: MemoryConfig): Rows = copy(
-      summaries = a.summary.fold(summaries)(s => summaries.map { rows =>
-        val (own, others) = rows.partition(_.sessionId == sessionId)
-        others ++ MemoryStore.retainSummaries(own, Summary(sessionId, now, s),
-          config.savedSummaryNum)
-      }),
-      topics = topics.map { rows =>
-        val (own, others) = rows.partition(_.sessionId == sessionId)
-        others ++ MemoryStore.mergeTopics(own, sessionId, a.topics, now, config.maxTopics)
-      },
-      kv = kv ++ MemoryStore.factRows(sessionId, a.keyFacts, now))
+      files: Table[ExtractedFileRow], messages: Table[Message],
+      memory: MemoryConfig, task: TaskConfig) {
 
     /** The rows as one local relation per table. */
-    def state(memory: MemoryConfig, task: TaskConfig): State = State(
+    val state: State = State(
       MemoryStore(records.ds, summaries.ds, topics.ds, kv.ds, memory),
       TaskStore(tasks.ds, logs.ds, files.ds, task),
       messages.ds)
+
+    /** Fold one turn's writes in, in the order the batch store
+      * operators would apply them: records and last-writer-wins KV puts,
+      * the task log and files, the messages, then the memory analysis
+      * ([[MemoryStore.applyUpdate]] on rows: the session's summaries and
+      * topics, then its key facts). A table the turn does not write
+      * keeps its rows: `tasks` always, `files` when nothing was
+      * extracted. */
+    def commit(sessionId: String, now: Timestamp, w: ReactLoop.Writes): Rows = {
+      // `f` applied to the session's own rows of `t`, the others kept
+      def own[T](t: Table[T])(session: T => String, f: Seq[T] => Seq[T]): Table[T] =
+        t.map { rows =>
+          val (mine, others) = rows.partition(session(_) == sessionId)
+          others ++ f(mine)
+        }
+      val analysis = w.analysis
+      copy(
+        records = records ++ w.records,
+        summaries = analysis.flatMap(_.summary).fold(summaries)(s => own(summaries)(_.sessionId,
+          MemoryStore.retainSummaries(_, Summary(sessionId, now, s), memory.savedSummaryNum))),
+        topics = analysis.fold(topics)(a => own(topics)(_.sessionId,
+          MemoryStore.mergeTopics(_, sessionId, a.topics, now, memory.maxTopics))),
+        kv = kv.map(w.puts.foldLeft(_)((acc, e) =>
+          acc.filterNot(r => r.sessionId == e.sessionId && r.key == e.key) :+ e)) ++
+          analysis.fold(Seq.empty[KvEntry])(a => MemoryStore.factRows(sessionId, a.keyFacts, now)),
+        logs = w.log.fold(logs)(l => logs.map(TaskStore.appendLogRows(_, l, task))),
+        files = files ++ w.files,
+        messages = messages ++ w.messages)
+    }
   }
 
   private object Rows {
-    /** Collect every table of `st` to the driver. */
+    /** Collect every table of `st` to the driver; keep its configs. */
     def of(st: State): Rows = Rows(
       Table.of(st.memory.records), Table.of(st.memory.summaries),
       Table.of(st.memory.topics), Table.of(st.memory.kv),
       Table.of(st.tasks.tasks), Table.of(st.tasks.logs),
-      Table.of(st.tasks.files), Table.of(st.messages))
+      Table.of(st.tasks.files), Table.of(st.messages),
+      st.memory.config, st.tasks.config)
   }
 }

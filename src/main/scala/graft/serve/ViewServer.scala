@@ -19,9 +19,9 @@ import org.apache.spark.sql.DataFrame
   * Query params: `key=<k>` filters events to one key (one chat
   * session); `replay=all` starts from offset 0 instead of the tail;
   * `n=<count>` closes the stream after that many events (long-poll
-  * semantics for clients that can't hold SSE open). */
-final case class SseTail(
-    topicDir: String, pollMs: Long = 50L, heartbeatMs: Long = 1000L)
+  * semantics for clients that can't hold SSE open). The stream polls
+  * the topic every 50 ms and sends a heartbeat comment after 1 s idle. */
+final case class SseTail(topicDir: String)
 
 /** Thrown by a route handler when the request itself is malformed; the
   * server answers it with a 400 instead of a 500. */
@@ -60,6 +60,8 @@ final class ViewServer(
   private val pool = java.util.concurrent.Executors.newCachedThreadPool()
   server.setExecutor(pool)
   @volatile private var closed = false
+  private val pollMs = 50L
+  private val heartbeatMs = 1000L
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -121,13 +123,15 @@ final class ViewServer(
     * `replay=all`); poll the log, push each new record as an event
     * whose `id` is the offsets-after-it; heartbeat comments while
     * idle so a dead peer is detected. The cursor is per-partition
-    * metadata (the consumer-group contract of a queue), but each poll
-    * (every `pollMs`, 50 ms by default) costs O(topic bytes), not
-    * O(new records): `CommitLog.latestOffsets` counts every line of
-    * every segment and `CommitLog.readRange` streams from segment 0 up
-    * to the cursor (ROADMAP direction 4b). An `n` that is not a
-    * non-negative integer, or a `Last-Event-ID` whose partition key is
-    * not an integer, gets a 400 with a JSON error. */
+    * metadata (the consumer-group contract of a queue). Each poll
+    * (every 50 ms) is one pass over the topic: `CommitLog.readRange`
+    * reads each partition from its cursor to the end, which still
+    * streams every segment from segment 0, so a poll costs O(topic
+    * bytes), not O(new records) (ROADMAP direction 4b). The start at
+    * the tail counts the topic once through `CommitLog.latestOffsets`.
+    * An `n` that is not a non-negative integer, or a `Last-Event-ID`
+    * whose partition key is not an integer, gets a 400 with a JSON
+    * error. */
   private def serveSse(ex: HttpExchange, tail: SseTail): Unit = {
     val params = queryParams(ex)
     val maxEvents = params.get("n").fold(Option(Int.MaxValue))(_.toIntOption.filter(_ >= 0))
@@ -157,36 +161,32 @@ final class ViewServer(
     var lastBeat = System.nanoTime()
     try {
       while (!closed && sent < maxEvents) {
-        val latest = CommitLog.latestOffsets(tail.topicDir)
         var progressed = false
-        latest.toSeq.sortBy(_._1).foreach { case (pid, hi) =>
-          val lo = cursor.getOrElse(pid, 0L)
-          if (hi > lo) {
-            CommitLog.readRange(tail.topicDir, pid, lo, hi).foreach {
-              case (off, ts, k, v) =>
-                // stop consuming once the cap is hit: unconsumed offsets
-                // stay behind the cursor for the client's next resume
-                if (sent < maxEvents) {
-                  cursor(pid) = off + 1
-                  if (keyFilter.forall(_ == k)) {
-                    val id = CommitLog.offsetsToJson(cursor.toMap)
-                    val data =
-                      s"""{"ts": $ts, "key": ${jsonOrNull(k)}, "value": ${jsonOrNull(v)}}"""
-                    os.write(s"id: $id\ndata: $data\n\n".getBytes(UTF_8))
-                    os.flush()
-                    sent += 1
-                    progressed = true
-                  }
+        CommitLog.partitionIds(tail.topicDir).foreach { pid =>
+          CommitLog.readRange(tail.topicDir, pid, cursor.getOrElse(pid, 0L), Long.MaxValue)
+            .foreach { case (off, ts, k, v) =>
+              // stop consuming once the cap is hit: unconsumed offsets
+              // stay behind the cursor for the client's next resume
+              if (sent < maxEvents) {
+                cursor(pid) = off + 1
+                if (keyFilter.forall(_ == k)) {
+                  val id = CommitLog.offsetsToJson(cursor.toMap)
+                  val data =
+                    s"""{"ts": $ts, "key": ${jsonOrNull(k)}, "value": ${jsonOrNull(v)}}"""
+                  os.write(s"id: $id\ndata: $data\n\n".getBytes(UTF_8))
+                  os.flush()
+                  sent += 1
+                  progressed = true
                 }
+              }
             }
-          }
         }
         if (!progressed && sent < maxEvents) {
-          if ((System.nanoTime() - lastBeat) / 1000000L >= tail.heartbeatMs) {
+          if ((System.nanoTime() - lastBeat) / 1000000L >= heartbeatMs) {
             os.write(": hb\n\n".getBytes(UTF_8)); os.flush()
             lastBeat = System.nanoTime()
           }
-          Thread.sleep(tail.pollMs)
+          Thread.sleep(pollMs)
         }
       }
     } catch {

@@ -32,14 +32,6 @@ object Streams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("value_sum"))
 
-  /** Sliding 1-hour/30-minute windows (batch twin: ev_sliding_window). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
-      .select(col("window.start").as("window_start"), col("n"), col("value_sum"))
-
   /** Session windows with a 30-minute gap (batch twin: ev_session_window). */
   def sessionCounts(events: DataFrame): DataFrame =
     events
@@ -488,19 +480,6 @@ object Streams {
       }
       .start()
 
-  /** Streaming entity-resolution admission — the twin of
-    * `er_incremental`: arriving records (custkey, name, nation,
-    * segment) are matched micro-batch by micro-batch against the
-    * STATIC name-registry index
-    * ([[graft.operators.EntityRes.buildNameRegistry]] — position-tagged
-    * deletion variants + blocking attributes, persisted as a table)
-    * via the same batch operator
-    * ([[graft.operators.EntityRes.admitAgainstRegistry]]). Each
-    * record's verdict (matched registered entities, best match,
-    * is-new) depends only on the index — never batch×batch — so the
-    * stream output converges exactly to the batch twin for any batch
-    * slicing or restart; epoch-keyed idempotent writes make replays
-    * no-ops (same contract as [[incrementalAdmit]]). */
   /** Streaming learned-constraint monitor — the live twin of
     * `dq_constraint_mining`'s validation half: arriving events
     * (event_id, event_type, cent-exact value) are scored micro-batch
@@ -534,6 +513,19 @@ object Streams {
       }
       .start()
 
+  /** Streaming entity-resolution admission — the twin of
+    * `er_incremental`: arriving records (custkey, name, nation,
+    * segment) are matched micro-batch by micro-batch against the
+    * STATIC name-registry index
+    * ([[graft.operators.EntityRes.buildNameRegistry]] — position-tagged
+    * deletion variants + blocking attributes, persisted as a table)
+    * via the same batch operator
+    * ([[graft.operators.EntityRes.admitAgainstRegistry]]). Each
+    * record's verdict (matched registered entities, best match,
+    * is-new) depends only on the index — never batch×batch — so the
+    * stream output converges exactly to the batch twin for any batch
+    * slicing or restart; epoch-keyed idempotent writes make replays
+    * no-ops (same contract as [[incrementalAdmit]]). */
   def erAdmit(
       records: DataFrame,
       registry: DataFrame,

@@ -154,7 +154,7 @@ class AgentStoresSpec extends SparkSpec {
     val out = loop.processQuery("s", "hi", MemoryStore.empty(spark),
       TaskStore.empty(spark), tools, messages, None, ts(10))
     assert(out.iterations == 1)
-    val roles = out.newMessages.map(m => m.role -> m.content)
+    val roles = out.writes.messages.map(m => m.role -> m.content)
     assert(roles.contains("assistant" -> "hello!"))
     assert(out.writes.records.map(_.content) == Seq("user said hi"))
     // post-turn update ran: summary + topic from the analysis stub
@@ -194,7 +194,7 @@ class AgentStoresSpec extends SparkSpec {
       Some(7L), ts(10))
     // two iterations: tool turn, then the finish turn that saw the result
     assert(out.iterations == 2)
-    assert(out.newMessages.exists(m => m.role == "tool" && m.content.contains("search result")))
+    assert(out.writes.messages.exists(m => m.role == "tool" && m.content.contains("search result")))
     // the task got a log record and an extracted file from the response
     val log = out.writes.log
     assert(log.exists(l => l.taskId == 7L && l.metadata("iterations") == "2"))

@@ -13,8 +13,8 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** How `ChatService` commits a turn: driver-held rows folded with the
-  * stores' own rules, published as local relations, and only after the
-  * commit-log push succeeded. */
+  * stores' own rules under the snapshot's configs, published as local
+  * relations, and only after the commit-log push succeeded. */
 class ChatCommitSpec extends SparkSpec {
 
   private def fenced(json: String) = "```json\n" + json + "\n```"
@@ -79,7 +79,7 @@ class ChatCommitSpec extends SparkSpec {
       w.log.foreach(l => tasks = tasks.appendLog(l))
       if (w.files.nonEmpty) tasks = tasks.copy(files = tasks.files.union(w.files.toDS()))
       w.analysis.foreach(a => memory = memory.applyUpdate(session, a, now))
-      messages = messages.union(out.newMessages.toDS())
+      messages = messages.union(out.writes.messages.toDS())
       if (i == 2) {
         val plan = svc.state.memory.records.queryExecution.analyzed
         assert(plan.isInstanceOf[LocalRelation], plan.treeString)
@@ -104,6 +104,31 @@ class ChatCommitSpec extends SparkSpec {
     assert(st.memory.topics.collect().groupBy(_.sessionId).values.forall(_.length == 2))
     assert(st.tasks.logs.collect().groupBy(_.taskId).values.forall(_.length == 2))
     assert(st.tasks.files.collect().map(_.filename).toSeq == Seq("Plan.txt"))
+  }
+
+  test("a config set through updateState governs the next turn's commit") {
+    import spark.implicits._
+    // every turn adds a record, so every turn's analysis has a summary
+    val stub = new StubProvider(canned = Seq(
+      "## Query:" -> fenced(
+        """{"text": "ok", "mem_op": {"name": "add_memory_record", "args": {"memory": "m"}}, "finished": true}"""),
+      "Analyze the following memory records" -> fenced(
+        """{"summary": "sum", "topics": {}, "key_facts": []}""")))
+    val svc = new ChatService(stub,
+      ChatService.State(MemoryStore.empty(spark, MemoryConfig(savedSummaryNum = 3)),
+        TaskStore.empty(spark), spark.emptyDataset[Message]),
+      spark.emptyDataset[Tool],
+      Files.createTempDirectory("graft_chat_config").toString)
+    def summaries = svc.state.memory.summaries.collect().count(_.sessionId == "s")
+    svc.processTurn("s", "q1", None, ts(100))
+    svc.processTurn("s", "q2", None, ts(110))
+    assert(summaries == 2)
+
+    svc.updateState(st => st.copy(memory = st.memory.copy(
+      config = MemoryConfig(savedSummaryNum = 1))))
+    assert(svc.state.memory.config.savedSummaryNum == 1)
+    svc.processTurn("s", "q3", None, ts(120))
+    assert(summaries == 1)
   }
 
   test("a turn whose commit-log push fails is not committed, and its retry applies once") {

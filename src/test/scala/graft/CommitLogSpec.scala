@@ -2,11 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.io.{CommitLog, CommitLogCommit, CommitLogStreamingWrite}
+import graft.io.{CommitLog, CommitLogCommit, CommitLogDataWriter, CommitLogStreamingWrite}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The commit-log DSv2 source/sink: topic/partition/offset reads,
   * checkpointed resume, admission control, and exactly-once writes. */
@@ -102,35 +105,60 @@ class CommitLogSpec extends SparkSpec {
   test("replayed epoch commit is idempotent (exactly-once contract)") {
     val dir = tmpDir("graft_cl_epoch")
     val write = new CommitLogStreamingWrite(dir, 2, CommitLog.schema)
+    val p0 = CommitLog.partitionDir(dir, 0)
 
-    def stageTmp(name: String, lines: Seq[String]): String = {
-      val tmp = Paths.get(dir, "_tmp"); Files.createDirectories(tmp)
-      val p = tmp.resolve(name)
-      Files.write(p, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-      p.toString
+    // a writer attempt's staged segment: (destination, unique temp file)
+    def staged(epoch: Long, lines: Seq[String]): (String, String) = {
+      Files.createDirectories(p0)
+      val tmp = Files.createTempFile(p0, ".tmp-", ".log")
+      Files.write(tmp, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      (p0.resolve(f"seg-e$epoch%012d-w00000-p0.log").toString, tmp.toString)
     }
     // first commit of epoch 7
     val m1: Array[WriterCommitMessage] = Array(CommitLogCommit(Seq(
-      0 -> stageTmp("tmp-seg-e000000000007-w00000-p0.log",
-        Seq(CommitLog.encodeLine(1L, "k", "v1"))))))
+      staged(7L, Seq(CommitLog.encodeLine(1L, "k", "v1"))))))
     write.commit(7L, m1)
     assert(CommitLog.latestOffsets(dir) == Map(0 -> 1L))
 
     // epoch 7 re-runs after a failure: same destination name, different
     // attempt's temp file — the commit must be a no-op, not an append
     val m2: Array[WriterCommitMessage] = Array(CommitLogCommit(Seq(
-      0 -> stageTmp("tmp-seg-e000000000007-w00000-p0.log",
-        Seq(CommitLog.encodeLine(1L, "k", "v1"))))))
+      staged(7L, Seq(CommitLog.encodeLine(1L, "k", "v1"))))))
     write.commit(7L, m2)
     assert(CommitLog.latestOffsets(dir) == Map(0 -> 1L), "replayed epoch duplicated records")
 
     // a NEW epoch appends normally
     val m3: Array[WriterCommitMessage] = Array(CommitLogCommit(Seq(
-      0 -> stageTmp("tmp-seg-e000000000008-w00000-p0.log",
-        Seq(CommitLog.encodeLine(2L, "k", "v2"))))))
+      staged(8L, Seq(CommitLog.encodeLine(2L, "k", "v2"))))))
     write.commit(8L, m3)
     assert(CommitLog.latestOffsets(dir) == Map(0 -> 2L))
-    assert(Files.list(Paths.get(dir, "_tmp")).count() == 0, "temp files left behind")
+    import scala.jdk.CollectionConverters._
+    assert(!Files.list(p0).iterator().asScala.exists(_.getFileName.toString.startsWith(".tmp-")),
+      "temp files left behind")
+  }
+
+  test("a retried epoch writer never rewrites a segment an earlier attempt published") {
+    import spark.implicits._
+    val dir = tmpDir("graft_cl_retry")
+    val input = StructType(Seq(StructField("key", StringType), StructField("value", StringType)))
+    // one writer attempt of epoch 7, writer 0, staging one segment
+    def attempt(value: String): CommitLogCommit = {
+      val w = new CommitLogDataWriter(dir, 1, input, 0, 7L)
+      w.write(InternalRow(UTF8String.fromString("k"), UTF8String.fromString(value)))
+      w.commit().asInstanceOf[CommitLogCommit]
+    }
+    val Seq((dst, tmp)) = attempt("v1").files
+    // the driver died after linking the first attempt's temp as the
+    // segment and before deleting the temp
+    Files.createLink(Paths.get(dst), Paths.get(tmp))
+    val published = Files.readAllBytes(Paths.get(dst)).toSeq
+
+    // the replayed epoch's writer stages different bytes; its commit
+    // must leave the published segment alone
+    new CommitLogStreamingWrite(dir, 1, input).commit(7L, Array(attempt("v2-longer")))
+    assert(Files.readAllBytes(Paths.get(dst)).toSeq == published, "published segment rewritten")
+    assert(spark.read.format("commit-log").load(dir).select("value").as[String]
+      .collect().toSeq == Seq("v1"))
   }
 
   test("concurrent appenders to one partition publish every segment once and leave no temp file") {
