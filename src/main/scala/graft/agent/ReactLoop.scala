@@ -52,17 +52,16 @@ object AgentResponse {
 }
 
 /** The ReAct micro-batch loop (ST1; reference client.py:216-333): per
-  * query, up to maxIters iterations of assemble → provider → parse →
-  * act → append, then the task-log record, file extraction and the
-  * post-turn memory analysis. The loop commits nothing: it returns the
-  * turn's writes ([[ReactLoop.Writes]]) and [[graft.serve.ChatService]]
-  * commits them once. With a
+  * query, up to [[ReactLoop.MaxIters]] iterations of assemble →
+  * provider → parse → act → append, then the task-log record, file
+  * extraction and the post-turn memory analysis. The loop commits
+  * nothing: it returns the turn's writes ([[ReactLoop.Writes]]) and
+  * [[graft.serve.ChatService]] commits them once. With a
   * [[graft.provider.StubProvider]] the whole lifecycle is a pure,
   * testable function of the store state.
   */
 final class ReactLoop(
     provider: Provider,
-    maxIters: Int = 5,
     // S9 — the external tool-dispatch seam (manager.py:236-250): the
     // executor receives a resolved (name, argsJson) and returns the
     // tool's text result, which is appended to the conversation so the
@@ -83,7 +82,7 @@ final class ReactLoop(
     var lastResponseText = ""
     var iter = 0
     var done = false
-    while (iter < maxIters && !done) {
+    while (iter < ReactLoop.MaxIters && !done) {
       val assembler = ContextAssembler(memory, tasks, tools)
       // the reference re-assembles from the GROWING message list each
       // iteration (client.py:218,221) — tool results must be visible
@@ -149,6 +148,9 @@ final class ReactLoop(
 }
 
 object ReactLoop {
+  /** The most iterations one turn runs. */
+  val MaxIters = 5
+
   /** One turn's result: the iterations it ran and its writes, which the
     * caller commits. */
   final case class Outcome(iterations: Int, writes: Writes)

@@ -52,7 +52,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    hard link that never replaces a segment; a replayed epoch finds
   *    its destination taken, so a re-run batch is a no-op — the
   *    standard idempotent-file-sink contract that makes end-to-end
-  *    delivery exactly-once;
+  *    delivery exactly-once. Temp names carry the epoch, and the
+  *    driver sweeps an epoch's leftover temps once it has published;
   *  - admission control (`maxRecordsPerTrigger`) bounds each
   *    micro-batch for backfills, exactly like the Kafka source's
   *    `maxOffsetsPerTrigger`.
@@ -146,13 +147,28 @@ object CommitLog {
       Iterator.from(segments(dir, pid).size).map(i => d.resolve(f"seg-a$i%09d.log")))
   }
 
-  /** Write `bytes` to a new `.tmp-*` file in directory `d` (created if
-    * missing); [[segments]] never lists it, and no other writer opens
-    * it. */
-  private[io] def writeTemp(d: Path, bytes: Array[Byte]): Path = {
+  /** Write `bytes` to a new `<prefix>*` temp file in directory `d`
+    * (created if missing); [[segments]] never lists it, and no other
+    * writer opens it. */
+  private[io] def writeTemp(d: Path, bytes: Array[Byte], prefix: String = ".tmp-"): Path = {
     Files.createDirectories(d)
-    Files.write(Files.createTempFile(d, ".tmp-", ".log"), bytes)
+    Files.write(Files.createTempFile(d, prefix, ".log"), bytes)
   }
+
+  /** The temp-file prefix of epoch `epochId`'s segment writers. */
+  private[io] def epochTemp(epochId: Long): String = s".tmp-e$epochId-"
+
+  /** Delete every temp file that epoch `epochId`'s writers left in the
+    * partition directories of `dir`; called once the epoch has
+    * published. A killed writer attempt, or a driver that died between
+    * link and delete, leaves one behind, and no attempt of a published
+    * epoch publishes again. One query writes a topic, as the
+    * epoch-keyed segment names already imply. */
+  private[io] def sweepTemps(dir: String, epochId: Long): Unit =
+    partitionIds(dir).foreach { pid =>
+      val temps = Files.newDirectoryStream(partitionDir(dir, pid), s"${epochTemp(epochId)}*")
+      try temps.forEach(t => Files.deleteIfExists(t)) finally temps.close()
+    }
 
   /** Publish the finished file `tmp` as the first of `names` that is not
     * taken yet, then delete `tmp`; every segment write goes through
@@ -199,10 +215,12 @@ object CommitLog {
           val dst = partitionDir(dir, pid).resolve(f"seg-e$epochId%012d.log")
           // a replay or a concurrent attempt (task retry) that committed
           // first keeps its file
-          publish(writeTemp(dst.getParent, text.getBytes(UTF_8)), Iterator.single(dst))
+          publish(writeTemp(dst.getParent, text.getBytes(UTF_8), epochTemp(epochId)),
+            Iterator.single(dst))
         }
         ()
       }
+    sweepTemps(dir, epochId)
   }
 
   /** Iterate one partition's records in `[from, until)` offset range,
@@ -469,21 +487,21 @@ final class CommitLogStreamingWrite(dir: String, numPartitions: Int, input: Stru
     * destination segment ([[CommitLog.publish]]). A destination that
     * already exists means this epoch was committed before (query
     * restart re-ran the batch) — it is kept and the temp dropped, making
-    * replay idempotent and delivery exactly-once. */
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    * replay idempotent and delivery exactly-once. Then every temp the
+    * epoch's other attempts staged is swept ([[CommitLog.sweepTemps]]). */
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     messages.foreach {
       case CommitLogCommit(files) => files.foreach { case (dst, tmp) =>
         CommitLog.publish(Paths.get(tmp), Iterator.single(Paths.get(dst)))
       }
       case _ => ()
     }
+    CommitLog.sweepTemps(dir, epochId)
+  }
 
+  /** Nothing of an aborted epoch is published: drop all of its temps. */
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case CommitLogCommit(files) =>
-        files.foreach { case (_, tmp) => Files.deleteIfExists(Paths.get(tmp)) }
-      case _ => ()
-    }
+    CommitLog.sweepTemps(dir, epochId)
 }
 
 /** One writer's staged segments as (destination, temp file) paths. */
@@ -497,11 +515,12 @@ final class CommitLogWriterFactory(dir: String, numPartitions: Int, input: Struc
 
 /** Executor-side writer: buffers lines per log partition, stages one
   * temp segment per (epoch, writer, log-partition) through
-  * [[CommitLog.writeTemp]] — a fresh file every attempt, so a retry
-  * never reopens a temp an earlier attempt may already have linked as a
-  * segment. Destination names embed `(epochId, writerPartitionId)` —
-  * both stable across batch replays — so a re-run targets the same
-  * destinations and the driver commit can detect them. */
+  * [[CommitLog.writeTemp]] — a fresh `.tmp-e<epoch>-*` file every
+  * attempt, so a retry never reopens a temp an earlier attempt may
+  * already have linked as a segment. Destination names embed
+  * `(epochId, writerPartitionId)` — both stable across batch replays —
+  * so a re-run targets the same destinations and the driver commit can
+  * detect them. */
 final class CommitLogDataWriter(
     dir: String, numPartitions: Int, input: StructType,
     writerPartitionId: Int, epochId: Long)
@@ -530,7 +549,8 @@ final class CommitLogDataWriter(
     CommitLogCommit(buffers.toSeq.sortBy(_._1).map { case (pid, buf) =>
       val d = CommitLog.partitionDir(dir, pid)
       val dst = d.resolve(f"seg-e$epochId%012d-w$writerPartitionId%05d-p$pid%d.log")
-      (dst.toString, CommitLog.writeTemp(d, buf.toString.getBytes(UTF_8)).toString)
+      (dst.toString,
+        CommitLog.writeTemp(d, buf.toString.getBytes(UTF_8), CommitLog.epochTemp(epochId)).toString)
     })
 
   override def abort(): Unit = ()

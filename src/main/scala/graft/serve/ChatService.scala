@@ -99,8 +99,9 @@ final class ChatService(
 
   /** One POST body → one turn → response JSON. A body that is not a
     * JSON object, has no `query`, or has a field of the wrong type (a
-    * non-string `session_id` or `query`, a non-integral `task_id`, a
-    * non-numeric `ts`) throws [[BadRequest]] (the server answers 400);
+    * non-string `session_id` or `query`, a `task_id` that is not an
+    * integer in Long's range, a `ts` that is not a number whose
+    * milliseconds fit a Long) throws [[BadRequest]] (the server answers 400);
     * any other failure is the server's (500). */
   def handle(body: String): String = {
     val fields = AgentText.parseJson5ish(body) match {
@@ -116,9 +117,13 @@ final class ChatService(
       .getOrElse("default")
     val query = field("query", "a string") { case JStr(s) => s }
       .getOrElse(throw new BadRequest("missing 'query'"))
+    // a number outside Long's range would saturate (task_id) or wrap (ts)
     val taskId = field("task_id", "an integer") {
-      case JNum(d) if d == math.floor(d) && !d.isInfinite => d.toLong }
-    val now = field("ts", "a number") { case JNum(d) => new Timestamp(d.toLong * 1000L) }
+      case JNum(d) if d == math.floor(d) && d >= Long.MinValue.toDouble &&
+        d < Long.MaxValue.toDouble => d.toLong }
+    val now = field("ts", "a number") {
+      case JNum(d) if math.abs(d) < (Long.MaxValue / 1000).toDouble =>
+        new Timestamp(d.toLong * 1000L) }
       .getOrElse(new Timestamp(System.currentTimeMillis()))
     val (responseText, iterations) = processTurn(sessionId, query, taskId, now)
     s"""{"session_id": "${AgentText.escapeJson(sessionId)}", """ +

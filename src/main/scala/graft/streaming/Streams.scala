@@ -2,13 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import scala.jdk.CollectionConverters._
-
+import graft.io.CommitLog
 import graft.memory.MemoryStore
 import graft.model.{MemoryRecord, Summary, Topic}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming formulations of the engine's stateful and
   * windowed operators (SURVEY.md §2.9 ST1–ST3 + the events windows).
@@ -112,16 +112,19 @@ object Streams {
   }
 
   /** S10/ST3 — the push-sink shape: stream → `foreachBatch` → batch
-    * writer. Each micro-batch appends to a parquet-backed store
-    * directory; the same hook is where a websocket push, JDBC upsert,
-    * or compaction pass goes. Returns the started query. */
+    * writer. Each micro-batch overwrites its own `records/epoch=<id>`
+    * directory of the parquet-backed store, so an epoch replayed after a
+    * crash replaces its own rows instead of landing twice, and
+    * `spark.read.parquet(s"$dir/records")` reads every epoch. The same
+    * hook is where a websocket push, JDBC upsert, or compaction pass
+    * goes. Returns the started query. */
   def recordsToStore(records: Dataset[MemoryRecord], dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpoint: String): StreamingQuery =
     records.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[MemoryRecord], _: Long) =>
-        batch.write.mode("append").parquet(s"$dir/records")
+      .foreachBatch { (batch: Dataset[MemoryRecord], epochId: Long) =>
+        batch.write.mode("overwrite").parquet(s"$dir/records/epoch=$epochId")
       }
       .start()
 
@@ -439,79 +442,118 @@ object Streams {
       }
   }
 
+  /** The commit-log partitions every epoch-loop monitor writes. */
+  private val LogPartitions = 2
+
+  /** The exactly-once epoch loop behind every commit-log monitor below:
+    * drain `input` (Trigger.AvailableNow) through `foreachBatch`, map each
+    * micro-batch to that epoch's `(ts?, key, value)` rows with the
+    * monitor's `rows`, and publish them with [[graft.io.CommitLog.writeEpoch]]
+    * to `logDir`. The output mode is Update, which a query without an
+    * aggregation runs exactly as Append.
+    *
+    * Exactly-once: a restart re-runs only the one epoch whose checkpoint
+    * commit was lost, under the same epoch id. `rows` depends only on
+    * the batch and on what the epoch's predecessor left
+    * ([[snapshotEpoch]]), so the replay recomputes the same rows; and
+    * `writeEpoch` names each segment after the epoch and never replaces
+    * a published one, so the replay publishes exactly the segments the
+    * crash left out and keeps every other. */
+  private def epochLoop[T](input: Dataset[T], logDir: String, checkpoint: String)(
+      rows: (Dataset[T], Long) => DataFrame): StreamingQuery =
+    input.writeStream
+      .outputMode(OutputMode.Update)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[T], epochId: Long) =>
+        CommitLog.writeEpoch(logDir, LogPartitions, epochId, rows(batch, epochId))
+      }
+      .start()
+
+  /** The epoch-snapshot step of a stateful monitor, run inside
+    * [[epochLoop]]: epoch `epochId`'s state is the predecessor snapshot
+    * under `$outDir/snapshot/epoch=<id>` merged with the batch's `cur`
+    * by the monitor's `merge` (`cur` alone for the first epoch). It
+    * overwrites `epoch=<epochId>` and returns that snapshot read back.
+    *
+    * GC comes first: only this epoch can be replayed, and it reads only
+    * its predecessor, so every older snapshot is dead and is deleted.
+    * The predecessor itself must survive until this epoch commits
+    * ("< prev", never "<= prev"); at rest at most two snapshots remain.
+    * Hadoop FS, not java.nio: `outDir` is HDFS/S3/abfs in a real
+    * deployment. */
+  private def snapshotEpoch(outDir: String, epochId: Long, cur: DataFrame)(
+      merge: DataFrame => DataFrame): DataFrame = {
+    val sp = cur.sparkSession
+    val snapDir = s"$outDir/snapshot"
+    val base = new Path(snapDir)
+    val fs = base.getFileSystem(sp.sparkContext.hadoopConfiguration)
+    val epochs =
+      if (!fs.exists(base)) Seq.empty[Long]
+      else fs.listStatus(base).toSeq.map(_.getPath.getName)
+        .collect { case s if s.startsWith("epoch=") => s.drop(6).toLong }
+    val prev = epochs.filter(_ < epochId).maxOption
+    prev.foreach(pe => epochs.filter(_ < pe)
+      .foreach(e => fs.delete(new Path(s"$snapDir/epoch=$e"), true)))
+    prev.fold(cur)(pe => merge(sp.read.parquet(s"$snapDir/epoch=$pe")))
+      .write.mode("overwrite").parquet(s"$snapDir/epoch=$epochId")
+    sp.read.parquet(s"$snapDir/epoch=$epochId")
+  }
+
   /** The streaming ingest loop behind `dd_incremental`: a document
     * stream (`doc_id`, `text`) is admitted micro-batch by micro-batch
     * against a STATIC dedup index ([[graft.operators.Dedup.DedupIndex]]
     * — exact fingerprints + MinHash band table + shingle arrays, the
     * artifacts a 100 TB corpus maintains as tables), via the exact
     * same batch operator ([[graft.operators.Dedup.admitAgainstIndex]]),
-    * and each batch's verdicts land on a commit-log topic through an
-    * executor-side idempotent epoch write
-    * ([[graft.io.CommitLog.writeEpoch]]).
+    * and each batch's verdicts land on the `outDir` topic through
+    * [[epochLoop]].
     *
     * Because every batch doc is compared ONLY against the index (never
     * batch×batch), each doc's verdict is independent of batch slicing,
     * arrival order, and restarts — the stream output converges exactly
     * to the batch twin `admitAgainstIndex(allDocs, index)`, which
-    * StreamingIncrementalDedupSpec pins across a mid-stream restart.
-    * `foreachBatch` + epoch-keyed segments is the standard Spark shape
-    * for "run the batch operator incrementally with exactly-once
-    * output": a replayed epoch finds its segment already committed and
-    * is a no-op. */
+    * StreamingIncrementalDedupSpec pins across a mid-stream restart. */
   def incrementalAdmit(
       docs: DataFrame,
       index: graft.operators.Dedup.DedupIndex,
       outDir: String,
-      checkpoint: String,
-      nLogPartitions: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val verdict = graft.operators.Dedup.admitAgainstIndex(batch, index)
-        val payload = verdict.select(
-          col("doc_id").cast("string").as("key"),
-          concat_ws("|",
-            col("exact_dup").cast("string"),
-            coalesce(col("near_dup_of").cast("string"), lit("-")),
-            coalesce(col("jac").cast("string"), lit("-")),
-            col("keep").cast("string")).as("value"))
-        graft.io.CommitLog.writeEpoch(outDir, nLogPartitions, epochId, payload)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    epochLoop(docs, outDir, checkpoint) { (batch, _) =>
+      graft.operators.Dedup.admitAgainstIndex(batch, index).select(
+        col("doc_id").cast("string").as("key"),
+        concat_ws("|",
+          col("exact_dup").cast("string"),
+          coalesce(col("near_dup_of").cast("string"), lit("-")),
+          coalesce(col("jac").cast("string"), lit("-")),
+          col("keep").cast("string")).as("value"))
+    }
 
   /** Streaming learned-constraint monitor — the live twin of
     * `dq_constraint_mining`'s validation half: arriving events
     * (event_id, event_type, cent-exact value) are scored micro-batch
     * by micro-batch against the STATIC learned bounds artifact
     * ([[graft.operators.ConstraintMining.learnedBounds]], persisted by
-    * the profiling job). The verdict per record — ok / violation /
+    * the profiling job) and land on the `outDir` topic through
+    * [[epochLoop]]. The verdict per record — ok / violation /
     * unknown_type — depends ONLY on the bounds table, never on other
     * records, so the stream output converges exactly to the batch
-    * validation for any batch slicing or restart; epoch-keyed
-    * idempotent writes make replays no-ops (same contract as
-    * [[erAdmit]]). This is the alert path a 100 TB ingest runs against
-    * yesterday's profile. */
+    * validation for any batch slicing or restart. This is the alert
+    * path a 100 TB ingest runs against yesterday's profile. */
   def constraintMonitor(
       records: DataFrame,
       learned: DataFrame,
       outDir: String,
-      checkpoint: String,
-      nLogPartitions: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val verdict = batch.join(broadcast(learned), Seq("event_type"), "left")
-          .select(col("event_id").cast("string").as("key"),
-            concat_ws("|", col("event_type"),
-              when(col("lo").isNull, lit("unknown_type"))
-                .when(col("v") < col("lo") || col("v") > col("hi"),
-                  lit("violation"))
-                .otherwise(lit("ok"))).as("value"))
-        graft.io.CommitLog.writeEpoch(outDir, nLogPartitions, epochId, verdict)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    epochLoop(records, outDir, checkpoint) { (batch, _) =>
+      batch.join(broadcast(learned), Seq("event_type"), "left")
+        .select(col("event_id").cast("string").as("key"),
+          concat_ws("|", col("event_type"),
+            when(col("lo").isNull, lit("unknown_type"))
+              .when(col("v") < col("lo") || col("v") > col("hi"),
+                lit("violation"))
+              .otherwise(lit("ok"))).as("value"))
+    }
 
   /** Streaming entity-resolution admission — the twin of
     * `er_incremental`: arriving records (custkey, name, nation,
@@ -520,97 +562,63 @@ object Streams {
     * ([[graft.operators.EntityRes.buildNameRegistry]] — position-tagged
     * deletion variants + blocking attributes, persisted as a table)
     * via the same batch operator
-    * ([[graft.operators.EntityRes.admitAgainstRegistry]]). Each
-    * record's verdict (matched registered entities, best match,
-    * is-new) depends only on the index — never batch×batch — so the
-    * stream output converges exactly to the batch twin for any batch
-    * slicing or restart; epoch-keyed idempotent writes make replays
-    * no-ops (same contract as [[incrementalAdmit]]). */
+    * ([[graft.operators.EntityRes.admitAgainstRegistry]]), and land on
+    * the `outDir` topic through [[epochLoop]]. Each record's verdict
+    * (matched registered entities, best match, is-new) depends only on
+    * the index — never batch×batch — so the stream output converges
+    * exactly to the batch twin for any batch slicing or restart. */
   def erAdmit(
       records: DataFrame,
       registry: DataFrame,
       outDir: String,
-      checkpoint: String,
-      nLogPartitions: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val verdict = graft.operators.EntityRes.admitAgainstRegistry(batch, registry)
-        val payload = verdict.select(
-          col("c_custkey").cast("string").as("key"),
-          concat_ws("|",
-            col("n_matches").cast("string"),
-            coalesce(col("best_match").cast("string"), lit("-")),
-            col("is_new").cast("string")).as("value"))
-        graft.io.CommitLog.writeEpoch(outDir, nLogPartitions, epochId, payload)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    epochLoop(records, outDir, checkpoint) { (batch, _) =>
+      graft.operators.EntityRes.admitAgainstRegistry(batch, registry).select(
+        col("c_custkey").cast("string").as("key"),
+        concat_ws("|",
+          col("n_matches").cast("string"),
+          coalesce(col("best_match").cast("string"), lit("-")),
+          col("is_new").cast("string")).as("value"))
+    }
 
   /** Streaming group-sequential experiment monitor — the live twin of
     * `ev_sequential_test`: arriving events (user_id, day, purchase
     * flag) fold into per-user (arm, first-activity day,
-    * first-conversion day) state via an epoch-keyed snapshot merge
-    * (pairwise `least` on a full-outer join — min is commutative /
-    * idempotent, so replays and arrival order cannot change state),
-    * then the monitoring table is recomputed from the snapshot by the
-    * SAME batch operator ([[graft.operators.Sequential.lookTable]])
-    * and published with the idempotent epoch write. Converges to the
-    * batch query for any batch slicing or restart; snapshot GC keeps
-    * ≤ 2 epochs on disk (the concurrencyMonitor contract). */
+    * first-conversion day) state through [[snapshotEpoch]] (pairwise
+    * `least` on a full-outer join — min is commutative / idempotent,
+    * so replays and arrival order cannot change state), then the
+    * monitoring table is recomputed from the snapshot by the SAME batch
+    * operator ([[graft.operators.Sequential.lookTable]]) and published
+    * to `$outDir/log` with ts = epochId. Converges to the batch query
+    * for any batch slicing or restart. */
   def sequentialMonitor(
       events: DataFrame,
       outDir: String,
-      checkpoint: String,
-      nLogPartitions: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val sp = batch.sparkSession
-        val snapBase = s"$outDir/snapshot"
-        val cur = batch
-          .groupBy(col("user_id"))
-          .agg(min(col("day")).as("d0"),
-            min(when(col("purchase"), col("day"))).as("dc"))
-        val basePath = new org.apache.hadoop.fs.Path(snapBase)
-        val fs = basePath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        val epochs: Seq[Long] =
-          if (!fs.exists(basePath)) Seq.empty
-          else fs.listStatus(basePath).toSeq.map(_.getPath.getName)
-            .collect { case s if s.startsWith("epoch=") => s.drop(6).toLong }
-        val prevEpoch = epochs.filter(_ < epochId).maxOption
-        val merged = prevEpoch match {
-          case Some(pe) =>
-            val prev = sp.read.parquet(s"$snapBase/epoch=$pe")
-              .select(col("user_id"), col("d0").as("p_d0"), col("dc").as("p_dc"))
-            prev.join(cur, Seq("user_id"), "full_outer")
-              .select(col("user_id"),
-                least(col("p_d0"), col("d0")).as("d0"),
-                least(col("p_dc"), col("dc")).as("dc"))
-          case None => cur
-        }
-        merged.write.mode("overwrite").parquet(s"$snapBase/epoch=$epochId")
-        val table = graft.operators.Sequential.lookTable(
-          sp.read.parquet(s"$snapBase/epoch=$epochId")
-            .select(col("user_id"), (col("user_id") % 2).as("arm"),
-              col("d0"), col("dc")))
-        graft.io.CommitLog.writeEpoch(s"$outDir/log", nLogPartitions, epochId,
-          table.select(
-            lit(epochId * 1000000L).as("ts"),
-            col("look").cast("string").as("key"),
-            concat_ws("|", col("day"), col("n_a"), col("n_b"),
-              col("conv_a"), col("conv_b"),
-              coalesce(col("z").cast("string"), lit("-")),
-              col("boundary"),
-              coalesce(col("crossed").cast("string"), lit("-"))).as("value")))
-        prevEpoch.foreach { pe =>
-          epochs.filter(_ < pe).foreach { e =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$snapBase/epoch=$e"), true)
-          }
-        }
+      checkpoint: String): StreamingQuery =
+    epochLoop(events, s"$outDir/log", checkpoint) { (batch, epochId) =>
+      val cur = batch
+        .groupBy(col("user_id"))
+        .agg(min(col("day")).as("d0"),
+          min(when(col("purchase"), col("day"))).as("dc"))
+      val snapshot = snapshotEpoch(outDir, epochId, cur) { prev =>
+        prev.select(col("user_id"), col("d0").as("p_d0"), col("dc").as("p_dc"))
+          .join(cur, Seq("user_id"), "full_outer")
+          .select(col("user_id"),
+            least(col("p_d0"), col("d0")).as("d0"),
+            least(col("p_dc"), col("dc")).as("dc"))
       }
-      .start()
+      graft.operators.Sequential.lookTable(
+        snapshot.select(col("user_id"), (col("user_id") % 2).as("arm"),
+          col("d0"), col("dc")))
+        .select(
+          lit(epochId * 1000000L).as("ts"),
+          col("look").cast("string").as("key"),
+          concat_ws("|", col("day"), col("n_a"), col("n_b"),
+            col("conv_a"), col("conv_b"),
+            coalesce(col("z").cast("string"), lit("-")),
+            col("boundary"),
+            coalesce(col("crossed").cast("string"), lit("-"))).as("value"))
+    }
 
   /** Live sessionization — the stateful half of the streaming
     * concurrency monitor. Per-user state is the full (event_id, t)
@@ -658,68 +666,32 @@ object Streams {
   /** Streaming interval-overlap / concurrency monitor — the live twin
     * of `jx_interval_overlap`. [[liveSessions]] maintains per-user
     * session state; each epoch then (1) merges the touched users'
-    * refreshed session lists into an epoch-keyed snapshot (replace-
-    * by-user: the emission is always the user's COMPLETE current
-    * list), and (2) publishes the hour-cell-bucketed overlap counts of
-    * the whole snapshot ([[graft.operators.IntervalJoin.overlapCounts]]
-    * — the identical join machinery as the batch query) to the
-    * commit log with ts = epochId. Replayed epochs re-read the same
-    * predecessor snapshot, overwrite the same epoch directory, and
-    * hit [[graft.io.CommitLog.writeEpoch]]'s idempotent segment —
-    * end-to-end exactly-once, so the max-ts rows of the log ARE the
-    * converged monitor readout. */
+    * refreshed session lists into the snapshot through [[snapshotEpoch]]
+    * (replace-by-user: the emission is always the user's COMPLETE
+    * current list), and (2) publishes the hour-cell-bucketed overlap
+    * counts of the whole snapshot
+    * ([[graft.operators.IntervalJoin.overlapCounts]] — the identical
+    * join machinery as the batch query) to `$outDir/log` with
+    * ts = epochId, so the max-ts rows of the log ARE the converged
+    * monitor readout. */
   def concurrencyMonitor(
       ev: Dataset[SessEvent],
       outDir: String,
-      checkpoint: String,
-      nLogPartitions: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    liveSessions(ev).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (emits: Dataset[SessionEmit], epochId: Long) =>
-        val sp = emits.sparkSession
-        val snapBase = s"$outDir/snapshot"
-        val cur = emits.toDF()
-        // Hadoop FS, not java.nio: outDir is HDFS/S3/abfs in any real
-        // deployment — the driver-local-filesystem assumption only
-        // holds in tests.
-        val basePath = new org.apache.hadoop.fs.Path(snapBase)
-        val fs = basePath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        val epochs: Seq[Long] =
-          if (!fs.exists(basePath)) Seq.empty
-          else fs.listStatus(basePath).toSeq.map(_.getPath.getName)
-            .collect { case s if s.startsWith("epoch=") => s.drop(6).toLong }
-        val prevEpoch = epochs.filter(_ < epochId).maxOption
-        val merged = prevEpoch match {
-          case Some(pe) =>
-            sp.read.parquet(s"$snapBase/epoch=$pe")
-              .join(cur.select("user_id").distinct(), Seq("user_id"), "left_anti")
-              .unionByName(cur)
-          case None => cur
-        }
-        merged.write.mode("overwrite").parquet(s"$snapBase/epoch=$epochId")
-        val counts = graft.operators.IntervalJoin.overlapCounts(
-          sp.read.parquet(s"$snapBase/epoch=$epochId")
-            .select(col("user_id"), col("session_no"), col("s"), col("e")))
-        graft.io.CommitLog.writeEpoch(s"$outDir/log", nLogPartitions, epochId,
-          counts.select(
-            lit(epochId * 1000000L).as("ts"),
-            concat_ws("|", col("user_id"), col("session_no")).as("key"),
-            concat_ws("|", col("session_start"), col("session_end"),
-              col("n_overlaps")).as("value")))
-        // Snapshot GC — storage stays bounded at ≤ 2 epochs: a replay
-        // of THIS epoch (crash before its checkpoint commit) re-reads
-        // only the predecessor, so everything older is dead. The
-        // predecessor itself must survive until this epoch's commit,
-        // hence "< prev", never "<= prev".
-        prevEpoch.foreach { pe =>
-          epochs.filter(_ < pe).foreach { e =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$snapBase/epoch=$e"), true)
-          }
-        }
+      checkpoint: String): StreamingQuery =
+    epochLoop(liveSessions(ev), s"$outDir/log", checkpoint) { (emits, epochId) =>
+      val cur = emits.toDF()
+      val snapshot = snapshotEpoch(outDir, epochId, cur) { prev =>
+        prev.join(cur.select("user_id").distinct(), Seq("user_id"), "left_anti")
+          .unionByName(cur)
       }
-      .start()
+      graft.operators.IntervalJoin.overlapCounts(
+        snapshot.select(col("user_id"), col("session_no"), col("s"), col("e")))
+        .select(
+          lit(epochId * 1000000L).as("ts"),
+          concat_ws("|", col("user_id"), col("session_no")).as("key"),
+          concat_ws("|", col("session_start"), col("session_end"),
+            col("n_overlaps")).as("value"))
+    }
 
   /** Streaming funnel-stage tracker — the stateful twin of the batch
     * `ev_funnel` chained-minimum semantics (first view, first click at

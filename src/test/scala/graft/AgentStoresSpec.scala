@@ -148,7 +148,7 @@ class AgentStoresSpec extends SparkSpec {
 {"text": "hello!", "mem_op": {"name": "add_memory_record",
   "args": {"memory": "user said hi"}}, "finished": true}
 ```"""))
-    val loop = new ReactLoop(stub, maxIters = 5)
+    val loop = new ReactLoop(stub)
     val tools = spark.emptyDataset[Tool]
     val messages = spark.emptyDataset[Message]
     val out = loop.processQuery("s", "hi", MemoryStore.empty(spark),
@@ -185,7 +185,7 @@ class AgentStoresSpec extends SparkSpec {
 {"files": [{"start_marker": "START", "end_marker": "END",
             "content_type": "note", "title": "Result", "description": ""}]}
 ```"""))
-    val loop = new ReactLoop(stub, maxIters = 5,
+    val loop = new ReactLoop(stub,
       toolExecutor = (name, args) => s"tool: search result for $args")
     var tasks = TaskStore.empty(spark)
     tasks = tasks.upsertTask(TaskRow(7L, "research", "T", "t", "", "", ts(1)))

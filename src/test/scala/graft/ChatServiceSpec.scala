@@ -113,7 +113,10 @@ class ChatServiceSpec extends SparkSpec {
       Seq("session_id" -> """{"session_id": 5, "query": "q"}""",
         "task_id" -> """{"query": "q", "task_id": "3"}""",
         "task_id" -> """{"query": "q", "task_id": 2.5}""",
-        "ts" -> """{"query": "q", "ts": "soon"}""")
+        "task_id" -> """{"query": "q", "task_id": 1e19}""",
+        "ts" -> """{"query": "q", "ts": "soon"}""",
+        "ts" -> """{"query": "q", "ts": 1e999}""",
+        "ts" -> """{"query": "q", "ts": 1e17}""")
         .foreach { case (field, body) =>
           val (status, err) = post(s"http://127.0.0.1:$port/chat", body)
           assert(status == 400 && err.startsWith(s"""{"error": "'$field' must be"""), err)

@@ -159,6 +159,11 @@ class CommitLogSpec extends SparkSpec {
     assert(Files.readAllBytes(Paths.get(dst)).toSeq == published, "published segment rewritten")
     assert(spark.read.format("commit-log").load(dir).select("value").as[String]
       .collect().toSeq == Seq("v1"))
+    // the first attempt's temp, left by the driver that died, is swept
+    import scala.jdk.CollectionConverters._
+    val temps = Files.list(CommitLog.partitionDir(dir, 0)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith(".tmp-")).toSeq
+    assert(temps.isEmpty, s"no .tmp-* left in p0: $temps")
   }
 
   test("concurrent appenders to one partition publish every segment once and leave no temp file") {

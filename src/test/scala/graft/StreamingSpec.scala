@@ -292,9 +292,10 @@ class StreamingSpec extends SparkSpec {
       stream.addData((4 to 5).map(i => graft.model.MemoryRecord("s", ts(i), s"r$i")))
       q.processAllAvailable()
     } finally q.stop()
+    // 5 rows, each content once: a set would hide a duplicated epoch
     val stored = spark.read.parquet(s"$dir/records")
-      .as[graft.model.MemoryRecord].collect().map(_.content).toSet
-    assert(stored == Set("r1", "r2", "r3", "r4", "r5"))
+      .as[graft.model.MemoryRecord].collect().map(_.content).sorted.toSeq
+    assert(stored == Seq("r1", "r2", "r3", "r4", "r5"))
   }
 
   test("bounded log append keeps at most cap records per key") {
