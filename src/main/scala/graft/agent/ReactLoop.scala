@@ -8,8 +8,8 @@ import graft.functions.AgentText.{JBool, JNum, JObj, JStr}
 import graft.memory.{MemoryAnalysis, MemoryStore}
 import graft.model._
 import graft.provider.Provider
+import graft.serve.Snapshot
 import graft.task.TaskStore
-import org.apache.spark.sql.Dataset
 
 /** One parsed structured response (F5; reference client.py:194-214). */
 final case class AgentResponse(
@@ -54,11 +54,12 @@ object AgentResponse {
 /** The ReAct micro-batch loop (ST1; reference client.py:216-333): per
   * query, up to [[ReactLoop.MaxIters]] iterations of assemble →
   * provider → parse → act → append, then the task-log record, file
-  * extraction and the post-turn memory analysis. The loop commits
-  * nothing: it returns the turn's writes ([[ReactLoop.Writes]]) and
+  * extraction and the post-turn memory analysis. The loop reads a
+  * [[Snapshot]]'s rows, runs no Spark job and commits nothing: it
+  * returns the turn's writes ([[ReactLoop.Writes]]) and
   * [[graft.serve.ChatService]] commits them once. With a
   * [[graft.provider.StubProvider]] the whole lifecycle is a pure,
-  * testable function of the store state.
+  * testable function of the snapshot.
   */
 final class ReactLoop(
     provider: Provider,
@@ -68,27 +69,27 @@ final class ReactLoop(
     // next iteration sees it (client.py:287-321).
     toolExecutor: (String, String) => String = (n, _) => s"[no executor for $n]") {
 
+  /** One turn of `query` in `sessionId`, read from `snap`. Each
+    * iteration assembles its prompt from `snap` with the turn's writes
+    * so far committed (its messages, records and KV puts; the reference
+    * re-assembles from the growing message list, client.py:218,221, so
+    * tool results are visible), and the post-turn analysis reads the
+    * same view. */
   def processQuery(
-      sessionId: String, query: String,
-      memory0: MemoryStore, tasks: TaskStore,
-      tools: Dataset[Tool], messages0: Dataset[Message],
+      sessionId: String, query: String, snap: Snapshot,
       taskId: Option[Long], now: Timestamp): ReactLoop.Outcome = {
-    var memory = memory0
     val newMessages = Seq.newBuilder[Message]
     val addedRecords = Seq.newBuilder[MemoryRecord]
     val puts = Seq.newBuilder[KvEntry]
+    def view = snap.commit(sessionId, now, ReactLoop.Writes(newMessages.result(),
+      addedRecords.result(), puts.result(), None, Nil, None))
     var seq = 0L
     newMessages += Message(sessionId, seq, "user", query, now)
     var lastResponseText = ""
     var iter = 0
     var done = false
     while (iter < ReactLoop.MaxIters && !done) {
-      val assembler = ContextAssembler(memory, tasks, tools)
-      // the reference re-assembles from the GROWING message list each
-      // iteration (client.py:218,221) — tool results must be visible
-      val liveMessages = messages0.union(messages0.sparkSession
-        .createDataset(newMessages.result())(messages0.encoder))
-      val prompt = assembler.assemble(sessionId, query, taskId, liveMessages, 0L)
+      val prompt = ContextAssembler.prompt(view, sessionId, query, taskId, 0L)
       val response = AgentResponse.parse(provider.generateResponse(prompt))
       if (response.think.nonEmpty) {
         seq += 1
@@ -101,21 +102,15 @@ final class ReactLoop(
       }
       var actedOnTool = false
       response.memOp.foreach { case (name, args) =>
-        // the add-record/add-data ops (memory.py:249-261) go into the
-        // writes and onto a turn-local view that later iterations assemble from
+        // the add-record/add-data ops (memory.py:249-261) go into the writes
         (name, AgentText.parseJson5ish(args)) match {
           case ("add_memory_record", Some(JObj(f))) =>
             f.get("memory").collect { case JStr(m) =>
-              val rec = MemoryRecord(sessionId, now, m)
-              addedRecords += rec
-              memory = memory.addRecord(rec)
+              addedRecords += MemoryRecord(sessionId, now, m)
             }
           case ("add_memory_data", Some(JObj(f))) =>
             (f.get("key"), f.get("value")) match {
-              case (Some(JStr(k)), Some(JStr(v))) =>
-                val entry = KvEntry(sessionId, k, v)
-                puts += entry
-                memory = memory.putData(entry)
+              case (Some(JStr(k)), Some(JStr(v))) => puts += KvEntry(sessionId, k, v)
               case _ => ()
             }
           case _ => ()
@@ -141,7 +136,9 @@ final class ReactLoop(
     val files = taskId.fold(Seq.empty[ExtractedFileRow])(
       TaskStore.extractFiles(_, now, lastResponseText, provider))
     // post-turn memory analysis (ST2) exactly once per query
-    val analysis = memory.analyze(sessionId, provider)
+    val last = view
+    val analysis = MemoryStore.analyze(last.records.rows, last.topics.rows, sessionId,
+      last.memory, provider)
     ReactLoop.Outcome(iter, ReactLoop.Writes(newMessages.result(),
       addedRecords.result(), puts.result(), log, files, analysis))
   }

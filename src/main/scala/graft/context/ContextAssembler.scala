@@ -1,33 +1,30 @@
 package graft.context
 
 import java.sql.Timestamp
+import java.time.ZoneId
 
 import graft.memory.MemoryStore
-import graft.model.{Message, Tool}
+import graft.model.{Message, TaskRow, Tool}
 import graft.registry.Registry
+import graft.serve.{ChatService, Snapshot}
 import graft.task.TaskStore
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, TimestampFormatter}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** The §3.1 prompt assembly (reference client.py:107-186): one flat
   * prompt string built from system rules + memory dynamic context +
   * task context + tool list + conversation history.
   *
-  * The stores are read with one multi-source query per prompt. Each
-  * section is a tagged branch over its store in one shape — (section,
-  * k, name, ts, text): the section's own sort keys and its line text —
-  * and [[assemble]] collects the union of the branches once. The driver
-  * then orders each section's rows by its keys and lays them out under
-  * the section's header. Branches over a table that grows with the
-  * session keep their top-k in the plan (the record tail, topics and
-  * KV, each a [[MemoryStore]] top-k), so the driver receives at most k
-  * of their rows whatever the store's size; the bounded ones (summaries, the
-  * task row, its logs) are picked on the driver. A top-k over more than
-  * k rows plans as a TakeOrderedAndProject (a per-partition top-k and
-  * one merge, inside the same job); no branch does a global
-  * (range-shuffle) sort, so on driver-held stores the whole prompt is
-  * one Spark job. Only a non-empty tool registry adds the shuffle of
-  * its last-wins window ([[Registry.unionLastWins]]).
+  * [[ContextAssembler.prompt]] reads the prompt from a [[Snapshot]]'s
+  * driver-held rows with pure rules, so a served chat turn runs no
+  * Spark job and analyzes no plan: the session's newest records
+  * ([[MemoryStore.tail]]), its topics and KV pairs by keyword score
+  * ([[MemoryStore.byRelevance]]), its latest summary, the task row and
+  * its latest log, the resolved tools by name and the history by
+  * `(ts, seq)`. This case class is the Dataset entry point:
+  * [[assemble]] and [[historyContext]] collect the session's and the
+  * task's rows of the stores and apply the same rules.
   */
 final case class ContextAssembler(
     memory: MemoryStore, tasks: TaskStore, tools: Dataset[Tool]) {
@@ -36,65 +33,24 @@ final case class ContextAssembler(
   /** Conversation history slice (client.py:177-183, P8), oldest turn
     * first: `seq` restarts at 0 every turn, so order by `(ts, seq)`. */
   def historyContext(messages: Dataset[Message], sessionId: String, fromSeq: Long): String =
-    historySection(historyBranch(messages, sessionId, fromSeq).collect().toSeq)
+    history(messages.filter(col("sessionId") === sessionId).collect().toSeq, sessionId, fromSeq)
 
-  /** The full prompt (client.py:107-186 assembly order). */
+  /** The full prompt ([[ContextAssembler.prompt]]) over the session's
+    * and the task's rows of the stores, with the tools resolved last
+    * server wins. */
   def assemble(
       sessionId: String, query: String, taskId: Option[Long],
       messages: Dataset[Message], fromSeq: Long): String = {
-    val branches = memoryBranches(sessionId, query) ++ taskId.toSeq.flatMap(taskBranches) ++
-      Seq(toolBranch, historyBranch(messages, sessionId, fromSeq))
-    val rows = branches.reduce(_ union _).collect().toSeq.groupBy(_.getInt(0))
-      .withDefaultValue(Seq.empty)
-    // memory dynamic context (memory.py:117-144)
-    val memoryPart = Seq(
-      section("Memory Summary", rows(Summary).maxByOption(ts).map(text).toSeq),
-      section("Latest Memory Records", rows(Tail).sortBy(ts).map(text)),
-      section("Memory Topics", byScore(rows(Topics))),
-      section("Memory Database (Key-Value Pairs)", byScore(rows(Kv)))).flatten
-    // task dynamic context (task.py:306-325): task fields, latest log
-    val taskPart = rows(Task).headOption.map(text) ++
-      rows(Log).maxByOption(ts).map(r => s"Latest log [${ts(r)}]: ${text(r)}")
-    // tool list (client.py:167-175 over U1)
-    val toolLines = rows(Tools).sortBy(_.getString(2)).map(text)
-    Seq(
-      ContextAssembler.systemRules,
-      memoryPart.mkString("\n"),
-      taskPart.mkString("\n"),
-      section("Available Tools", toolLines).getOrElse(""),
-      historySection(rows(History)),
-      s"\n## Query:\n$query").filter(_.nonEmpty).mkString("\n")
-  }
-
-  /** Latest summary (A5), tail records (P1), rag-relevant topics and
-    * KV pairs (F3) of the session. */
-  private def memoryBranches(sessionId: String, query: String): Seq[DataFrame] = {
     val own = col("sessionId") === sessionId
-    Seq(
-      branch(Summary, memory.summaries.filter(own), col("text"), ts = col("ts")),
-      branch(Tail, memory.recentRecords(sessionId, memory.config.latestRecordNum),
-        concat(lit("- ["), col("ts"), lit("] "), col("content")), ts = col("ts")),
-      branch(Topics, memory.relevantTopics(sessionId, query),
-        concat(lit("- "), col("cleaned")), k = col("score"), name = col("name")),
-      branch(Kv, memory.relevantKv(sessionId, query),
-        concat(lit("- "), col("cleaned")), k = col("score"), name = col("key")))
+    val task = taskId.fold(lit(false))(col("taskId") === _)
+    val rows = Snapshot.of(ChatService.State(
+      memory.copy(records = memory.records.filter(own), summaries = memory.summaries.filter(own),
+        topics = memory.topics.filter(own), kv = memory.kv.filter(own)),
+      tasks.copy(tasks = tasks.tasks.filter(task), logs = tasks.logs.filter(task),
+        files = tasks.files.filter(task)),
+      messages.filter(own)), Registry.unionLastWins(tools).collect().toSeq)
+    prompt(rows, sessionId, query, taskId, fromSeq)
   }
-
-  /** The working task's fields as one text block, and its latest log. */
-  private def taskBranches(taskId: Long): Seq[DataFrame] = {
-    val own = col("taskId") === taskId
-    def field(label: String, c: String) =
-      when(col(c) =!= "", concat(lit(s"$label: "), col(c)))
-    Seq(
-      branch(Task, tasks.tasks.filter(own), concat_ws("\n",
-        concat(lit("\n## Working Task: "), col("title")),
-        field("Target", "target"), field("Plan", "plan"), field("Progress", "progress"))),
-      branch(Log, tasks.logs.filter(own), col("responseSummary"), ts = col("ts")))
-  }
-
-  private def toolBranch: DataFrame =
-    branch(Tools, Registry.unionLastWins(tools), concat(lit("- "), col("name"), lit(": "),
-      col("description"), lit("\n  Input schema: "), col("inputSchema")), name = col("name"))
 }
 
 object ContextAssembler {
@@ -105,37 +61,58 @@ action respond in JSON enclosed in triple backticks with fields:
 "text", "think", "mem_op" {"name", "args"}, "tool" {"name", "args"},
 "finished" (boolean)."""
 
-  // section tags, in prompt order
-  private val Summary = 0
-  private val Tail = 1
-  private val Topics = 2
-  private val Kv = 3
-  private val Task = 4
-  private val Log = 5
-  private val Tools = 6
-  private val History = 7
+  /** The full prompt of `sessionId` (client.py:107-186 assembly order)
+    * from `rows`: the memory dynamic context (memory.py:117-144), the
+    * task's fields and latest log when `taskId` is set (task.py:306-325),
+    * the tools (client.py:167-175 over U1), the history from `fromSeq`
+    * and the query. */
+  def prompt(rows: Snapshot, sessionId: String, query: String, taskId: Option[Long],
+      fromSeq: Long): String = {
+    val cfg = rows.memory
+    val zone = rows.zone
+    def own[T](t: Snapshot.Table[T])(session: T => String): Seq[T] =
+      t.rows.filter(session(_) == sessionId)
+    val memoryPart = Seq(
+      section("Memory Summary", own(rows.summaries)(_.sessionId).maxByOption(_.ts).map(_.text).toSeq),
+      section("Latest Memory Records", MemoryStore.tail(rows.records.rows, sessionId,
+        cfg.latestRecordNum).map(r => s"- [${castString(r.ts, zone)}] ${r.content}")),
+      section("Memory Topics", MemoryStore.byRelevance(own(rows.topics)(_.sessionId)
+        .map(t => t.name -> t.description), query, cfg.relevantTopicsNum).map("- " + _)),
+      section("Memory Database (Key-Value Pairs)", MemoryStore.byRelevance(own(rows.kv)(_.sessionId)
+        .map(e => e.key -> e.value), query, cfg.relevantKvNum).map("- " + _))).flatten
+    val taskPart = taskId.toSeq.flatMap { id =>
+      rows.tasks.rows.find(_.taskId == id).map(taskBlock) ++
+        rows.logs.rows.filter(_.taskId == id).maxByOption(_.ts)
+          .map(l => s"Latest log [${l.ts}]: ${l.responseSummary}")
+    }
+    val toolLines = rows.tools.sortBy(_.name)
+      .map(t => s"- ${t.name}: ${t.description}\n  Input schema: ${t.inputSchema}")
+    Seq(
+      systemRules,
+      memoryPart.mkString("\n"),
+      taskPart.mkString("\n"),
+      section("Available Tools", toolLines).getOrElse(""),
+      history(rows.messages.rows, sessionId, fromSeq),
+      s"\n## Query:\n$query").filter(_.nonEmpty).mkString("\n")
+  }
 
-  /** One section's rows in the shape every branch shares. */
-  private def branch(section: Int, rows: Dataset[_], text: Column,
-      k: Column = lit(null), name: Column = lit(null), ts: Column = lit(null)): DataFrame =
-    rows.select(lit(section).as("section"), k.cast("long").as("k"),
-      name.cast("string").as("name"), ts.cast("timestamp").as("ts"), text.as("text"))
+  /** `CAST(ts AS STRING)` in `zone`: Spark's own formatter over the
+    * value Spark stores for `ts` (microseconds, rebased to the
+    * proleptic Gregorian calendar as the encoder does). */
+  def castString(ts: Timestamp, zone: ZoneId): String =
+    TimestampFormatter.getFractionFormatter(zone).format(DateTimeUtils.fromJavaTimestamp(ts))
 
-  private def historyBranch(messages: Dataset[Message], sessionId: String, fromSeq: Long) =
-    branch(History, messages.filter(col("sessionId") === sessionId && col("seq") >= fromSeq),
-      concat(col("role"), lit(": "), col("content")), k = col("seq"), ts = col("ts"))
+  /** The working task's title and its non-empty fields, one per line. */
+  private def taskBlock(t: TaskRow): String =
+    (Option(t.title).map("\n## Working Task: " + _) ++
+      Seq("Target" -> t.target, "Plan" -> t.plan, "Progress" -> t.progress).collect {
+        case (label, v) if v != null && v.nonEmpty => s"$label: $v"
+      }).mkString("\n")
 
-  private def text(r: Row): String = r.getString(4)
-  private def ts(r: Row): Timestamp = r.getTimestamp(3)
-
-  /** Highest score first, ties by name. */
-  private def byScore(rows: Seq[Row]): Seq[String] =
-    rows.sortBy(r => (-r.getLong(1), r.getString(2))).map(text)
+  private def history(messages: Seq[Message], sessionId: String, fromSeq: Long): String =
+    section("Conversation", messages.filter(m => m.sessionId == sessionId && m.seq >= fromSeq)
+      .sortBy(m => (m.ts, m.seq)).map(m => s"${m.role}: ${m.content}")).getOrElse("")
 
   private def section(header: String, lines: Seq[String]): Option[String] =
     if (lines.isEmpty) None else Some((s"\n## $header:" +: lines).mkString("\n"))
-
-  private def historySection(rows: Seq[Row]): String =
-    section("Conversation", rows.sortBy(r => (ts(r), r.getLong(1))).map(text))
-      .getOrElse("")
 }

@@ -93,6 +93,9 @@ object TextFunctions {
     if (keywords.isEmpty) lit(0)
     else size(filter(array(keywords.map(lit): _*), k => contains(text, k)))
 
+  /** [[keywordScore]] of one driver-side string. */
+  def keywordCount(text: String, keywords: Seq[String]): Int = keywords.count(text.contains)
+
   /** Whitespace tokens of a cleaned text column. */
   def tokens(c: Column): Column = split(c, " ")
 

@@ -6,7 +6,7 @@ import graft.functions.AgentText
 import graft.functions.TextFunctions
 import graft.model._
 import graft.provider.Provider
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,19 +31,26 @@ final case class MemoryAnalysis(
 /** Memory state as four Datasets (D2–D5) + the operators over them
   * (SURVEY.md §2: P1/P3, A5, A7, A8, A9, F3).
   *
-  * Scale stance: `records` is the unbounded append log — every operator
-  * over it is partition-parallel (tail-N is TakeOrderedAndProject, the
-  * rag scan is a projection). `summaries`/`topics`/`kv` are *bounded*
-  * state (≤3 / ≤maxTopics / grows slowly) — the per-batch merge runs on
-  * collected state exactly because the reference semantics are a
-  * sequential fold (each inserted topic can evict a victim chosen by
-  * the state including the previous insert). The rules are pure
-  * functions on the companion ([[MemoryStore.retainSummaries]],
-  * [[MemoryStore.mergeTopics]], [[MemoryStore.factRows]]), shared by
-  * streaming (keyed per session via flatMapGroupsWithState,
-  * graft.streaming) and serving (`graft.serve.ChatService` folds each
-  * turn into driver-held rows); [[applyUpdate]] runs the topic and
-  * fact rules itself and retains summaries with a ranking window.
+  * Scale stance: serving reads run on driver rows. A chat turn reads
+  * one session's rows of the stores as held by `graft.serve.Snapshot`,
+  * the reference's in-process lists (memory.py:117-144), with the pure
+  * rules on the companion: the record tail ([[MemoryStore.tail]]), the
+  * keyword top-k ([[MemoryStore.byRelevance]]) and the analysis read
+  * ([[MemoryStore.analyze]]); [[analyze]] and [[update]] collect the
+  * session's rows and apply the same rules. Batch work over `records`,
+  * the unbounded append log, stays partition-parallel (the corpus
+  * queries over every session, `graft.streaming`). `summaries`/`topics`/`kv`
+  * are *bounded* state (≤3 / ≤maxTopics / grows slowly) — the per-batch
+  * merge runs on collected state exactly because the reference
+  * semantics are a sequential fold (each inserted topic can evict a
+  * victim chosen by the state including the previous insert). The
+  * merge rules are pure functions on the companion
+  * ([[MemoryStore.retainSummaries]], [[MemoryStore.mergeTopics]],
+  * [[MemoryStore.factRows]]), shared by streaming (keyed per session
+  * via flatMapGroupsWithState, graft.streaming) and serving
+  * (`graft.serve.Snapshot.commit` folds each turn into driver-held
+  * rows); [[applyUpdate]] runs the topic and fact rules itself and
+  * retains summaries with a ranking window.
   */
 final case class MemoryStore(
     records: Dataset[MemoryRecord],
@@ -54,40 +61,11 @@ final case class MemoryStore(
 
   private def spark: SparkSession = records.sparkSession
 
-  /** P1 — a session's latest `n` records (memory.py:123-126), in no
-    * particular order (callers order them by `ts`); a top-k
-    * ([[MemoryStore.topK]]), with no shuffle of the whole log. */
-  def recentRecords(sessionId: String, n: Int): Dataset[MemoryRecord] =
-    MemoryStore.topK(records.filter(col("sessionId") === sessionId), n, desc("ts"))
-
   /** A5 — latest summary per session = value at max ts (memory.py:119-121). */
   def latestSummary: DataFrame = {
     val sp = spark; import sp.implicits._
     summaries.groupBy($"sessionId")
       .agg(max_by($"text", $"ts").as("text"), max($"ts").as("ts"))
-  }
-
-  /** F3 — the session's top-k topics by keyword relevance to the query
-    * (memory.py:128-135), scoring the reference's "'name': description"
-    * presentation string. Columns `name`, `cleaned`, `score`, in no
-    * particular order (callers order by score desc, then name). */
-  def relevantTopics(sessionId: String, query: String): DataFrame =
-    relevant(topics, "name", "description", sessionId, query, config.relevantTopicsNum)
-
-  /** F3 — the session's top-k KV pairs by keyword relevance
-    * (memory.py:137-142): columns `key`, `cleaned`, `score`, likewise
-    * unordered. */
-  def relevantKv(sessionId: String, query: String): DataFrame =
-    relevant(kv, "key", "value", sessionId, query, config.relevantKvNum)
-
-  private def relevant(rows: Dataset[_], key: String, value: String,
-      sessionId: String, query: String, k: Int): DataFrame = {
-    val keywords = TextFunctions.getKeywords(TextFunctions.cleanString(query))
-    val cleaned = TextFunctions.cleanText(concat(lit("'"), col(key), lit("': "), col(value)))
-    val scored = rows.filter(col("sessionId") === sessionId)
-      .select(col(key), cleaned.as("cleaned"))
-      .withColumn("score", TextFunctions.keywordScore(col("cleaned"), keywords).cast("long"))
-    MemoryStore.topK(scored, k, desc("score"), asc(key))
   }
 
   /** P4 — point lookup (memory.py:257-261). */
@@ -111,23 +89,12 @@ final case class MemoryStore(
   def update(sessionId: String, provider: Provider, now: Timestamp): MemoryStore =
     analyze(sessionId, provider).fold(this)(applyUpdate(sessionId, _, now))
 
-  /** The read half of the update step: batch the session's latest
-    * records, ask the provider for an analysis and parse its fenced
-    * JSON. None when the session has no records (nothing to analyze). */
+  /** The read half of the update step: [[MemoryStore.analyze]] over
+    * the session's collected records and topics. */
   def analyze(sessionId: String, provider: Provider): Option[MemoryAnalysis] = {
-    // one read: the tail batch (tag 0) and the session's topic names
-    // (tag 1, in store order) as one union
-    val rows = recentRecords(sessionId, config.updateBatchSize)
-      .select(lit(0).as("tag"), col("ts"), col("content").as("text"))
-      .union(topics.filter(col("sessionId") === sessionId)
-        .select(lit(1), lit(null).cast("timestamp"), col("name")))
-      .collect().toSeq
-    val (batch, names) = rows.partition(_.getInt(0) == 0)
-    if (batch.isEmpty) return None
-    val recordsText = batch.map(r => r.getTimestamp(1) -> r.getString(2)).sortBy(_._1)
-      .map { case (ts, content) => s"[$ts] $content" }.mkString("\n")
-    val prompt = MemoryStore.updatePrompt(recordsText, names.map(_.getString(2)))
-    Some(MemoryStore.parseAnalysis(provider.generateResponse(prompt)))
+    val own = col("sessionId") === sessionId
+    MemoryStore.analyze(records.filter(own).collect().toSeq, topics.filter(own).collect().toSeq,
+      sessionId, config, provider)
   }
 
   /** Merge an analysis into state with the reference's exact ordering:
@@ -164,17 +131,40 @@ final case class MemoryStore(
 
 object MemoryStore {
 
-  /** The first `n` rows of `rows` in `order`, returned in no particular
-    * order: a top-k (TakeOrderedAndProject — a top-k per partition, then
-    * one merge, in one job) when `rows` may hold more than `n` rows, and
-    * `rows` itself when they cannot. Spark drops a limit its optimized
-    * input cannot exceed (a filter over driver-held rows folds into the
-    * matching rows) but keeps the sort under it, and a global sort is a
-    * range shuffle (two more jobs under AQE), so that sort is left out
-    * here as well. */
-  private def topK[T](rows: Dataset[T], n: Int, order: Column*): Dataset[T] =
-    if (rows.queryExecution.optimizedPlan.maxRows.exists(_ <= n)) rows
-    else rows.orderBy(order: _*).limit(n)
+  /** P1 — the session's latest `n` records (memory.py:123-126): the
+    * newest by `ts`, and among equal `ts` the later appended, listed
+    * oldest first, equal `ts` in append order. `records` are in append
+    * order. */
+  def tail(records: Seq[MemoryRecord], sessionId: String, n: Int): Seq[MemoryRecord] =
+    records.filter(_.sessionId == sessionId).sortBy(_.ts).takeRight(n)
+
+  /** F3 — the top `k` of (name, value) pairs by keyword relevance to
+    * `query` (memory.py:128-142), each scored on its cleaned
+    * "'name': value" presentation string; returns those strings, the
+    * highest score first, ties by name. */
+  def byRelevance(pairs: Seq[(String, String)], query: String, k: Int): Seq[String] = {
+    val keywords = TextFunctions.getKeywords(TextFunctions.cleanString(query))
+    pairs.map { case (name, value) =>
+      val cleaned = TextFunctions.cleanString(s"'$name': $value")
+      (-TextFunctions.keywordCount(cleaned, keywords), name, cleaned)
+    }.sortBy(p => (p._1, p._2)).take(k).map(_._3)
+  }
+
+  /** The read half of the update step on rows: batch the session's
+    * latest `updateBatchSize` records ([[tail]]), ask the provider for
+    * an analysis of them and the session's topic names, in store order,
+    * and parse its fenced JSON. None when the session has no records
+    * (nothing to analyze). */
+  def analyze(records: Seq[MemoryRecord], topics: Seq[Topic], sessionId: String,
+      config: MemoryConfig, provider: Provider): Option[MemoryAnalysis] = {
+    val batch = tail(records, sessionId, config.updateBatchSize)
+    if (batch.isEmpty) None
+    else {
+      val prompt = updatePrompt(batch.map(r => s"[${r.ts}] ${r.content}").mkString("\n"),
+        topics.filter(_.sessionId == sessionId).map(_.name))
+      Some(parseAnalysis(provider.generateResponse(prompt)))
+    }
+  }
 
   def empty(spark: SparkSession, config: MemoryConfig = MemoryConfig()): MemoryStore = {
     val sp = spark; import sp.implicits._

@@ -6,6 +6,7 @@ import graft.memory.{MemoryAnalysis, MemoryConfig, MemoryStore}
 import graft.model._
 import graft.provider.StubProvider
 import graft.registry.Registry
+import graft.serve.{ChatService, Snapshot}
 import graft.task.{TaskConfig, TaskStore}
 import graft.agent.{AgentResponse, ReactLoop}
 
@@ -149,10 +150,9 @@ class AgentStoresSpec extends SparkSpec {
   "args": {"memory": "user said hi"}}, "finished": true}
 ```"""))
     val loop = new ReactLoop(stub)
-    val tools = spark.emptyDataset[Tool]
     val messages = spark.emptyDataset[Message]
-    val out = loop.processQuery("s", "hi", MemoryStore.empty(spark),
-      TaskStore.empty(spark), tools, messages, None, ts(10))
+    val out = loop.processQuery("s", "hi", Snapshot.of(ChatService.State(
+      MemoryStore.empty(spark), TaskStore.empty(spark), messages), Nil), None, ts(10))
     assert(out.iterations == 1)
     val roles = out.writes.messages.map(m => m.role -> m.content)
     assert(roles.contains("assistant" -> "hello!"))
@@ -189,8 +189,8 @@ class AgentStoresSpec extends SparkSpec {
       toolExecutor = (name, args) => s"tool: search result for $args")
     var tasks = TaskStore.empty(spark)
     tasks = tasks.upsertTask(TaskRow(7L, "research", "T", "t", "", "", ts(1)))
-    val out = loop.processQuery("s", "find it", MemoryStore.empty(spark),
-      tasks, spark.emptyDataset[Tool], spark.emptyDataset[Message],
+    val out = loop.processQuery("s", "find it", Snapshot.of(ChatService.State(
+      MemoryStore.empty(spark), tasks, spark.emptyDataset[Message]), Nil),
       Some(7L), ts(10))
     // two iterations: tool turn, then the finish turn that saw the result
     assert(out.iterations == 2)

@@ -7,7 +7,7 @@ import graft.agent.ReactLoop
 import graft.memory.{MemoryConfig, MemoryStore}
 import graft.model.{Message, TaskRow, Tool}
 import graft.provider.StubProvider
-import graft.serve.ChatService
+import graft.serve.{ChatService, Snapshot}
 import graft.task.{TaskConfig, TaskStore}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -71,8 +71,8 @@ class ChatCommitSpec extends SparkSpec {
     script.zipWithIndex.foreach { case ((session, taskId, query, _), i) =>
       val now = ts(100 + 10 * i)
       svc.processTurn(session, query, Some(taskId), now)
-      val out = loop.processQuery(session, query, memory, tasks, tools, messages,
-        Some(taskId), now)
+      val out = loop.processQuery(session, query,
+        Snapshot.of(ChatService.State(memory, tasks, messages), Nil), Some(taskId), now)
       val w = out.writes
       memory = w.records.foldLeft(memory)(_.addRecord(_))
       memory = w.puts.foldLeft(memory)(_.putData(_))
