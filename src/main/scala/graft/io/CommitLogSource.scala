@@ -179,11 +179,45 @@ object CommitLog {
     * target.) `tmp` must be on the names' filesystem. If every name is
     * taken, nothing is published. */
   private[io] def publish(tmp: Path, names: Iterator[Path]): Unit =
-    try names.exists { dst =>
+    try names.find { dst =>
       try { Files.createLink(dst, tmp); true }
       catch { case _: FileAlreadyExistsException => false }
+    }.foreach { seg =>
+      // <topic>/p<N>/seg-*: wake the topic's in-process tails, if any
+      Option(signals.get(topicKey(seg.getParent.getParent))).foreach(_.bump())
     }
     finally Files.deleteIfExists(tmp)
+
+  /** Counts the segments published into one topic directory by this
+    * JVM, so that an in-process tail can wait for the next one instead
+    * of sleeping a fixed interval. A tail reads [[generation]] before it
+    * reads the log and, when it found nothing, waits with
+    * [[awaitAfter]]: a segment published after that read has moved the
+    * count, so the wakeup is never lost. Writers in other processes do
+    * not signal; a tail still sees them when its wait times out. */
+  final class AppendSignal {
+    private var gen = 0L
+    def generation: Long = synchronized(gen)
+    private[io] def bump(): Unit = synchronized { gen += 1; notifyAll() }
+    /** Wait until the count differs from `seen` or `ms` have passed. */
+    def awaitAfter(seen: Long, ms: Long): Unit = synchronized {
+      val deadline = System.nanoTime() + ms * 1000000L
+      var left = ms
+      while (gen == seen && left > 0) {
+        wait(left)
+        left = (deadline - System.nanoTime()) / 1000000L
+      }
+    }
+  }
+
+  // one entry per topic a tail has opened in this JVM, kept for the
+  // JVM's life; a publish to an untailed topic signals nothing
+  private val signals = new java.util.concurrent.ConcurrentHashMap[Path, AppendSignal]()
+  private def topicKey(dir: Path): Path = dir.toAbsolutePath.normalize
+
+  /** The JVM-wide [[AppendSignal]] of the topic at `dir`. */
+  def appendSignal(dir: String): AppendSignal =
+    signals.computeIfAbsent(topicKey(Paths.get(dir)), _ => new AppendSignal)
 
   /** Idempotent epoch write for `foreachBatch` sinks: hash-partition
     * the rows by key across `nPartitions` log partitions and write ONE

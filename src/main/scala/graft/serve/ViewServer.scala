@@ -19,8 +19,10 @@ import org.apache.spark.sql.DataFrame
   * Query params: `key=<k>` filters events to one key (one chat
   * session); `replay=all` starts from offset 0 instead of the tail;
   * `n=<count>` closes the stream after that many events (long-poll
-  * semantics for clients that can't hold SSE open). The stream polls
-  * the topic every 50 ms and sends a heartbeat comment after 1 s idle. */
+  * semantics for clients that can't hold SSE open). The stream reads
+  * the topic again as soon as this JVM publishes a segment to it, and
+  * at least every 50 ms (a writer in another process), and sends a
+  * heartbeat comment after 1 s idle. */
 final case class SseTail(topicDir: String)
 
 /** Thrown by a route handler when the request itself is malformed; the
@@ -47,6 +49,12 @@ final class BadRequest(message: String) extends RuntimeException(message)
   * `rowCap` backstops that contract — an unbounded DataFrame
   * accidentally registered as a route serves its first `rowCap` rows
   * instead of collecting the world into the driver.
+  *
+  * The server runs with `TCP_NODELAY` on every accepted socket (see
+  * [[ViewServer.httpServer]]): the JDK server writes a response's
+  * headers and its body as separate TCP segments, and with Nagle on
+  * the body waits for the client's delayed ACK of the headers, which
+  * put ~40 ms on every reply and SSE write.
   */
 final class ViewServer(
     routes: Map[String, () => DataFrame],
@@ -54,7 +62,7 @@ final class ViewServer(
     sseRoutes: Map[String, SseTail] = Map.empty,
     rowCap: Int = 1000) extends AutoCloseable {
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+  private val server = ViewServer.httpServer()
   // held-open SSE streams must not starve other routes: handlers run on
   // a pool, not the dispatch thread
   private val pool = java.util.concurrent.Executors.newCachedThreadPool()
@@ -123,8 +131,10 @@ final class ViewServer(
     * `replay=all`); poll the log, push each new record as an event
     * whose `id` is the offsets-after-it; heartbeat comments while
     * idle so a dead peer is detected. The cursor is per-partition
-    * metadata (the consumer-group contract of a queue). Each poll
-    * (every 50 ms) is one pass over the topic: `CommitLog.readRange`
+    * metadata (the consumer-group contract of a queue). Each poll is
+    * one pass over the topic that writes its events and flushes once;
+    * an idle stream waits on the topic's `CommitLog.appendSignal` for
+    * at most 50 ms before the next. `CommitLog.readRange`
     * reads each partition from its cursor to the end, which still
     * streams every segment from segment 0, so a poll costs O(topic
     * bytes), not O(new records) (ROADMAP direction 4b). The start at
@@ -157,10 +167,12 @@ final class ViewServer(
     ex.sendResponseHeaders(200, 0)
     val os = ex.getResponseBody
     val cursor = scala.collection.mutable.Map[Int, Long]() ++ start
+    val appended = CommitLog.appendSignal(tail.topicDir)
     var sent = 0
     var lastBeat = System.nanoTime()
     try {
       while (!closed && sent < maxEvents) {
+        val seen = appended.generation
         var progressed = false
         CommitLog.partitionIds(tail.topicDir).foreach { pid =>
           CommitLog.readRange(tail.topicDir, pid, cursor.getOrElse(pid, 0L), Long.MaxValue)
@@ -174,19 +186,19 @@ final class ViewServer(
                   val data =
                     s"""{"ts": $ts, "key": ${jsonOrNull(k)}, "value": ${jsonOrNull(v)}}"""
                   os.write(s"id: $id\ndata: $data\n\n".getBytes(UTF_8))
-                  os.flush()
                   sent += 1
                   progressed = true
                 }
               }
             }
         }
-        if (!progressed && sent < maxEvents) {
+        if (progressed) os.flush()
+        else {
           if ((System.nanoTime() - lastBeat) / 1000000L >= heartbeatMs) {
             os.write(": hb\n\n".getBytes(UTF_8)); os.flush()
             lastBeat = System.nanoTime()
           }
-          Thread.sleep(pollMs)
+          appended.awaitAfter(seen, pollMs)
         }
       }
     } catch {
@@ -201,5 +213,25 @@ final class ViewServer(
     closed = true
     server.stop(0)
     pool.shutdownNow()
+  }
+}
+
+object ViewServer {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** A JDK `HttpServer` on an ephemeral loopback port whose accepted
+    * sockets have `TCP_NODELAY` set, so a response leaves when its
+    * handler finishes. JDK 17 has no per-server switch:
+    * `sun.net.httpserver.ServerConfig` reads the JVM-wide system
+    * property `sun.net.httpserver.nodelay` once, in its static
+    * initializer, and the dispatcher sets the socket option only when
+    * it was true. So the property is set here, when absent, before the
+    * server is created; a value the user set (`-D...=false`) wins. Any
+    * `HttpServer` created in this JVM before the first call keeps the
+    * JDK default for the whole JVM, so every in-process server,
+    * test stubs included, should come from here. */
+  def httpServer(): HttpServer = {
+    System.getProperties.putIfAbsent(NoDelay, "true")
+    HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   }
 }

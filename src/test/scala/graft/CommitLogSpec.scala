@@ -197,6 +197,21 @@ class CommitLogSpec extends SparkSpec {
     assert(temps == Seq(".tmp-x.log"), s"temp files left behind: $temps")
   }
 
+  test("a publish signals the topic's append monitor, under any spelling of its path") {
+    val dir = tmpDir("graft_cl_signal")
+    val signal = CommitLog.appendSignal(dir)
+    assert(CommitLog.appendSignal(s"$dir/p0/..") eq signal)
+    val seen = signal.generation
+    CommitLog.append(dir, 1, Seq((1L, "k", "v")))
+    assert(signal.generation == seen + 1)
+    // a count already past `seen` returns at once instead of waiting
+    val t0 = System.nanoTime()
+    signal.awaitAfter(seen, 60000L)
+    assert((System.nanoTime() - t0) / 1e9 < 30.0)
+    // an idle topic times out
+    signal.awaitAfter(signal.generation, 20L)
+  }
+
   test("partition predicates prune directories; projections prune columns") {
     import spark.implicits._
     val dir = tmpDir("graft_cl_prune")

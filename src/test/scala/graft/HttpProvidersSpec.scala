@@ -1,9 +1,8 @@
 package graft
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import graft.provider.{LlmMap, MessagesBlockProvider, OpenCompatProvider, OllamaStyleProvider, TextGetProvider}
 
 /** The concrete HTTP provider adapters against an in-process JDK
@@ -15,7 +14,9 @@ import graft.provider.{LlmMap, MessagesBlockProvider, OpenCompatProvider, Ollama
 class HttpProvidersSpec extends SparkSpec {
 
   private def withServer(routes: Map[String, HttpExchange => (Int, String)])(f: String => Unit): Unit = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    // the server's own factory: the first HttpServer of the JVM fixes
+    // TCP_NODELAY for every later one (ViewServer.httpServer)
+    val server = graft.serve.ViewServer.httpServer()
     routes.foreach { case (path, handler) =>
       server.createContext(path, (ex: HttpExchange) => {
         val (status, body) = handler(ex)

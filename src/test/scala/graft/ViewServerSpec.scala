@@ -100,4 +100,26 @@ class ViewServerSpec extends SparkSpec {
       assert(okStatus == 200 && okBody.contains(""""value": "v""""))
     }
   }
+
+  test("a POST reply leaves when its handler finishes: no delayed-ACK stall") {
+    val server = new ViewServer(routes = Map.empty, postRoutes = Map("/echo" -> (b => b)))
+    val port = server.start()
+    // one keep-alive HTTP/1.1 connection: with Nagle on, every reply's
+    // body waits ~40 ms for the client's delayed ACK of its headers
+    val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    try {
+      val rtts = (1 to 30).map { i =>
+        val t0 = System.nanoTime()
+        val resp = client.send(
+          HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/echo"))
+            .POST(HttpRequest.BodyPublishers.ofString(s"""{"i": $i}""")).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 200 && resp.body() == s"""{"i": $i}""")
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val median = (rtts(14) + rtts(15)) / 2
+      assert(median < 15.0, s"median round trip $median ms")
+      assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    } finally server.close()
+  }
 }
