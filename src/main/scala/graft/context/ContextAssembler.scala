@@ -21,19 +21,14 @@ import org.apache.spark.sql.functions.{col, lit}
   * Spark job and analyzes no plan: the session's newest records
   * ([[MemoryStore.tail]]), its topics and KV pairs by keyword score
   * ([[MemoryStore.byRelevance]]), its latest summary, the task row and
-  * its latest log, the resolved tools by name and the history by
-  * `(ts, seq)`. This case class is the Dataset entry point:
-  * [[assemble]] and [[historyContext]] collect the session's and the
-  * task's rows of the stores and apply the same rules.
+  * its latest log (the last appended of the newest `ts`), the resolved
+  * tools by name and the history by `(ts, seq)`. This case class is
+  * the Dataset entry point: [[assemble]] collects the session's and
+  * the task's rows of the stores and applies the same rules.
   */
 final case class ContextAssembler(
     memory: MemoryStore, tasks: TaskStore, tools: Dataset[Tool]) {
   import ContextAssembler._
-
-  /** Conversation history slice (client.py:177-183, P8), oldest turn
-    * first: `seq` restarts at 0 every turn, so order by `(ts, seq)`. */
-  def historyContext(messages: Dataset[Message], sessionId: String, fromSeq: Long): String =
-    history(messages.filter(col("sessionId") === sessionId).collect().toSeq, sessionId, fromSeq)
 
   /** The full prompt ([[ContextAssembler.prompt]]) over the session's
     * and the task's rows of the stores, with the tools resolved last
@@ -82,7 +77,7 @@ action respond in JSON enclosed in triple backticks with fields:
         .map(e => e.key -> e.value), query, cfg.relevantKvNum).map("- " + _))).flatten
     val taskPart = taskId.toSeq.flatMap { id =>
       rows.tasks.rows.find(_.taskId == id).map(taskBlock) ++
-        rows.logs.rows.filter(_.taskId == id).maxByOption(_.ts)
+        rows.logs.rows.filter(_.taskId == id).sortBy(_.ts).lastOption
           .map(l => s"Latest log [${l.ts}]: ${l.responseSummary}")
     }
     val toolLines = rows.tools.sortBy(_.name)
@@ -109,6 +104,8 @@ action respond in JSON enclosed in triple backticks with fields:
         case (label, v) if v != null && v.nonEmpty => s"$label: $v"
       }).mkString("\n")
 
+  /** Conversation history slice (client.py:177-183, P8), oldest turn
+    * first: `seq` restarts at 0 every turn, so order by `(ts, seq)`. */
   private def history(messages: Seq[Message], sessionId: String, fromSeq: Long): String =
     section("Conversation", messages.filter(m => m.sessionId == sessionId && m.seq >= fromSeq)
       .sortBy(m => (m.ts, m.seq)).map(m => s"${m.role}: ${m.content}")).getOrElse("")

@@ -2,12 +2,14 @@ package graft.memory
 
 import java.sql.Timestamp
 
+import graft.agent.ReactLoop
 import graft.functions.AgentText
 import graft.functions.TextFunctions
 import graft.model._
 import graft.provider.Provider
+import graft.serve.{ChatService, Snapshot}
+import graft.task.TaskStore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Memory-state knobs (reference configs.json:6-13). */
@@ -22,7 +24,7 @@ final case class MemoryConfig(
 /** The outcome of one memory-update step (reference memory.py:263-357):
   * analysis of the latest record batch proposing a summary, topic
   * upserts, and key facts. Produced by parsing the provider's fenced
-  * JSON; consumed by [[MemoryStore.applyUpdate]]. */
+  * JSON; folded into the stores by [[graft.serve.Snapshot.commit]]. */
 final case class MemoryAnalysis(
     summary: Option[String],
     topics: Seq[(String, String)], // insertion order matters for eviction
@@ -37,7 +39,7 @@ final case class MemoryAnalysis(
   * rules on the companion: the record tail ([[MemoryStore.tail]]), the
   * keyword top-k ([[MemoryStore.byRelevance]]) and the analysis read
   * ([[MemoryStore.analyze]]); [[analyze]] and [[update]] collect the
-  * session's rows and apply the same rules. Batch work over `records`,
+  * rows and apply the same rules. Batch work over `records`,
   * the unbounded append log, stays partition-parallel (the corpus
   * queries over every session, `graft.streaming`). `summaries`/`topics`/`kv`
   * are *bounded* state (≤3 / ≤maxTopics / grows slowly) — the per-batch
@@ -48,9 +50,8 @@ final case class MemoryAnalysis(
   * ([[MemoryStore.retainSummaries]], [[MemoryStore.mergeTopics]],
   * [[MemoryStore.factRows]]), shared by streaming (keyed per session
   * via flatMapGroupsWithState, graft.streaming) and serving
-  * (`graft.serve.Snapshot.commit` folds each turn into driver-held
-  * rows); [[applyUpdate]] runs the topic and fact rules itself and
-  * retains summaries with a ranking window.
+  * (`graft.serve.Snapshot.commit` folds each write into driver-held
+  * rows, the stores' one write path).
   */
 final case class MemoryStore(
     records: Dataset[MemoryRecord],
@@ -68,26 +69,16 @@ final case class MemoryStore(
       .agg(max_by($"text", $"ts").as("text"), max($"ts").as("ts"))
   }
 
-  /** P4 — point lookup (memory.py:257-261). */
-  def getData(sessionId: String, key: String): Option[String] = {
+  /** The full update step (ST2; memory.py:263-357): [[analyze]], then
+    * [[graft.serve.Snapshot.commit]] of the analysis alone over the
+    * collected store. Deterministic given a stub provider. */
+  def update(sessionId: String, provider: Provider, now: Timestamp): MemoryStore = {
     val sp = spark; import sp.implicits._
-    kv.filter($"sessionId" === sessionId && $"key" === key)
-      .collect().headOption.map(_.value)
+    analyze(sessionId, provider).fold(this) { a =>
+      Snapshot.of(ChatService.State(this, TaskStore.empty(sp), sp.emptyDataset[Message]), Nil)
+        .commit(sessionId, now, ReactLoop.Writes(Nil, Nil, Nil, None, Nil, Some(a))).state.memory
+    }
   }
-
-  /** Append one record (memory.py:249-251). */
-  def addRecord(rec: MemoryRecord): MemoryStore =
-    copy(records = records.union(spark.createDataset(Seq(rec))(records.encoder)))
-
-  /** Put one KV fact (memory.py:253-255): last-writer-wins upsert. */
-  def putData(entry: KvEntry): MemoryStore =
-    copy(kv = kv.filter(!(col("sessionId") === entry.sessionId && col("key") === entry.key))
-      .union(spark.createDataset(Seq(entry))(kv.encoder)))
-
-  /** The full update step (ST2; memory.py:263-357): [[analyze]] then
-    * [[applyUpdate]]. Deterministic given a stub provider. */
-  def update(sessionId: String, provider: Provider, now: Timestamp): MemoryStore =
-    analyze(sessionId, provider).fold(this)(applyUpdate(sessionId, _, now))
 
   /** The read half of the update step: [[MemoryStore.analyze]] over
     * the session's collected records and topics. */
@@ -95,37 +86,6 @@ final case class MemoryStore(
     val own = col("sessionId") === sessionId
     MemoryStore.analyze(records.filter(own).collect().toSeq, topics.filter(own).collect().toSeq,
       sessionId, config, provider)
-  }
-
-  /** Merge an analysis into state with the reference's exact ordering:
-    * summary insert + retention (keep newest savedSummaryNum), then
-    * topics in insertion order (existing → description/ts/freq+1 update;
-    * new at capacity → evict min (frequency, lastUpdated) first), then
-    * key facts appended as fact_<ts>_<i> KV rows. */
-  def applyUpdate(sessionId: String, analysis: MemoryAnalysis, now: Timestamp): MemoryStore = {
-    val sp = spark; import sp.implicits._
-    // --- summary retention (A9)
-    val withSummary = analysis.summary match {
-      case Some(s) =>
-        val appended = summaries.union(Seq(Summary(sessionId, now, s)).toDS())
-        val w = Window.partitionBy($"sessionId").orderBy(desc("ts"))
-        appended.withColumn("rn", row_number().over(w))
-          .filter($"rn" <= config.savedSummaryNum).drop("rn").as[Summary]
-      case None => summaries
-    }
-    // --- topic upsert + capacity eviction (A7/A8): sequential fold on
-    // the (bounded, ≤maxTopics) collected per-session state. The fold
-    // itself is the pure MemoryStore.mergeTopics — shared verbatim with
-    // the streaming formulation (graft.streaming.MemoryUpdates).
-    val others = topics.filter($"sessionId" =!= sessionId)
-    val merged = MemoryStore.mergeTopics(
-      topics.filter($"sessionId" === sessionId).collect().toSeq,
-      sessionId, analysis.topics, now, config.maxTopics)
-    val newTopics = others.union(merged.toDS())
-    // --- key facts → KV
-    val factRows = MemoryStore.factRows(sessionId, analysis.keyFacts, now)
-    val newKv = if (factRows.isEmpty) kv else kv.union(factRows.toDS())
-    copy(summaries = withSummary, topics = newTopics, kv = newKv)
   }
 }
 
@@ -177,7 +137,8 @@ object MemoryStore {
     * each proposed (name, description) in order — existing topic gets
     * description/lastUpdated/frequency+1; a new topic at capacity first
     * evicts the min (frequency, lastUpdated) victim. Pure function,
-    * shared by the batch store and the streaming state operator. */
+    * shared by [[graft.serve.Snapshot.commit]] and the streaming state
+    * operator. */
   def mergeTopics(
       current: Seq[Topic], sessionId: String,
       updates: Seq[(String, String)], now: Timestamp, maxTopics: Int): Seq[Topic] = {
@@ -205,10 +166,11 @@ object MemoryStore {
       KvEntry(sessionId, s"fact_${now.getTime}_$i", fact)
     }
 
-  /** Summary retention as a pure fold (memory.py:305-312): append then
-    * keep the newest `cap`. */
+  /** Summary retention as a pure fold (memory.py:305-312): the
+    * reference keys summaries by timestamp, so `added` replaces a
+    * summary at its `ts`; then keep the newest `cap`, newest first. */
   def retainSummaries(current: Seq[Summary], added: Summary, cap: Int): Seq[Summary] =
-    (current :+ added).sortBy(-_.ts.getTime).take(cap)
+    (current.filterNot(_.ts == added.ts) :+ added).sortBy(-_.ts.getTime).take(cap)
 
   /** The reference's update prompt shape (memory.py:279-295). */
   def updatePrompt(recordsText: String, currentTopics: Seq[String]): String = {

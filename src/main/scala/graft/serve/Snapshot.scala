@@ -42,11 +42,13 @@ final case class Snapshot(
   def zone: ZoneId =
     DateTimeUtils.getZoneId(records.spark.conf.get("spark.sql.session.timeZone"))
 
-  /** Fold one turn's writes in, in the order the batch store operators
-    * would apply them: records and last-writer-wins KV puts, the task
-    * log and files, the messages, then the memory analysis
-    * ([[MemoryStore.applyUpdate]] on rows: the session's summaries and
-    * topics, then its key facts). A table the turn does not write keeps
+  /** Fold one turn's writes in with the stores' write rules, the only
+    * implementation of each: records appended, KV puts last writer wins,
+    * the task log ([[TaskStore.appendLogRows]]), files and messages
+    * appended, then the memory analysis: the session's summaries
+    * ([[MemoryStore.retainSummaries]]) and topics
+    * ([[MemoryStore.mergeTopics]]), then its key facts
+    * ([[MemoryStore.factRows]]). A table the turn does not write keeps
     * its rows: `tasks` always, `files` when nothing was extracted. */
   def commit(sessionId: String, now: Timestamp, w: ReactLoop.Writes): Snapshot = {
     // `f` applied to the session's own rows of `t`, the others kept

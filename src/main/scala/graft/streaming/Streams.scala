@@ -76,8 +76,9 @@ object Streams {
   /** ST2 — the reference's memory-update trigger as a keyed state
     * operator: every micro-batch folds that session's analysis events
     * (in event-time order) through the SAME pure merge functions as the
-    * batch store ([[MemoryStore.mergeTopics]]/[[MemoryStore.retainSummaries]]),
-    * so streaming state provably converges to the batch formulation.
+    * served commit, [[graft.serve.Snapshot.commit]]
+    * ([[MemoryStore.mergeTopics]]/[[MemoryStore.retainSummaries]]), so
+    * streaming state provably converges to the row fold.
     * State is bounded by construction (≤3 summaries, ≤maxTopics topics)
     * — no timeout needed for correctness. */
   def memoryUpdates(

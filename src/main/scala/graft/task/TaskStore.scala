@@ -6,7 +6,6 @@ import graft.functions.AgentText
 import graft.model._
 import graft.provider.Provider
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Task-state knobs (reference configs.json:15, task.py:620). */
@@ -17,8 +16,9 @@ final case class TaskConfig(maxLogs: Int = 50, summaryCap: Int = 200)
   *
   * Scale stance: `logs`/`files` are the growing relations — the task
   * view is one partition-parallel aggregation over them and the (small)
-  * task dimension together; per-task retention is one ranking window
-  * over (taskId, ts).
+  * task dimension together. A log is appended, and the task's logs
+  * trimmed, by [[TaskStore.appendLogRows]] on driver rows, the one
+  * write rule ([[graft.serve.Snapshot.commit]] applies it).
   */
 final case class TaskStore(
     tasks: Dataset[TaskRow],
@@ -27,18 +27,6 @@ final case class TaskStore(
     config: TaskConfig = TaskConfig()) {
 
   private def spark: SparkSession = tasks.sparkSession
-
-  /** Append a log record then trim to the newest maxLogs per task
-    * (task.py:617-623); the response summary is capped with ellipsis
-    * (task.py:505-509, T3). */
-  def appendLog(log: TaskLog): TaskStore = {
-    val sp = spark; import sp.implicits._
-    val appended = logs.union(Seq(TaskStore.capLog(log, config)).toDS())
-    val w = Window.partitionBy($"taskId").orderBy(desc("ts"))
-    val trimmed = appended.withColumn("rn", row_number().over(w))
-      .filter($"rn" <= config.maxLogs).drop("rn").as[TaskLog]
-    copy(logs = trimmed)
-  }
 
   /** Upsert scalar task fields; title derived from target when absent
     * (task.py:350-370, F9). */
@@ -94,13 +82,6 @@ final case class TaskStore(
       // one row per task: sorted in one partition, not range-shuffled
       .coalesce(1).sortWithinPartitions(col("taskId"))
   }
-
-  /** J3 — file lookup across a task's logs (app.py:450-481). */
-  def findFile(taskId: Long, filename: String): Option[ExtractedFileRow] = {
-    val sp = spark; import sp.implicits._
-    files.filter($"taskId" === taskId && $"filename" === filename)
-      .orderBy(desc("logTs")).collect().headOption
-  }
 }
 
 object TaskStore {
@@ -111,16 +92,16 @@ object TaskStore {
       spark.emptyDataset[ExtractedFileRow], config)
   }
 
-  /** A log record with its response summary capped (task.py:505-509, T3). */
-  private def capLog(log: TaskLog, config: TaskConfig): TaskLog =
-    log.copy(responseSummary = AgentText.summarize(log.responseSummary, config.summaryCap))
-
-  /** [[TaskStore.appendLog]] as a pure fold over collected rows: append
-    * the capped record, then keep that task's newest `maxLogs`. */
+  /** Append `log` with its response summary capped with ellipsis
+    * (task.py:505-509, T3), then keep that task's newest `maxLogs`
+    * (task.py:617-623): the newest by `ts`, and among equal `ts` the
+    * later appended, as the reference keeps the last appended. The
+    * task's logs are listed oldest first, equal `ts` in append order;
+    * `current` is in append order. */
   def appendLogRows(current: Seq[TaskLog], log: TaskLog, config: TaskConfig): Seq[TaskLog] = {
-    val added = capLog(log, config)
+    val added = log.copy(responseSummary = AgentText.summarize(log.responseSummary, config.summaryCap))
     val (same, others) = current.partition(_.taskId == added.taskId)
-    others ++ (same :+ added).sortBy(-_.ts.getTime).take(config.maxLogs)
+    others ++ (same :+ added).sortBy(_.ts).takeRight(config.maxLogs)
   }
 
   /** One LLM-identified extractable span (task.py:221-229). */

@@ -18,11 +18,25 @@ class AgentStoresSpec extends SparkSpec {
 
   private def ts(s: Long) = new Timestamp(s * 1000L)
 
+  /** The stores after [[Snapshot.commit]] of each `(now, writes)` in
+    * turn, for session `s`, starting from `memory` and `tasks`. */
+  private def commit(memory: MemoryStore, tasks: TaskStore)(
+      turns: (Timestamp, ReactLoop.Writes)*): ChatService.State = {
+    import spark.implicits._
+    turns.foldLeft(Snapshot.of(ChatService.State(memory, tasks, spark.emptyDataset[Message]), Nil)) {
+      case (snap, (now, w)) => snap.commit("s", now, w)
+    }.state
+  }
+
+  private def writes(analysis: Option[MemoryAnalysis] = None, puts: Seq[KvEntry] = Nil,
+      log: Option[TaskLog] = None) = ReactLoop.Writes(Nil, Nil, puts, log, Nil, analysis)
+
+  private def topics(updates: (String, String)*) =
+    writes(analysis = Some(MemoryAnalysis(None, updates, Seq.empty)))
+
   test("memory: summary retention keeps the newest savedSummaryNum (Q12: 3, not 10)") {
-    var m = MemoryStore.empty(spark)
-    (1 to 5).foreach { i =>
-      m = m.applyUpdate("s", MemoryAnalysis(Some(s"sum$i"), Seq.empty, Seq.empty), ts(i))
-    }
+    val m = commit(MemoryStore.empty(spark), TaskStore.empty(spark))((1 to 5).map(i =>
+      ts(i) -> writes(analysis = Some(MemoryAnalysis(Some(s"sum$i"), Seq.empty, Seq.empty)))): _*).memory
     val kept = m.summaries.collect().map(_.text).toSet
     assert(kept == Set("sum3", "sum4", "sum5"))
     import spark.implicits._
@@ -32,13 +46,11 @@ class AgentStoresSpec extends SparkSpec {
 
   test("memory: topic eviction removes min (frequency, lastUpdated) at capacity") {
     val cfg = MemoryConfig(maxTopics = 3)
-    var m = MemoryStore.empty(spark, cfg)
-    m = m.applyUpdate("s", MemoryAnalysis(None,
-      Seq("a" -> "da", "b" -> "db", "c" -> "dc"), Seq.empty), ts(1))
-    // bump frequency of a and c so b is the eviction victim
-    m = m.applyUpdate("s", MemoryAnalysis(None,
-      Seq("a" -> "da2", "c" -> "dc2"), Seq.empty), ts(2))
-    m = m.applyUpdate("s", MemoryAnalysis(None, Seq("d" -> "dd"), Seq.empty), ts(3))
+    val m = commit(MemoryStore.empty(spark, cfg), TaskStore.empty(spark))(
+      ts(1) -> topics("a" -> "da", "b" -> "db", "c" -> "dc"),
+      // bump frequency of a and c so b is the eviction victim
+      ts(2) -> topics("a" -> "da2", "c" -> "dc2"),
+      ts(3) -> topics("d" -> "dd")).memory
     val names = m.topics.collect().map(_.name).toSet
     assert(names == Set("a", "c", "d"), s"got $names")
     val a = m.topics.collect().find(_.name == "a").get
@@ -51,9 +63,9 @@ class AgentStoresSpec extends SparkSpec {
         """```json
 {"summary": "s1", "topics": {"t1": "desc1"}, "key_facts": ["f1", "f2"]}
 ```"""))
-    var m = MemoryStore.empty(spark)
-    m = m.addRecord(MemoryRecord("s", ts(1), "hello world"))
-    m = m.update("s", stub, ts(2))
+    import spark.implicits._
+    val m = MemoryStore.empty(spark).copy(records = Seq(MemoryRecord("s", ts(1), "hello world")).toDS())
+      .update("s", stub, ts(2))
     assert(m.summaries.collect().map(_.text).toSeq == Seq("s1"))
     assert(m.topics.collect().map(_.name).toSeq == Seq("t1"))
     val facts = m.kv.collect().sortBy(_.key)
@@ -61,19 +73,18 @@ class AgentStoresSpec extends SparkSpec {
   }
 
   test("memory: putData is last-writer-wins") {
-    var m = MemoryStore.empty(spark)
-    m = m.putData(KvEntry("s", "k", "v1"))
-    m = m.putData(KvEntry("s", "k", "v2"))
-    assert(m.getData("s", "k").contains("v2"))
-    assert(m.getData("s", "missing").isEmpty)
+    val kv = commit(MemoryStore.empty(spark), TaskStore.empty(spark))(
+      ts(1) -> writes(puts = Seq(KvEntry("s", "k", "v1"))),
+      ts(2) -> writes(puts = Seq(KvEntry("s", "k", "v2")))).memory.kv.collect()
+    assert(kv.filter(_.key == "k").map(_.value).toSeq == Seq("v2"))
+    assert(kv.length == 1)
   }
 
   test("task: appendLog trims to maxLogs and caps summaries at 200 chars") {
     val cfg = TaskConfig(maxLogs = 3)
-    var t = TaskStore.empty(spark, cfg)
-    (1 to 5).foreach { i =>
-      t = t.appendLog(TaskLog(1L, ts(i), s"q$i", "r" * 250, Seq(s"e$i"), Map.empty, null))
-    }
+    val t = commit(MemoryStore.empty(spark), TaskStore.empty(spark, cfg))((1 to 5).map(i =>
+      ts(i) -> writes(log = Some(TaskLog(1L, ts(i), s"q$i", "r" * 250, Seq(s"e$i"), Map.empty, null)))
+    ): _*).tasks
     val kept = t.logs.collect().sortBy(_.ts.getTime)
     assert(kept.length == 3)
     assert(kept.map(_.query).toSeq == Seq("q3", "q4", "q5"))
@@ -81,9 +92,9 @@ class AgentStoresSpec extends SparkSpec {
   }
 
   test("task: tasksView computes logs/files counts and last_updated") {
-    var t = TaskStore.empty(spark)
-    t = t.upsertTask(TaskRow(1L, "plan", "", "create a meal plan. x", "", "", ts(1)))
-    t = t.appendLog(TaskLog(1L, ts(5), "q", "r", Seq.empty, Map.empty, null))
+    val t = commit(MemoryStore.empty(spark), TaskStore.empty(spark)
+      .upsertTask(TaskRow(1L, "plan", "", "create a meal plan. x", "", "", ts(1))))(
+      ts(5) -> writes(log = Some(TaskLog(1L, ts(5), "q", "r", Seq.empty, Map.empty, null)))).tasks
     val row = t.tasksView.collect().head
     assert(row.getAs[String]("title") == "A Meal Plan") // F9 derivation
     assert(row.getAs[Long]("logs_count") == 1L)

@@ -19,16 +19,16 @@ class IoAndUdfsSpec extends SparkSpec {
 
   test("memory and task snapshots round-trip through parquet (Q1 fixed)") {
     val dir = Files.createTempDirectory("graft_io").toString
-    var m = MemoryStore.empty(spark)
-    m = m.addRecord(MemoryRecord("s", ts(1), "r1")).putData(KvEntry("s", "k", "v"))
+    import spark.implicits._
+    val m = MemoryStore.empty(spark).copy(records = Seq(MemoryRecord("s", ts(1), "r1")).toDS(),
+      kv = Seq(KvEntry("s", "k", "v")).toDS())
     StoreIO.saveMemory(m, s"$dir/mem")
     val m2 = StoreIO.loadMemory(spark, s"$dir/mem")
     assert(m2.records.collect().map(_.content).toSeq == Seq("r1"))
-    assert(m2.getData("s", "k").contains("v"))
+    assert(m2.kv.collect().toSeq == Seq(KvEntry("s", "k", "v")))
 
-    var t = TaskStore.empty(spark)
-    t = t.upsertTask(TaskRow(1L, "plan", "T", "tg", "", "", ts(1)))
-      .appendLog(TaskLog(1L, ts(2), "q", "r", Seq("e"), Map("m" -> "x"), null))
+    val t = TaskStore.empty(spark).upsertTask(TaskRow(1L, "plan", "T", "tg", "", "", ts(1)))
+      .copy(logs = Seq(TaskLog(1L, ts(2), "q", "r", Seq("e"), Map("m" -> "x"), null)).toDS())
     StoreIO.saveTasks(t, s"$dir/task")
     val t2 = StoreIO.loadTasks(spark, s"$dir/task")
     assert(t2.tasks.collect().map(_.title).toSeq == Seq("T"))

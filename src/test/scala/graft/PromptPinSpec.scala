@@ -48,11 +48,10 @@ class PromptPinSpec extends SparkSpec {
     val kv = Seq(
       KvEntry("s1", "k2", "shards tip"), KvEntry("s1", "k0", "unrelated"),
       KvEntry("s2", "k", "memory dedup shards"), KvEntry("s1", "k1", "memory tip")).toDS()
-    // three summaries through retention at 2, plus another session's newer one
-    val memory = Seq(1L -> "sum one", 2L -> "sum two", 3L -> "sum three")
-      .foldLeft(MemoryStore(records, spark.emptyDataset[Summary], topics, kv, cfg)) {
-        case (m, (t, text)) => m.applyUpdate("s1", MemoryAnalysis(Some(text), Nil, Nil), ts(t))
-      }.applyUpdate("s2", MemoryAnalysis(Some("other summary"), Nil, Nil), ts(9))
+    // what retention at 2 keeps of three summaries, plus another session's newer one
+    val summaries = Seq(Summary("s1", ts(2), "sum two"), Summary("s1", ts(3), "sum three"),
+      Summary("s2", ts(9), "other summary")).toDS()
+    val memory = MemoryStore(records, summaries, topics, kv, cfg)
     val tasks = TaskStore(
       Seq(TaskRow(8L, "plan", "Other", "x", "y", "z", ts(1)),
         TaskRow(7L, "plan", "Ship it", "target text", "plan text", "half done", ts(1))).toDS(),
@@ -162,7 +161,8 @@ class PromptPinSpec extends SparkSpec {
 
   test("analyze: a session without topics says None") {
     val provider = new Recording
-    MemoryStore.empty(spark).addRecord(MemoryRecord("s", ts(5), "only"))
+    import spark.implicits._
+    MemoryStore.empty(spark).copy(records = Seq(MemoryRecord("s", ts(5), "only")).toDS())
       .analyze("s", provider)
     assert(provider.prompts.toSeq === Seq(MemoryStore.updatePrompt(s"[${ts(5)}] only", Nil)))
     assert(provider.prompts.head.contains("Current Topics: None"))

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.context.ContextAssembler
-import graft.memory.{MemoryAnalysis, MemoryConfig, MemoryStore}
+import graft.memory.{MemoryConfig, MemoryStore}
 import graft.model._
 import graft.provider.{Provider, StubProvider}
 import graft.serve.ChatService
@@ -115,10 +115,9 @@ class ServedTurnSpec extends SparkSpec {
     val kv = Seq(
       KvEntry("s1", "k2", "shards tip"), KvEntry("s1", "k0", "unrelated"),
       KvEntry("s2", "k", "memory dedup shards"), KvEntry("s1", "k1", "memory tip")).toDS()
-    val memory = Seq(1L -> "sum one", 2L -> "sum two", 3L -> "sum three")
-      .foldLeft(MemoryStore(records, spark.emptyDataset[Summary], topics, kv, cfg)) {
-        case (m, (t, text)) => m.applyUpdate("s1", MemoryAnalysis(Some(text), Nil, Nil), ts(t))
-      }.applyUpdate("s2", MemoryAnalysis(Some("other summary"), Nil, Nil), ts(9))
+    val summaries = Seq(Summary("s1", ts(2), "sum two"), Summary("s1", ts(3), "sum three"),
+      Summary("s2", ts(9), "other summary")).toDS()
+    val memory = MemoryStore(records, summaries, topics, kv, cfg)
     val tasks = TaskStore(
       Seq(TaskRow(8L, "plan", "Other", "x", "y", "z", ts(1)),
         TaskRow(7L, "plan", "Ship it", "target text", "plan text", "half done", ts(1))).toDS(),

@@ -2,16 +2,20 @@ package graft
 
 import java.sql.Timestamp
 
+import graft.agent.ReactLoop
 import graft.memory.{MemoryAnalysis, MemoryStore}
+import graft.model.Message
+import graft.serve.{ChatService, Snapshot}
 import graft.streaming.Streams
 import graft.streaming.Streams.{AnalysisEvent, MemorySnapshot}
+import graft.task.TaskStore
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Structured Streaming semantics: windowed aggregations agree with
   * their batch twins, and the keyed memory-state operator converges to
-  * the batch store's fold (SURVEY.md §2.9).
+  * the row fold the served commit applies (SURVEY.md §2.9).
   */
 class StreamingSpec extends SparkSpec {
 
@@ -150,13 +154,13 @@ class StreamingSpec extends SparkSpec {
     val last = spark.table("mem_test").as[MemorySnapshot].collect()
       .maxBy(_.ts.getTime)
 
-    // batch: same analyses through MemoryStore.applyUpdate
-    var store = MemoryStore.empty(spark,
-      graft.memory.MemoryConfig(savedSummaryNum = 3, maxTopics = 2))
-    updates.foreach { ev =>
-      store = store.applyUpdate("s", MemoryAnalysis(
-        Option(ev.summary), ev.topicNames.zip(ev.topicDescriptions), ev.keyFacts), ev.ts)
-    }
+    // batch: same analyses through the row fold, Snapshot.commit
+    val store = updates.foldLeft(Snapshot.of(ChatService.State(
+      MemoryStore.empty(spark, graft.memory.MemoryConfig(savedSummaryNum = 3, maxTopics = 2)),
+      TaskStore.empty(spark), spark.emptyDataset[Message]), Nil)) { (snap, ev) =>
+      snap.commit("s", ev.ts, ReactLoop.Writes(Nil, Nil, Nil, None, Nil, Some(MemoryAnalysis(
+        Option(ev.summary), ev.topicNames.zip(ev.topicDescriptions), ev.keyFacts))))
+    }.state.memory
     val batchTopics = store.topics.collect().map(t => t.name -> t.frequency).toMap
     val streamTopics = last.topicNames.zip(last.topicFrequencies).toMap
     assert(streamTopics == batchTopics, s"stream=$streamTopics batch=$batchTopics")
