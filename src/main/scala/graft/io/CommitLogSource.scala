@@ -5,6 +5,7 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import graft.functions.AgentText
 import graft.functions.AgentText.{JNum, JObj}
@@ -258,11 +259,16 @@ object CommitLog {
   }
 
   /** Iterate one partition's records in `[from, until)` offset range,
-    * streaming each segment and closing it when exhausted. */
+    * streaming each segment and closing it when exhausted. A line in
+    * the range that does not decode (a torn or damaged record) fails the
+    * read with an `IOException` that names its segment and offset:
+    * skipping it would silently renumber every later offset. */
   def readRange(dir: String, pid: Int, from: Long, until: Long): Iterator[(Long, Long, String, String)] = {
     val segs = segments(dir, pid)
     var off = -1L
+    var cur: Path = null // the segment the last line pulled came from
     segs.iterator.flatMap { seg =>
+      cur = seg
       new Iterator[String] {
         private val reader = Files.newBufferedReader(seg, UTF_8)
         private var nextLine = advance()
@@ -277,7 +283,11 @@ object CommitLog {
     }.map { line => off += 1; (off, line) }
       .filter { case (o, _) => o >= from && o < until }
       .map { case (o, line) =>
-        val (ts, k, v) = decodeLine(line); (o, ts, k, v)
+        val (ts, k, v) =
+          try decodeLine(line)
+          catch { case NonFatal(e) => throw new java.io.IOException(
+            s"commit log: undecodable record at offset $o of partition $pid, in segment $cur", e) }
+        (o, ts, k, v)
       }
   }
 

@@ -4,7 +4,6 @@ import graft.QueryDef
 import graft.det
 import graft.sources.Tables._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -48,15 +47,8 @@ object Absorption {
     QueryDef(
       "ev_absorption_time",
       Some(s"""
-        WITH seq AS (
-          SELECT event_type,
-                 lag(event_type) OVER (PARTITION BY user_id
-                   ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id) AS prev_type
-          FROM events),
-        t AS (
-          SELECT prev_type, event_type, COUNT(*) AS cnt
-          FROM seq WHERE prev_type IS NOT NULL AND prev_type <> 'purchase'
-          GROUP BY prev_type, event_type),
+        WITH ${Analytics.sqlTransitionCounts(
+          "prev_type IS NOT NULL AND prev_type <> 'purchase'")},
         -- denominators INCLUDE transitions into the absorbing state:
         -- Q must be strictly substochastic or E never converges
         den AS (SELECT prev_type, SUM(cnt) AS tot FROM t GROUP BY prev_type),
@@ -74,13 +66,8 @@ object Absorption {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val uw = Window.partitionBy($"user_id")
-          .orderBy(unix_timestamp($"ts"), $"event_id")
-        val t = events(s, d)
-          .select($"event_type", lag($"event_type", 1).over(uw).as("prev_type"))
-          .filter($"prev_type".isNotNull && $"prev_type" =!= "purchase")
-          .groupBy($"prev_type", $"event_type")
-          .agg(count(lit(1)).as("cnt"))
+        val t = Analytics.transitionCounts(events(s, d),
+          $"prev_type".isNotNull && $"prev_type" =!= "purchase")
         val den = t.groupBy($"prev_type".as("d_pt"))
           .agg(sum($"cnt").as("tot"))
         val q = t.filter($"event_type" =!= "purchase")

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.sources.Tables._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -23,6 +24,34 @@ object Acf {
 
   private val maxLag = 7
 
+  /** Each event type's daily value series `z` (a DECIMAL sum in cents,
+    * as BIGINT), keyed by (event_type, day). */
+  private[operators] def dailyByType(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"), col("ts").cast("date").as("day"))
+      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long").as("z"))
+
+  /** SQL mirror of [[dailyByType]], the `daily` CTE. */
+  private[operators] def sqlDailyByType: String = """daily AS (
+          SELECT event_type, CAST(ts AS DATE) AS day,
+                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
+          FROM events GROUP BY 1, 2)"""
+
+  /** The lag pairs `(event_type, lag, x, y)` of a `lagged` frame that
+    * carries `z` and its lags `z1`..`z<maxLag>`: one union arm per lag,
+    * rows whose lag is null dropped. */
+  private[operators] def lagArms(lagged: DataFrame, maxLag: Int): DataFrame =
+    (1 to maxLag).map { k =>
+      lagged.filter(col(s"z$k").isNotNull)
+        .select(col("event_type"), lit(k).as("lag"),
+          col("z").as("x"), col(s"z$k").as("y"))
+    }.reduce(_ unionByName _)
+
+  /** SQL mirror of [[lagArms]] over a `lagged` CTE. */
+  private[operators] def sqlLagArms(maxLag: Int): String =
+    (1 to maxLag).map(k => s"""
+          SELECT event_type, $k AS lag, z AS x, z$k AS y
+          FROM lagged WHERE z$k IS NOT NULL""").mkString(" UNION ALL ")
+
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -30,19 +59,13 @@ object Acf {
         val lagCols = (1 to maxLag).map(k =>
           s"lag(z, $k) OVER (PARTITION BY event_type ORDER BY day) AS z$k")
           .mkString(",\n                 ")
-        val arms = (1 to maxLag).map(k => s"""
-          SELECT event_type, $k AS lag, z AS x, z$k AS y
-          FROM lagged WHERE z$k IS NOT NULL""").mkString(" UNION ALL ")
         Some(s"""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
-          FROM events GROUP BY 1, 2),
+        WITH $sqlDailyByType,
         lagged AS (
           SELECT event_type, z,
                  $lagCols
           FROM daily),
-        pairs AS ($arms),
+        pairs AS (${sqlLagArms(maxLag)}),
         mom AS (
           SELECT event_type, lag, COUNT(*) AS n,
                  CAST(SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS DOUBLE) AS sxy,
@@ -61,18 +84,12 @@ object Acf {
       },
       (s, d) => {
         import s.implicits._
-        val daily = events(s, d)
-          .groupBy($"event_type", $"ts".cast("date").as("day"))
-          .agg((sum($"value".cast(DecimalType(18, 2))) * 100).cast("long").as("z"))
+        val daily = dailyByType(events(s, d))
         val w = Window.partitionBy($"event_type").orderBy($"day")
         val lagged = daily.select(
           ($"event_type" +: $"z" +:
             (1 to maxLag).map(k => lag($"z", k).over(w).as(s"z$k"))): _*)
-        val pairs = (1 to maxLag).map { k =>
-          lagged.filter(col(s"z$k").isNotNull)
-            .select($"event_type", lit(k).as("lag"),
-              $"z".as("x"), col(s"z$k").as("y"))
-        }.reduce(_ unionByName _)
+        val pairs = lagArms(lagged, maxLag)
         val dx = $"x".cast(DecimalType(38, 0))
         val dy = $"y".cast(DecimalType(38, 0))
         val mom = pairs.groupBy($"event_type", $"lag")

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{det, QueryDef}
 import graft.sources.Tables.events
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,6 +18,30 @@ import org.apache.spark.sql.functions._
   * ordering decision identical across engines.
   */
 object Analytics {
+
+  /** Per-user event-type bigrams `(prev_type, event_type, cnt)`: one
+    * lag() pass over each user's events in (ts second, event_id) order,
+    * counting the rows that pass `keep`. */
+  private[operators] def transitionCounts(ev: DataFrame, keep: Column): DataFrame = {
+    val uw = Window.partitionBy(col("user_id"))
+      .orderBy(unix_timestamp(col("ts")), col("event_id"))
+    ev.select(col("event_type"), lag(col("event_type"), 1).over(uw).as("prev_type"))
+      .filter(keep)
+      .groupBy(col("prev_type"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"))
+  }
+
+  /** SQL mirror of [[transitionCounts]], `keep` a condition on
+    * `prev_type`: the `seq` and `t` CTEs. */
+  private[operators] def sqlTransitionCounts(keep: String): String = s"""seq AS (
+          SELECT event_type,
+                 lag(event_type) OVER (PARTITION BY user_id
+                   ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id) AS prev_type
+          FROM events),
+        t AS (
+          SELECT prev_type, event_type, COUNT(*) AS cnt
+          FROM seq WHERE $keep
+          GROUP BY prev_type, event_type)"""
 
   val defs: Seq[QueryDef] = Seq(
     // Staged funnel: users who viewed; clicked at-or-after their first
@@ -186,16 +211,8 @@ object Analytics {
     // identical doubles in both engines, no decimal routing needed).
     QueryDef(
       "ev_markov",
-      Some("""
-        WITH seq AS (
-          SELECT event_type,
-                 lag(event_type) OVER (PARTITION BY user_id
-                   ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id) AS prev_type
-          FROM events),
-        t AS (
-          SELECT prev_type, event_type, COUNT(*) AS cnt
-          FROM seq WHERE prev_type IS NOT NULL
-          GROUP BY prev_type, event_type)
+      Some(s"""
+        WITH ${sqlTransitionCounts("prev_type IS NOT NULL")}
         SELECT prev_type AS from_type, event_type AS to_type,
                CAST(cnt AS BIGINT) AS cnt,
                CAST(cnt AS DOUBLE) /
@@ -205,13 +222,7 @@ object Analytics {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val uw = Window.partitionBy($"user_id")
-          .orderBy(unix_timestamp($"ts"), $"event_id")
-        val t = events(s, d)
-          .select($"event_type", lag($"event_type", 1).over(uw).as("prev_type"))
-          .filter($"prev_type".isNotNull)
-          .groupBy($"prev_type", $"event_type")
-          .agg(count(lit(1)).as("cnt"))
+        val t = transitionCounts(events(s, d), $"prev_type".isNotNull)
         t.select(
             $"prev_type".as("from_type"), $"event_type".as("to_type"), $"cnt",
             ($"cnt".cast("double") /

@@ -39,30 +39,11 @@ object BbitMinhash {
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "dd_bbit_minhash", {
-        val h = sqlH32("sh")
-        val minAggs = minhashParams.indices
-          .map(i => s"MIN(${sqlUhash(h, i)}) AS mh$i").mkString(", ")
-        val bandSelects = (0 until 4)
-          .map(b => s"SELECT doc_id, $b AS band_no, mh${2 * b} AS ba, mh${2 * b + 1} AS bb FROM sigs")
-          .mkString(" UNION ALL ")
         val matchSum = minhashParams.indices
           .map(i => s"CASE WHEN sx.mh$i % $M = sy.mh$i % $M THEN 1 ELSE 0 END")
           .mkString(" + ")
         Some(s"""
-          WITH sh AS (${Dedup.sqlShinglesFrom("documents")}),
-          sigs AS (SELECT doc_id, $minAggs FROM sh GROUP BY doc_id),
-          bands AS ($bandSelects),
-          cand AS (
-            SELECT DISTINCT x.doc_id AS i, y.doc_id AS j
-            FROM bands x JOIN bands y
-              ON x.band_no = y.band_no AND x.ba = y.ba AND x.bb = y.bb
-             AND x.doc_id < y.doc_id),
-          sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-          common AS (
-            SELECT a.doc_id AS i, b.doc_id AS j, COUNT(*) AS common
-            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-            WHERE EXISTS (SELECT 1 FROM cand c WHERE c.i = a.doc_id AND c.j = b.doc_id)
-            GROUP BY 1, 2),
+          WITH ${Dedup.sqlLshCandCtes("documents")},
           scored AS (
             SELECT c.i, c.j,
                    CAST($matchSum AS BIGINT) AS n_match,

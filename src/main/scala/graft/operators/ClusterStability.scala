@@ -30,13 +30,7 @@ object ClusterStability {
     QueryDef(
       "er_cluster_stability",
       Some(s"""
-        WITH RECURSIVE ${EntityRes.sqlPairs},
-        medges AS (
-          SELECT p.a, p.b FROM pairs p
-          JOIN customer x ON p.a = x.c_custkey
-          JOIN customer y ON p.b = y.c_custkey
-          WHERE x.c_nationkey = y.c_nationkey
-            AND x.c_mktsegment = y.c_mktsegment),
+        WITH RECURSIVE ${EntityRes.sqlMatchEdges},
         dropped AS (
           SELECT a, b FROM medges
           WHERE ${PortableHash.sqlH32(

@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.det
 import graft.sources.Tables._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -31,11 +32,40 @@ object Cointegration {
 
   private val egCrit = "-3.37" // Engle-Granger τ, α=0.05, constant, n≈50
 
-  val defs: Seq[QueryDef] = Seq(
-    QueryDef(
-      "ts_cointegration",
-      Some(s"""
-        WITH daily AS (
+  /** The daily purchase series `y` and the daily total of every other
+    * event type `x` (each a DECIMAL sum in cents, as BIGINT), keyed
+    * by `day`. */
+  private[operators] def purchaseOtherDaily(ev: DataFrame): DataFrame = {
+    val z = lit(0).cast(DecimalType(18, 2))
+    ev.groupBy(col("ts").cast("date").as("day"))
+      .agg(
+        (sum(when(col("event_type") === "purchase",
+          col("value").cast(DecimalType(18, 2))).otherwise(z)) * 100)
+          .cast("long").as("y"),
+        (sum(when(col("event_type") =!= "purchase",
+          col("value").cast(DecimalType(18, 2))).otherwise(z)) * 100)
+          .cast("long").as("x"))
+  }
+
+  /** The OLS fit y = alpha + beta·x over `daily` rows, one row
+    * `(beta, alpha)`: exact integer moments, then one fixed-order
+    * double expression. */
+  private[operators] def dailyFit(daily: DataFrame): DataFrame = {
+    val dx = col("x").cast(DecimalType(38, 0))
+    val dy = col("y").cast(DecimalType(38, 0))
+    val mo = daily.agg(count(lit(1)).as("n"),
+      sum(dx).as("sx"), sum(dy).as("sy"),
+      sum(dx * col("y")).as("sxy"), sum(dx * col("x")).as("sxx"))
+    val beta = (col("sxy").cast("double") - col("sx").cast("double") * col("sy") / col("n")) /
+      (col("sxx").cast("double") - col("sx").cast("double") * col("sx") / col("n"))
+    mo.select(beta.as("beta"),
+      (col("sy").cast("double") / col("n")
+        - beta * (col("sx").cast("double") / col("n"))).as("alpha"))
+  }
+
+  /** SQL mirror of [[purchaseOtherDaily]] (`daily`) and of [[dailyFit]]
+    * over the rows `SELECT * FROM $fitRows` (`mo`, `fit`). */
+  private[operators] def sqlDailyFit(fitRows: String): String = s"""daily AS (
           SELECT CAST(ts AS DATE) AS day,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
                    THEN CAST(value AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END)
@@ -49,7 +79,7 @@ object Cointegration {
                  SUM(CAST(x AS HUGEINT)) AS sx, SUM(CAST(y AS HUGEINT)) AS sy,
                  SUM(CAST(x AS HUGEINT) * y) AS sxy,
                  SUM(CAST(x AS HUGEINT) * x) AS sxx
-          FROM daily),
+          FROM $fitRows),
         fit AS (
           SELECT (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy / n)
                    / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n) AS beta,
@@ -57,7 +87,13 @@ object Cointegration {
                    - (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy / n)
                      / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n)
                      * (CAST(sx AS DOUBLE) / n) AS alpha
-          FROM mo),
+          FROM mo)"""
+
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef(
+      "ts_cointegration",
+      Some(s"""
+        WITH ${sqlDailyFit("daily")},
         res AS (
           SELECT d.day,
                  CAST(round((d.y - f.alpha - f.beta * d.x) * 1e6) / 1e6
@@ -95,26 +131,8 @@ object Cointegration {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val z = lit(0).cast(DecimalType(18, 2))
-        val daily = events(s, d)
-          .groupBy($"ts".cast("date").as("day"))
-          .agg(
-            (sum(when($"event_type" === "purchase",
-              $"value".cast(DecimalType(18, 2))).otherwise(z)) * 100)
-              .cast("long").as("y"),
-            (sum(when($"event_type" =!= "purchase",
-              $"value".cast(DecimalType(18, 2))).otherwise(z)) * 100)
-              .cast("long").as("x"))
-        val dx = $"x".cast(DecimalType(38, 0))
-        val dy = $"y".cast(DecimalType(38, 0))
-        val mo = daily.agg(count(lit(1)).as("n"),
-          sum(dx).as("sx"), sum(dy).as("sy"),
-          sum(dx * $"y").as("sxy"), sum(dx * $"x").as("sxx"))
-        val betaC = ($"sxy".cast("double") - $"sx".cast("double") * $"sy" / $"n") /
-          ($"sxx".cast("double") - $"sx".cast("double") * $"sx" / $"n")
-        val fit = mo.select(betaC.as("beta"),
-          ($"sy".cast("double") / $"n"
-            - betaC * ($"sx".cast("double") / $"n")).as("alpha"))
+        val daily = purchaseOtherDaily(events(s, d))
+        val fit = dailyFit(daily)
         val res = daily.crossJoin(fit)
           .select($"day",
             (round(($"y" - $"alpha" - $"beta" * $"x") * 1e6) / 1e6)

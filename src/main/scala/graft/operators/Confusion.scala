@@ -20,23 +20,8 @@ object Confusion {
 
     QueryDef(
       "ta_lang_confusion",
-      Some("""
-        WITH tg AS (
-          SELECT doc_id, lang,
-                 unnest(list_distinct(list_transform(
-                   range(1, length(text) - 1), i -> substr(text, i, 3)))) AS tri
-          FROM documents WHERE length(text) >= 3),
-        prof AS (
-          SELECT lang AS plang, tri FROM (
-            SELECT lang, tri, COUNT(*) AS df,
-                   ROW_NUMBER() OVER (PARTITION BY lang
-                                      ORDER BY COUNT(*) DESC, tri) AS rn
-            FROM tg GROUP BY lang, tri)
-          WHERE rn <= 40),
-        scored AS (
-          SELECT t.doc_id, t.lang, p.plang, COUNT(*) AS overlap
-          FROM tg t JOIN prof p ON t.tri = p.tri
-          GROUP BY t.doc_id, t.lang, p.plang),
+      Some(s"""
+        WITH ${TextAnalysis.sqlLangScored},
         best AS (
           SELECT doc_id, lang, plang AS guess FROM (
             SELECT doc_id, lang, plang,
@@ -55,20 +40,7 @@ object Confusion {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val tg = documents(s, d)
-          .filter(length($"text") >= 3)
-          .select($"doc_id", $"lang", explode(TextAnalysis.trigramUdf($"text")).as("tri"))
-        val wProf = Window.partitionBy($"lang").orderBy(desc("df"), asc("tri"))
-        val prof = tg.groupBy($"lang", $"tri").agg(count(lit(1)).as("df"))
-          .withColumn("rn", row_number().over(wProf))
-          .filter($"rn" <= 40)
-          .select($"lang".as("plang"), $"tri")
-        val scored = tg.join(broadcast(prof), "tri")
-          .groupBy($"doc_id", $"lang", $"plang")
-          .agg(count(lit(1)).as("overlap"))
-        val wBest = Window.partitionBy($"doc_id").orderBy(desc("overlap"), asc("plang"))
-        val best = scored.withColumn("rn", row_number().over(wBest))
-          .filter($"rn" === 1)
+        val best = TextAnalysis.langGuesses(documents(s, d))
           .select($"doc_id", $"lang", $"plang".as("guess"))
         val conf = best.groupBy($"lang", $"guess").agg(count(lit(1)).as("n"))
         val tot = conf.groupBy($"lang").agg(sum($"n").as("t"))

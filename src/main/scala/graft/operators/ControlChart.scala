@@ -5,7 +5,6 @@ import graft.det
 import graft.sources.Tables._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Shewhart individuals control chart with Western Electric run rules
   * (WE rules 1, 2 and 4; Montgomery, Intro to SQC): center line =
@@ -30,10 +29,7 @@ object ControlChart {
     QueryDef(
       "ts_control_chart",
       Some(s"""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
-          FROM events GROUP BY 1, 2),
+        WITH ${Acf.sqlDailyByType},
         mr AS (
           SELECT event_type, day, z,
                  abs(z - lag(z) OVER (PARTITION BY event_type ORDER BY day)) AS r
@@ -75,10 +71,7 @@ object ControlChart {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val daily = events(s, d)
-          .groupBy($"event_type", $"ts".cast("date").as("day"))
-          .agg((sum($"value".cast(DecimalType(18, 2))) * 100)
-            .cast("long").as("z"))
+        val daily = Acf.dailyByType(events(s, d))
         val w = Window.partitionBy($"event_type").orderBy($"day")
         val mr = daily.withColumn("r", abs($"z" - lag($"z", 1).over(w)))
         val st = mr.groupBy($"event_type".as("s_et"))

@@ -110,16 +110,37 @@ object Decontam {
       .select(col("e_doc"), col("s"), col("e"))
   }
 
-  /** Shared oracle CTE chain ending in `merged(e_doc, s, e)` (plus the
-    * intermediates), 1-based positions. */
-  private val spanCtes = s"""
-        toks AS (
+  /** Every document's token 8-grams, `g(doc_id, pos, gram)` with
+    * 1-based positions (after `toks`). */
+  private[operators] def sqlGrams: String = s"""toks AS (
           SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         g AS (
           SELECT doc_id, i AS pos,
                  tk[i] || '_' || tk[i+1] || '_' || tk[i+2] || '_' || tk[i+3] || '_' ||
                  tk[i+4] || '_' || tk[i+5] || '_' || tk[i+6] || '_' || tk[i+7] AS gram
-          FROM toks, UNNEST(range(1, len(tk) - ${K - 2})) AS r(i)),
+          FROM toks, UNNEST(range(1, len(tk) - ${K - 2})) AS r(i))"""
+
+  /** The token spans of a `spans(e_doc, s, e)` CTE merged per document
+    * where they overlap or touch: `merged(e_doc, island, s, e)` (after
+    * `ord` and `isl`, gaps-and-islands over a running max). */
+  private[operators] def sqlMergeSpans: String = """ord AS (
+          SELECT e_doc, s, e,
+                 MAX(e) OVER (PARTITION BY e_doc ORDER BY s, e
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+          FROM spans),
+        isl AS (
+          SELECT e_doc, s, e,
+                 SUM(CASE WHEN pmax IS NULL OR s > pmax + 1 THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY e_doc ORDER BY s, e) AS island
+          FROM ord),
+        merged AS (
+          SELECT e_doc, island, MIN(s) AS s, MAX(e) AS e
+          FROM isl GROUP BY e_doc, island)"""
+
+  /** Shared oracle CTE chain ending in `merged(e_doc, s, e)` (plus the
+    * intermediates), 1-based positions. */
+  private val spanCtes = s"""
+        $sqlGrams,
         ev AS (SELECT doc_id, pos, gram FROM g WHERE doc_id % $evalMod = $evalRes),
         tr AS (SELECT doc_id, pos, gram FROM g WHERE doc_id % $evalMod <> $evalRes),
         m AS (
@@ -135,19 +156,7 @@ object Decontam {
           SELECT e_doc, MIN(e_pos) AS s, MAX(e_pos) + ${K - 1} AS e
           FROM runs GROUP BY e_doc, t_doc, diag, rid),
         spans AS (SELECT DISTINCT e_doc, s, e FROM spans0),
-        ord AS (
-          SELECT e_doc, s, e,
-                 MAX(e) OVER (PARTITION BY e_doc ORDER BY s, e
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-          FROM spans),
-        isl AS (
-          SELECT e_doc, s, e,
-                 SUM(CASE WHEN pmax IS NULL OR s > pmax + 1 THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY e_doc ORDER BY s, e) AS island
-          FROM ord),
-        merged AS (
-          SELECT e_doc, island, MIN(s) AS s, MAX(e) AS e
-          FROM isl GROUP BY e_doc, island),
+        $sqlMergeSpans,
         base AS (
           SELECT doc_id, len(string_split(text, ' ')) AS n_tokens
           FROM documents WHERE doc_id % $evalMod = $evalRes)"""

@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   *    banding ([[simhashPairs64]]) — exact recall for Hamming ≤ 4, a
   *    band equi-join with a first-match-band filter instead of a
   *    DISTINCT shuffle, codegen'd popcount verify;
-  *  - [[allPairsJaccard]] / [[jaccardForPairsBitset]] are retained as
-  *    driver-bound small-corpus baselines for specs ONLY — they
-  *    broadcast the corpus and must not appear in a query's dataflow.
+  *  - [[allPairsJaccard]] is retained as a driver-bound small-corpus
+  *    baseline for specs ONLY — it broadcasts the corpus and must not
+  *    appear in a query's dataflow.
   */
 object Dedup {
 
@@ -251,41 +251,6 @@ object Dedup {
         (!coalesce(col("exact_hit"), lit(false)) && col("near_dup_of").isNull).as("keep"))
   }
 
-  /** [[jaccardForPairs]] over a broadcast bitset signature table — same
-    * results, popcount loop instead of per-pair string-set intersection.
-    * SMALL-CORPUS BASELINE ONLY (collects every shingle array to the
-    * driver): used in specs to cross-check the distributed verifier,
-    * never in a query's dataflow. */
-  def jaccardForPairsBitset(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val arrs = shingleArrays(docs).as[(Long, Seq[String])].collect()
-    val dict = arrs.iterator.flatMap(_._2).toArray.distinct.sorted.zipWithIndex.toMap
-    val nWords = (dict.size + 63) / 64
-    val table: Map[Long, (Array[Long], Int)] = arrs.map { case (id, shs) =>
-      val w = new Array[Long](nWords)
-      shs.foreach { sh => val b = dict(sh); w(b >> 6) |= 1L << (b & 63) }
-      id -> (w, shs.size)
-    }.toMap
-    val tableB = spark.sparkContext.broadcast(table)
-    pairs.select(col("i").cast("long"), col("j").cast("long")).as[(Long, Long)]
-      .mapPartitions { it =>
-        val t = tableB.value
-        it.flatMap { case (i, j) =>
-          (t.get(i), t.get(j)) match {
-            case (Some((bi, ni)), Some((bj, nj))) =>
-              var common = 0
-              var w = 0
-              while (w < bi.length) {
-                common += java.lang.Long.bitCount(bi(w) & bj(w)); w += 1
-              }
-              Some((i, j, common * 1.0 / (ni + nj - common)))
-            case _ => None
-          }
-        }
-      }.toDF("i", "j", "jac")
-  }
-
   /** Exact all-pairs Jaccard ≥ minJac via broadcast shingle bitsets.
     * SMALL-CORPUS BASELINE ONLY — the signature table is built
     * driver-side, so this caps out at driver memory. The production
@@ -335,7 +300,17 @@ object Dedup {
   /** SQL mirror of [[minhashLshPairs]]: CTE chain ending in
     * `pairs(i, j, jac)`. Splice with `WITH $sqlLshPairsCtes, ...`;
     * `src` names the (doc_id, text) relation to deduplicate. */
-  private[operators] def sqlLshPairsCtes(src: String = "documents"): String = {
+  private[operators] def sqlLshPairsCtes(src: String = "documents"): String =
+    s"""${sqlLshCandCtes(src)},
+          pairs AS (
+            SELECT i, j, (common * 1.0 / (sa.n + sb.n - common)) AS jac
+            FROM common JOIN sizes sa ON i = sa.doc_id JOIN sizes sb ON j = sb.doc_id
+            WHERE (common * 1.0 / (sa.n + sb.n - common)) >= 0.7)"""
+
+  /** The candidate half of [[sqlLshPairsCtes]]: shingles `sh`, MinHash
+    * `sigs`, `bands`, banded candidates `cand(i, j)`, shingle-set
+    * `sizes` and each candidate's shared-shingle count `common`. */
+  private[operators] def sqlLshCandCtes(src: String): String = {
     val h = sqlH32("sh")
     val minAggs = minhashParams.indices
       .map(i => s"MIN(${sqlUhash(h, i)}) AS mh$i").mkString(", ")
@@ -355,11 +330,7 @@ object Dedup {
             SELECT a.doc_id AS i, b.doc_id AS j, COUNT(*) AS common
             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
             WHERE EXISTS (SELECT 1 FROM cand c WHERE c.i = a.doc_id AND c.j = b.doc_id)
-            GROUP BY 1, 2),
-          pairs AS (
-            SELECT i, j, (common * 1.0 / (sa.n + sb.n - common)) AS jac
-            FROM common JOIN sizes sa ON i = sa.doc_id JOIN sizes sb ON j = sb.doc_id
-            WHERE (common * 1.0 / (sa.n + sb.n - common)) >= 0.7)"""
+            GROUP BY 1, 2)"""
   }
 
   /** Large-star step (Kiveris et al., "Connected Components in MapReduce
@@ -531,6 +502,34 @@ object Dedup {
       .select(col("doc_id"), col("rep").as("cluster_rep"), col("cluster_size"))
   }
 
+  /** SQL mirror of [[duplicateClusters]]'s labelling over a `pairs(i, j)`
+    * CTE: the symmetric `edges`, their transitive closure `walk` (a
+    * recursive CTE: the WITH needs RECURSIVE) and each linked doc's
+    * smallest reachable id, `mins(doc_id, mn)`. */
+  private[operators] def sqlClosureMins: String = """edges AS (SELECT i AS a, j AS b FROM pairs
+                  UNION ALL SELECT j, i FROM pairs),
+        walk(a, b) AS (
+          SELECT a, b FROM edges
+          UNION
+          SELECT w.a, e.b FROM walk w JOIN edges e ON w.b = e.a),
+        mins AS (SELECT a AS doc_id, MIN(b) AS mn FROM walk GROUP BY a)"""
+
+  /** [[sqlClosureMins]] plus `reps(doc_id, cluster_rep)`: every
+    * document with its cluster's smallest id. */
+  private[operators] def sqlClusterReps: String = s"""$sqlClosureMins,
+        reps AS (
+          SELECT d.doc_id,
+                 COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_rep
+          FROM documents d LEFT JOIN mins m ON d.doc_id = m.doc_id)"""
+
+  /** SQL mirror of [[duplicateClusters]] (ordered by doc_id), ending a
+    * WITH list that defines `pairs(i, j)`. */
+  private[operators] def sqlDuplicateClusters: String = s"""$sqlClusterReps
+        SELECT doc_id, cluster_rep,
+               CAST(COUNT(*) OVER (PARTITION BY cluster_rep) AS BIGINT) AS cluster_size
+        FROM reps
+        ORDER BY doc_id"""
+
   /** Exact near-dup pairs (Jaccard ≥ minJac) via prefix filtering
     * (Bayardo et al. "Scaling Up All Pairs Similarity Search", WWW'07;
     * Xiao et al. PPJoin). Under ANY total order on tokens, a pair with
@@ -670,21 +669,7 @@ object Dedup {
       "dd_dup_clusters",
       Some(s"""
         WITH RECURSIVE ${sqlLshPairsCtes()},
-        edges AS (SELECT i AS a, j AS b FROM pairs
-                  UNION ALL SELECT j, i FROM pairs),
-        walk(a, b) AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT w.a, e.b FROM walk w JOIN edges e ON w.b = e.a),
-        mins AS (SELECT a AS doc_id, MIN(b) AS mn FROM walk GROUP BY a),
-        reps AS (
-          SELECT d.doc_id,
-                 COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_rep
-          FROM documents d LEFT JOIN mins m ON d.doc_id = m.doc_id)
-        SELECT doc_id, cluster_rep,
-               CAST(COUNT(*) OVER (PARTITION BY cluster_rep) AS BIGINT) AS cluster_size
-        FROM reps
-        ORDER BY doc_id
+        $sqlDuplicateClusters
       """.trim),
       (s, d) => {
         val docs = documents(s, d)

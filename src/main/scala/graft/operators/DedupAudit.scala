@@ -32,13 +32,7 @@ object DedupAudit {
       "dd_greedy_vs_cc",
       Some(s"""
         WITH RECURSIVE ${Dedup.sqlLshPairsCtes()},
-        edges AS (SELECT i AS a, j AS b FROM pairs
-                  UNION ALL SELECT j, i FROM pairs),
-        walk(a, b) AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT w.a, e.b FROM walk w JOIN edges e ON w.b = e.a),
-        mins AS (SELECT a AS doc_id, MIN(b) AS mn FROM walk GROUP BY a),
+        ${Dedup.sqlClosureMins},
         g AS (SELECT COUNT(DISTINCT j) AS greedy FROM pairs),
         c AS (SELECT COUNT(*) AS cc FROM mins WHERE mn < doc_id),
         np AS (SELECT COUNT(*) AS n_pairs FROM pairs)
@@ -73,12 +67,8 @@ object DedupAudit {
     // node-keyed shuffles.
     QueryDef(
       "gx_knn_degree",
-      Some("""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e0 AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
+      Some(s"""
+        WITH ${Graph.sqlHashedEdges("e0")},
         e AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0),
         deg AS (SELECT src AS node, COUNT(*) AS deg FROM e GROUP BY src),
         nd AS (
@@ -95,9 +85,7 @@ object DedupAudit {
         ORDER BY k
       """.trim),
       (s, d) => {
-        val e = Graph.canonicalEdges(lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b")))
+        val e = Graph.canonicalEdges(Graph.hashedPairs(lineitem(s, d)))
         val sym = e.select(col("u").as("src"), col("v").as("dst"))
           .union(e.select(col("v").as("src"), col("u").as("dst")))
         val deg = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))

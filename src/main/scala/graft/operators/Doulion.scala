@@ -59,9 +59,7 @@ object Doulion {
       """.trim)
       },
       (s, d) => {
-        val edges = lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b"))
+        val edges = Graph.hashedPairs(lineitem(s, d))
         val e = Graph.canonicalEdges(edges)
         val coin = PortableHash.h32(concat(
           col("u").cast("string"), lit(":"), col("v").cast("string")))

@@ -57,9 +57,7 @@ object EgoDensity {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val edges = lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b"))
+        val edges = Graph.hashedPairs(lineitem(s, d))
         val e = Graph.canonicalEdges(edges)
         val sym = e.select($"u", $"v")
           .unionByName(e.select($"v".as("u"), $"u".as("v")))

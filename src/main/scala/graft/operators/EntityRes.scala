@@ -188,6 +188,29 @@ object EntityRes {
       JOIN customer cy ON cy.c_custkey = c.b
       WHERE levenshtein(cx.c_name, cy.c_name) <= 1)""".trim
 
+  /** SQL mirror of [[matchEdges]]: [[sqlPairs]] and the pairs that also
+    * agree on nation and market segment, `medges(a, b)`. */
+  private[operators] def sqlMatchEdges: String = s"""$sqlPairs,
+        medges AS (
+          SELECT p.a, p.b FROM pairs p
+          JOIN customer x ON p.a = x.c_custkey
+          JOIN customer y ON p.b = y.c_custkey
+          WHERE x.c_nationkey = y.c_nationkey
+            AND x.c_mktsegment = y.c_mktsegment)"""
+
+  /** [[sqlMatchEdges]] labelled as `Dedup.ccLabels` labels it: the
+    * symmetric `edges`, their transitive closure `walk` (a recursive
+    * CTE: the WITH needs RECURSIVE) and each linked customer's smallest
+    * reachable key, `mins(c_custkey, mn)`. */
+  private[operators] def sqlMatchMins: String = s"""$sqlMatchEdges,
+        edges AS (SELECT a AS u, b AS v FROM medges
+                  UNION ALL SELECT b, a FROM medges),
+        walk(u, v) AS (
+          SELECT u, v FROM edges
+          UNION
+          SELECT w.u, e.v FROM walk w JOIN edges e ON w.v = e.u),
+        mins AS (SELECT u AS c_custkey, MIN(v) AS mn FROM walk GROUP BY u)"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // Edit-distance-1 name pairs via deletion-neighborhood join.
@@ -208,20 +231,7 @@ object EntityRes {
     QueryDef(
       "er_entity_clusters",
       Some(s"""
-        WITH RECURSIVE $sqlPairs,
-        medges AS (
-          SELECT p.a, p.b FROM pairs p
-          JOIN customer x ON p.a = x.c_custkey
-          JOIN customer y ON p.b = y.c_custkey
-          WHERE x.c_nationkey = y.c_nationkey
-            AND x.c_mktsegment = y.c_mktsegment),
-        edges AS (SELECT a AS u, b AS v FROM medges
-                  UNION ALL SELECT b, a FROM medges),
-        walk(u, v) AS (
-          SELECT u, v FROM edges
-          UNION
-          SELECT w.u, e.v FROM walk w JOIN edges e ON w.v = e.u),
-        mins AS (SELECT u AS c_custkey, MIN(v) AS mn FROM walk GROUP BY u),
+        WITH RECURSIVE $sqlMatchMins,
         reps AS (
           SELECT c.c_custkey,
                  COALESCE(LEAST(c.c_custkey, m.mn), c.c_custkey) AS entity_rep

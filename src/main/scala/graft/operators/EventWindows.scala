@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.det._
 import graft.sources.Tables._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -13,6 +14,43 @@ import org.apache.spark.sql.expressions.Window
   * don't round-trip identically between Spark (µs) and DuckDB (ns).
   */
 object EventWindows {
+
+  /** Each event with `t` (unix seconds) and `session_no`: per user, in
+    * event_id order, a new session starts after a gap of more than
+    * 1800 s (gaps-and-islands over a lag window). */
+  private def gapSessions(ev: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
+    ev.withColumn("t", unix_timestamp(col("ts")))
+      .withColumn("prev_t", lag(col("t"), 1).over(w))
+      .withColumn("is_new",
+        when(col("prev_t").isNull || col("t") - col("prev_t") > 1800, 1).otherwise(0))
+      .withColumn("session_no",
+        sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** Per-user sessions from the native `session_window` over whole-second
+    * timestamps with gap `gap`: start, event count and value sum. */
+  private def nativeSessions(ev: DataFrame, gap: Column): DataFrame =
+    ev.withColumn("tsec", timestamp_seconds(unix_timestamp(col("ts"))))
+      .groupBy(col("user_id"), session_window(col("tsec"), gap))
+      .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("value_sum"))
+      .select(col("user_id"),
+        unix_timestamp(col("session_window.start")).as("session_start"),
+        col("n_events"), col("value_sum"))
+      .orderBy(col("user_id"), col("session_start"))
+
+  /** SQL mirror of [[nativeSessions]]' numbering and readout over a
+    * `flagged(user_id, event_id, value, t, is_new)` CTE. */
+  private def sqlNativeSessionTail: String = s"""sessions AS (
+          SELECT user_id, value, t,
+                 CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY t, event_id
+                                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
+          FROM flagged)
+        SELECT user_id, MIN(t) AS session_start, COUNT(*) AS n_events,
+               ${sqlSum("value")} AS value_sum
+        FROM sessions
+        GROUP BY user_id, session_no
+        ORDER BY user_id, session_start"""
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -85,16 +123,7 @@ object EventWindows {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val t = unix_timestamp($"ts")
-        val w = Window.partitionBy($"user_id").orderBy($"event_id")
-        val flagged = events(s, d)
-          .withColumn("t", t)
-          .withColumn("prev_t", lag($"t", 1).over(w))
-          .withColumn("is_new",
-            when($"prev_t".isNull || $"t" - $"prev_t" > 1800, 1).otherwise(0))
-        flagged
-          .withColumn("session_no",
-            sum($"is_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        gapSessions(events(s, d))
           .groupBy($"user_id", $"session_no")
           .agg(count(lit(1)).as("n_events"),
             min($"t").as("session_start"), max($"t").as("session_end"),
@@ -123,27 +152,10 @@ object EventWindows {
           SELECT user_id, event_id, value, t,
                  CASE WHEN prev_t IS NULL OR t - prev_t > 1800 THEN 1 ELSE 0 END AS is_new
           FROM ordered),
-        sessions AS (
-          SELECT user_id, value, t,
-                 CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY t, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
-          FROM flagged)
-        SELECT user_id, MIN(t) AS session_start, COUNT(*) AS n_events,
-               ${sqlSum("value")} AS value_sum
-        FROM sessions
-        GROUP BY user_id, session_no
-        ORDER BY user_id, session_start
+        $sqlNativeSessionTail
       """.trim),
       (s, d) => {
-        import s.implicits._
-        events(s, d)
-          .withColumn("tsec", timestamp_seconds(unix_timestamp($"ts")))
-          .groupBy($"user_id", session_window($"tsec", "1800 seconds"))
-          .agg(count(lit(1)).as("n_events"), dsum($"value").as("value_sum"))
-          .select($"user_id",
-            unix_timestamp($"session_window.start").as("session_start"),
-            $"n_events", $"value_sum")
-          .orderBy($"user_id", $"session_start")
+        nativeSessions(events(s, d), lit("1800 seconds"))
       }),
 
     // DYNAMIC-gap session windows: each event extends its session by a
@@ -175,29 +187,11 @@ object EventWindows {
           SELECT user_id, event_id, value, t,
                  CASE WHEN prev_end IS NULL OR t > prev_end THEN 1 ELSE 0 END AS is_new
           FROM ends),
-        sessions AS (
-          SELECT user_id, value, t,
-                 CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY t, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
-          FROM flagged)
-        SELECT user_id, MIN(t) AS session_start, COUNT(*) AS n_events,
-               ${sqlSum("value")} AS value_sum
-        FROM sessions
-        GROUP BY user_id, session_no
-        ORDER BY user_id, session_start
+        $sqlNativeSessionTail
       """.trim),
       (s, d) => {
-        import s.implicits._
-        events(s, d)
-          .withColumn("tsec", timestamp_seconds(unix_timestamp($"ts")))
-          .groupBy($"user_id", session_window($"tsec",
-            when($"event_type" === "purchase", "3600 seconds")
-              .otherwise("900 seconds")))
-          .agg(count(lit(1)).as("n_events"), dsum($"value").as("value_sum"))
-          .select($"user_id",
-            unix_timestamp($"session_window.start").as("session_start"),
-            $"n_events", $"value_sum")
-          .orderBy($"user_id", $"session_start")
+        nativeSessions(events(s, d),
+          when(col("event_type") === "purchase", "3600 seconds").otherwise("900 seconds"))
       }),
 
     // Session-shape histogram: how long are sessions, in events and in
@@ -236,15 +230,7 @@ object EventWindows {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val w = Window.partitionBy($"user_id").orderBy($"event_id")
-        val flagged = events(s, d)
-          .withColumn("t", unix_timestamp($"ts"))
-          .withColumn("prev_t", lag($"t", 1).over(w))
-          .withColumn("is_new",
-            when($"prev_t".isNull || $"t" - $"prev_t" > 1800, 1).otherwise(0))
-        flagged
-          .withColumn("session_no",
-            sum($"is_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        gapSessions(events(s, d))
           .groupBy($"user_id", $"session_no")
           .agg(count(lit(1)).as("n_events"),
             (max($"t") - min($"t")).as("dur_s"))

@@ -43,13 +43,7 @@ object ExactSubstr {
     QueryDef(
       "dd_exact_substr",
       Some(s"""
-        WITH toks AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        g AS (
-          SELECT doc_id, i AS pos,
-                 tk[i] || '_' || tk[i+1] || '_' || tk[i+2] || '_' || tk[i+3] || '_' ||
-                 tk[i+4] || '_' || tk[i+5] || '_' || tk[i+6] || '_' || tk[i+7] AS gram
-          FROM toks, UNNEST(range(1, len(tk) - ${K - 2})) AS r(i)),
+        WITH ${Decontam.sqlGrams},
         m AS (
           SELECT a.doc_id AS da, a.pos AS pa, b.doc_id AS db,
                  b.pos - a.pos AS diag
@@ -67,19 +61,7 @@ object ExactSubstr {
             SELECT da AS e_doc, sa AS s, ea AS e FROM spans_pair
             UNION ALL
             SELECT db, sa + diag, ea + diag FROM spans_pair)),
-        ord AS (
-          SELECT e_doc, s, e,
-                 MAX(e) OVER (PARTITION BY e_doc ORDER BY s, e
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-          FROM spans),
-        isl AS (
-          SELECT e_doc, s, e,
-                 SUM(CASE WHEN pmax IS NULL OR s > pmax + 1 THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY e_doc ORDER BY s, e) AS island
-          FROM ord),
-        merged AS (
-          SELECT e_doc, island, MIN(s) AS s, MAX(e) AS e
-          FROM isl GROUP BY e_doc, island),
+        ${Decontam.sqlMergeSpans},
         cov AS (
           SELECT e_doc, COUNT(*) AS n_regions, SUM(e - s + 1) AS dup_tokens
           FROM merged GROUP BY e_doc),

@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.QueryDef
 import graft.sources.Tables._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Controlled-experiment readout and automation detection over the
   * event stream — the two product-analytics shapes an engine serving a
@@ -31,17 +33,35 @@ import org.apache.spark.sql.functions._
   */
 object Experiments {
 
-  val defs: Seq[QueryDef] = Seq(
+  /** The two arms' moments of purchase value under the `user_id % 2`
+    * split, as one row: counts `na`/`nb`, sums `sa`/`sb` and sums of
+    * squares `qa`/`qb` (DECIMAL-exact sums, then double). */
+  private[operators] def abMoments(ev: DataFrame): DataFrame = {
+    val p = ev
+      .filter(col("event_type") === "purchase")
+      .select((col("user_id") % 2).as("variant"),
+        col("value").cast(DecimalType(28, 10)).as("dv"),
+        (col("value") * col("value")).cast(DecimalType(38, 10)).as("dv2"))
+    p.agg(
+      sum(when(col("variant") === 0, 1).otherwise(0)).as("na"),
+      sum(when(col("variant") === 1, 1).otherwise(0)).as("nb"),
+      sum(when(col("variant") === 0, col("dv"))).cast("double").as("sa"),
+      sum(when(col("variant") === 1, col("dv"))).cast("double").as("sb"),
+      sum(when(col("variant") === 0, col("dv2"))).cast("double").as("qa"),
+      sum(when(col("variant") === 1, col("dv2"))).cast("double").as("qb"))
+  }
 
-    QueryDef(
-      "ev_ab_test",
-      Some("""
-        WITH p AS (
-          SELECT user_id % 2 AS variant, value,
-                 CAST(value AS DECIMAL(28,10)) AS dv,
-                 CAST(value * value AS DECIMAL(38,10)) AS dv2
-          FROM events WHERE event_type = 'purchase'),
-        m AS (
+  /** Arm `arm`'s ("a" or "b") mean over an [[abMoments]] row. */
+  private[operators] def abMean(arm: String): Column = col(s"s$arm") / col(s"n$arm")
+
+  /** Arm `arm`'s sample variance over an [[abMoments]] row. */
+  private[operators] def abVar(arm: String): Column = {
+    val (n, sm, q) = (col(s"n$arm"), col(s"s$arm"), col(s"q$arm"))
+    (q - sm * sm / n) / (n - 1)
+  }
+
+  /** SQL mirror of [[abMoments]] over a `p(variant, dv, dv2)` CTE. */
+  private[operators] def sqlAbMoments: String = """m AS (
           SELECT
             SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS na,
             SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS nb,
@@ -49,7 +69,19 @@ object Experiments {
             CAST(SUM(CASE WHEN variant = 1 THEN dv END) AS DOUBLE) AS sb,
             CAST(SUM(CASE WHEN variant = 0 THEN dv2 END) AS DOUBLE) AS qa,
             CAST(SUM(CASE WHEN variant = 1 THEN dv2 END) AS DOUBLE) AS qb
-          FROM p)
+          FROM p)"""
+
+  val defs: Seq[QueryDef] = Seq(
+
+    QueryDef(
+      "ev_ab_test",
+      Some(s"""
+        WITH p AS (
+          SELECT user_id % 2 AS variant, value,
+                 CAST(value AS DECIMAL(28,10)) AS dv,
+                 CAST(value * value AS DECIMAL(38,10)) AS dv2
+          FROM events WHERE event_type = 'purchase'),
+        $sqlAbMoments
         SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
                sa / na AS mean_a, sb / nb AS mean_b,
                (qa - sa * sa / na) / (na - 1) AS var_a,
@@ -64,23 +96,8 @@ object Experiments {
       """.trim),
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.types.DecimalType
-        val p = events(s, d)
-          .filter($"event_type" === "purchase")
-          .select(($"user_id" % 2).as("variant"),
-            $"value".cast(DecimalType(28, 10)).as("dv"),
-            ($"value" * $"value").cast(DecimalType(38, 10)).as("dv2"))
-        val m = p.agg(
-          sum(when($"variant" === 0, 1).otherwise(0)).as("na"),
-          sum(when($"variant" === 1, 1).otherwise(0)).as("nb"),
-          sum(when($"variant" === 0, $"dv")).cast("double").as("sa"),
-          sum(when($"variant" === 1, $"dv")).cast("double").as("sb"),
-          sum(when($"variant" === 0, $"dv2")).cast("double").as("qa"),
-          sum(when($"variant" === 1, $"dv2")).cast("double").as("qb"))
-        val meanA = $"sa" / $"na"
-        val meanB = $"sb" / $"nb"
-        val varA = ($"qa" - $"sa" * $"sa" / $"na") / ($"na" - 1)
-        val varB = ($"qb" - $"sb" * $"sb" / $"nb") / ($"nb" - 1)
+        val m = abMoments(events(s, d))
+        val (meanA, meanB, varA, varB) = (abMean("a"), abMean("b"), abVar("a"), abVar("b"))
         val t = (meanA - meanB) / sqrt(varA / $"na" + varB / $"nb")
         m.select($"na".cast("long").as("n_a"), $"nb".cast("long").as("n_b"),
           meanA.as("mean_a"), meanB.as("mean_b"),

@@ -29,20 +29,7 @@ object GoldenRecord {
     QueryDef(
       "er_golden_record",
       Some(s"""
-        WITH RECURSIVE ${EntityRes.sqlPairs},
-        medges AS (
-          SELECT p.a, p.b FROM pairs p
-          JOIN customer x ON p.a = x.c_custkey
-          JOIN customer y ON p.b = y.c_custkey
-          WHERE x.c_nationkey = y.c_nationkey
-            AND x.c_mktsegment = y.c_mktsegment),
-        edges AS (SELECT a AS u, b AS v FROM medges
-                  UNION ALL SELECT b, a FROM medges),
-        walk(u, v) AS (
-          SELECT u, v FROM edges
-          UNION
-          SELECT w.u, e.v FROM walk w JOIN edges e ON w.v = e.u),
-        mins AS (SELECT u AS c_custkey, MIN(v) AS mn FROM walk GROUP BY u),
+        WITH RECURSIVE ${EntityRes.sqlMatchMins},
         labeled AS (
           SELECT c.c_custkey, c.c_nationkey, c.c_mktsegment, c.c_acctbal,
                  COALESCE(LEAST(c.c_custkey, m.mn), c.c_custkey) AS rep

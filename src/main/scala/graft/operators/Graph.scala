@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.sources.Tables.{lineitem, orders}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -161,6 +161,15 @@ object Graph {
          FROM nodes CROSS JOIN nn LEFT JOIN c$i c ON nodes.node = c.dst)"""
   }
 
+  /** SQL mirror of [[pagerank]] over a symmetric edge CTE `e(src, dst)`:
+    * `deg`, `nodes`, `nn`, the uniform start `p0` and the unrolled
+    * iterations, the last of which is `p<iters>`. */
+  private[operators] def sqlPagerank: String = s"""deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
+        nodes AS (SELECT src AS node, deg FROM deg),
+        nn AS (SELECT COUNT(*) AS n FROM nodes),
+        p0 AS (SELECT node, deg, CAST(1 AS DOUBLE) / nn.n AS pr FROM nodes CROSS JOIN nn),
+        ${(1 to iters).map(sqlIter).mkString(",\n")}"""
+
   /** Triangle count by degree-ordered edge orientation.
     *
     * Orienting every undirected edge from its (degree, id)-smaller
@@ -184,6 +193,145 @@ object Graph {
       .filter(col("u") =!= col("v"))
       .distinct()
       .persist()
+
+  /** The hashed (order, part) co-occurrence pairs `(a, b)` of a
+    * lineitem frame: the modulus folds both key spaces into one
+    * 29989-node id space, so the graph is general (non-bipartite) and
+    * triangle-bearing. */
+  def hashedPairs(li: DataFrame): DataFrame =
+    li.select((col("l_orderkey") % 29989).as("a"), (col("l_partkey") % 29989).as("b"))
+
+  /** SQL mirror of `canonicalEdges(hashedPairs(lineitem))`: the `raw`
+    * pairs and the canonical (u < v) edge list named `name`. */
+  private[operators] def sqlHashedEdges(name: String = "e"): String = s"""raw AS (
+          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
+        $name AS (
+          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
+          FROM raw WHERE a <> b)"""
+
+  /** [[hashedPairs]] under the modulus max(29989, |lineitem| DIV 21):
+    * the same graph up to sf0.1, but at 10× data 10× more nodes at
+    * constant degree instead of a denser graph. The modulus rides in on
+    * a broadcast 1-row cross join. */
+  def adaptivePairs(li: DataFrame): DataFrame = {
+    val m = li.agg(
+      greatest(lit(29989L), expr("COUNT(*) DIV 21")).as("m"))
+    li.crossJoin(broadcast(m))
+      .select((col("l_orderkey") % col("m")).as("a"),
+        (col("l_partkey") % col("m")).as("b"))
+  }
+
+  /** SQL mirror of `canonicalEdges(adaptivePairs(lineitem))`: `nn`,
+    * `raw` and the canonical edge list named `name`. */
+  private[operators] def sqlAdaptiveEdges(name: String): String = s"""nn AS (
+          SELECT GREATEST(29989, COUNT(*) // 21) AS m FROM lineitem),
+        raw AS (
+          SELECT l_orderkey % (SELECT m FROM nn) AS a,
+                 l_partkey % (SELECT m FROM nn) AS b
+          FROM lineitem),
+        $name AS (
+          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
+          FROM raw WHERE a <> b)"""
+
+  /** SQL mirror of [[cappedNeighbors]]: the hashed edge list `e`, its
+    * both-way adjacency `adj`, the node degrees `deg` and the adjacency
+    * rows `mid` of middle nodes of degree <= 32. */
+  private def sqlWedgeMid: String = s"""${sqlHashedEdges()},
+        adj AS (SELECT u AS m, v AS n FROM e UNION ALL SELECT v, u FROM e),
+        deg AS (SELECT m, COUNT(*) AS deg FROM adj GROUP BY m),
+        mid AS (
+          SELECT a.m, a.n FROM adj a JOIN deg d ON d.m = a.m
+          WHERE d.deg <= 32)"""
+
+  /** After [[sqlWedgeMid]]: each non-adjacent pair x < y with `cn`,
+    * its count of capped common neighbors (`wed`, then `cand`). */
+  private def sqlCommonNeighborCands: String = """wed AS (
+          SELECT a1.n AS x, a2.n AS y, COUNT(*) AS cn
+          FROM mid a1 JOIN mid a2 ON a1.m = a2.m AND a1.n < a2.n
+          GROUP BY 1, 2),
+        cand AS (
+          SELECT w.x, w.y, w.cn
+          FROM wed w LEFT JOIN e ON e.u = w.x AND e.v = w.y
+          WHERE e.u IS NULL)"""
+
+  /** The link-prediction wedges over the hashed graph: its canonical
+    * edges `e`, the degree table `deg(m, deg)` and, for each middle
+    * node of degree <= 32, its sorted neighbor array `nbrs(m, ns)`.
+    * Wedges come from these arrays, not an adj⋈adj self-join: the
+    * degree cap is a semi-join BEFORE collect_list (so no task ever
+    * materializes a hub's array), the join's output partitioning is
+    * reused by the groupBy (one exchange of |adj| rows), and the
+    * Σ min(deg,32)² pair stream ([[wedgePairs]]) is generated inside
+    * whole-stage codegen. */
+  private def cappedNeighbors(s: org.apache.spark.sql.SparkSession,
+      d: String): (DataFrame, DataFrame, DataFrame) = {
+    val e = canonicalEdges(hashedPairs(lineitem(s, d)))
+    val adj = e.select(col("u").as("m"), col("v").as("n"))
+      .union(e.select(col("v").as("m"), col("u").as("n")))
+    val deg = adj.groupBy(col("m")).agg(count(lit(1)).as("deg"))
+    val lowDeg = deg.filter(col("deg") <= 32).select(col("m"))
+    val nbrs = adj.join(lowDeg, Seq("m"))
+      .groupBy(col("m")).agg(sort_array(collect_list(col("n"))).as("ns"))
+    (e, deg, nbrs)
+  }
+
+  /** One row per (x < y) pair of a middle node's sorted neighbors `ns`,
+    * packed into ONE long `pack` (node ids < 29989 < 2^15), so the big
+    * exchange hashes/sorts a single 8-byte key instead of a two-column
+    * row — and [[nonEdges]] equi-joins on the same packed key. */
+  private def wedgePairs: Column = explode(expr(
+    """flatten(transform(ns, (x, i) ->
+      |  transform(slice(ns, i + 2, size(ns)),
+      |            y -> shiftleft(bigint(x), 15) + bigint(y))))""".stripMargin))
+    .as("pack")
+
+  /** The packed pairs of `wed` that are not edges of `e`, unpacked to
+    * `(u, v)` and followed by `rest`. */
+  private def nonEdges(wed: DataFrame, e: DataFrame, rest: Column*): DataFrame = {
+    val ePack = e.select(
+      (shiftleft(col("u").cast("long"), 15) + col("v")).as("pack"))
+    wed
+      .join(ePack, Seq("pack"), "left_anti")
+      .select(Seq(shiftright(col("pack"), 15).as("u"),
+        col("pack").bitwiseAND(lit(32767L)).as("v")) ++ rest: _*)
+  }
+
+  /** SQL mirror of [[triangleCount]] over a canonical edge CTE `e`:
+    * the `nodes` CTE and the final triangles/edges/nodes SELECT. */
+  private def sqlTriangleStats: String = """nodes AS (SELECT u AS n FROM e UNION SELECT v FROM e)
+        SELECT
+          CAST((SELECT COUNT(*) FROM e x
+                JOIN e y ON y.u = x.v
+                JOIN e z ON z.u = x.u AND z.v = y.v) AS BIGINT) AS triangles,
+          CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS edges,
+          CAST((SELECT COUNT(*) FROM nodes) AS BIGINT) AS nodes"""
+
+  /** The thinned bipartite purchase graph of the reachability queries:
+    * part (even ids) to supplier (odd ids) over the unit-quantity
+    * lineitems of one hash bucket in 17, distinct (u, v). */
+  private def thinnedEdges(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    lineitem(s, d)
+      .filter(col("l_quantity") === 1 &&
+        (col("l_partkey") * 31 + col("l_suppkey")) % 17 === 0)
+      .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
+      .distinct()
+
+  /** SQL mirror of [[thinnedEdges]] (`e0`) and its symmetric `edges`. */
+  private def sqlThinnedEdges: String = """e0 AS (
+          SELECT DISTINCT l_partkey * 2 AS a, l_suppkey * 2 + 1 AS b FROM lineitem
+          WHERE l_quantity = 1 AND (l_partkey * 31 + l_suppkey) % 17 = 0),
+        edges AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0)"""
+
+  /** The BFS queries' input: [[thinnedEdges]] made symmetric (persisted)
+    * and the seed set, every node with node % 11 = 3. */
+  private def thinnedBfsInput(s: org.apache.spark.sql.SparkSession,
+      d: String): (DataFrame, DataFrame) = {
+    val e0 = thinnedEdges(s, d)
+    val sym = e0.union(e0.select(col("v").as("u"), col("u").as("v"))).persist()
+    val seeds = sym.select(col("u").as("node")).distinct()
+      .filter(col("node") % 11 === 3)
+    (sym, seeds)
+  }
 
   /** Per-node degree of a canonical edge list. */
   def degrees(e: DataFrame): DataFrame =
@@ -232,6 +380,12 @@ object Graph {
         (col("l_suppkey") * 2 + 1).as("dst"))
       .distinct()
   }
+
+  /** SQL mirror of [[tradeEdges]] (`e0`) and its symmetric `e`. */
+  private[operators] def sqlTradeEdges: String = """e0 AS (
+          SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+          FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)"""
 
   /** Edge-count ceiling for broadcasting the closing-edge list in the
     * wedge-closure semi-join. Below it the canonical edge list rides a
@@ -291,13 +445,12 @@ object Graph {
     }
   }
 
-  def triangleCount(edges: DataFrame): DataFrame = {
-    // e is consumed three times (wedges, closing join, stats) and
-    // oriented twice — canonicalEdges caches it once
-    val e = canonicalEdges(edges)
-    val deg = degrees(e)
-    // orient by (deg, id): src = smaller endpoint under that total order
-    val oriented = e
+  /** Each edge of a canonical edge list `e` oriented by (degree, id):
+    * `src` is the endpoint lower in that total order, so the wedges out
+    * of a node number Σ outdeg² <= m·√m. `deg` is [[degrees]] of `e`.
+    * Callers persist the result. */
+  def degreeOriented(e: DataFrame, deg: DataFrame): DataFrame =
+    e
       .join(deg.select(col("n").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("deg").as("dv")), "v")
       .select(
@@ -305,10 +458,20 @@ object Graph {
           struct(col("u").as("src"), col("v").as("dst")))
           .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("o"))
       .select(col("o.src").as("src"), col("o.dst").as("dst"))
-      .persist()
-    val w1 = oriented.select(col("src"), col("dst").as("x"))
-    val w2 = oriented.select(col("src"), col("dst").as("y"))
-    val wedges = w1.join(w2, "src").filter(col("x") < col("y"))
+
+  /** The wedges (src, x, y), x < y, of an oriented edge list. */
+  def orientedWedges(oriented: DataFrame): DataFrame =
+    oriented.select(col("src"), col("dst").as("x"))
+      .join(oriented.select(col("src"), col("dst").as("y")), "src")
+      .filter(col("x") < col("y"))
+
+  def triangleCount(edges: DataFrame): DataFrame = {
+    // e is consumed three times (wedges, closing join, stats) and
+    // oriented twice — canonicalEdges caches it once
+    val e = canonicalEdges(edges)
+    val deg = degrees(e)
+    val oriented = degreeOriented(e, deg).persist()
+    val wedges = orientedWedges(oriented)
     // the wedge filter guarantees x < y, so the closing-edge lookup is
     // a plain equi-join against the canonical (u < v) list —
     // broadcast under wedgeBroadcastMaxEdges, bloom pre-join past it
@@ -329,12 +492,8 @@ object Graph {
       // degree-ordered orientation is worth it). Exact histogram:
       // one distinct + one groupBy chain, no floats.
       "gx_degree_hist",
-      Some("""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
+      Some(s"""
+        WITH ${sqlHashedEdges()},
         deg AS (
           SELECT n, COUNT(*) AS deg FROM (
             SELECT u AS n FROM e UNION ALL SELECT v FROM e)
@@ -344,35 +503,19 @@ object Graph {
         FROM deg GROUP BY deg ORDER BY degree
       """.trim),
       (s, d) => {
-        val e = canonicalEdges(lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"), (col("l_partkey") % 29989).as("b")))
+        val e = canonicalEdges(hashedPairs(lineitem(s, d)))
         degrees(e)
           .groupBy(col("deg").as("degree")).agg(count(lit(1)).as("n_nodes"))
           .orderBy(col("degree"))
       }),
     QueryDef(
       "gx_triangles",
-      Some("""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
-        nodes AS (SELECT u AS n FROM e UNION SELECT v FROM e)
-        SELECT
-          CAST((SELECT COUNT(*) FROM e x
-                JOIN e y ON y.u = x.v
-                JOIN e z ON z.u = x.u AND z.v = y.v) AS BIGINT) AS triangles,
-          CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS edges,
-          CAST((SELECT COUNT(*) FROM nodes) AS BIGINT) AS nodes
+      Some(s"""
+        WITH ${sqlHashedEdges()},
+        $sqlTriangleStats
       """.trim),
       (s, d) => {
-        // hashed co-occurrence graph over (order, part) entities — the
-        // modulus folds both key spaces into one 29989-node id space so
-        // the graph is general (non-bipartite) and triangle-bearing
-        val edges = lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"), (col("l_partkey") % 29989).as("b"))
-        triangleCount(edges)
+        triangleCount(hashedPairs(lineitem(s, d)))
       }),
     // The same triangle count over a graph whose node space SCALES with
     // the data: the fixed 29989 modulus above makes 10× rows densify
@@ -387,45 +530,18 @@ object Graph {
     // rides in on a broadcast cross join; nothing driver-side.
     QueryDef(
       "gx_triangles_adaptive",
-      Some("""
-        WITH nn AS (
-          SELECT GREATEST(29989, COUNT(*) // 21) AS m FROM lineitem),
-        raw AS (
-          SELECT l_orderkey % (SELECT m FROM nn) AS a,
-                 l_partkey % (SELECT m FROM nn) AS b
-          FROM lineitem),
-        e AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
-        nodes AS (SELECT u AS n FROM e UNION SELECT v FROM e)
-        SELECT
-          CAST((SELECT COUNT(*) FROM e x
-                JOIN e y ON y.u = x.v
-                JOIN e z ON z.u = x.u AND z.v = y.v) AS BIGINT) AS triangles,
-          CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS edges,
-          CAST((SELECT COUNT(*) FROM nodes) AS BIGINT) AS nodes
+      Some(s"""
+        WITH ${sqlAdaptiveEdges("e")},
+        $sqlTriangleStats
       """.trim),
       (s, d) => {
-        val li = lineitem(s, d)
-        val m = li.agg(
-          greatest(lit(29989L), expr("COUNT(*) DIV 21")).as("m"))
-        val edges = li.crossJoin(broadcast(m))
-          .select((col("l_orderkey") % col("m")).as("a"),
-            (col("l_partkey") % col("m")).as("b"))
-        triangleCount(edges)
+        triangleCount(adaptivePairs(lineitem(s, d)))
       }),
     QueryDef(
       "gx_pagerank",
       Some(s"""
-        WITH e0 AS (
-          SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-        deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-        nodes AS (SELECT src AS node, deg FROM deg),
-        nn AS (SELECT COUNT(*) AS n FROM nodes),
-        p0 AS (SELECT node, deg, CAST(1 AS DOUBLE) / nn.n AS pr FROM nodes CROSS JOIN nn),
-        ${(1 to iters).map(sqlIter).mkString(",\n")}
+        WITH $sqlTradeEdges,
+        $sqlPagerank
         SELECT CAST(node AS BIGINT) AS node, pr
         FROM p$iters
         ORDER BY pr DESC, node
@@ -503,11 +619,8 @@ object Graph {
     // the per-round convergence counts.
     QueryDef(
       "gx_cc",
-      Some("""
-        WITH RECURSIVE e0 AS (
-          SELECT DISTINCT l_partkey * 2 AS a, l_suppkey * 2 + 1 AS b FROM lineitem
-          WHERE l_quantity = 1 AND (l_partkey * 31 + l_suppkey) % 17 = 0),
-        edges AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+      Some(s"""
+        WITH RECURSIVE $sqlThinnedEdges,
         walk(a, b) AS (
           SELECT a, b FROM edges
           UNION
@@ -520,11 +633,7 @@ object Graph {
         ORDER BY node
       """.trim),
       (s, d) => {
-        val e0 = lineitem(s, d)
-          .filter(col("l_quantity") === 1 &&
-            (col("l_partkey") * 31 + col("l_suppkey")) % 17 === 0)
-          .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-          .distinct()
+        val e0 = thinnedEdges(s, d)
         val labels = Dedup.ccLabels(e0)
         val nodes = e0.select(col("u").as("node"))
           .union(e0.select(col("v").as("node"))).distinct()
@@ -548,11 +657,8 @@ object Graph {
     // same capped expansion and takes the same per-node MIN.
     QueryDef(
       "gx_bfs",
-      Some("""
-        WITH RECURSIVE e0 AS (
-          SELECT DISTINCT l_partkey * 2 AS a, l_suppkey * 2 + 1 AS b FROM lineitem
-          WHERE l_quantity = 1 AND (l_partkey * 31 + l_suppkey) % 17 = 0),
-        edges AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+      Some(s"""
+        WITH RECURSIVE $sqlThinnedEdges,
         nodes AS (SELECT DISTINCT a AS node FROM edges),
         walk(node, dist) AS (
           SELECT node, 0 FROM nodes WHERE node % 11 = 3
@@ -564,14 +670,7 @@ object Graph {
         FROM walk GROUP BY node ORDER BY node
       """.trim),
       (s, d) => {
-        val e0 = lineitem(s, d)
-          .filter(col("l_quantity") === 1 &&
-            (col("l_partkey") * 31 + col("l_suppkey")) % 17 === 0)
-          .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-          .distinct()
-        val sym = e0.union(e0.select(col("v").as("u"), col("u").as("v"))).persist()
-        val seeds = sym.select(col("u").as("node")).distinct()
-          .filter(col("node") % 11 === 3)
+        val (sym, seeds) = thinnedBfsInput(s, d)
         bfs(sym, seeds, maxHops = 4).orderBy(col("node"))
       }),
 
@@ -585,11 +684,8 @@ object Graph {
     // expansion and takes the same per-(seed, node) MIN.
     QueryDef(
       "gx_closeness",
-      Some("""
-        WITH RECURSIVE e0 AS (
-          SELECT DISTINCT l_partkey * 2 AS a, l_suppkey * 2 + 1 AS b FROM lineitem
-          WHERE l_quantity = 1 AND (l_partkey * 31 + l_suppkey) % 17 = 0),
-        edges AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
+      Some(s"""
+        WITH RECURSIVE $sqlThinnedEdges,
         nodes AS (SELECT DISTINCT a AS node FROM edges),
         walk(seed, node, dist) AS (
           SELECT node, node, 0 FROM nodes WHERE node % 11 = 3
@@ -609,14 +705,7 @@ object Graph {
         ORDER BY seed
       """.trim),
       (s, d) => {
-        val e0 = lineitem(s, d)
-          .filter(col("l_quantity") === 1 &&
-            (col("l_partkey") * 31 + col("l_suppkey")) % 17 === 0)
-          .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-          .distinct()
-        val sym = e0.union(e0.select(col("v").as("u"), col("u").as("v"))).persist()
-        val seeds = sym.select(col("u").as("node")).distinct()
-          .filter(col("node") % 11 === 3)
+        val (sym, seeds) = thinnedBfsInput(s, d)
         bfsPerSeed(sym, seeds, maxHops = 4)
           .groupBy(col("seed"))
           .agg((count(lit(1)) - 1).as("n_reached"),
@@ -684,25 +773,9 @@ object Graph {
     // TakeOrderedAndProject top-k — never a global sort.
     QueryDef(
       "gx_common_neighbors",
-      Some("""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
-        adj AS (SELECT u AS m, v AS n FROM e UNION ALL SELECT v, u FROM e),
-        deg AS (SELECT m, COUNT(*) AS deg FROM adj GROUP BY m),
-        mid AS (
-          SELECT a.m, a.n FROM adj a JOIN deg d ON d.m = a.m
-          WHERE d.deg <= 32),
-        wed AS (
-          SELECT a1.n AS x, a2.n AS y, COUNT(*) AS cn
-          FROM mid a1 JOIN mid a2 ON a1.m = a2.m AND a1.n < a2.n
-          GROUP BY 1, 2),
-        cand AS (
-          SELECT w.x, w.y, w.cn
-          FROM wed w LEFT JOIN e ON e.u = w.x AND e.v = w.y
-          WHERE e.u IS NULL)
+      Some(s"""
+        WITH $sqlWedgeMid,
+        $sqlCommonNeighborCands
         SELECT CAST(x AS BIGINT) AS u, CAST(y AS BIGINT) AS v,
                CAST(cn AS BIGINT) AS common_neighbors
         FROM cand
@@ -710,38 +783,9 @@ object Graph {
         LIMIT 20
       """.trim),
       (s, d) => {
-        val e = canonicalEdges(lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b")))
-        val adj = e.select(col("u").as("m"), col("v").as("n"))
-          .union(e.select(col("v").as("m"), col("u").as("n")))
-        // Wedges come from per-middle-node sorted neighbor ARRAYS, not
-        // an adj⋈adj self-join: the degree cap is a semi-join BEFORE
-        // collect_list (so no task ever materializes a hub's array),
-        // the join's output partitioning is reused by the groupBy (one
-        // exchange of |adj| rows), and the Σ min(deg,32)² pair stream
-        // is generated inside whole-stage codegen. Each (x<y) pair
-        // packs into ONE long (node ids < 29989 < 2^15), so the big
-        // exchange hashes/sorts a single 8-byte key instead of a
-        // two-column row — and the anti-join against e equi-joins on
-        // the same packed key.
-        val lowDeg = adj.groupBy(col("m")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") <= 32).select(col("m"))
-        val nbrs = adj.join(lowDeg, Seq("m"))
-          .groupBy(col("m")).agg(sort_array(collect_list(col("n"))).as("ns"))
-        val pairs = nbrs.select(explode(expr(
-          """flatten(transform(ns, (x, i) ->
-            |  transform(slice(ns, i + 2, size(ns)),
-            |            y -> shiftleft(bigint(x), 15) + bigint(y))))""".stripMargin))
-          .as("pack"))
-        val wed = pairs.groupBy(col("pack")).agg(count(lit(1)).as("cn"))
-        val ePack = e.select(
-          (shiftleft(col("u").cast("long"), 15) + col("v")).as("pack"))
-        wed
-          .join(ePack, Seq("pack"), "left_anti")
-          .select(shiftright(col("pack"), 15).as("u"),
-            col("pack").bitwiseAND(lit(32767L)).as("v"),
-            col("cn").as("common_neighbors"))
+        val (e, _, nbrs) = cappedNeighbors(s, d)
+        val wed = nbrs.select(wedgePairs).groupBy(col("pack")).agg(count(lit(1)).as("cn"))
+        nonEdges(wed, e, col("cn").as("common_neighbors"))
           .orderBy(col("common_neighbors").desc, col("u"), col("v"))
           .limit(20)
       }),
@@ -760,17 +804,8 @@ object Graph {
     // so the score is partitioning-independent and oracle-mirrorable.
     QueryDef(
       "gx_resource_alloc",
-      Some("""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
-        adj AS (SELECT u AS m, v AS n FROM e UNION ALL SELECT v, u FROM e),
-        deg AS (SELECT m, COUNT(*) AS deg FROM adj GROUP BY m),
-        mid AS (
-          SELECT a.m, a.n FROM adj a JOIN deg d ON d.m = a.m
-          WHERE d.deg <= 32),
+      Some(s"""
+        WITH $sqlWedgeMid,
         wed AS (
           SELECT a1.n AS x, a2.n AS y,
                  CAST(SUM(CAST(1.0 / d.deg AS DECIMAL(28,12))) AS DOUBLE) AS ra,
@@ -790,20 +825,11 @@ object Graph {
         LIMIT 20
       """.trim),
       (s, d) => {
-        val e = canonicalEdges(lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b")))
-        val adj = e.select(col("u").as("m"), col("v").as("n"))
-          .union(e.select(col("v").as("m"), col("u").as("n")))
-        // Same capped array-wedge shape as gx_common_neighbors (cap
-        // semi-join before collect_list, codegen pair stream, packed
-        // long pair key). For a KEPT middle node the collected array IS
-        // its full neighborhood, so the true 1/deg weight is just
-        // 1/size(ns) — the per-wedge degree join disappears entirely.
-        val lowDeg = adj.groupBy(col("m")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") <= 32).select(col("m"))
-        val nbrs = adj.join(lowDeg, Seq("m"))
-          .groupBy(col("m")).agg(sort_array(collect_list(col("n"))).as("ns"))
+        // Same capped array-wedge shape as gx_common_neighbors. For a
+        // KEPT middle node the collected array IS its full
+        // neighborhood, so the true 1/deg weight is just 1/size(ns) —
+        // the per-wedge degree join disappears entirely.
+        val (e, _, nbrs) = cappedNeighbors(s, d)
         // The oracle's DECIMAL(28,12) weight is a 12-fraction-digit
         // fixed-point number — carried here as exact LONG micro-units
         // (w·10¹²) so the 25M-row hot aggregate sums primitive longs
@@ -815,21 +841,11 @@ object Graph {
         val pairs = nbrs.select(
           ((lit(1.0) / size(col("ns"))).cast(DecimalType(28, 12)) *
             lit(1000000000000L)).cast("long").as("w"),
-          explode(expr(
-            """flatten(transform(ns, (x, i) ->
-              |  transform(slice(ns, i + 2, size(ns)),
-              |            y -> shiftleft(bigint(x), 15) + bigint(y))))""".stripMargin))
-            .as("pack"))
+          wedgePairs)
         val wed = pairs.groupBy(col("pack"))
           .agg((sum(col("w")).cast("double") / lit(1e12)).as("ra"),
             count(lit(1)).as("cn"))
-        val ePack = e.select(
-          (shiftleft(col("u").cast("long"), 15) + col("v")).as("pack"))
-        wed
-          .join(ePack, Seq("pack"), "left_anti")
-          .select(shiftright(col("pack"), 15).as("u"),
-            col("pack").bitwiseAND(lit(32767L)).as("v"),
-            col("ra"), col("cn").as("common_neighbors"))
+        nonEdges(wed, e, col("ra"), col("cn").as("common_neighbors"))
           .orderBy(col("ra").desc, col("u"), col("v"))
           .limit(20)
       }),
@@ -850,25 +866,9 @@ object Graph {
     // same "discount shared hubs" signal deterministically.)
     QueryDef(
       "gx_jaccard_linkpred",
-      Some("""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
-        adj AS (SELECT u AS m, v AS n FROM e UNION ALL SELECT v, u FROM e),
-        deg AS (SELECT m, COUNT(*) AS deg FROM adj GROUP BY m),
-        mid AS (
-          SELECT a.m, a.n FROM adj a JOIN deg d ON d.m = a.m
-          WHERE d.deg <= 32),
-        wed AS (
-          SELECT a1.n AS x, a2.n AS y, COUNT(*) AS cn
-          FROM mid a1 JOIN mid a2 ON a1.m = a2.m AND a1.n < a2.n
-          GROUP BY 1, 2),
-        cand AS (
-          SELECT w.x, w.y, w.cn
-          FROM wed w LEFT JOIN e ON e.u = w.x AND e.v = w.y
-          WHERE e.u IS NULL)
+      Some(s"""
+        WITH $sqlWedgeMid,
+        $sqlCommonNeighborCands
         SELECT CAST(c.x AS BIGINT) AS u, CAST(c.y AS BIGINT) AS v,
                CAST(c.cn AS DOUBLE) / (dx.deg + dy.deg - c.cn) AS jaccard,
                CAST(c.cn AS BIGINT) AS common_neighbors
@@ -879,28 +879,10 @@ object Graph {
         LIMIT 20
       """.trim),
       (s, d) => {
-        val e = canonicalEdges(lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b")))
-        val adj = e.select(col("u").as("m"), col("v").as("n"))
-          .union(e.select(col("v").as("m"), col("u").as("n")))
-        val deg = adj.groupBy(col("m")).agg(count(lit(1)).as("deg"))
-        val lowDeg = deg.filter(col("deg") <= 32).select(col("m"))
-        val nbrs = adj.join(lowDeg, Seq("m"))
-          .groupBy(col("m")).agg(sort_array(collect_list(col("n"))).as("ns"))
-        val pairs = nbrs.select(explode(expr(
-          """flatten(transform(ns, (x, i) ->
-            |  transform(slice(ns, i + 2, size(ns)),
-            |            y -> shiftleft(bigint(x), 15) + bigint(y))))""".stripMargin))
-          .as("pack"))
-        val wed = pairs.groupBy(col("pack")).agg(count(lit(1)).as("cn"))
-        val ePack = e.select(
-          (shiftleft(col("u").cast("long"), 15) + col("v")).as("pack"))
+        val (e, deg, nbrs) = cappedNeighbors(s, d)
+        val wed = nbrs.select(wedgePairs).groupBy(col("pack")).agg(count(lit(1)).as("cn"))
         // deg is O(|V|) rows — broadcast both denominator joins
-        wed
-          .join(ePack, Seq("pack"), "left_anti")
-          .select(shiftright(col("pack"), 15).as("u"),
-            col("pack").bitwiseAND(lit(32767L)).as("v"), col("cn"))
+        nonEdges(wed, e, col("cn"))
           .join(broadcast(deg.select(col("m").as("u"), col("deg").as("dx"))), Seq("u"))
           .join(broadcast(deg.select(col("m").as("v"), col("deg").as("dy"))), Seq("v"))
           .select(col("u"), col("v"),
@@ -948,12 +930,8 @@ object Graph {
     // correctly-rounded → bit-portable.
     QueryDef(
       "gx_assortativity",
-      Some("""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e0 AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
+      Some(s"""
+        WITH ${sqlHashedEdges("e0")},
         e AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0),
         deg AS (SELECT src AS node, COUNT(*) AS deg FROM e GROUP BY src),
         jk AS (
@@ -1054,12 +1032,8 @@ object Graph {
     // set, without the orientation (scale is the oracle's privilege).
     QueryDef(
       "gx_clustering_coeff",
-      Some("""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
+      Some(s"""
+        WITH ${sqlHashedEdges()},
         deg AS (
           SELECT n, COUNT(*) AS deg FROM (
             SELECT u AS n FROM e UNION ALL SELECT v FROM e) t
@@ -1085,22 +1059,10 @@ object Graph {
         LIMIT 20
       """.trim),
       (s, d) => {
-        val e = canonicalEdges(lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b")))
+        val e = canonicalEdges(hashedPairs(lineitem(s, d)))
         val deg = degrees(e)
-        val oriented = e
-          .join(deg.select(col("n").as("u"), col("deg").as("du")), "u")
-          .join(deg.select(col("n").as("v"), col("deg").as("dv")), "v")
-          .select(
-            when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-              struct(col("u").as("src"), col("v").as("dst")))
-              .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("o"))
-          .select(col("o.src").as("src"), col("o.dst").as("dst"))
-          .persist()
-        val wedges = oriented.select(col("src"), col("dst").as("x"))
-          .join(oriented.select(col("src"), col("dst").as("y")), "src")
-          .filter(col("x") < col("y"))
+        val oriented = degreeOriented(e, deg).persist()
+        val wedges = orientedWedges(oriented)
         // ONE pass over the closed-wedge stream: explode each triangle
         // into its three corners inline (a cached 3-way union re-scans
         // the triangle set three times — measurably slower at sf0.1).
@@ -1166,9 +1128,7 @@ object Graph {
     * dedupes the identical plan across consumers within a query. */
   private[operators] def cooccurSym(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val li = lineitem(s, d)
-    val e = canonicalEdges(li
-      .select((col("l_orderkey") % 29989).as("a"),
-        (col("l_partkey") % 29989).as("b")))
+    val e = canonicalEdges(hashedPairs(li))
     e.select(col("u").as("src"), col("v").as("dst"))
       .union(e.select(col("v").as("src"), col("u").as("dst")))
       // one-time shuffle to a few src-keyed partitions before caching:
@@ -1192,11 +1152,7 @@ object Graph {
             FROM e JOIN l${i - 1} p ON e.dst = p.node
             GROUP BY e.src, p.lbl)
           WHERE rn = 1)"""
-    s"""raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e0 AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
+    s"""${sqlHashedEdges("e0")},
         e AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0),
         l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM
                  (SELECT u FROM e0 UNION ALL SELECT v FROM e0) t(u)),

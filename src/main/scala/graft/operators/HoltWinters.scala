@@ -113,13 +113,7 @@ object HoltWinters {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val cnt = events(s, d)
-          .select(col("event_type"),
-            expr("(unix_micros(ts) - 1704067200000000) DIV 3600000000").as("h"))
-          .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("x"))
-        val grid = events(s, d).select(col("event_type")).distinct()
-          .crossJoin(s.range(0, HOURS).select(col("id").as("h")))
-          .join(cnt, Seq("event_type", "h"), "left")
+        val grid = Hurst.hourlyGrid(s, d, HOURS)
           .select(col("event_type"), col("h"),
             coalesce(col("x"), lit(0L)).cast("double").as("x"))
         grid.groupBy($"event_type")

@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.det
 import graft.sources.Tables._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -36,11 +37,25 @@ object Hurst {
   private val H = 720
   private val sizes = Seq(16, 32, 64, 128)
 
-  val defs: Seq[QueryDef] = Seq(
-    QueryDef(
-      "ts_hurst",
-      Some(s"""
-        WITH cnt AS (
+  /** Each event type's event count `x` per hour `h` since 2024-01-01
+    * 00:00 UTC; hours with no event have no row. */
+  private[operators] def hourlyCounts(ev: DataFrame): DataFrame =
+    ev.select(col("event_type"),
+        expr("(unix_micros(ts) - 1704067200000000) DIV 3600000000").as("h"))
+      .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("x"))
+
+  /** Every (event type, hour `h` in [0, hours)) with its
+    * [[hourlyCounts]] `x`, null for an empty hour. */
+  private[operators] def hourlyGrid(s: SparkSession, d: String, hours: Int): DataFrame = {
+    val cnt = hourlyCounts(events(s, d))
+    events(s, d).select(col("event_type")).distinct()
+      .crossJoin(s.range(0, hours).select(col("id").as("h")))
+      .join(cnt, Seq("event_type", "h"), "left")
+  }
+
+  /** SQL mirror of [[hourlyGrid]] with empty hours as 0: the `cnt` and
+    * `grid(event_type, h, x)` CTEs. */
+  private[operators] def sqlHourlyGrid(hours: Int): String = s"""cnt AS (
           SELECT event_type,
                  (epoch_us(ts) - epoch_us(TIMESTAMP '2024-01-01 00:00:00'))
                    // 3600000000 AS h,
@@ -49,8 +64,14 @@ object Hurst {
         grid AS (
           SELECT t.event_type, g.h, COALESCE(c.x, 0) AS x
           FROM (SELECT DISTINCT event_type FROM events) t
-          CROSS JOIN (SELECT UNNEST(range(0, $H)) AS h) g
-          LEFT JOIN cnt c ON c.event_type = t.event_type AND c.h = g.h),
+          CROSS JOIN (SELECT UNNEST(range(0, $hours)) AS h) g
+          LEFT JOIN cnt c ON c.event_type = t.event_type AND c.h = g.h)"""
+
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef(
+      "ts_hurst",
+      Some(s"""
+        WITH ${sqlHourlyGrid(H)},
         sz AS (SELECT UNNEST([${sizes.mkString(", ")}]) AS n),
         blk AS (
           SELECT g.event_type, s.n, g.h // s.n AS b,
@@ -105,13 +126,7 @@ object Hurst {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val cnt = events(s, d)
-          .select($"event_type",
-            expr("(unix_micros(ts) - 1704067200000000) DIV 3600000000").as("h"))
-          .groupBy($"event_type", $"h").agg(count(lit(1)).as("x"))
-        val grid = events(s, d).select($"event_type").distinct()
-          .crossJoin(s.range(0, H).select($"id".as("h")))
-          .join(cnt, Seq("event_type", "h"), "left")
+        val grid = hourlyGrid(s, d, H)
           .select($"event_type", $"h", coalesce($"x", lit(0L)).as("x"))
         val sz = sizes.toDF("n")
         val bw = Window.partitionBy($"event_type", $"n", $"b").orderBy($"h")

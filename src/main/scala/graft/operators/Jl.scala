@@ -63,33 +63,7 @@ object Jl {
                  CAST(dp AS DOUBLE)
                    / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) AS cos
           FROM dots),
-        truth AS (
-          SELECT qid, nid FROM (
-            SELECT q.vec_id AS qid, c.vec_id AS nid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY q.vec_id
-                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-                              c.vec_id) AS rank
-            FROM embeddings q JOIN embeddings c ON c.vec_id >= 10
-            WHERE q.vec_id < 10)
-          WHERE rank <= 5),
-        ann AS (
-          SELECT qid, nid FROM (
-            SELECT qid, nid,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
-            FROM cands)
-          WHERE rank <= 5),
-        stats AS (SELECT qid, COUNT(*) AS n_cands FROM cands GROUP BY qid),
-        hits AS (
-          SELECT t.qid, COUNT(a.nid) AS n_hit
-          FROM truth t LEFT JOIN ann a ON a.qid = t.qid AND a.nid = t.nid
-          GROUP BY t.qid)
-        SELECT CAST(h.qid AS BIGINT) AS qid,
-               CAST(h.n_hit AS BIGINT) AS n_hit,
-               CAST(h.n_hit AS DOUBLE) / 5 AS recall,
-               CAST(COALESCE(s.n_cands, 0) AS BIGINT) AS n_cands
-        FROM hits h LEFT JOIN stats s ON s.qid = h.qid
-        ORDER BY qid
+        ${Similarity.sqlRecallTail}
       """.trim),
       (s, d) => {
         val spark = s

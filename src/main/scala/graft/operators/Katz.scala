@@ -72,10 +72,7 @@ object Katz {
     QueryDef(
       "gx_katz",
       Some(s"""
-        WITH e0 AS (
-          SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+        WITH ${Graph.sqlTradeEdges},
         nodes AS (SELECT DISTINCT src AS node FROM e),
         k0 AS (SELECT node, CAST(1 AS DOUBLE) AS x FROM nodes),
         ${(1 to iters).map(sqlIter).mkString(",\n")}

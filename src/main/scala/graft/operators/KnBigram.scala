@@ -43,15 +43,8 @@ object KnBigram {
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "ta_kn_bigram",
-      Some("""
-        WITH toks AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        bg AS (
-          SELECT doc_id, tk[i] AS prev, tk[i + 1] AS next
-          FROM (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM toks)),
-        cw AS (
-          SELECT prev, next, COUNT(*) AS c
-          FROM bg WHERE doc_id % 10 <> 0 GROUP BY prev, next),
+      Some(s"""
+        WITH ${Lm.sqlBigramSplit},
         cc AS (SELECT prev, SUM(c) AS ctx, COUNT(*) AS t FROM cw GROUP BY prev),
         np AS (SELECT next, COUNT(*) AS n1p FROM cw GROUP BY next),
         bs AS (SELECT COUNT(*) AS b FROM cw),
@@ -73,27 +66,11 @@ object KnBigram {
           LEFT JOIN np ON np.next = e.next
           CROSS JOIN bs
           WHERE e.doc_id % 10 = 0)
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(SUM(seen_ctx) AS BIGINT) AS n_seen_ctx,
-               CAST(SUM(seen_bg) AS BIGINT) AS n_seen_bigram,
-               CAST(SUM(bits) AS BIGINT) AS total_bits,
-               CAST(SUM(bits) AS DOUBLE) / COUNT(*) AS bits_per_token
-        FROM scored
+        ${Lm.sqlXentSummary}
       """.trim),
       (s, d) => {
         import s.implicits._
-        val bg = documents(s, d)
-          .select($"doc_id", split($"text", " ").as("tk"))
-          .filter(size($"tk") >= 2)
-          .select($"doc_id", explode(transform(
-            sequence(lit(0), size($"tk") - 2),
-            i => struct(element_at($"tk", i + 1).as("prev"),
-              element_at($"tk", i + 2).as("next")))).as("p"))
-          .select($"doc_id", $"p.prev".as("prev"), $"p.next".as("next"))
-          .localCheckpoint()
-        val cw = bg.filter($"doc_id" % 10 =!= 0)
-          .groupBy($"prev", $"next").agg(count(lit(1)).as("c"))
-          .localCheckpoint()
+        val (bg, cw) = Lm.heldOutBigrams(documents(s, d))
         val cc = cw.groupBy($"prev")
           .agg(sum($"c").as("ctx"), count(lit(1)).as("t"))
         val np = cw.groupBy($"next").agg(count(lit(1)).as("n1p"))
@@ -115,10 +92,6 @@ object KnBigram {
               .cast("long").as("bits"),
             when($"cprev".isNotNull, 1).otherwise(0).as("seen_ctx"),
             when($"c".isNotNull, 1).otherwise(0).as("seen_bg"))
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum($"seen_ctx").cast("long").as("n_seen_ctx"),
-            sum($"seen_bg").cast("long").as("n_seen_bigram"),
-            sum($"bits").cast("long").as("total_bits"),
-            (sum($"bits").cast("double") / count(lit(1))).as("bits_per_token"))
+          .transform(Lm.xentSummary)
       }))
 }

@@ -32,10 +32,7 @@ object Kpss {
     QueryDef(
       "ts_kpss",
       Some(s"""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
-          FROM events GROUP BY 1, 2),
+        WITH ${Acf.sqlDailyByType},
         st AS (
           SELECT event_type, COUNT(*) AS n, SUM(z) AS s
           FROM daily GROUP BY event_type),
@@ -62,10 +59,7 @@ object Kpss {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val daily = events(s, d)
-          .groupBy($"event_type", $"ts".cast("date").as("day"))
-          .agg((sum($"value".cast(DecimalType(18, 2))) * 100)
-            .cast("long").as("z"))
+        val daily = Acf.dailyByType(events(s, d))
         val st = daily.groupBy($"event_type".as("st_et"))
           .agg(count(lit(1)).as("n"), sum($"z").as("s"))
         val cent = daily.join(st, $"event_type" === $"st_et")

@@ -39,14 +39,8 @@ object LjungBox {
         val lagCols = (1 to maxLag).map(k =>
           s"lag(z, $k) OVER (PARTITION BY event_type ORDER BY day) AS z$k")
           .mkString(",\n                 ")
-        val arms = (1 to maxLag).map(k => s"""
-          SELECT event_type, $k AS lag, z AS x, z$k AS y
-          FROM lagged WHERE z$k IS NOT NULL""").mkString(" UNION ALL ")
         Some(s"""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
-          FROM events GROUP BY 1, 2),
+        WITH ${Acf.sqlDailyByType},
         stats AS (
           SELECT event_type, COUNT(*) AS n, SUM(z) AS s
           FROM daily GROUP BY event_type),
@@ -61,7 +55,7 @@ object LjungBox {
             s"lag(c, $k) OVER (PARTITION BY event_type ORDER BY day) AS z$k")
             .mkString(",\n                 ")}
           FROM cent),
-        pairs AS ($arms),
+        pairs AS (${Acf.sqlLagArms(maxLag)}),
         den AS (
           SELECT event_type, n,
                  CAST(SUM(CAST(z AS DECIMAL(38,0)) * CAST(z AS DECIMAL(38,0))) AS DOUBLE) AS d2
@@ -87,9 +81,7 @@ object LjungBox {
       },
       (s, d) => {
         import s.implicits._
-        val daily = events(s, d)
-          .groupBy($"event_type", $"ts".cast("date").as("day"))
-          .agg((sum($"value".cast(DecimalType(18, 2))) * 100).cast("long").as("z"))
+        val daily = Acf.dailyByType(events(s, d))
         val stats = daily.groupBy($"event_type".as("st_et"))
           .agg(count(lit(1)).as("n"), sum($"z").as("s"))
         val cent = daily.join(stats, $"event_type" === $"st_et")
@@ -102,11 +94,7 @@ object LjungBox {
         val den = lagged.groupBy($"event_type".as("d_et"), $"n")
           .agg(sum($"z".cast(DecimalType(38, 0)) * $"z".cast(DecimalType(38, 0)))
             .cast("double").as("d2"))
-        val pairs = (1 to maxLag).map { k =>
-          lagged.filter(col(s"z$k").isNotNull)
-            .select($"event_type", lit(k).as("lag"),
-              $"z".as("x"), col(s"z$k").as("y"))
-        }.reduce(_ unionByName _)
+        val pairs = Acf.lagArms(lagged, maxLag)
         val num = pairs.groupBy($"event_type", $"lag")
           .agg(sum($"x".cast(DecimalType(38, 0)) * $"y".cast(DecimalType(38, 0)))
             .cast("double").as("nk"))

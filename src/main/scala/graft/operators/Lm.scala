@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.sources.Tables._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Held-out cross-entropy of an add-one-smoothed bigram language
@@ -23,19 +24,59 @@ import org.apache.spark.sql.functions._
   */
 object Lm {
 
-  val defs: Seq[QueryDef] = Seq(
+  /** The held-out bigram split both LM queries score: every document's
+    * adjacent whitespace-token pairs `bg(doc_id, prev, next)` and the
+    * train-side (doc_id % 10 <> 0) counts `cw(prev, next, c)`, each
+    * checkpointed (both feed several consumers). */
+  private[operators] def heldOutBigrams(docs: DataFrame): (DataFrame, DataFrame) = {
+    val bg = docs
+      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .filter(size(col("tk")) >= 2)
+      .select(col("doc_id"), explode(transform(
+        sequence(lit(0), size(col("tk")) - 2),
+        i => struct(element_at(col("tk"), i + 1).as("prev"),
+          element_at(col("tk"), i + 2).as("next")))).as("p"))
+      .select(col("doc_id"), col("p.prev").as("prev"), col("p.next").as("next"))
+      .localCheckpoint()
+    val cw = bg.filter(col("doc_id") % 10 =!= 0)
+      .groupBy(col("prev"), col("next")).agg(count(lit(1)).as("c"))
+      .localCheckpoint()
+    (bg, cw)
+  }
 
-    QueryDef(
-      "ta_bigram_xent",
-      Some("""
-        WITH toks AS (
+  /** SQL mirror of [[heldOutBigrams]]: `toks`, `bg` and `cw`. */
+  private[operators] def sqlBigramSplit: String = """toks AS (
           SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         bg AS (
           SELECT doc_id, tk[i] AS prev, tk[i + 1] AS next
           FROM (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM toks)),
         cw AS (
           SELECT prev, next, COUNT(*) AS c
-          FROM bg WHERE doc_id % 10 <> 0 GROUP BY prev, next),
+          FROM bg WHERE doc_id % 10 <> 0 GROUP BY prev, next)"""
+
+  /** The cross-entropy readout over scored held-out bigrams
+    * `(bits, seen_ctx, seen_bg)`: counts, total bits and bits per token. */
+  private[operators] def xentSummary(scored: DataFrame): DataFrame =
+    scored.agg(count(lit(1)).as("n_bigrams"),
+      sum(col("seen_ctx")).cast("long").as("n_seen_ctx"),
+      sum(col("seen_bg")).cast("long").as("n_seen_bigram"),
+      sum(col("bits")).cast("long").as("total_bits"),
+      (sum(col("bits")).cast("double") / count(lit(1))).as("bits_per_token"))
+
+  /** SQL mirror of [[xentSummary]] over a `scored` CTE. */
+  private[operators] def sqlXentSummary: String = """SELECT CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+               CAST(SUM(seen_ctx) AS BIGINT) AS n_seen_ctx,
+               CAST(SUM(seen_bg) AS BIGINT) AS n_seen_bigram,
+               CAST(SUM(bits) AS BIGINT) AS total_bits,
+               CAST(SUM(bits) AS DOUBLE) / COUNT(*) AS bits_per_token
+        FROM scored"""
+
+  val defs: Seq[QueryDef] = Seq(
+
+    QueryDef(
+      "ta_bigram_xent",
+      Some(s"""
+        WITH $sqlBigramSplit,
         cc AS (SELECT prev, SUM(c) AS ctx FROM cw GROUP BY prev),
         v AS (SELECT COUNT(DISTINCT next) AS v FROM cw),
         scored AS (
@@ -49,27 +90,11 @@ object Lm {
           LEFT JOIN cc ON cc.prev = b.prev
           CROSS JOIN v
           WHERE b.doc_id % 10 = 0)
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(SUM(seen_ctx) AS BIGINT) AS n_seen_ctx,
-               CAST(SUM(seen_bg) AS BIGINT) AS n_seen_bigram,
-               CAST(SUM(bits) AS BIGINT) AS total_bits,
-               CAST(SUM(bits) AS DOUBLE) / COUNT(*) AS bits_per_token
-        FROM scored
+        $sqlXentSummary
       """.trim),
       (s, d) => {
         import s.implicits._
-        val bg = documents(s, d)
-          .select($"doc_id", split($"text", " ").as("tk"))
-          .filter(size($"tk") >= 2)
-          .select($"doc_id", explode(transform(
-            sequence(lit(0), size($"tk") - 2),
-            i => struct(element_at($"tk", i + 1).as("prev"),
-              element_at($"tk", i + 2).as("next")))).as("p"))
-          .select($"doc_id", $"p.prev".as("prev"), $"p.next".as("next"))
-          .localCheckpoint()
-        val cw = bg.filter($"doc_id" % 10 =!= 0)
-          .groupBy($"prev", $"next").agg(count(lit(1)).as("c"))
-          .localCheckpoint()
+        val (bg, cw) = heldOutBigrams(documents(s, d))
         val cc = cw.groupBy($"prev").agg(sum($"c").as("ctx"))
         val v = cw.agg(countDistinct($"next").as("v"))
         bg.filter($"doc_id" % 10 === 0)
@@ -82,11 +107,7 @@ object Lm {
               (coalesce($"c", lit(0)) + 1))).cast("long").as("bits"),
             when($"cprev".isNotNull, 1).otherwise(0).as("seen_ctx"),
             when($"c".isNotNull, 1).otherwise(0).as("seen_bg"))
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum($"seen_ctx").cast("long").as("n_seen_ctx"),
-            sum($"seen_bg").cast("long").as("n_seen_bigram"),
-            sum($"bits").cast("long").as("total_bits"),
-            (sum($"bits").cast("double") / count(lit(1))).as("bits_per_token"))
+          .transform(xentSummary)
       }),
 
     // Tokenizer fertility per (source, lang) — BPE tokens per

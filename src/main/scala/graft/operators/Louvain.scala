@@ -51,12 +51,8 @@ object Louvain {
 
   /** Oracle CTEs for pass 1, ending in `lbl(node, lbl)` plus the
     * shared `e0/e/deg/m` graph tables. */
-  private val phase1Ctes = """
-        raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e0 AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
+  private val phase1Ctes = s"""
+        ${Graph.sqlHashedEdges("e0")},
         e AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0),
         deg AS (SELECT src AS node, COUNT(*) AS deg FROM e GROUP BY src),
         m AS (SELECT COUNT(*) AS m FROM e0),

@@ -97,10 +97,7 @@ object MatrixProfile {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val cnt = events(s, d)
-          .select($"event_type",
-            expr("(unix_micros(ts) - 1704067200000000) DIV 3600000000").as("h"))
-          .groupBy($"event_type", $"h").agg(count(lit(1)).as("x"))
+        val cnt = Hurst.hourlyCounts(events(s, d))
         val guarded = cnt.withColumn("x",
           when($"h" >= 0 && $"h" < 720, $"x")
             .otherwise(raise_error(concat(

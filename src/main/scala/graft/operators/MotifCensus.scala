@@ -60,9 +60,7 @@ object MotifCensus {
         FROM dsum d CROSS JOIN tri t CROSS JOIN es
       """.trim),
       (s, d) => {
-        val edges = lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b"))
+        val edges = Graph.hashedPairs(lineitem(s, d))
         val e = Graph.canonicalEdges(edges)
         val deg = Graph.degrees(e)
         val dsum = deg.agg(

@@ -530,18 +530,7 @@ object Multimodal {
           FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
           WHERE bit_count(xor(a.sig_lo, b.sig_lo))
                 + bit_count(xor(a.sig_hi, b.sig_hi)) <= 4),
-        cents AS (
-          SELECT vec_id AS centroid, embedding AS cemb FROM embeddings
-          WHERE vec_id < 16),
-        assigned AS (
-          SELECT vec_id, embedding, centroid FROM (
-            SELECT e.vec_id, e.embedding, c.centroid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                              c.centroid) AS rn
-            FROM embeddings e, cents c)
-          WHERE rn <= 3),
+        ${Similarity.sqlIvfAssignedCte(16, 3)},
         emb AS (
           SELECT DISTINCT a.vec_id AS i, b.vec_id AS j,
                  list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS cos
@@ -651,21 +640,7 @@ object Multimodal {
           FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
           WHERE bit_count(xor(a.sig_lo, b.sig_lo))
                 + bit_count(xor(a.sig_hi, b.sig_hi)) <= 4),
-        edges AS (SELECT i AS a, j AS b FROM pairs
-                  UNION ALL SELECT j, i FROM pairs),
-        walk(a, b) AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT w.a, e.b FROM walk w JOIN edges e ON w.b = e.a),
-        mins AS (SELECT a AS doc_id, MIN(b) AS mn FROM walk GROUP BY a),
-        reps AS (
-          SELECT d.doc_id,
-                 COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_rep
-          FROM documents d LEFT JOIN mins m ON d.doc_id = m.doc_id)
-        SELECT doc_id, cluster_rep,
-               CAST(COUNT(*) OVER (PARTITION BY cluster_rep) AS BIGINT) AS cluster_size
-        FROM reps
-        ORDER BY doc_id
+        ${Dedup.sqlDuplicateClusters}
       """.trim),
       (s, d) => {
         val docs = documents(s, d)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.sources.Tables._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Neighborhood function (distance distribution) from a seed sample —
@@ -22,15 +23,49 @@ import org.apache.spark.sql.functions._
   */
 object Neighborhood {
 
+  /** Per radius r in 0..3, the number of (seed, node) pairs within r
+    * hops of the pairs `start(seed, node)` over the edges `e(src, dst)`.
+    * Frontier-only expansion: each round joins ONLY the nodes first
+    * reached last round (not the whole accumulated reach set), and the
+    * anti-join keeps the union disjoint so no global distinct over the
+    * growing pair set is ever needed — per-round cost is proportional
+    * to the new frontier, the textbook BFS discipline. Iteration state
+    * is EAGER localCheckpoints, not persist: a lazily-persisted
+    * next-state whose predecessor is unpersisted before first
+    * materialization silently recomputes the whole lineage chain every
+    * round — checkpointing truncates it. */
+  private def reachCounts(start: DataFrame, e: DataFrame): Seq[(Long, Long)] = {
+    val spark = start.sparkSession
+    import spark.implicits._
+    var reach = start.localCheckpoint().toDF("seed", "node")
+    var frontier = reach
+    val counts = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    var total = reach.count()
+    counts += ((0L, total))
+    for (r <- 1 to 3) {
+      val cand = frontier.as("f")
+        .join(e.as("ed"), $"f.node" === $"ed.src")
+        .select($"f.seed".as("seed"), $"ed.dst".as("node"))
+        .distinct()
+      val fresh = cand.join(reach, Seq("seed", "node"), "left_anti")
+        .localCheckpoint().toDF("seed", "node")
+      total += fresh.count()
+      counts += ((r.toLong, total))
+      // the union of already-checkpointed frames needs no fresh
+      // checkpoint of its own — its only consumer is next round's
+      // anti-join, which scans the cached components directly
+      reach = reach.union(fresh)
+      frontier = fresh
+    }
+    counts.toSeq
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
       "gx_neighborhood",
-      Some("""
-        WITH RECURSIVE e0 AS (
-          SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+      Some(s"""
+        WITH RECURSIVE ${Graph.sqlTradeEdges},
         seeds AS (
           SELECT src AS seed FROM (
             SELECT DISTINCT src FROM e WHERE src % 2 = 0 ORDER BY src LIMIT 10)),
@@ -58,38 +93,9 @@ object Neighborhood {
           .persist()
         val seeds = e.filter($"src" % 2 === 0).select($"src").distinct()
           .orderBy($"src").limit(10).select($"src".as("seed"))
-        // frontier-only expansion: each round joins ONLY the nodes first
-        // reached last round (not the whole accumulated reach set), and
-        // the anti-join keeps the union disjoint so no global distinct
-        // over the growing pair set is ever needed — per-round cost is
-        // proportional to the new frontier, the textbook BFS discipline.
-        // Iteration state is EAGER localCheckpoints, not persist: a
-        // lazily-persisted next-state whose predecessor is unpersisted
-        // before first materialization silently recomputes the whole
-        // lineage chain every round — checkpointing truncates it.
-        var reach = seeds.select($"seed", $"seed".as("node")).localCheckpoint()
-          .toDF("seed", "node")
-        var frontier = reach
-        val counts = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-        var total = reach.count()
-        counts += ((0L, total))
-        for (r <- 1 to 3) {
-          val cand = frontier.as("f")
-            .join(e.as("ed"), $"f.node" === $"ed.src")
-            .select($"f.seed".as("seed"), $"ed.dst".as("node"))
-            .distinct()
-          val fresh = cand.join(reach, Seq("seed", "node"), "left_anti")
-            .localCheckpoint().toDF("seed", "node")
-          total += fresh.count()
-          counts += ((r.toLong, total))
-          // the union of already-checkpointed frames needs no fresh
-          // checkpoint of its own — its only consumer is next round's
-          // anti-join, which scans the cached components directly
-          reach = reach.union(fresh)
-          frontier = fresh
-        }
+        val counts = reachCounts(seeds.select($"seed", $"seed".as("node")), e)
         e.unpersist()
-        s.createDataFrame(counts.toSeq).toDF("radius", "pairs_reachable")
+        s.createDataFrame(counts).toDF("radius", "pairs_reachable")
           .orderBy($"radius")
       }),
 
@@ -187,28 +193,7 @@ object Neighborhood {
         // from every node (feasible here by the graph slice; at true
         // scale this arm is the thing HyperANF replaces).
         val exactArm = Future {
-          var reach = nodes.select($"node".as("seed"), $"node").localCheckpoint()
-            .toDF("seed", "node")
-          var frontier = reach
-          val counts = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-          var total = reach.count()
-          counts += ((0L, total))
-          for (r <- 1 to 3) {
-            val cand = frontier.as("f")
-              .join(e.as("ed"), $"f.node" === $"ed.src")
-              .select($"f.seed".as("seed"), $"ed.dst".as("node"))
-              .distinct()
-            val fresh = cand.join(reach, Seq("seed", "node"), "left_anti")
-              .localCheckpoint().toDF("seed", "node")
-            total += fresh.count()
-            counts += ((r.toLong, total))
-            // the union of already-checkpointed frames needs no fresh
-            // checkpoint of its own — its only consumer is next round's
-            // anti-join, which scans the cached components directly
-            reach = reach.union(fresh)
-            frontier = fresh
-          }
-          counts.toSeq
+          reachCounts(nodes.select($"node".as("seed"), $"node"), e)
         }
         val estByR = Await.result(hllArm, Duration.Inf)
         val counts = Await.result(exactArm, Duration.Inf)

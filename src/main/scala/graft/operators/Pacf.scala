@@ -61,9 +61,6 @@ object Pacf {
         val lagSel = (1 to maxLag).map(k =>
           s"lag(c, $k) OVER (PARTITION BY event_type ORDER BY day) AS z$k")
           .mkString(",\n                 ")
-        val arms = (1 to maxLag).map(k => s"""
-          SELECT event_type, $k AS lag, z AS x, z$k AS y
-          FROM lagged WHERE z$k IS NOT NULL""").mkString(" UNION ALL ")
         val rhoCols = (1 to maxLag).map(k =>
           s"MAX(CASE WHEN lag = $k THEN rho END) AS r$k").mkString(",\n               ")
         // one CTE per φ column: each formula may reference the φ emitted
@@ -77,10 +74,7 @@ object Pacf {
           s"SELECT event_type, $k AS lag, p_${k}_$k AS pacf FROM $last")
           .mkString(" UNION ALL ")
         Some(s"""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
-          FROM events GROUP BY 1, 2),
+        WITH ${Acf.sqlDailyByType},
         stats AS (
           SELECT event_type, COUNT(*) AS n, SUM(z) AS s
           FROM daily GROUP BY event_type),
@@ -91,7 +85,7 @@ object Pacf {
         lagged AS (
           SELECT event_type, c AS z, $lagSel
           FROM cent),
-        pairs AS ($arms),
+        pairs AS (${Acf.sqlLagArms(maxLag)}),
         den AS (
           SELECT event_type,
                  CAST(SUM(CAST(z AS DECIMAL(38,0)) * CAST(z AS DECIMAL(38,0))) AS DOUBLE) AS d2
@@ -114,9 +108,7 @@ object Pacf {
       },
       (s, d) => {
         import s.implicits._
-        val daily = events(s, d)
-          .groupBy($"event_type", $"ts".cast("date").as("day"))
-          .agg((sum($"value".cast(DecimalType(18, 2))) * 100).cast("long").as("z"))
+        val daily = Acf.dailyByType(events(s, d))
         val stats = daily.groupBy($"event_type".as("st_et"))
           .agg(count(lit(1)).as("n"), sum($"z").as("s"))
         val cent = daily.join(stats, $"event_type" === $"st_et")
@@ -129,11 +121,7 @@ object Pacf {
         val den = lagged.groupBy($"event_type".as("d_et"))
           .agg(sum($"z".cast(DecimalType(38, 0)) * $"z".cast(DecimalType(38, 0)))
             .cast("double").as("d2"))
-        val pairs = (1 to maxLag).map { k =>
-          lagged.filter(col(s"z$k").isNotNull)
-            .select($"event_type", lit(k).as("lag"),
-              $"z".as("x"), col(s"z$k").as("y"))
-        }.reduce(_ unionByName _)
+        val pairs = Acf.lagArms(lagged, maxLag)
         val num = pairs.groupBy($"event_type", $"lag")
           .agg(sum($"x".cast(DecimalType(38, 0)) * $"y".cast(DecimalType(38, 0)))
             .cast("double").as("nk"))

@@ -585,17 +585,7 @@ object Pipeline {
       "pl_dedup_keep_best",
       Some(s"""
         WITH RECURSIVE ${Dedup.sqlLshPairsCtes()},
-        edges AS (SELECT i AS a, j AS b FROM pairs
-                  UNION ALL SELECT j, i FROM pairs),
-        walk(a, b) AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT w.a, e.b FROM walk w JOIN edges e ON w.b = e.a),
-        mins AS (SELECT a AS doc_id, MIN(b) AS mn FROM walk GROUP BY a),
-        reps AS (
-          SELECT d.doc_id,
-                 COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_rep
-          FROM documents d LEFT JOIN mins m ON d.doc_id = m.doc_id),
+        ${Dedup.sqlClusterReps},
         $scoredSql,
         sel AS (
           SELECT r.cluster_rep, r.doc_id, s.quality,

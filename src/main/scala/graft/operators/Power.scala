@@ -3,7 +3,6 @@ package graft.operators
 import graft.QueryDef
 import graft.sources.Tables._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Experiment power analysis — the companion readout to
   * [[Experiments]]'s ev_ab_test: given the measured per-arm variances
@@ -21,21 +20,13 @@ object Power {
 
     QueryDef(
       "ev_ab_power",
-      Some("""
+      Some(s"""
         WITH p AS (
           SELECT user_id % 2 AS variant,
                  CAST(value AS DECIMAL(28,10)) AS dv,
                  CAST(value * value AS DECIMAL(38,10)) AS dv2
           FROM events WHERE event_type = 'purchase'),
-        m AS (
-          SELECT
-            SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS na,
-            SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS nb,
-            CAST(SUM(CASE WHEN variant = 0 THEN dv END) AS DOUBLE) AS sa,
-            CAST(SUM(CASE WHEN variant = 1 THEN dv END) AS DOUBLE) AS sb,
-            CAST(SUM(CASE WHEN variant = 0 THEN dv2 END) AS DOUBLE) AS qa,
-            CAST(SUM(CASE WHEN variant = 1 THEN dv2 END) AS DOUBLE) AS qb
-          FROM p)
+        ${Experiments.sqlAbMoments}
         SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
                sa / na AS mean_a, sb / nb AS mean_b,
                (1.959964 + 0.841621)
@@ -52,22 +43,9 @@ object Power {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val p = events(s, d)
-          .filter($"event_type" === "purchase")
-          .select(($"user_id" % 2).as("variant"),
-            $"value".cast(DecimalType(28, 10)).as("dv"),
-            ($"value" * $"value").cast(DecimalType(38, 10)).as("dv2"))
-        val m = p.agg(
-          sum(when($"variant" === 0, 1).otherwise(0)).as("na"),
-          sum(when($"variant" === 1, 1).otherwise(0)).as("nb"),
-          sum(when($"variant" === 0, $"dv")).cast("double").as("sa"),
-          sum(when($"variant" === 1, $"dv")).cast("double").as("sb"),
-          sum(when($"variant" === 0, $"dv2")).cast("double").as("qa"),
-          sum(when($"variant" === 1, $"dv2")).cast("double").as("qb"))
-        val meanA = $"sa" / $"na"
-        val meanB = $"sb" / $"nb"
-        val varA = ($"qa" - $"sa" * $"sa" / $"na") / ($"na" - 1)
-        val varB = ($"qb" - $"sb" * $"sb" / $"nb") / ($"nb" - 1)
+        val m = Experiments.abMoments(events(s, d))
+        val (meanA, meanB, varA, varB) = (Experiments.abMean("a"),
+          Experiments.abMean("b"), Experiments.abVar("a"), Experiments.abVar("b"))
         val mde = (lit(1.959964) + lit(0.841621)) * sqrt(varA / $"na" + varB / $"nb")
         m.select($"na".cast("long").as("n_a"), $"nb".cast("long").as("n_b"),
           meanA.as("mean_a"), meanB.as("mean_b"),

@@ -57,9 +57,7 @@ object PowerLaw {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val edges = lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b"))
+        val edges = Graph.hashedPairs(lineitem(s, d))
         val e = Graph.canonicalEdges(edges)
         val deg = Graph.degrees(e)
         val tail = deg.filter($"deg" >= dMin)

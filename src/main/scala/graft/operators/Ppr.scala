@@ -101,10 +101,7 @@ object Ppr {
     QueryDef(
       "gx_ppr",
       Some(s"""
-        WITH e0 AS (
-          SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+        WITH ${Graph.sqlTradeEdges},
         deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
         nodes AS (SELECT src AS node, deg FROM deg),
         tele AS (

@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.det
 import graft.sources.Tables._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -31,11 +32,42 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Propensity {
 
-  val defs: Seq[QueryDef] = Seq(
-    QueryDef(
-      "ev_propensity_strata",
-      Some(s"""
-        WITH u AS (
+  /** Users ranked by pre-period non-purchase activity (`score` desc,
+    * user_id) into `k` equal buckets named `bucket`, SQL `ntile(k)`
+    * exactly, with per bucket the treated/control (`user_id % 2`) counts
+    * `n_t`/`n_c` and converters `conv_t`/`conv_c`. Runs one count job. */
+  private[operators] def armsByBucket(s: SparkSession, d: String, k: Int,
+      bucket: String): DataFrame = {
+    import s.implicits._
+    val u = events(s, d)
+      .groupBy($"user_id")
+      .agg(
+        sum(when($"event_type" =!= "purchase"
+          && $"ts".cast("date") < lit("2024-01-15").cast("date"), 1)
+          .otherwise(0)).as("score"),
+        max(when($"event_type" === "purchase", 1).otherwise(0)).as("conv"))
+      .select(($"user_id" % 2).as("treat"), $"score", $"conv", $"user_id")
+    // globalRank yields a 0-based dense total-order rank; ntile(k)
+    // over n rows assigns the first n%k buckets ceil(n/k) rows and
+    // the rest floor(n/k) — both branches in closed form from rank.
+    val ranked = Pipeline.globalRank(u, Seq($"score".desc, $"user_id"))
+    val n = ranked.count()
+    val (q, m) = (n / k, n % k)
+    val r = ranked.withColumn(bucket,
+      when($"rank" < m * (q + 1), expr(s"rank div ${q + 1}"))
+        .otherwise(lit(m) +
+          expr(s"(rank - ${m * (q + 1)}) div ${math.max(q, 1L)}"))
+        .cast("long") + lit(1L))
+    r.groupBy(col(bucket))
+      .agg(
+        sum(when($"treat" === 1, 1).otherwise(0)).as("n_t"),
+        sum(when($"treat" === 0, 1).otherwise(0)).as("n_c"),
+        sum(when($"treat" === 1, $"conv").otherwise(0)).as("conv_t"),
+        sum(when($"treat" === 0, $"conv").otherwise(0)).as("conv_c"))
+  }
+
+  /** SQL mirror of [[armsByBucket]]: the `u`, `r` and `g` CTEs. */
+  private[operators] def sqlArmsByBucket(k: Int, bucket: String): String = s"""u AS (
           SELECT user_id, user_id % 2 AS treat,
                  SUM(CASE WHEN event_type <> 'purchase'
                           AND CAST(ts AS DATE) < DATE '2024-01-15'
@@ -44,15 +76,21 @@ object Propensity {
           FROM events GROUP BY user_id),
         r AS (
           SELECT treat, conv,
-                 ntile(5) OVER (ORDER BY score DESC, user_id) AS stratum
+                 ntile($k) OVER (ORDER BY score DESC, user_id) AS $bucket
           FROM u),
         g AS (
-          SELECT stratum,
+          SELECT $bucket,
                  SUM(CASE WHEN treat = 1 THEN 1 ELSE 0 END) AS n_t,
                  SUM(CASE WHEN treat = 0 THEN 1 ELSE 0 END) AS n_c,
                  SUM(CASE WHEN treat = 1 THEN conv ELSE 0 END) AS conv_t,
                  SUM(CASE WHEN treat = 0 THEN conv ELSE 0 END) AS conv_c
-          FROM r GROUP BY stratum),
+          FROM r GROUP BY $bucket)"""
+
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef(
+      "ev_propensity_strata",
+      Some(s"""
+        WITH ${sqlArmsByBucket(5, "stratum")},
         tot AS (SELECT SUM(n_t) AS nt FROM g),
         per AS (
           SELECT stratum, n_t, n_c, conv_t, conv_c,
@@ -79,28 +117,7 @@ object Propensity {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val u = events(s, d)
-          .groupBy($"user_id")
-          .agg(
-            sum(when($"event_type" =!= "purchase"
-              && $"ts".cast("date") < lit("2024-01-15").cast("date"), 1)
-              .otherwise(0)).as("score"),
-            max(when($"event_type" === "purchase", 1).otherwise(0)).as("conv"))
-          .select(($"user_id" % 2).as("treat"), $"score", $"conv", $"user_id")
-        val ranked = Pipeline.globalRank(u, Seq($"score".desc, $"user_id"))
-        val n = ranked.count()
-        val (q, m) = (n / 5, n % 5)
-        val r = ranked.withColumn("stratum",
-          when($"rank" < m * (q + 1), expr(s"rank div ${q + 1}"))
-            .otherwise(lit(m) +
-              expr(s"(rank - ${m * (q + 1)}) div ${math.max(q, 1L)}"))
-            .cast("long") + lit(1L))
-        val g = r.groupBy($"stratum")
-          .agg(
-            sum(when($"treat" === 1, 1).otherwise(0)).as("n_t"),
-            sum(when($"treat" === 0, 1).otherwise(0)).as("n_c"),
-            sum(when($"treat" === 1, $"conv").otherwise(0)).as("conv_t"),
-            sum(when($"treat" === 0, $"conv").otherwise(0)).as("conv_c"))
+        val g = armsByBucket(s, d, 5, "stratum")
         val tot = g.agg(sum($"n_t").as("nt"))
         val diffC = det.snap9($"conv_t" * lit(1.0) / nullif($"n_t", lit(0))
           - $"conv_c" * lit(1.0) / nullif($"n_c", lit(0)))

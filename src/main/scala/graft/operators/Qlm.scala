@@ -64,17 +64,8 @@ object Qlm {
       },
       (s, d) => {
         val terms = getKeywords(cleanString(SimpleRag.harnessQuery)).distinct
-        val withDl = documents(s, d)
-          .select(col("doc_id"), split(cleanText(col("text")), " ").as("tk"))
-          .withColumn("dl",
-            size(filter(col("tk"), x => x =!= lit(""))).cast("long"))
-        val tf = withDl
-          .select(col("doc_id"), col("dl"), explode(array(terms.map { t =>
-            struct(lit(t).as("term"),
-              size(filter(col("tk"), x => x === lit(t))).cast("long").as("tf"))
-          }: _*)).as("s"))
-          .select(col("doc_id"), col("dl"),
-            col("s.term").as("term"), col("s.tf").as("tf"))
+        val withDl = SimpleRag.withDocLen(documents(s, d))
+        val tf = SimpleRag.termFreqsDl(withDl, terms)
         val cf = tf.groupBy(col("term")).agg(sum(col("tf")).as("cf"))
           .filter(col("cf") > 0)
         val stats = withDl.agg(sum(col("dl")).as("tot"))

@@ -37,6 +37,36 @@ object SimpleRag {
   val harnessQuery = "the spark shuffle and join of a window merge"
   val harnessK = 25
 
+  /** Each document's tokens `tk` (cleaned text split on spaces) and its
+    * length `dl`, the count of non-empty tokens. */
+  private[operators] def withDocLen(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), split(cleanText(col("text")), " ").as("tk"))
+      .withColumn("dl",
+        size(filter(col("tk"), x => x =!= lit(""))).cast("long"))
+
+  /** One row per (document of [[withDocLen]], query term):
+    * `(doc_id, dl, term, tf)`, zero counts included. */
+  private[operators] def termFreqsDl(withDl: DataFrame, terms: Seq[String]): DataFrame =
+    withDl
+      .select(col("doc_id"), col("dl"), explode(array(terms.map { t =>
+        struct(lit(t).as("term"),
+          size(filter(col("tk"), x => x === lit(t))).cast("long").as("tf"))
+      }: _*)).as("s"))
+      .select(col("doc_id"), col("dl"),
+        col("s.term").as("term"), col("s.tf").as("tf"))
+
+  /** The positive query-term counts `(doc_id, term, tf)` of `docs`. */
+  private def termFreqs(docs: DataFrame, terms: Seq[String]): DataFrame =
+    docs
+      .select(col("doc_id"), split(cleanText(col("text")), " ").as("tk"))
+      .select(col("doc_id"), explode(array(terms.map { t =>
+        struct(lit(t).as("term"),
+          size(filter(col("tk"), x => x === lit(t))).cast("long").as("tf"))
+      }: _*)).as("s"))
+      .select(col("doc_id"), col("s.term").as("term"), col("s.tf").as("tf"))
+      .filter(col("tf") > 0)
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "rag_topk_documents", {
@@ -89,14 +119,7 @@ object SimpleRag {
         // an eager docs.count() here would run a full extra scan job
         // every time the query is built.
         val n = docs.agg(count(lit(1)).as("n_docs"))
-        val tf = docs
-          .select(col("doc_id"), split(cleanText(col("text")), " ").as("tk"))
-          .select(col("doc_id"), explode(array(terms.map { t =>
-            struct(lit(t).as("term"),
-              size(filter(col("tk"), x => x === lit(t))).cast("long").as("tf"))
-          }: _*)).as("s"))
-          .select(col("doc_id"), col("s.term").as("term"), col("s.tf").as("tf"))
-          .filter(col("tf") > 0)
+        val tf = termFreqs(docs, terms)
         val dfs = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
         tf.join(broadcast(dfs), "term")
           .crossJoin(broadcast(n))
@@ -201,19 +224,10 @@ object SimpleRag {
       (s, d) => {
         val docs = documents(s, d)
         val terms = getKeywords(cleanString(harnessQuery)).distinct
-        val withDl = docs
-          .select(col("doc_id"), split(cleanText(col("text")), " ").as("tk"))
-          .withColumn("dl",
-            size(filter(col("tk"), x => x =!= lit(""))).cast("long"))
+        val withDl = withDocLen(docs)
         val stats = withDl.agg(
           count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_toks"))
-        val tf = withDl
-          .select(col("doc_id"), col("dl"), explode(array(terms.map { t =>
-            struct(lit(t).as("term"),
-              size(filter(col("tk"), x => x === lit(t))).cast("long").as("tf"))
-          }: _*)).as("s"))
-          .select(col("doc_id"), col("dl"),
-            col("s.term").as("term"), col("s.tf").as("tf"))
+        val tf = termFreqsDl(withDl, terms)
           .filter(col("tf") > 0)
         val dfs = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
         tf.join(broadcast(dfs), "term")
@@ -355,14 +369,7 @@ object SimpleRag {
             keywordScore(cleanText(col("text")), kws).cast("long").as("score"))
           .orderBy(desc("score"), asc("doc_id")).limit(20))
         val n = docs.agg(count(lit(1)).as("n_docs"))
-        val tf = docs
-          .select(col("doc_id"), split(cleanText(col("text")), " ").as("tk"))
-          .select(col("doc_id"), explode(array(terms.map { t =>
-            struct(lit(t).as("term"),
-              size(filter(col("tk"), x => x === lit(t))).cast("long").as("tf"))
-          }: _*)).as("s"))
-          .select(col("doc_id"), col("s.term").as("term"), col("s.tf").as("tf"))
-          .filter(col("tf") > 0)
+        val tf = termFreqs(docs, terms)
         val dfs = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
         val tir = ranked(tf.join(broadcast(dfs), "term")
           .crossJoin(broadcast(n))
@@ -370,19 +377,10 @@ object SimpleRag {
           .agg(graft.det.dsum(
             col("tf").cast("double") * col("n_docs") / col("df"), scale = 6).as("score"))
           .orderBy(desc("score"), asc("doc_id")).limit(20))
-        val withDl = docs
-          .select(col("doc_id"), split(cleanText(col("text")), " ").as("tk"))
-          .withColumn("dl",
-            size(filter(col("tk"), x => x =!= lit(""))).cast("long"))
+        val withDl = withDocLen(docs)
         val bstats = withDl.agg(
           count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_toks"))
-        val btf = withDl
-          .select(col("doc_id"), col("dl"), explode(array(terms.map { t =>
-            struct(lit(t).as("term"),
-              size(filter(col("tk"), x => x === lit(t))).cast("long").as("tf"))
-          }: _*)).as("s"))
-          .select(col("doc_id"), col("dl"),
-            col("s.term").as("term"), col("s.tf").as("tf"))
+        val btf = termFreqsDl(withDl, terms)
           .filter(col("tf") > 0)
         val bdfs = btf.groupBy(col("term")).agg(count(lit(1)).as("df"))
         val bmr = ranked(btf.join(broadcast(bdfs), "term")

@@ -3,7 +3,6 @@ package graft.operators
 import graft.QueryDef
 import graft.sources.Tables._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Hierarchical forecast reconciliation check (Hyndman et al. 2011,
   * bottom-up vs direct): seasonal-naive (same-weekday-mean) forecasts
@@ -36,11 +35,8 @@ object Reconcile {
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "ts_forecast_reconcile",
-      Some("""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
-          FROM events GROUP BY 1, 2),
+      Some(s"""
+        WITH ${Acf.sqlDailyByType},
         d0 AS (SELECT MIN(day) AS d0 FROM daily),
         idx AS (
           SELECT event_type, day, z, day - d0.d0 AS di, (day - d0.d0) % 7 AS wd
@@ -77,10 +73,7 @@ object Reconcile {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val daily = events(s, d)
-          .groupBy($"event_type", $"ts".cast("date").as("day"))
-          .agg((sum($"value".cast(DecimalType(18, 2))) * 100)
-            .cast("long").as("z"))
+        val daily = Acf.dailyByType(events(s, d))
         val d0 = daily.agg(min($"day").as("d0"))
         val idx = daily.crossJoin(broadcast(d0))
           .select($"event_type", $"day", $"z",

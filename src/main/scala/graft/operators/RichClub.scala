@@ -26,12 +26,8 @@ object RichClub {
 
     QueryDef(
       "gx_rich_club",
-      Some("""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
+      Some(s"""
+        WITH ${Graph.sqlHashedEdges()},
         deg AS (
           SELECT n, COUNT(*) AS deg FROM (
             SELECT u AS n FROM e UNION ALL SELECT v FROM e) t
@@ -47,9 +43,7 @@ object RichClub {
         FROM ek
       """.trim),
       (s, d) => {
-        val e = Graph.canonicalEdges(lineitem(s, d)
-          .select((col("l_orderkey") % 29989).as("a"),
-            (col("l_partkey") % 29989).as("b")))
+        val e = Graph.canonicalEdges(Graph.hashedPairs(lineitem(s, d)))
         val club = Graph.degrees(e)
           .orderBy(col("deg").desc, col("n")).limit(50)
           .select(col("n"))

@@ -79,13 +79,7 @@ object RobustSeasonal {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val cnt = events(s, d)
-          .select($"event_type",
-            expr("(unix_micros(ts) - 1704067200000000) DIV 3600000000").as("h"))
-          .groupBy($"event_type", $"h").agg(count(lit(1)).as("x"))
-        val grid = events(s, d).select($"event_type").distinct()
-          .crossJoin(s.range(0, H).select($"id".as("h")))
-          .join(cnt, Seq("event_type", "h"), "left")
+        val grid = Hurst.hourlyGrid(s, d, H)
           .select($"event_type", $"h", ($"h" % 24).as("hd"),
             coalesce($"x", lit(0L)).as("x"))
         val rw = Window.partitionBy($"event_type", $"hd").orderBy($"x", $"h")

@@ -31,17 +31,7 @@ object SeasonalStrength {
     QueryDef(
       "ts_seasonal_strength",
       Some(s"""
-        WITH cnt AS (
-          SELECT event_type,
-                 (epoch_us(ts) - epoch_us(TIMESTAMP '2024-01-01 00:00:00'))
-                   // 3600000000 AS h,
-                 COUNT(*) AS x
-          FROM events GROUP BY 1, 2),
-        grid AS (
-          SELECT t.event_type, g.h, COALESCE(c.x, 0) AS x
-          FROM (SELECT DISTINCT event_type FROM events) t
-          CROSS JOIN (SELECT UNNEST(range(0, $H)) AS h) g
-          LEFT JOIN cnt c ON c.event_type = t.event_type AND c.h = g.h),
+        WITH ${Hurst.sqlHourlyGrid(H)},
         hod AS (
           SELECT event_type, h % 24 AS hd, SUM(x) AS ch
           FROM grid GROUP BY 1, 2),
@@ -67,13 +57,7 @@ object SeasonalStrength {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val cnt = events(s, d)
-          .select($"event_type",
-            expr("(unix_micros(ts) - 1704067200000000) DIV 3600000000").as("h"))
-          .groupBy($"event_type", $"h").agg(count(lit(1)).as("x"))
-        val grid = events(s, d).select($"event_type").distinct()
-          .crossJoin(s.range(0, H).select($"id".as("h")))
-          .join(cnt, Seq("event_type", "h"), "left")
+        val grid = Hurst.hourlyGrid(s, d, H)
           .select($"event_type", $"h", coalesce($"x", lit(0L)).as("x"))
         val hod = grid.groupBy($"event_type".as("h_et"), ($"h" % 24).as("hd"))
           .agg(sum($"x").as("ch"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.sources.Tables._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Semantic deduplication (the SemDeDup recipe, Abbas et al. 2023,
@@ -37,12 +38,21 @@ object Semdedup {
   // would run 0.9+
   private val TAU = 0.4
 
-  val defs: Seq[QueryDef] = Seq(
+  /** Each vector `(vec_id, embedding)` with `centroid`, its nearest of
+    * the K trained centroids (checkpointed). */
+  private def assigned(s: SparkSession, d: String): DataFrame = {
+    val emb = embeddings(s, d)
+      .select(col("vec_id"), col("embedding"))
+      .localCheckpoint()
+    // literal trainer + shuffle-free assignment (r11 verdict #3)
+    val cents = Similarity.kmeansCentroidsLocal(emb, K, ITERS, 64)
+    Similarity.assignLiteral(emb, cents)
+      .localCheckpoint()
+  }
 
-    QueryDef(
-      "pl_semdedup",
-      Some(s"""
-        WITH ${Similarity.kmeansSqlCte(K, ITERS, 64)},
+  /** SQL mirror of [[assigned]]: the trained `cents` and
+    * `asg(vec_id, centroid)`. */
+  private def sqlAssigned: String = s"""${Similarity.kmeansSqlCte(K, ITERS, 64)},
         asg AS (
           SELECT vec_id, centroid FROM (
             SELECT e.vec_id, c.centroid,
@@ -51,7 +61,14 @@ object Semdedup {
                      ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
                               c.centroid) AS rn
             FROM embeddings e, cents c)
-          WHERE rn = 1),
+          WHERE rn = 1)"""
+
+  val defs: Seq[QueryDef] = Seq(
+
+    QueryDef(
+      "pl_semdedup",
+      Some(s"""
+        WITH $sqlAssigned,
         pairs AS (
           SELECT b.vec_id AS j
           FROM asg a
@@ -69,13 +86,7 @@ object Semdedup {
         ORDER BY centroid
       """.trim),
       (s, d) => {
-        val emb = embeddings(s, d)
-          .select(col("vec_id"), col("embedding"))
-          .localCheckpoint()
-        // literal trainer + shuffle-free assignment (r11 verdict #3)
-        val cents = Similarity.kmeansCentroidsLocal(emb, K, ITERS, 64)
-        val asg = Similarity.assignLiteral(emb, cents)
-          .localCheckpoint()
+        val asg = assigned(s, d)
         val a = asg.select(col("centroid"), col("vec_id").as("i"), col("embedding").as("ei"))
         val b = asg.select(col("centroid"), col("vec_id").as("j"), col("embedding").as("ej"))
         val dropped = a.join(b, Seq("centroid"))
@@ -103,16 +114,7 @@ object Semdedup {
     QueryDef(
       "pl_semdedup_sweep",
       Some(s"""
-        WITH ${Similarity.kmeansSqlCte(K, ITERS, 64)},
-        asg AS (
-          SELECT vec_id, centroid FROM (
-            SELECT e.vec_id, c.centroid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                              c.centroid) AS rn
-            FROM embeddings e, cents c)
-          WHERE rn = 1),
+        WITH $sqlAssigned,
         p AS (
           SELECT b.vec_id AS j,
                  list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]) AS cos
@@ -136,13 +138,7 @@ object Semdedup {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val emb = embeddings(s, d)
-          .select(col("vec_id"), col("embedding"))
-          .localCheckpoint()
-        // literal trainer + shuffle-free assignment (r11 verdict #3)
-        val cents = Similarity.kmeansCentroidsLocal(emb, K, ITERS, 64)
-        val asg = Similarity.assignLiteral(emb, cents)
-          .localCheckpoint()
+        val asg = assigned(s, d)
         val a = asg.select(col("centroid"), col("vec_id").as("i"), col("embedding").as("ei"))
         val b = asg.select(col("centroid"), col("vec_id").as("j"), col("embedding").as("ej"))
         val p = a.join(b, Seq("centroid"))

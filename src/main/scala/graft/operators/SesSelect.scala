@@ -34,10 +34,7 @@ object SesSelect {
       "ts_ses_select", {
         val alphaRows = alphas.map(a => s"($a)").mkString(", ")
         Some(s"""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
-          FROM events GROUP BY 1, 2),
+        WITH ${Acf.sqlDailyByType},
         idx AS (
           SELECT event_type, z,
                  ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS t
@@ -85,10 +82,7 @@ object SesSelect {
       },
       (s, d) => {
         import s.implicits._
-        val daily = events(s, d)
-          .groupBy($"event_type", $"ts".cast("date").as("day"))
-          .agg((sum($"value".cast(DecimalType(18, 2))) * 100)
-            .cast("long").as("z"))
+        val daily = Acf.dailyByType(events(s, d))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"event_type").orderBy($"day")
         val idx = daily.select($"event_type", $"z",

@@ -405,24 +405,67 @@ object Similarity {
       GROUP BY vec_id, p)
     GROUP BY vec_id"""
 
-  val defs: Seq[QueryDef] = Seq(
-
-    // Brute-force ANN baseline: 10 query vectors, top-5 neighbors each.
-    QueryDef(
-      "sim_cosine_topk",
-      Some("""
-        SELECT qid, nid, rank, cos FROM (
+  /** The top 5 `(qid, nid, rank, cos)` by cosine, ties to the smaller
+    * id, of each query vec_id < 10 over the `q`/`c` pairs of `pairs`
+    * (a FROM clause). */
+  private def sqlCosineTop5(pairs: String): String = s"""SELECT qid, nid, rank, cos FROM (
           SELECT q.vec_id AS qid, c.vec_id AS nid,
                  list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS cos,
                  ROW_NUMBER() OVER (
                    PARTITION BY q.vec_id
                    ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
                             c.vec_id) AS rank
-          FROM embeddings q JOIN embeddings c ON c.vec_id >= 10
+          FROM $pairs
           WHERE q.vec_id < 10)
         WHERE rank <= 5
+        ORDER BY qid, rank"""
+
+  /** The IVF search's partitions in SQL, for a `cents(centroid, cemb)`
+    * CTE: each vector's nearest centroid (`assigned`) and the 4 nearest
+    * centroids of each query vec_id < 10 (`probes`). */
+  private def sqlIvfProbeCtes: String = """assigned AS (
+          SELECT vec_id, embedding, centroid FROM (
+            SELECT e.vec_id, e.embedding, c.centroid,
+                   ROW_NUMBER() OVER (
+                     PARTITION BY e.vec_id
+                     ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
+                              c.centroid) AS rn
+            FROM embeddings e, cents c)
+          WHERE rn = 1),
+        probes AS (
+          SELECT qid, qemb, centroid FROM (
+            SELECT q.vec_id AS qid, q.embedding AS qemb, c.centroid,
+                   ROW_NUMBER() OVER (
+                     PARTITION BY q.vec_id
+                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
+                              c.centroid) AS rn
+            FROM embeddings q, cents c WHERE q.vec_id < 10)
+          WHERE rn <= 4)"""
+
+  /** SQL mirror of [[ivfTopK]] with nProbe 4 and k 5 over the given
+    * `cents` CTE. */
+  private def sqlIvfAnn(cents: String): String = s"""
+        WITH $cents,
+        $sqlIvfProbeCtes
+        SELECT qid, nid, rank, cos FROM (
+          SELECT p.qid, a.vec_id AS nid,
+                 list_cosine_similarity(p.qemb::DOUBLE[], a.embedding::DOUBLE[]) AS cos,
+                 ROW_NUMBER() OVER (
+                   PARTITION BY p.qid
+                   ORDER BY list_cosine_similarity(p.qemb::DOUBLE[], a.embedding::DOUBLE[]) DESC,
+                            a.vec_id) AS rank
+          FROM probes p JOIN assigned a ON p.centroid = a.centroid
+          WHERE p.qid <> a.vec_id)
+        WHERE rank <= 5
         ORDER BY qid, rank
-      """.trim),
+      """.trim
+
+  val defs: Seq[QueryDef] = Seq(
+
+    // Brute-force ANN baseline: 10 query vectors, top-5 neighbors each.
+    QueryDef(
+      "sim_cosine_topk",
+      Some(sqlCosineTop5("embeddings q JOIN embeddings c ON c.vec_id >= 10")),
       (s, d) => cosineTopK(embeddings(s, d), col("vec_id") < 10, 5)),
 
     // LSH bucket assignment (the scale path's partitioning artifact).
@@ -446,17 +489,7 @@ object Similarity {
         WITH b AS ($sqlBuckets),
         e AS (SELECT e.vec_id, e.embedding, b.bucket
               FROM embeddings e JOIN b ON e.vec_id = b.vec_id)
-        SELECT qid, nid, rank, cos FROM (
-          SELECT q.vec_id AS qid, c.vec_id AS nid,
-                 list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS cos,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-                            c.vec_id) AS rank
-          FROM e q JOIN e c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-          WHERE q.vec_id < 10)
-        WHERE rank <= 5
-        ORDER BY qid, rank
+        ${sqlCosineTop5("e q JOIN e c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id")}
       """.trim),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
@@ -479,39 +512,8 @@ object Similarity {
     // IVF-flat ANN: fixed coarse centroids, nProbe-bounded search.
     QueryDef(
       "sim_ivf_ann",
-      Some("""
-        WITH cents AS (
-          SELECT vec_id AS centroid, embedding AS cemb FROM embeddings WHERE vec_id < 16),
-        assigned AS (
-          SELECT vec_id, embedding, centroid FROM (
-            SELECT e.vec_id, e.embedding, c.centroid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                              c.centroid) AS rn
-            FROM embeddings e, cents c)
-          WHERE rn = 1),
-        probes AS (
-          SELECT qid, qemb, centroid FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qemb, c.centroid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY q.vec_id
-                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                              c.centroid) AS rn
-            FROM embeddings q, cents c WHERE q.vec_id < 10)
-          WHERE rn <= 4)
-        SELECT qid, nid, rank, cos FROM (
-          SELECT p.qid, a.vec_id AS nid,
-                 list_cosine_similarity(p.qemb::DOUBLE[], a.embedding::DOUBLE[]) AS cos,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY p.qid
-                   ORDER BY list_cosine_similarity(p.qemb::DOUBLE[], a.embedding::DOUBLE[]) DESC,
-                            a.vec_id) AS rank
-          FROM probes p JOIN assigned a ON p.centroid = a.centroid
-          WHERE p.qid <> a.vec_id)
-        WHERE rank <= 5
-        ORDER BY qid, rank
-      """.trim),
+      Some(sqlIvfAnn("""cents AS (
+          SELECT vec_id AS centroid, embedding AS cemb FROM embeddings WHERE vec_id < 16)""")),
       (s, d) => ivfTopK(embeddings(s, d), col("vec_id") < 10,
         nCentroids = 16, nProbe = 4, k = 5)
         .orderBy(col("qid"), col("rank"))),
@@ -522,38 +524,7 @@ object Similarity {
     // rounding) so the trained index itself is hash-checked end-to-end.
     QueryDef(
       "sim_ivf_kmeans_ann",
-      Some(s"""
-        WITH ${kmeansSqlCte(16, 3, 64)},
-        assigned AS (
-          SELECT vec_id, embedding, centroid FROM (
-            SELECT e.vec_id, e.embedding, c.centroid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                              c.centroid) AS rn
-            FROM embeddings e, cents c)
-          WHERE rn = 1),
-        probes AS (
-          SELECT qid, qemb, centroid FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qemb, c.centroid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY q.vec_id
-                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                              c.centroid) AS rn
-            FROM embeddings q, cents c WHERE q.vec_id < 10)
-          WHERE rn <= 4)
-        SELECT qid, nid, rank, cos FROM (
-          SELECT p.qid, a.vec_id AS nid,
-                 list_cosine_similarity(p.qemb::DOUBLE[], a.embedding::DOUBLE[]) AS cos,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY p.qid
-                   ORDER BY list_cosine_similarity(p.qemb::DOUBLE[], a.embedding::DOUBLE[]) DESC,
-                            a.vec_id) AS rank
-          FROM probes p JOIN assigned a ON p.centroid = a.centroid
-          WHERE p.qid <> a.vec_id)
-        WHERE rank <= 5
-        ORDER BY qid, rank
-      """.trim),
+      Some(sqlIvfAnn(kmeansSqlCte(16, 3, 64))),
       (s, d) => {
         val emb = embeddings(s, d)
         val trained = kmeansCentroids(emb, k = 16, iters = 3, dim = 64)
@@ -590,16 +561,6 @@ object Similarity {
       "sim_ann_recall",
       Some(s"""
         WITH b AS (${sqlBucketsMulti(8, 5)}),
-        truth AS (
-          SELECT qid, nid FROM (
-            SELECT q.vec_id AS qid, c.vec_id AS nid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY q.vec_id
-                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-                              c.vec_id) AS rank
-            FROM embeddings q JOIN embeddings c ON c.vec_id >= 10
-            WHERE q.vec_id < 10)
-          WHERE rank <= 5),
         pairs AS (
           SELECT DISTINCT q.vec_id AS qid, c.vec_id AS nid
           FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
@@ -610,23 +571,7 @@ object Similarity {
           FROM pairs p
           JOIN embeddings q ON q.vec_id = p.qid
           JOIN embeddings c ON c.vec_id = p.nid),
-        ann AS (
-          SELECT qid, nid FROM (
-            SELECT qid, nid,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
-            FROM cands)
-          WHERE rank <= 5),
-        stats AS (SELECT qid, COUNT(*) AS n_cands FROM cands GROUP BY qid),
-        hits AS (
-          SELECT t.qid, COUNT(a.nid) AS n_hit
-          FROM truth t LEFT JOIN ann a ON a.qid = t.qid AND a.nid = t.nid
-          GROUP BY t.qid)
-        SELECT CAST(h.qid AS BIGINT) AS qid,
-               CAST(h.n_hit AS BIGINT) AS n_hit,
-               CAST(h.n_hit AS DOUBLE) / 5 AS recall,
-               CAST(COALESCE(s.n_cands, 0) AS BIGINT) AS n_cands
-        FROM hits h LEFT JOIN stats s ON s.qid = h.qid
-        ORDER BY qid
+        $sqlRecallTail
       """.trim),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
@@ -651,56 +596,13 @@ object Similarity {
       "sim_ivf_recall",
       Some(s"""
         WITH ${kmeansSqlCte(16, 3, 64)},
-        truth AS (
-          SELECT qid, nid FROM (
-            SELECT q.vec_id AS qid, c.vec_id AS nid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY q.vec_id
-                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-                              c.vec_id) AS rank
-            FROM embeddings q JOIN embeddings c ON c.vec_id >= 10
-            WHERE q.vec_id < 10)
-          WHERE rank <= 5),
-        assigned AS (
-          SELECT vec_id, embedding, centroid FROM (
-            SELECT e.vec_id, e.embedding, c.centroid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                              c.centroid) AS rn
-            FROM embeddings e, cents c)
-          WHERE rn = 1),
-        probes AS (
-          SELECT qid, qemb, centroid FROM (
-            SELECT q.vec_id AS qid, q.embedding AS qemb, c.centroid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY q.vec_id
-                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                              c.centroid) AS rn
-            FROM embeddings q, cents c WHERE q.vec_id < 10)
-          WHERE rn <= 4),
+        $sqlIvfProbeCtes,
         cands AS (
           SELECT p.qid, a.vec_id AS nid,
                  list_cosine_similarity(p.qemb::DOUBLE[], a.embedding::DOUBLE[]) AS cos
           FROM probes p JOIN assigned a ON p.centroid = a.centroid
           WHERE a.vec_id >= 10),
-        ann AS (
-          SELECT qid, nid FROM (
-            SELECT qid, nid,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
-            FROM cands)
-          WHERE rank <= 5),
-        stats AS (SELECT qid, COUNT(*) AS n_cands FROM cands GROUP BY qid),
-        hits AS (
-          SELECT t.qid, COUNT(a.nid) AS n_hit
-          FROM truth t LEFT JOIN ann a ON a.qid = t.qid AND a.nid = t.nid
-          GROUP BY t.qid)
-        SELECT CAST(h.qid AS BIGINT) AS qid,
-               CAST(h.n_hit AS BIGINT) AS n_hit,
-               CAST(h.n_hit AS DOUBLE) / 5 AS recall,
-               CAST(COALESCE(s.n_cands, 0) AS BIGINT) AS n_cands
-        FROM hits h LEFT JOIN stats s ON s.qid = h.qid
-        ORDER BY qid
+        $sqlRecallTail
       """.trim),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
@@ -832,33 +734,7 @@ object Similarity {
           JOIN lut2 l2 ON l2.qid = q.qid AND l2.c2 = k.c2
           JOIN lut3 l3 ON l3.qid = q.qid AND l3.c3 = k.c3
           WHERE k.vec_id >= 10),
-        truth AS (
-          SELECT qid, nid FROM (
-            SELECT q.vec_id AS qid, c.vec_id AS nid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY q.vec_id
-                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-                              c.vec_id) AS rank
-            FROM embeddings q JOIN embeddings c ON c.vec_id >= 10
-            WHERE q.vec_id < 10)
-          WHERE rank <= 5),
-        ann AS (
-          SELECT qid, nid FROM (
-            SELECT qid, nid,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
-            FROM cands)
-          WHERE rank <= 5),
-        stats AS (SELECT qid, COUNT(*) AS n_cands FROM cands GROUP BY qid),
-        hits AS (
-          SELECT t.qid, COUNT(a.nid) AS n_hit
-          FROM truth t LEFT JOIN ann a ON a.qid = t.qid AND a.nid = t.nid
-          GROUP BY t.qid)
-        SELECT CAST(h.qid AS BIGINT) AS qid,
-               CAST(h.n_hit AS BIGINT) AS n_hit,
-               CAST(h.n_hit AS DOUBLE) / 5 AS recall,
-               CAST(COALESCE(s.n_cands, 0) AS BIGINT) AS n_cands
-        FROM hits h LEFT JOIN stats s ON s.qid = h.qid
-        ORDER BY qid
+        $sqlRecallTail
       """.trim),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
@@ -947,8 +823,8 @@ object Similarity {
     // whether the 4× memory cut is free on a given corpus.
     QueryDef(
       "sim_sq8_recall",
-      Some("""
-        WITH stats AS (
+      Some(s"""
+        WITH grid AS (
           SELECT t.d,
                  CAST(MIN(e.embedding[t.d + 1]) AS DOUBLE) AS mn,
                  (CAST(MAX(e.embedding[t.d + 1]) AS DOUBLE)
@@ -961,7 +837,7 @@ object Similarity {
                         ELSE s.mn + s.sc * LEAST(255.0, GREATEST(0.0,
                           FLOOR((CAST(e.embedding[s.d + 1] AS DOUBLE) - s.mn) / s.sc + 0.5)))
                       END AS REAL) ORDER BY s.d) AS remb
-          FROM embeddings e, stats s
+          FROM embeddings e, grid s
           WHERE e.vec_id >= 10
           GROUP BY e.vec_id),
         cands AS (
@@ -969,33 +845,7 @@ object Similarity {
                  list_cosine_similarity(q.embedding::DOUBLE[], r.remb::DOUBLE[]) AS cos
           FROM embeddings q CROSS JOIN rec r
           WHERE q.vec_id < 10),
-        truth AS (
-          SELECT qid, nid FROM (
-            SELECT q.vec_id AS qid, c.vec_id AS nid,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY q.vec_id
-                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-                              c.vec_id) AS rank
-            FROM embeddings q JOIN embeddings c ON c.vec_id >= 10
-            WHERE q.vec_id < 10)
-          WHERE rank <= 5),
-        ann AS (
-          SELECT qid, nid FROM (
-            SELECT qid, nid,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
-            FROM cands)
-          WHERE rank <= 5),
-        st AS (SELECT qid, COUNT(*) AS n_cands FROM cands GROUP BY qid),
-        hits AS (
-          SELECT t.qid, COUNT(a.nid) AS n_hit
-          FROM truth t LEFT JOIN ann a ON a.qid = t.qid AND a.nid = t.nid
-          GROUP BY t.qid)
-        SELECT CAST(h.qid AS BIGINT) AS qid,
-               CAST(h.n_hit AS BIGINT) AS n_hit,
-               CAST(h.n_hit AS DOUBLE) / 5 AS recall,
-               CAST(COALESCE(s.n_cands, 0) AS BIGINT) AS n_cands
-        FROM hits h LEFT JOIN st s ON s.qid = h.qid
-        ORDER BY qid
+        $sqlRecallTail
       """.trim),
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
@@ -1220,6 +1070,12 @@ object Similarity {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val centroids = broadcast(emb.filter(col("vec_id") < nCentroids)
       .select(col("vec_id").as("centroid"), col("embedding").as("cemb")))
+    assignTop(emb, centroids, nAssign)
+  }
+
+  /** Each vector of `emb` once per one of its `nAssign` nearest
+    * `centroids(centroid, cemb)`, ties to the smaller centroid id. */
+  private def assignTop(emb: DataFrame, centroids: DataFrame, nAssign: Int): DataFrame =
     emb.crossJoin(centroids)
       .select(col("vec_id"), col("embedding"),
         struct((-cosineNative(col("embedding"), col("cemb"))).as("nc"),
@@ -1229,7 +1085,6 @@ object Similarity {
         slice(array_sort(collect_list(col("sc"))), 1, nAssign).as("top"))
       .select(col("vec_id"), col("embedding"),
         explode(col("top.centroid")).as("centroid"))
-  }
 
   /** IVF-bucketed near-duplicate pairs — the production-shaped variant
     * of [[allPairsCosineDistributed]]: candidates come from a
@@ -1277,16 +1132,21 @@ object Similarity {
     val centroids = broadcast(
       emb.crossJoin(broadcast(nk)).filter(col("vec_id") < col("nk"))
         .select(col("vec_id").as("centroid"), col("embedding").as("cemb")))
-    emb.crossJoin(centroids)
-      .select(col("vec_id"), col("embedding"),
-        struct((-cosineNative(col("embedding"), col("cemb"))).as("nc"),
-          col("centroid")).as("sc"))
-      .groupBy(col("vec_id"))
-      .agg(first(col("embedding")).as("embedding"),
-        slice(array_sort(collect_list(col("sc"))), 1, nAssign).as("top"))
-      .select(col("vec_id"), col("embedding"),
-        explode(col("top.centroid")).as("centroid"))
+    assignTop(emb, centroids, nAssign)
   }
+
+  /** Each vector's `nAssign` nearest centroids of a `cents(centroid,
+    * cemb)` CTE: the `assigned` CTE of [[sqlIvfAssignedCte]] and
+    * [[sqlIvfAssignedCteAdaptive]]. */
+  private def sqlIvfAssigned(nAssign: Int): String = s"""assigned AS (
+      SELECT vec_id, embedding, centroid FROM (
+        SELECT e.vec_id, e.embedding, c.centroid,
+               ROW_NUMBER() OVER (
+                 PARTITION BY e.vec_id
+                 ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
+                          c.centroid) AS rn
+        FROM embeddings e, cents c)
+      WHERE rn <= $nAssign)"""
 
   /** SQL mirror of [[ivfAssignTopAdaptive]] — same `assigned` contract
     * as [[sqlIvfAssignedCte]], with the centroid count derived from
@@ -1298,28 +1158,12 @@ object Similarity {
     cents AS (
       SELECT vec_id AS centroid, embedding AS cemb FROM embeddings
       WHERE vec_id < (SELECT k FROM nk)),
-    assigned AS (
-      SELECT vec_id, embedding, centroid FROM (
-        SELECT e.vec_id, e.embedding, c.centroid,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                          c.centroid) AS rn
-        FROM embeddings e, cents c)
-      WHERE rn <= $nAssign)"""
+    ${sqlIvfAssigned(nAssign)}"""
 
   private[operators] def sqlIvfAssignedCte(nCentroids: Int, nAssign: Int): String = s"""
     cents AS (
       SELECT vec_id AS centroid, embedding AS cemb FROM embeddings WHERE vec_id < $nCentroids),
-    assigned AS (
-      SELECT vec_id, embedding, centroid FROM (
-        SELECT e.vec_id, e.embedding, c.centroid,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cemb::DOUBLE[]) DESC,
-                          c.centroid) AS rn
-        FROM embeddings e, cents c)
-      WHERE rn <= $nAssign)"""
+    ${sqlIvfAssigned(nAssign)}"""
 
   /** The scale-path near-dup pair: IVF-bucketed candidates + verify,
     * and the recall harness that prices the approximation against a
@@ -1480,6 +1324,39 @@ object Similarity {
     }
     cents
   }
+
+  /** SQL mirror of [[recallTail]], to follow a `cands(qid, nid, cos)`
+    * CTE in a WITH list: brute-force `truth` (the top 5 of the corpus
+    * vec_id >= 10 by cosine for each query vec_id < 10), the index's
+    * top-5 `ann` out of `cands`, and per query the hits, recall@5 and
+    * the candidate count. */
+  private[operators] def sqlRecallTail: String = """truth AS (
+          SELECT qid, nid FROM (
+            SELECT q.vec_id AS qid, c.vec_id AS nid,
+                   ROW_NUMBER() OVER (
+                     PARTITION BY q.vec_id
+                     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
+                              c.vec_id) AS rank
+            FROM embeddings q JOIN embeddings c ON c.vec_id >= 10
+            WHERE q.vec_id < 10)
+          WHERE rank <= 5),
+        ann AS (
+          SELECT qid, nid FROM (
+            SELECT qid, nid,
+                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank
+            FROM cands)
+          WHERE rank <= 5),
+        stats AS (SELECT qid, COUNT(*) AS n_cands FROM cands GROUP BY qid),
+        hits AS (
+          SELECT t.qid, COUNT(a.nid) AS n_hit
+          FROM truth t LEFT JOIN ann a ON a.qid = t.qid AND a.nid = t.nid
+          GROUP BY t.qid)
+        SELECT CAST(h.qid AS BIGINT) AS qid,
+               CAST(h.n_hit AS BIGINT) AS n_hit,
+               CAST(h.n_hit AS DOUBLE) / 5 AS recall,
+               CAST(COALESCE(s.n_cands, 0) AS BIGINT) AS n_cands
+        FROM hits h LEFT JOIN stats s ON s.qid = h.qid
+        ORDER BY qid"""
 
   private[operators] def recallTail(truth0: DataFrame, cands0: DataFrame): DataFrame = {
     // both inputs feed two consumers each (rank+stats, semi+base) —

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.sources.Tables._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -31,13 +32,30 @@ object Spectral {
     for (p <- periods; k <- 0 until p) yield
       (p, k, Math.cos(2.0 * Math.PI * k / p), Math.sin(2.0 * Math.PI * k / p))
 
-  val defs: Seq[QueryDef] = Seq(
-    QueryDef(
-      "ts_spectral_peak", {
-        val rows = basis.map { case (p, k, c, sn) => s"($p, $k, $c, $sn)" }
-          .mkString(",\n            ")
-        Some(s"""
-        WITH hourly AS (
+  /** Per (event type, period p): each hour's value `y` times the
+    * Fourier basis (cos, sin) of its phase `hb % p`, snapped to 4
+    * decimals as DECIMAL(28,8) `tc`/`ts`. */
+  private def hourlyTerms(s: SparkSession, ev: DataFrame): DataFrame = {
+    import s.implicits._
+    val hourly = ev
+      .groupBy($"event_type",
+        (floor(unix_timestamp($"ts")).cast("long") / 3600)
+          .cast("long").as("hb"))
+      .agg(sum($"value".cast(DecimalType(18, 2))).cast("double").as("y"))
+    val b = basis.toDF("p", "k", "c", "s2")
+    hourly.join(broadcast(b), $"k" === $"hb" % $"p")
+      .select($"event_type", $"p",
+        (floor($"y" * $"c" * 10000 + 0.5) / 10000)
+          .cast(DecimalType(28, 8)).as("tc"),
+        (floor($"y" * $"s2" * 10000 + 0.5) / 10000)
+          .cast(DecimalType(28, 8)).as("ts"))
+  }
+
+  /** SQL mirror of [[hourlyTerms]]: `hourly`, the basis `b` and `terms`. */
+  private def sqlHourlyTerms: String = {
+    val rows = basis.map { case (p, k, c, sn) => s"($p, $k, $c, $sn)" }
+      .mkString(",\n            ")
+    s"""hourly AS (
           SELECT event_type,
                  CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hb,
                  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS y
@@ -49,7 +67,14 @@ object Spectral {
           SELECT h.event_type, b.p,
                  CAST(floor(h.y * b.c * 10000 + 0.5) / 10000 AS DECIMAL(28,8)) AS tc,
                  CAST(floor(h.y * b.s * 10000 + 0.5) / 10000 AS DECIMAL(28,8)) AS ts
-          FROM hourly h JOIN b ON b.k = h.hb % b.p),
+          FROM hourly h JOIN b ON b.k = h.hb % b.p)"""
+  }
+
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef(
+      "ts_spectral_peak",
+      Some(s"""
+        WITH $sqlHourlyTerms,
         sums AS (
           SELECT event_type, p,
                  CAST(SUM(tc) AS DOUBLE) AS sc,
@@ -61,22 +86,10 @@ object Spectral {
                (sc * sc + ss * ss) / (n * n) AS power
         FROM sums
         ORDER BY event_type, period_h
-        """.trim)
-      },
+        """.trim),
       (s, d) => {
         import s.implicits._
-        val hourly = events(s, d)
-          .groupBy($"event_type",
-            (floor(unix_timestamp($"ts")).cast("long") / 3600)
-              .cast("long").as("hb"))
-          .agg(sum($"value".cast(DecimalType(18, 2))).cast("double").as("y"))
-        val b = basis.toDF("p", "k", "c", "s2")
-        val terms = hourly.join(broadcast(b), $"k" === $"hb" % $"p")
-          .select($"event_type", $"p",
-            (floor($"y" * $"c" * 10000 + 0.5) / 10000)
-              .cast(DecimalType(28, 8)).as("tc"),
-            (floor($"y" * $"s2" * 10000 + 0.5) / 10000)
-              .cast(DecimalType(28, 8)).as("ts"))
+        val terms = hourlyTerms(s, events(s, d))
         terms.groupBy($"event_type", $"p")
           .agg(sum($"tc").cast("double").as("sc"),
             sum($"ts").cast("double").as("ss"),
@@ -96,23 +109,9 @@ object Spectral {
     // exact DECIMAL before normalization so every ratio divides
     // bit-identical operands; entropy/flatness terms fold in DECIMAL.
     QueryDef(
-      "ts_spectral_entropy", {
-        val rows = basis.map { case (p, k, c, sn) => s"($p, $k, $c, $sn)" }
-          .mkString(",\n            ")
-        Some(s"""
-        WITH hourly AS (
-          SELECT event_type,
-                 CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hb,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS y
-          FROM events GROUP BY event_type, CAST(floor(epoch(ts)) AS BIGINT) // 3600),
-        b(p, k, c, s) AS (
-          VALUES
-            $rows),
-        terms AS (
-          SELECT h.event_type, b.p,
-                 CAST(floor(h.y * b.c * 10000 + 0.5) / 10000 AS DECIMAL(28,8)) AS tc,
-                 CAST(floor(h.y * b.s * 10000 + 0.5) / 10000 AS DECIMAL(28,8)) AS ts
-          FROM hourly h JOIN b ON b.k = h.hb % b.p),
+      "ts_spectral_entropy",
+      Some(s"""
+        WITH $sqlHourlyTerms,
         pw AS (
           SELECT event_type, p,
                  CAST(${graft.det.sqlSnap9(
@@ -137,22 +136,10 @@ object Spectral {
         FROM probs
         GROUP BY event_type
         ORDER BY event_type
-        """.trim)
-      },
+        """.trim),
       (s, d) => {
         import s.implicits._
-        val hourly = events(s, d)
-          .groupBy($"event_type",
-            (floor(unix_timestamp($"ts")).cast("long") / 3600)
-              .cast("long").as("hb"))
-          .agg(sum($"value".cast(DecimalType(18, 2))).cast("double").as("y"))
-        val b = basis.toDF("p", "k", "c", "s2")
-        val terms = hourly.join(broadcast(b), $"k" === $"hb" % $"p")
-          .select($"event_type", $"p",
-            (floor($"y" * $"c" * 10000 + 0.5) / 10000)
-              .cast(DecimalType(28, 8)).as("tc"),
-            (floor($"y" * $"s2" * 10000 + 0.5) / 10000)
-              .cast(DecimalType(28, 8)).as("ts"))
+        val terms = hourlyTerms(s, events(s, d))
         val pw = terms.groupBy($"event_type", $"p")
           .agg(graft.det.snap9(
             (sum($"tc").cast("double") * sum($"tc").cast("double")

@@ -34,29 +34,7 @@ object SynthControl {
     QueryDef(
       "ev_synth_control",
       Some(s"""
-        WITH daily AS (
-          SELECT CAST(ts AS DATE) AS day,
-                 CAST(SUM(CASE WHEN event_type = 'purchase'
-                   THEN CAST(value AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END)
-                   * 100 AS BIGINT) AS y,
-                 CAST(SUM(CASE WHEN event_type <> 'purchase'
-                   THEN CAST(value AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END)
-                   * 100 AS BIGINT) AS x
-          FROM events GROUP BY 1),
-        mo AS (
-          SELECT COUNT(*) AS n,
-                 SUM(CAST(x AS HUGEINT)) AS sx, SUM(CAST(y AS HUGEINT)) AS sy,
-                 SUM(CAST(x AS HUGEINT) * y) AS sxy,
-                 SUM(CAST(x AS HUGEINT) * x) AS sxx
-          FROM daily WHERE day < DATE '2024-01-15'),
-        fit AS (
-          SELECT (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy / n)
-                   / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n) AS beta,
-                 CAST(sy AS DOUBLE) / n
-                   - (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy / n)
-                     / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n)
-                     * (CAST(sx AS DOUBLE) / n) AS alpha
-          FROM mo),
+        WITH ${Cointegration.sqlDailyFit("daily WHERE day < DATE '2024-01-15'")},
         post AS (
           SELECT d.day, d.y, d.x,
                  ${det.sqlSnap9("(f.alpha + f.beta * d.x) / 100.0")} AS pred,
@@ -74,28 +52,9 @@ object SynthControl {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val z = lit(0).cast(DecimalType(18, 2))
-        val daily = events(s, d)
-          .groupBy($"ts".cast("date").as("day"))
-          .agg(
-            (sum(when($"event_type" === "purchase",
-              $"value".cast(DecimalType(18, 2))).otherwise(z)) * 100)
-              .cast("long").as("y"),
-            (sum(when($"event_type" =!= "purchase",
-              $"value".cast(DecimalType(18, 2))).otherwise(z)) * 100)
-              .cast("long").as("x"))
+        val daily = Cointegration.purchaseOtherDaily(events(s, d))
         val cutover = lit("2024-01-15").cast("date")
-        val dx = $"x".cast(DecimalType(38, 0))
-        val dy = $"y".cast(DecimalType(38, 0))
-        val mo = daily.filter($"day" < cutover)
-          .agg(count(lit(1)).as("n"),
-            sum(dx).as("sx"), sum(dy).as("sy"),
-            sum(dx * $"y").as("sxy"), sum(dx * $"x").as("sxx"))
-        val beta = ($"sxy".cast("double") - $"sx".cast("double") * $"sy" / $"n") /
-          ($"sxx".cast("double") - $"sx".cast("double") * $"sx" / $"n")
-        val fit = mo.select(beta.as("beta"),
-          ($"sy".cast("double") / $"n"
-            - beta * ($"sx".cast("double") / $"n")).as("alpha"))
+        val fit = Cointegration.dailyFit(daily.filter($"day" < cutover))
         val post = daily.filter($"day" >= cutover).crossJoin(fit)
           .select($"day", $"y",
             det.snap9(($"alpha" + $"beta" * $"x") / 100.0).as("pred"),

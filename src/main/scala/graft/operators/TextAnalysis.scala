@@ -3,7 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.functions.TextFunctions
 import graft.sources.Tables._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -100,6 +100,45 @@ object TextAnalysis {
     val lits = markers.map(m => s"'$m'").mkString(", ")
     s"CAST(len(list_intersect(list_distinct(string_split(text, ' ')), [$lits])) AS BIGINT)"
   }
+
+  /** Each document's best-overlapping language (`plang`, ties to the
+    * smaller name) with its `overlap`: the count of the document's
+    * distinct character trigrams among that language's 40 most
+    * document-frequent ones (`lang`, `doc_id` kept). */
+  private[operators] def langGuesses(docs: DataFrame): DataFrame = {
+    val tg = docs
+      .filter(length(col("text")) >= 3)
+      .select(col("doc_id"), col("lang"), explode(trigramUdf(col("text"))).as("tri"))
+    val wProf = Window.partitionBy(col("lang")).orderBy(desc("df"), asc("tri"))
+    val prof = tg.groupBy(col("lang"), col("tri")).agg(count(lit(1)).as("df"))
+      .withColumn("rn", row_number().over(wProf))
+      .filter(col("rn") <= 40)
+      .select(col("lang").as("plang"), col("tri"))
+    val scored = tg.join(broadcast(prof), "tri")
+      .groupBy(col("doc_id"), col("lang"), col("plang"))
+      .agg(count(lit(1)).as("overlap"))
+    val wBest = Window.partitionBy(col("doc_id")).orderBy(desc("overlap"), asc("plang"))
+    scored.withColumn("rn", row_number().over(wBest)).filter(col("rn") === 1)
+  }
+
+  /** SQL mirror of [[langGuesses]] up to the per-language overlaps: the
+    * `tg`, `prof` and `scored(doc_id, lang, plang, overlap)` CTEs. */
+  private[operators] def sqlLangScored: String = """tg AS (
+          SELECT doc_id, lang,
+                 unnest(list_distinct(list_transform(
+                   range(1, length(text) - 1), i -> substr(text, i, 3)))) AS tri
+          FROM documents WHERE length(text) >= 3),
+        prof AS (
+          SELECT lang AS plang, tri FROM (
+            SELECT lang, tri, COUNT(*) AS df,
+                   ROW_NUMBER() OVER (PARTITION BY lang
+                                      ORDER BY COUNT(*) DESC, tri) AS rn
+            FROM tg GROUP BY lang, tri)
+          WHERE rn <= 40),
+        scored AS (
+          SELECT t.doc_id, t.lang, p.plang, COUNT(*) AS overlap
+          FROM tg t JOIN prof p ON t.tri = p.tri
+          GROUP BY t.doc_id, t.lang, p.plang)"""
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -199,23 +238,8 @@ object TextAnalysis {
     // broadcast profile join for scoring.
     QueryDef(
       "ta_ngram_lang_id",
-      Some("""
-        WITH tg AS (
-          SELECT doc_id, lang,
-                 unnest(list_distinct(list_transform(
-                   range(1, length(text) - 1), i -> substr(text, i, 3)))) AS tri
-          FROM documents WHERE length(text) >= 3),
-        prof AS (
-          SELECT lang AS plang, tri FROM (
-            SELECT lang, tri, COUNT(*) AS df,
-                   ROW_NUMBER() OVER (PARTITION BY lang
-                                      ORDER BY COUNT(*) DESC, tri) AS rn
-            FROM tg GROUP BY lang, tri)
-          WHERE rn <= 40),
-        scored AS (
-          SELECT t.doc_id, t.lang, p.plang, COUNT(*) AS overlap
-          FROM tg t JOIN prof p ON t.tri = p.tri
-          GROUP BY t.doc_id, t.lang, p.plang)
+      Some(s"""
+        WITH $sqlLangScored
         SELECT doc_id, lang, plang AS guess, overlap FROM (
           SELECT doc_id, lang, plang, overlap,
                  ROW_NUMBER() OVER (PARTITION BY doc_id
@@ -226,20 +250,7 @@ object TextAnalysis {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val tg = documents(s, d)
-          .filter(length($"text") >= 3)
-          .select($"doc_id", $"lang", explode(trigramUdf($"text")).as("tri"))
-        val wProf = Window.partitionBy($"lang").orderBy(desc("df"), asc("tri"))
-        val prof = tg.groupBy($"lang", $"tri").agg(count(lit(1)).as("df"))
-          .withColumn("rn", row_number().over(wProf))
-          .filter($"rn" <= 40)
-          .select($"lang".as("plang"), $"tri")
-        val scored = tg.join(broadcast(prof), "tri")
-          .groupBy($"doc_id", $"lang", $"plang")
-          .agg(count(lit(1)).as("overlap"))
-        val wBest = Window.partitionBy($"doc_id").orderBy(desc("overlap"), asc("plang"))
-        scored.withColumn("rn", row_number().over(wBest))
-          .filter($"rn" === 1)
+        langGuesses(documents(s, d))
           .select($"doc_id", $"lang", $"plang".as("guess"), $"overlap")
           .orderBy($"doc_id")
       }),

@@ -24,19 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Textrank {
 
-  private def sqlIter(i: Int): String = {
-    val prev = if (i == 1) "p0" else s"p${i - 1}"
-    s"""c$i AS (
-         SELECT e.dst, CAST(SUM(CAST(round(p.pr / p.deg * 1e9) / 1e9 AS DECIMAL(28,12))) AS DOUBLE) AS s
-         FROM e JOIN $prev p ON e.src = p.node
-         GROUP BY e.dst),
-       p$i AS (
-         SELECT nodes.node, nodes.deg,
-                (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.n
-                  + CAST(0.85 AS DOUBLE) * COALESCE(c.s, CAST(0 AS DOUBLE)) AS pr
-         FROM nodes CROSS JOIN nn LEFT JOIN c$i c ON nodes.node = c.dst)"""
-  }
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -54,11 +41,7 @@ object Textrank {
           WHERE regexp_matches(a, '^[a-z]{4,}$$')
             AND regexp_matches(b, '^[a-z]{4,}$$') AND a <> b),
         e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-        deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-        nodes AS (SELECT src AS node, deg FROM deg),
-        nn AS (SELECT COUNT(*) AS n FROM nodes),
-        p0 AS (SELECT node, deg, CAST(1 AS DOUBLE) / nn.n AS pr FROM nodes CROSS JOIN nn),
-        ${(1 to Graph.iters).map(sqlIter).mkString(",\n")}
+        ${Graph.sqlPagerank}
         SELECT node AS word, pr
         FROM p${Graph.iters}
         ORDER BY pr DESC, word

@@ -3,7 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.det._
 import graft.sources.Tables._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -60,6 +60,53 @@ object TimeSeries {
     * left-associated order on both sides → bit-identical doubles. */
   private def pow2(k: Int): String =
     java.math.BigDecimal.ONE.divide(java.math.BigDecimal.valueOf(2).pow(k + 1)).toPlainString
+
+  /** Every user's hourly `bucket`s from its first to its last event
+    * hour, with the hour's DECIMAL value sum `v` (null where the user
+    * has no event), hash-partitioned by user_id at session parallelism
+    * for the caller's per-user window.
+    *
+    * floor(x/3600.0) == x div 3600 for non-negative epochs and is exact
+    * in double far past any epoch second (`/` on longs in Spark is
+    * double division; `//` in the oracle floor-divides). The ~|users|
+    * bounds rows are round-robined before the grid explode: the grid
+    * inherited the bounds aggregate's hashpartitioning (user_id), AQE
+    * rightly coalesced that byte-tiny aggregate to ONE partition, and
+    * the 150 → 1.4M explode fan-out plus join probe and the whole fill
+    * pass then ran single-task (profiled r13 on ts_linear_interp:
+    * 2 × ~1.6 s single-task window stages = 75% of the query — §2.5
+    * explode fan-out). Breaking the partitioning chain there also makes
+    * the explicit user_id repartition non-redundant, so the window
+    * input is pinned at session parallelism instead of riding
+    * byte-based coalescing. */
+  private def userHourGrid(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val vals = events(s, d)
+      .groupBy($"user_id",
+        floor(unix_timestamp($"ts") / 3600).cast("long").as("bucket"))
+      .agg(dsum($"value").as("v"))
+    val nPar = s.sessionState.conf.numShufflePartitions
+    val grid = vals.groupBy($"user_id")
+      .agg(min($"bucket").as("b0"), max($"bucket").as("b1"))
+      .repartition(nPar)
+      .select($"user_id", explode(sequence($"b0", $"b1")).as("bucket"))
+    grid.join(vals, Seq("user_id", "bucket"), "left")
+      .repartition(nPar, $"user_id")
+  }
+
+  /** SQL mirror of [[userHourGrid]]: `vals`, `bounds`, `grid` and
+    * `joined(user_id, bucket, v, gap_filled)`. */
+  private def sqlUserHourGrid: String = s"""vals AS (
+          SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS bucket,
+                 ${sqlSum("value")} AS v
+          FROM events GROUP BY 1, 2),
+        bounds AS (SELECT user_id, MIN(bucket) AS b0, MAX(bucket) AS b1
+                   FROM vals GROUP BY 1),
+        grid AS (SELECT user_id, unnest(range(b0, b1 + 1)) AS bucket FROM bounds),
+        joined AS (
+          SELECT g.user_id, g.bucket, v.v, (v.v IS NULL) AS gap_filled
+          FROM grid g LEFT JOIN vals v
+            ON g.user_id = v.user_id AND g.bucket = v.bucket)"""
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -306,17 +353,7 @@ object TimeSeries {
     QueryDef(
       "ts_resample_ffill",
       Some(s"""
-        WITH vals AS (
-          SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS bucket,
-                 ${sqlSum("value")} AS v
-          FROM events GROUP BY 1, 2),
-        bounds AS (SELECT user_id, MIN(bucket) AS b0, MAX(bucket) AS b1
-                   FROM vals GROUP BY 1),
-        grid AS (SELECT user_id, unnest(range(b0, b1 + 1)) AS bucket FROM bounds),
-        joined AS (
-          SELECT g.user_id, g.bucket, v.v, (v.v IS NULL) AS gap_filled
-          FROM grid g LEFT JOIN vals v
-            ON g.user_id = v.user_id AND g.bucket = v.bucket)
+        WITH $sqlUserHourGrid
         SELECT user_id, bucket,
                last_value(v IGNORE NULLS) OVER (
                  PARTITION BY user_id ORDER BY bucket
@@ -327,33 +364,9 @@ object TimeSeries {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val vals = events(s, d)
-          .groupBy($"user_id",
-            // floor(x/3600.0) == x div 3600 for non-negative epochs and is
-            // exact in double far past any epoch second (`/` on longs in
-            // Spark is double division; `//` in the oracle floor-divides)
-            floor(unix_timestamp($"ts") / 3600).cast("long").as("bucket"))
-          .agg(dsum($"value").as("v"))
-        // Round-robin the ~|users| bounds rows before the grid explode:
-        // the grid inherited the bounds aggregate's hashpartitioning
-        // (user_id), AQE rightly coalesced that byte-tiny aggregate to
-        // ONE partition, and the 150 → 1.4M explode fan-out plus join
-        // probe and the whole fill pass then ran single-task (profiled
-        // r13 on the interp twin: 2 × ~1.6 s single-task window stages
-        // = 75% of the query — §2.5 explode fan-out). Breaking the
-        // partitioning chain here also makes the explicit user_id
-        // repartition below non-redundant, so the window input is
-        // pinned at session parallelism instead of riding byte-based
-        // coalescing.
-        val nPar = s.sessionState.conf.numShufflePartitions
-        val grid = vals.groupBy($"user_id")
-          .agg(min($"bucket").as("b0"), max($"bucket").as("b1"))
-          .repartition(nPar)
-          .select($"user_id", explode(sequence($"b0", $"b1")).as("bucket"))
         val w = Window.partitionBy($"user_id").orderBy($"bucket")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        grid.join(vals, Seq("user_id", "bucket"), "left")
-          .repartition(nPar, $"user_id")
+        userHourGrid(s, d)
           .select($"user_id", $"bucket",
             last($"v", ignoreNulls = true).over(w).as("v_filled"),
             $"v".isNull.as("gap_filled"))
@@ -378,17 +391,7 @@ object TimeSeries {
     QueryDef(
       "ts_linear_interp",
       Some(s"""
-        WITH vals AS (
-          SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS bucket,
-                 ${sqlSum("value")} AS v
-          FROM events GROUP BY 1, 2),
-        bounds AS (SELECT user_id, MIN(bucket) AS b0, MAX(bucket) AS b1
-                   FROM vals GROUP BY 1),
-        grid AS (SELECT user_id, unnest(range(b0, b1 + 1)) AS bucket FROM bounds),
-        joined AS (
-          SELECT g.user_id, g.bucket, v.v, (v.v IS NULL) AS gap_filled
-          FROM grid g LEFT JOIN vals v
-            ON g.user_id = v.user_id AND g.bucket = v.bucket),
+        WITH $sqlUserHourGrid,
         brk AS (
           SELECT user_id, bucket, v, gap_filled,
                  last_value(v IGNORE NULLS) OVER (
@@ -415,27 +418,12 @@ object TimeSeries {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val vals = events(s, d)
-          .groupBy($"user_id",
-            floor(unix_timestamp($"ts") / 3600).cast("long").as("bucket"))
-          .agg(dsum($"value").as("v"))
-        // grid fan-out + window parallelism: see ts_resample_ffill —
-        // without the round-robin the single-coalesced bounds partition
-        // carried the whole explode and both ordered window scans on
-        // ONE task each (profiled r13: 1612 + 1668 ms single-task
-        // stages, 75% of this query's wall)
-        val nPar = s.sessionState.conf.numShufflePartitions
-        val grid = vals.groupBy($"user_id")
-          .agg(min($"bucket").as("b0"), max($"bucket").as("b1"))
-          .repartition(nPar)
-          .select($"user_id", explode(sequence($"b0", $"b1")).as("bucket"))
         val wp = Window.partitionBy($"user_id").orderBy($"bucket")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wn = Window.partitionBy($"user_id").orderBy($"bucket".desc)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val obsBucket = when($"v".isNotNull, $"bucket")
-        grid.join(vals, Seq("user_id", "bucket"), "left")
-          .repartition(nPar, $"user_id")
+        userHourGrid(s, d)
           .select($"user_id", $"bucket", $"v", $"v".isNull.as("gap_filled"),
             last($"v", ignoreNulls = true).over(wp).as("pv"),
             last(obsBucket, ignoreNulls = true).over(wp).as("pb"),

@@ -70,16 +70,8 @@ object TrendTests {
     // low bits/transition = predictable session flows.
     QueryDef(
       "ev_entropy_rate",
-      Some("""
-        WITH seq AS (
-          SELECT event_type,
-                 lag(event_type) OVER (PARTITION BY user_id
-                   ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id) AS prev_type
-          FROM events),
-        t AS (
-          SELECT prev_type, event_type, COUNT(*) AS cnt
-          FROM seq WHERE prev_type IS NOT NULL
-          GROUP BY prev_type, event_type),
+      Some(s"""
+        WITH ${Analytics.sqlTransitionCounts("prev_type IS NOT NULL")},
         r AS (
           SELECT prev_type, event_type, cnt,
                  SUM(cnt) OVER (PARTITION BY prev_type) AS row_total
@@ -98,13 +90,7 @@ object TrendTests {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val uw = Window.partitionBy($"user_id")
-          .orderBy(unix_timestamp($"ts"), $"event_id")
-        val t = events(s, d)
-          .select($"event_type", lag($"event_type", 1).over(uw).as("prev_type"))
-          .filter($"prev_type".isNotNull)
-          .groupBy($"prev_type", $"event_type")
-          .agg(count(lit(1)).as("cnt"))
+        val t = Analytics.transitionCounts(events(s, d), $"prev_type".isNotNull)
         val r = t.withColumn("row_total",
           sum($"cnt").over(Window.partitionBy($"prev_type")))
         r.select($"prev_type", $"cnt",

@@ -33,23 +33,13 @@ object Truss {
     * dropped, caches sized to data volume (coalesce 8, the r9
     * LPA/modularity lesson) rather than the 32 shuffle slots. */
   private def peel(e: DataFrame, parts: Int): (DataFrame, DataFrame) = {
-    val deg = Graph.degrees(e)
-    val oriented = e
-      .join(deg.select(col("n").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("deg").as("dv")), "v")
-      .select(
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-          struct(col("u").as("src"), col("v").as("dst")))
-          .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("o"))
-      .select(col("o.src").as("src"), col("o.dst").as("dst"))
+    val oriented = Graph.degreeOriented(e, Graph.degrees(e))
       .coalesce(parts)
       .persist()
     // each triangle (wedge src→x, src→y closed by edge (x,y)) supports
     // its three edges; supports spread via ONE explode pass,
     // canonicalized to (u < v), straight into the hash aggregate
-    val wedges = oriented.select(col("src"), col("dst").as("x"))
-      .join(oriented.select(col("src"), col("dst").as("y")), "src")
-      .filter(col("x") < col("y"))
+    val wedges = Graph.orientedWedges(oriented)
     // closure via Graph.closeWedges: broadcast the closing-edge list
     // under the |E| ceiling (a shuffle semi-join here materializes the
     // whole Σ outdeg² wedge stream to shuffle disk — measured at a
@@ -123,16 +113,9 @@ object Truss {
       WHERE EXISTS (SELECT 1 FROM sup$i s
                     WHERE s.u = e.u AND s.v = e.v AND s.s >= 1))"""
 
-  val defs: Seq[QueryDef] = Seq(
-    QueryDef(
-      "gx_ktruss",
-      Some(s"""
-        WITH raw AS (
-          SELECT l_orderkey % 29989 AS a, l_partkey % 29989 AS b FROM lineitem),
-        e0 AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
-        ${sqlRound(0)},
+  /** SQL mirror of [[twoRounds]] over a canonical edge CTE `e0`: both
+    * peel rounds and the per-round readout. */
+  private def sqlTwoRounds: String = s"""${sqlRound(0)},
         ${sqlRound(1)}
         SELECT CAST(1 AS BIGINT) AS round,
                CAST((SELECT COUNT(*) FROM e0) AS BIGINT) AS edges_in,
@@ -143,12 +126,18 @@ object Truss {
                CAST((SELECT COUNT(*) FROM e1) AS BIGINT),
                CAST((SELECT COUNT(*) FROM e2) AS BIGINT),
                CAST((SELECT COUNT(*) FROM tri1) AS BIGINT)
-        ORDER BY round
+        ORDER BY round"""
+
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef(
+      "gx_ktruss",
+      Some(s"""
+        WITH ${Graph.sqlHashedEdges("e0")},
+        $sqlTwoRounds
       """.trim),
       (s, d) => {
         val li = lineitem(s, d)
-        twoRounds(li.select((col("l_orderkey") % 29989).as("a"),
-          (col("l_partkey") % 29989).as("b")), Graph.dataParts(li))
+        twoRounds(Graph.hashedPairs(li), Graph.dataParts(li))
       }),
     // The same 3-truss peel over a graph whose node space SCALES with
     // the data — the gx_triangles_adaptive device (r12 verdict #2: the
@@ -164,34 +153,11 @@ object Truss {
     QueryDef(
       "gx_ktruss_adaptive",
       Some(s"""
-        WITH nn AS (
-          SELECT GREATEST(29989, COUNT(*) // 21) AS m FROM lineitem),
-        raw AS (
-          SELECT l_orderkey % (SELECT m FROM nn) AS a,
-                 l_partkey % (SELECT m FROM nn) AS b
-          FROM lineitem),
-        e0 AS (
-          SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-          FROM raw WHERE a <> b),
-        ${sqlRound(0)},
-        ${sqlRound(1)}
-        SELECT CAST(1 AS BIGINT) AS round,
-               CAST((SELECT COUNT(*) FROM e0) AS BIGINT) AS edges_in,
-               CAST((SELECT COUNT(*) FROM e1) AS BIGINT) AS edges_kept,
-               CAST((SELECT COUNT(*) FROM tri0) AS BIGINT) AS triangles
-        UNION ALL
-        SELECT CAST(2 AS BIGINT),
-               CAST((SELECT COUNT(*) FROM e1) AS BIGINT),
-               CAST((SELECT COUNT(*) FROM e2) AS BIGINT),
-               CAST((SELECT COUNT(*) FROM tri1) AS BIGINT)
-        ORDER BY round
+        WITH ${Graph.sqlAdaptiveEdges("e0")},
+        $sqlTwoRounds
       """.trim),
       (s, d) => {
         val li = lineitem(s, d)
-        val m = li.agg(
-          greatest(lit(29989L), expr("COUNT(*) DIV 21")).as("m"))
-        twoRounds(li.crossJoin(broadcast(m))
-          .select((col("l_orderkey") % col("m")).as("a"),
-            (col("l_partkey") % col("m")).as("b")), Graph.dataParts(li))
+        twoRounds(Graph.adaptivePairs(li), Graph.dataParts(li))
       }))
 }

@@ -5,7 +5,6 @@ import graft.det
 import graft.sources.Tables._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Wallis–Moore turning-point test for randomness (Wallis & Moore,
   * JASA 1941) on the daily value series per event type: count the
@@ -29,10 +28,7 @@ object TurningPoints {
     QueryDef(
       "ts_turning_points",
       Some(s"""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
-          FROM events GROUP BY 1, 2),
+        WITH ${Acf.sqlDailyByType},
         lagged AS (
           SELECT event_type,
                  lag(z) OVER (PARTITION BY event_type ORDER BY day) AS zp,
@@ -59,10 +55,7 @@ object TurningPoints {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val daily = events(s, d)
-          .groupBy($"event_type", $"ts".cast("date").as("day"))
-          .agg((sum($"value".cast(DecimalType(18, 2))) * 100)
-            .cast("long").as("z"))
+        val daily = Acf.dailyByType(events(s, d))
         val w = Window.partitionBy($"event_type").orderBy($"day")
         val lagged = daily.select($"event_type",
             lag($"z", 1).over(w).as("zp"), $"z", lead($"z", 1).over(w).as("zn"))

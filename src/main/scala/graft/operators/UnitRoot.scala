@@ -33,10 +33,7 @@ object UnitRoot {
     QueryDef(
       "ts_unit_root",
       Some(s"""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS z
-          FROM events GROUP BY 1, 2),
+        WITH ${Acf.sqlDailyByType},
         lagged AS (
           SELECT event_type, z,
                  lag(z) OVER (PARTITION BY event_type ORDER BY day) AS zp
@@ -74,10 +71,7 @@ object UnitRoot {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val daily = events(s, d)
-          .groupBy($"event_type", $"ts".cast("date").as("day"))
-          .agg((sum($"value".cast(DecimalType(18, 2))) * 100)
-            .cast("long").as("z"))
+        val daily = Acf.dailyByType(events(s, d))
         val w = Window.partitionBy($"event_type").orderBy($"day")
         val pairs = daily
           .select($"event_type", $"z", lag($"z", 1).over(w).as("zp"))

@@ -37,24 +37,7 @@ object Uplift {
     QueryDef(
       "ev_qini",
       Some(s"""
-        WITH u AS (
-          SELECT user_id, user_id % 2 AS treat,
-                 SUM(CASE WHEN event_type <> 'purchase'
-                          AND CAST(ts AS DATE) < DATE '2024-01-15'
-                     THEN 1 ELSE 0 END) AS score,
-                 MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-          FROM events GROUP BY user_id),
-        r AS (
-          SELECT treat, conv,
-                 ntile(10) OVER (ORDER BY score DESC, user_id) AS decile
-          FROM u),
-        g AS (
-          SELECT decile,
-                 SUM(CASE WHEN treat = 1 THEN 1 ELSE 0 END) AS n_t,
-                 SUM(CASE WHEN treat = 0 THEN 1 ELSE 0 END) AS n_c,
-                 SUM(CASE WHEN treat = 1 THEN conv ELSE 0 END) AS conv_t,
-                 SUM(CASE WHEN treat = 0 THEN conv ELSE 0 END) AS conv_c
-          FROM r GROUP BY decile),
+        WITH ${Propensity.sqlArmsByBucket(10, "decile")},
         c AS (
           SELECT decile, n_t, n_c, conv_t, conv_c,
                  SUM(n_t) OVER (ORDER BY decile) AS cnt,
@@ -74,31 +57,7 @@ object Uplift {
       """.trim),
       (s, d) => {
         import s.implicits._
-        val u = events(s, d)
-          .groupBy($"user_id")
-          .agg(
-            sum(when($"event_type" =!= "purchase"
-              && $"ts".cast("date") < lit("2024-01-15").cast("date"), 1)
-              .otherwise(0)).as("score"),
-            max(when($"event_type" === "purchase", 1).otherwise(0)).as("conv"))
-          .select(($"user_id" % 2).as("treat"), $"score", $"conv", $"user_id")
-        // globalRank yields a 0-based dense total-order rank; ntile(k)
-        // over n rows assigns the first n%k buckets ceil(n/k) rows and
-        // the rest floor(n/k) — both branches in closed form from rank.
-        val ranked = Pipeline.globalRank(u, Seq($"score".desc, $"user_id"))
-        val n = ranked.count()
-        val (q, m) = (n / 10, n % 10)
-        val r = ranked.withColumn("decile",
-          when($"rank" < m * (q + 1), expr(s"rank div ${q + 1}"))
-            .otherwise(lit(m) +
-              expr(s"(rank - ${m * (q + 1)}) div ${math.max(q, 1L)}"))
-            .cast("long") + lit(1L))
-        val g = r.groupBy($"decile")
-          .agg(
-            sum(when($"treat" === 1, 1).otherwise(0)).as("n_t"),
-            sum(when($"treat" === 0, 1).otherwise(0)).as("n_c"),
-            sum(when($"treat" === 1, $"conv").otherwise(0)).as("conv_t"),
-            sum(when($"treat" === 0, $"conv").otherwise(0)).as("conv_c"))
+        val g = Propensity.armsByBucket(s, d, 10, "decile")
         val wc = Window.orderBy($"decile")
         g.select($"decile".cast("long").as("decile"),
             $"n_t".cast("long").as("n_t"), $"n_c".cast("long").as("n_c"),

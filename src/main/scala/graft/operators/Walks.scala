@@ -48,10 +48,7 @@ object Walks {
           .map(k => s"SELECT start, walk, $k AS step, cur FROM w$k")
           .mkString("\nUNION ALL\n")
         Some(s"""
-          WITH e0 AS (
-            SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-            FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-          e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+          WITH ${Graph.sqlTradeEdges},
           adj AS (
             SELECT src, dst,
                    row_number() OVER (PARTITION BY src ORDER BY dst) - 1 AS idx,

@@ -32,6 +32,35 @@ class CommitLogSpec extends SparkSpec {
       (1, 0L, null, "only")))
   }
 
+  test("a torn record fails readRange and the batch read with its segment named") {
+    val dir = tmpDir("graft_cl_torn")
+    CommitLog.append(dir, 0, Seq((1000L, "k0", "a"), (2000L, "k1", "b")))
+    CommitLog.append(dir, 0, Seq((3000L, "k2", "c")))
+    val seg = CommitLog.segments(dir, 0).last
+    // the last line loses its value field; a second copy of the topic
+    // gets a non-numeric ts instead
+    Files.writeString(seg, CommitLog.encodeLine(3000L, "k2", "c") + "\n5\tYQ==\n")
+    val dir2 = tmpDir("graft_cl_torn_ts")
+    CommitLog.append(dir2, 0, Seq((1000L, "k0", "a")))
+    val seg2 = CommitLog.segments(dir2, 0).head
+    Files.writeString(seg2, "x5\tYQ==\tYQ==\n")
+
+    def namesSegment(e: Throwable, seg: java.nio.file.Path): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains(seg.toString)))
+
+    // the records before the torn one still read
+    assert(CommitLog.readRange(dir, 0, 0L, 3L).map(_._4).toSeq == Seq("a", "b", "c"))
+    val e1 = intercept[java.io.IOException](CommitLog.readRange(dir, 0, 0L, Long.MaxValue).toList)
+    assert(e1.getMessage.contains(seg.toString) && e1.getMessage.contains("offset 3"), e1.getMessage)
+    val e2 = intercept[java.io.IOException](CommitLog.readRange(dir2, 0, 0L, Long.MaxValue).toList)
+    assert(e2.getMessage.contains(seg2.toString) && e2.getMessage.contains("offset 0"), e2.getMessage)
+    for ((d, sg) <- Seq(dir -> seg, dir2 -> seg2)) {
+      val e = intercept[Exception](spark.read.format("commit-log").load(d).collect())
+      assert(namesSegment(e, sg), e.getMessage)
+    }
+  }
+
   test("micro-batch stream resumes from the checkpoint without re-reading") {
     val dir = tmpDir("graft_cl_resume")
     val ckpt = tmpDir("graft_cl_resume_ckpt")

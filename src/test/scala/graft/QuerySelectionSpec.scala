@@ -36,6 +36,18 @@ class QuerySelectionSpec extends AnyFunSuite {
       SparkEntry.queries.keys.toSeq.sorted)
   }
 
+  test("every oracle is non-blank SQL with no Scala reference left in it") {
+    // A shared oracle fragment read while its object is still
+    // initializing comes out null; one spliced into a literal that lacks
+    // the `s` interpolator stays as `$name` text.
+    val oracles = SparkEntry.allDefs.flatMap(q => q.oracle.map(q.name -> _))
+    val blank = oracles.collect { case (n, o) if o == null || o.trim.isEmpty => n }
+    assert(blank.isEmpty, s"null or blank oracles: $blank")
+    val raw = oracles.collect { case (n, o) if "\\$[A-Za-z_{]".r.findFirstIn(o).isDefined => n }
+    assert(raw.isEmpty, s"oracles with an uninterpolated reference: $raw")
+    assert(SparkEntry.oracleSql.size == 431)
+  }
+
   test("the sf1 gate's query list resolves") {
     val gate = new String(Files.readAllBytes(Paths.get("tools/sf1_gate.sh")), "UTF-8")
     val queries = gate.linesIterator.collectFirst {
